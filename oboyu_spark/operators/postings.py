@@ -31,9 +31,13 @@ explicit salting, checkpoint-resume with per-partition lineage):
           QUERY time from current k1/b/avgdl — wtf is monotone ↑ in tf
           and ↓ in dl, so the bound stays valid when collection stats
           drift under incremental appends)
-      vocab_parts/bpart=P/         per-partition (th1, th2, df, cf)
-      vocabulary/                  global merge of the partials; since
-                                   r7 th1-range-sorted and carrying
+      vocab_parts/bpart=P/         per-partition (th1, th2, df, cf) —
+                                   a build-only finalize input (the
+                                   merge re-reads untouched parts'
+                                   partials on incremental finalize);
+                                   queries never read it
+      vocabulary/                  global merge of the partials,
+                                   th1-sorted within files and carrying
                                    each term's containing-part list
                                    (bparts array<int>, NULL above
                                    PART_PRUNE_MAX_PER_TERM) — one
@@ -47,7 +51,10 @@ explicit salting, checkpoint-resume with per-partition lineage):
       manifest/part-P.json         per-partition lineage: input
                                    fingerprint, status, metrics
                                    (docs, tokens, postings, bytes, secs)
-      stats/meta.json              global stats + aggregate metrics
+      stats/meta.json              global stats + aggregate metrics;
+                                   its codec_version is the ONE layout
+                                   gate — load_meta refuses any other
+                                   version
 
 Sharding is RANGE on dense doc ids (shard = doc_int // shard_size): each
 shard is a partition-local index over a contiguous doc range (dense
@@ -88,7 +95,7 @@ from .. import B_DEFAULT, K1_DEFAULT, MIN_TOKEN_LENGTH_DEFAULT
 from .codec import encode_doc_ids, encode_varbyte
 
 BLOCK = 128
-CODEC_VERSION = 3
+CODEC_VERSION = 4
 
 # Terms are stored as a 128-bit hash pair (two independent xxhash64
 # passes), NOT as strings. Rationale (measured in this sandbox, and the
@@ -133,33 +140,6 @@ def _encode_posting_list(ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray):
         block_last,
         block_maxtf,
         block_mindl,
-    )
-
-
-def _encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Single-(shard,term,salt)-group encoder (applyInPandas shape) —
-    kept for tests/tools; the build uses the streaming partition
-    encoder below, which has no per-group Arrow/pandas machinery."""
-    pdf = pdf.sort_values("doc_int")
-    n, gaps, tfs_b, dls_b, blast, bmaxtf, bmindl = _encode_posting_list(
-        pdf["doc_int"].to_numpy(np.int64),
-        pdf["tf"].to_numpy(np.int64),
-        pdf["dl"].to_numpy(np.int64),
-    )
-    return pd.DataFrame(
-        {
-            "shard": [int(pdf["shard"].iloc[0])],
-            "th1": [int(pdf["th1"].iloc[0])],
-            "th2": [int(pdf["th2"].iloc[0])],
-            "salt": [int(pdf["salt"].iloc[0])],
-            "n": [n],
-            "gaps": [gaps],
-            "tfs": [tfs_b],
-            "dls": [dls_b],
-            "block_last": [blast],
-            "block_maxtf": [bmaxtf],
-            "block_mindl": [bmindl],
-        }
     )
 
 
@@ -558,7 +538,8 @@ def _build_one_part(
     """
     t0 = time.time()
     sh0 = shuffle_bytes(spark)
-    sub = staged_part_df(spark, index_dir, p)
+    smeta = _staged_meta(index_dir)
+    sub = staged_part_df(spark, index_dir, p, smeta)
 
     from .termindex import with_tokens
 
@@ -658,13 +639,12 @@ def _build_one_part(
             F.count(F.lit(1)).cast("long").alias("df"),
             F.sum("tf").alias("cf"),
         )
-        # th1-sorted within files so the query-side df/part lookup prunes
-        # row groups on its pushed In(th1) filter — same device as the
-        # postings payload (searchidx reads vocab_parts, not vocabulary).
-        # The hot-term (skew) set rides the same action as an Observation
-        # (r8) — the separate filter+collect job re-ran the vocab
-        # aggregation; hot terms are few by definition (df > salt_chunk),
-        # so the collect_list stays tiny.
+        # th1-sorted within files like the other term-keyed tables; the
+        # partial is a finalize input only (queries read the merged
+        # vocabulary). The hot-term (skew) set rides the same action as
+        # an Observation (r8) — the separate filter+collect job re-ran
+        # the vocab aggregation; hot terms are few by definition
+        # (df > salt_chunk), so the collect_list stays tiny.
         obs_vp = Observation()
         vocab_part.sortWithinPartitions("th1").observe(
             obs_vp,
@@ -720,9 +700,8 @@ def _build_one_part(
         # spreads the ~|vocab| tiny posting groups evenly over a
         # scale-adaptive task count (≥ cluster parallelism, never fewer
         # than the shard count) and also de-skews hot salted terms.
-        n_enc = ENCODE_PARTITIONS or max(
-            _spp(index_dir), spark.sparkContext.defaultParallelism
-        )
+        n_enc = max(smeta["shards_per_part"],
+                    spark.sparkContext.defaultParallelism)
         postings = (
             enriched.repartition(max(2, n_enc), "shard", "th1", "th2", "salt")
             .sortWithinPartitions("th1", "th2", "salt", "shard", "doc_int")
@@ -785,20 +764,6 @@ def _build_one_part(
     }
 
 
-# A/B override for the encode-stage partition count (None = one
-# partition per shard, i.e. shards_per_part). Experiment-only knob.
-ENCODE_PARTITIONS: "int | None" = None
-
-_SPP_CACHE: dict[str, int] = {}
-
-
-def _spp(index_dir: str) -> int:
-    if index_dir not in _SPP_CACHE:
-        with open(f"{index_dir}/staged.json") as fh:
-            _SPP_CACHE[index_dir] = json.load(fh)["shards_per_part"]
-    return _SPP_CACHE[index_dir]
-
-
 def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     """The merged-vocabulary frame finalize_index writes (exposed for
     the plan gate: test_plan_shapes pins that the merge carries NO
@@ -811,10 +776,10 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     if os.path.isdir(f"{index_dir}/vocab_parts"):
         # bparts (r7): the merged vocabulary CARRIES each term's
         # containing-part list, so the query-side df lookup is ONE
-        # range-sorted table scan instead of a fan-out over every
+        # th1-sorted table scan instead of a fan-out over every
         # vocab_parts partial — at 505 parts the partial fan-out alone
-        # cost ~4.5 s/cold query (exp_part_prune), at 10⁴ parts it IS
-        # the latency floor. Hot terms present in more parts than
+        # cost ~4.5 s/cold query (BENCH.md), at 10⁴ parts it IS the
+        # latency floor. Hot terms present in more parts than
         # PART_PRUNE_MAX_PER_TERM store NULL (they prune nothing and
         # their full lists would make the vocabulary O(vocab·parts)).
         # Consistency: every mutation path (build/append/sync/compact)
@@ -939,10 +904,7 @@ def finalize_index(
         # doc_int // (shard_size * shards_per_part) == bpart by
         # construction (staging assigns dense ids in part order) — the
         # query side derives docmap PARTITION filters from winner ids
-        "shards_per_part": (
-            _spp(index_dir)
-            if os.path.exists(f"{index_dir}/staged.json") else None
-        ),
+        "shards_per_part": _staged_meta(index_dir)["shards_per_part"],
         "n_docs": n_docs,
         "total_terms": total_terms,
         "avgdl": avgdl,
@@ -1002,7 +964,17 @@ def build_index(
     smeta = _stage(docs, index_dir, id_col, text_col, shard_size,
                    shards_per_part, id_assign_partitions)
     stage_seconds = round(time.time() - t_stage0, 3)
-    _SPP_CACHE[index_dir] = shards_per_part
+    # a resume builds over the FROZEN staged geometry: parts, shard
+    # bases and winner hydration's doc_int → bpart pruning all derive
+    # from it, so a caller geometry that disagrees would mix layouts
+    for key, want in (("shard_size", shard_size),
+                      ("shards_per_part", shards_per_part)):
+        if smeta[key] != want:
+            raise ValueError(
+                f"{index_dir} is staged with {key}={smeta[key]}, the "
+                f"build asked for {key}={want} — resume with the staged "
+                "geometry or delete the directory to rebuild"
+            )
 
     pending = [
         p for p in smeta["parts"]
@@ -1053,8 +1025,19 @@ def build_index(
 
 
 def load_meta(index_dir: str) -> dict:
+    """The index's stats/meta.json — and the ONE layout gate: every
+    entry point (search, reader, append, delete, sync, compact) opens
+    the index through here, so an index written by another codec
+    version is refused before anything reads or mutates it."""
     with open(f"{index_dir}/stats/meta.json") as fh:
-        return json.load(fh)
+        meta = json.load(fh)
+    if meta.get("codec_version") != CODEC_VERSION:
+        raise ValueError(
+            f"index at {index_dir} has codec_version "
+            f"{meta.get('codec_version')}, engine expects {CODEC_VERSION} "
+            "— rebuild the index"
+        )
+    return meta
 
 
 def append_docs(
@@ -1073,8 +1056,8 @@ def append_docs(
     start at the next part boundary so no existing part is rewritten.
     """
     spark = new_docs.sparkSession
-    smeta = _staged_meta(index_dir)
     meta = load_meta(index_dir)
+    smeta = _staged_meta(index_dir)
     shard_size = smeta["shard_size"]
     spp = smeta["shards_per_part"]
     part_docs = shard_size * spp
@@ -1100,7 +1083,6 @@ def append_docs(
     with open(tmp, "w") as fh:
         json.dump(smeta, fh)
     os.replace(tmp, f"{index_dir}/staged.json")
-    _SPP_CACHE[index_dir] = spp
 
     for p in new_parts:
         metrics = _build_one_part(
@@ -1143,6 +1125,13 @@ def sync_docs(
     {"new": n, "modified": n, "deleted": n, "meta": meta}.
     """
     spark = docs.sparkSession
+    # a delete-only sync without compaction returns this entry meta
+    # unchanged, per the delete_docs contract: tombstoned docs vanish
+    # from results NOW, stats (N/avgdl/df) stay pre-delete until
+    # compact_index — a partial finalize here would shrink N under
+    # stale df (df > N breaks the ln-IDF domain) and desync every
+    # surviving score
+    meta = load_meta(index_dir)
     incoming = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
@@ -1152,11 +1141,6 @@ def sync_docs(
         "doc_id", F.md5(collapse_whitespace(F.col("text"))).alias("fp_new")
     )
     docmap = spark.read.parquet(f"{index_dir}/docmap")
-    if "fp" not in docmap.columns:
-        raise ValueError(
-            "docmap has no fp column — index predates change detection; "
-            "rebuild or append-only"
-        )
     tomb = load_tombstones(index_dir)
     if tomb:
         docmap = docmap.filter(
@@ -1180,7 +1164,6 @@ def sync_docs(
 
     if mod_keys or del_keys:
         delete_docs(spark, index_dir, mod_keys + del_keys)
-    meta = None
     if new_keys or mod_keys:
         to_add = incoming.join(
             spark.createDataFrame(
@@ -1192,13 +1175,6 @@ def sync_docs(
         meta = append_docs(to_add, index_dir)
     if compact:
         meta = compact_index(spark, index_dir)
-    if meta is None:
-        # delete-only sync without compaction follows the delete_docs
-        # contract exactly: tombstoned docs vanish from results NOW,
-        # stats (N/avgdl/df) stay pre-delete until compact_index — a
-        # partial finalize here would shrink N under stale df (df > N
-        # breaks the ln-IDF domain) and desync every surviving score.
-        meta = load_meta(index_dir)
     return {
         "new": len(new_keys),
         "modified": len(mod_keys),
@@ -1227,6 +1203,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
     (the reference rewrites posting lists eagerly —
     inverted_index_builder.py:70-92 — which at 10^12 docs is exactly
     what we must NOT do per deletion)."""
+    meta = load_meta(index_dir)
     docmap = spark.read.parquet(f"{index_dir}/docmap")
     ints = [
         r["doc_int"]
@@ -1241,7 +1218,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
     # Stats (N/avgdl/df) intentionally stay pre-delete until compaction:
     # tombstoned docs vanish from results immediately; surviving docs'
     # scores are unchanged until compact_index() recomputes everything.
-    return load_meta(index_dir)
+    return meta
 
 
 def compact_index(spark: SparkSession, index_dir: str) -> dict:

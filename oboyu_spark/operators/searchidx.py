@@ -56,8 +56,8 @@ DRIVER_CUT_MAX_ROWS = 200_000
 PART_PRUNE_MAX_PER_TERM = 4096
 PART_PRUNE_MAX_UNION = 16384
 
-# scorer="auto" cutovers, from the r7 geometry study
-# (exp_bmw_kernel.py / BENCH.md): block-max pruning beats the
+# scorer="auto" cutovers, from the r7 geometry study (BENCH.md,
+# "Block-max WAND: geometry decides"): block-max pruning beats the
 # vectorized TAAT accumulate only when per-shard posting lists are
 # long (big shards) AND some query term is selective enough to lift
 # the top-k threshold above the hot cells — measured 4.9× kernel /
@@ -72,9 +72,7 @@ class _ThreadLocalScanInfo(threading.local):
     no pruning applied). Overwritten per _search call; read by
     test_plan_shapes/test_index. Thread-local (ADVICE r6) so
     concurrent searches on one SparkSession don't interleave each
-    other's records; note exp_part_prune.py's PART_PRUNE_MAX_UNION
-    override remains a module-global experiment knob, not a serving
-    seam."""
+    other's records."""
 
     def __init__(self) -> None:
         self._d: dict = {}
@@ -118,26 +116,17 @@ def _docmap_for_ids(
     ``spark``/``index_dir``) on the one-shot path: the relation is
     then built from ONLY the containing bpart directories, skipping
     root partition discovery too (a root read lists every directory
-    before PartitionFilters apply). Pre-r7 indexes (no
-    shards_per_part in meta) keep the plain id filter."""
-    spp = meta.get("shards_per_part")
-    parts = (
-        sorted({int(i) // (int(meta["shard_size"]) * int(spp))
-                for i in ids})
-        if spp else None
-    )
+    before PartitionFilters apply)."""
+    part_docs = int(meta["shard_size"]) * int(meta["shards_per_part"])
+    parts = sorted({int(i) // part_docs for i in ids})
     if dm is None:
-        if parts is not None:
-            return spark.read.option(
-                "basePath", f"{index_dir}/docmap"
-            ).parquet(
-                *[f"{index_dir}/docmap/bpart={p}" for p in parts]
-            ).filter(F.col("doc_int").isin(list(ids)))
-        dm = spark.read.parquet(f"{index_dir}/docmap")
-    dm = dm.filter(F.col("doc_int").isin(list(ids)))
-    if parts is not None:
-        dm = dm.filter(F.col("bpart").isin(parts))
-    return dm
+        return spark.read.option(
+            "basePath", f"{index_dir}/docmap"
+        ).parquet(
+            *[f"{index_dir}/docmap/bpart={p}" for p in parts]
+        ).filter(F.col("doc_int").isin(list(ids)))
+    return dm.filter(F.col("doc_int").isin(list(ids))) \
+        .filter(F.col("bpart").isin(parts))
 
 
 def _query_maps(queries: Sequence[str], min_token_length: int):
@@ -366,23 +355,11 @@ class IndexReader:
         self.spark = spark
         self.index_dir = index_dir
         self.meta = load_meta(index_dir)
-        import os
-
         self._dfs = {
             "postings": spark.read.parquet(f"{index_dir}/postings"),
             "vocabulary": spark.read.parquet(f"{index_dir}/vocabulary"),
             "docmap": spark.read.parquet(f"{index_dir}/docmap"),
         }
-        if ("bparts" not in self._dfs["vocabulary"].columns
-                and os.path.isdir(f"{index_dir}/vocab_parts")):
-            # r6-layout index (merged vocabulary without the bparts
-            # column): the df lookup reads the per-part partials so it
-            # also learns which bparts contain each term. r7 indexes
-            # carry bparts IN the merged vocabulary — one table serves
-            # df + pruning, and the partials need not be persisted.
-            self._dfs["vocab_parts"] = spark.read.parquet(
-                f"{index_dir}/vocab_parts"
-            )
         if cache:
             for df in self._dfs.values():
                 df.persist()
@@ -461,28 +438,11 @@ def _search(
     serve_index's plain response)."""
     if isinstance(queries, str):
         queries = [queries]
-    from .postings import CODEC_VERSION
-
-    if meta.get("codec_version") != CODEC_VERSION:
-        raise ValueError(
-            f"index at {index_dir} has codec_version "
-            f"{meta.get('codec_version')}, engine expects {CODEC_VERSION} "
-            "— rebuild the index"
-        )
 
     def table(name: str) -> DataFrame:
         if dfs is not None:
             return dfs[name]
         return spark.read.parquet(f"{index_dir}/{name}")
-
-    def vocab_parts_table() -> DataFrame | None:
-        """Per-part vocab partials, or None on a legacy layout."""
-        import os
-
-        if dfs is not None:
-            return dfs.get("vocab_parts")
-        p = f"{index_dir}/vocab_parts"
-        return spark.read.parquet(p) if os.path.isdir(p) else None
 
     k1, b = meta["k1"], meta["b"]
     avgdl, n_docs = meta["avgdl"], meta["n_docs"]
@@ -520,12 +480,10 @@ def _search(
     # incl. "absent" as None — consistent with the persisted
     # DataFrames); run the lookup job only for terms not seen before.
     # idf is derived fresh from df + current n_docs, so collection
-    # stats are never cached. The lookup reads the PER-PART vocabulary
-    # partials instead of the merged vocabulary: the global df is their
-    # sum by construction (finalize_index builds `vocabulary` as
-    # exactly this groupBy-sum), and the same job yields the set of
-    # bparts containing each term — the part-level pruning input
-    # (VERDICT r5 #3: postings are doc-range-sharded, so without this
+    # stats are never cached. The lookup reads the merged vocabulary,
+    # which carries each term's global df AND its (capped) containing-
+    # bpart list, written at finalize — the part-level pruning input
+    # (VERDICT r5 #3: postings are doc-range-sharded, so without it
     # every search opens every bpart's footers; at 10^4+ parts that
     # fan-out is the latency floor for selective queries).
     df_by_hash: dict[tuple[int, int], int | None] = {}
@@ -543,67 +501,25 @@ def _search(
     stage_secs: dict[str, float] = {}
     if missing:
         _t_vocab = time.time()
-        vp = vocab_parts_table()
         miss_h1 = sorted({h1 for h1, _ in missing})
         miss_set = set(missing)
-        vt = table("vocabulary")
-        if "bparts" in vt.columns:
-            # r7 fast path: the merged vocabulary carries each term's
-            # (capped) containing-part list, written at finalize — ONE
-            # th1-range-sorted table scan serves df AND the pruning
-            # input, instead of fanning out over every vocab_parts
-            # partial (at 505 parts that fan-out alone cost ~4.5 s per
-            # cold query; at 10⁴ parts it is the latency floor).
-            # The exact (th1, th2) pair match runs DRIVER-side over the
-            # few th1-matched rows (r8) — the broadcast-join of a tiny
-            # literal frame bought nothing but an extra exchange/stage
-            # on the cold-query latency path.
-            vocab = vt.filter(F.col("th1").isin(miss_h1)).collect()
-            found = {}
-            for r in vocab:
-                if (r["th1"], r["th2"]) not in miss_set:
-                    continue  # th1 hash collision with a non-query term
-                parts = (None if r["bparts"] is None
-                         else tuple(int(p) for p in r["bparts"]))
-                found[(r["th1"], r["th2"])] = (
-                    int(r["document_frequency"]), parts
-                )
-        elif vp is not None:
-            # the In(th1) filter is PUSHED to the scan (partials are
-            # th1-sorted within files → row-group pruning); the exact
-            # pair match + per-part df sum fold driver-side (rows per
-            # term = its part count)
-            vocab = vp.filter(F.col("th1").isin(miss_h1)).collect()
-            agg: dict[tuple[int, int], tuple[int, set]] = {}
-            for r in vocab:
-                key = (r["th1"], r["th2"])
-                if key not in miss_set:
-                    continue
-                df_sum, pset = agg.get(key, (0, set()))
-                pset.add(int(r["bpart"]))
-                agg[key] = (df_sum + int(r["df"]), pset)
-            found = {}
-            for key, (df_sum, pset) in agg.items():
-                parts = tuple(sorted(pset))
-                if len(parts) > PART_PRUNE_MAX_PER_TERM:
-                    # a term present in this many parts prunes nothing
-                    # — and caching its full part list for 10^6 hot
-                    # terms would blow the driver cache; record "all"
-                    parts = None
-                found[key] = (df_sum, parts)
-        else:
-            # legacy layout without vocab_parts: merged vocabulary df,
-            # no part information (searches scan every bpart)
-            vocab = (
-                table("vocabulary")
-                .filter(F.col("th1").isin(miss_h1))
-                .collect()
+        # ONE th1-sorted table scan serves df AND the pruning input (a
+        # fan-out over the per-part vocab partials cost ~4.5 s per cold
+        # query at 505 parts). The exact (th1, th2) pair match runs
+        # DRIVER-side over the few th1-matched rows (r8) — the
+        # broadcast-join of a tiny literal frame bought nothing but an
+        # extra exchange/stage on the cold-query latency path.
+        vocab = table("vocabulary").filter(
+            F.col("th1").isin(miss_h1)).collect()
+        found = {}
+        for r in vocab:
+            if (r["th1"], r["th2"]) not in miss_set:
+                continue  # th1 hash collision with a non-query term
+            parts = (None if r["bparts"] is None
+                     else tuple(int(p) for p in r["bparts"]))
+            found[(r["th1"], r["th2"])] = (
+                int(r["document_frequency"]), parts
             )
-            found = {
-                (r["th1"], r["th2"]): (int(r["document_frequency"]), None)
-                for r in vocab
-                if (r["th1"], r["th2"]) in miss_set
-            }
         for h in missing:
             df_by_hash[h] = found[h][0] if h in found else None
             if h in found:
@@ -697,9 +613,9 @@ def _search(
 
     bmw_qmap: dict | None = None
     if scorer == "auto" and mode != "and":
-        # geometry-driven choice (r7, exp_bmw_kernel.py / BENCH.md):
-        # BMW only where it measured faster — big shards (long
-        # per-shard lists) AND the query selective (its most-selective
+        # geometry-driven choice (r7, BENCH.md "Block-max WAND:
+        # geometry decides"): BMW only where it measured faster — big
+        # shards (long per-shard lists) AND the query selective (its most-selective
         # present term under the df cut). r8 (VERDICT r7 #1): the
         # choice is PER QUERY, not per batch — a mixed batch splits
         # into a BMW subset and a TAAT subset scored in the SAME

@@ -4,6 +4,8 @@ oracle, and build metrics."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -160,38 +162,17 @@ def test_conjunctive_mode(spark, corpus, index_dir):
         assert {r["doc_id"] for r in got} <= or_docs
 
 
-def test_search_legacy_layout_without_vocab_parts(spark, corpus,
-                                                  index_dir, tmp_path):
-    """The three df-lookup layouts must all search identically:
-    r7 (merged vocabulary CARRIES bparts — pruning works even with
-    vocab_parts deleted), r6 (vocabulary without bparts + vocab_parts
-    partials — pruning via the partial fan-out), and true legacy
-    (neither — merged-vocabulary fallback, no pruning); search_rows
-    matches the DataFrame path on the legacy layout."""
+def test_search_without_vocab_parts(spark, index_dir, tmp_path):
+    """vocab_parts/ is a build-only finalize input: with it deleted,
+    searches are identical, still part-prune (the merged vocabulary
+    carries each term's bparts), and search_rows matches search_index."""
     import shutil
 
     from oboyu_spark.operators.searchidx import IndexReader, _LAST_SCAN_INFO
 
-    def _strip_bparts(d):
-        voc = spark.read.parquet(f"{d}/vocabulary").drop("bparts")
-        tmpv = f"{d}/vocabulary_tmp"
-        voc.write.parquet(tmpv)
-        shutil.rmtree(f"{d}/vocabulary")
-        shutil.move(tmpv, f"{d}/vocabulary")
-
-    # r7 layout minus the partials: pruning info survives in the
-    # merged vocabulary
     nopartials = str(tmp_path / "nopartials_idx")
     shutil.copytree(index_dir, nopartials)
     shutil.rmtree(f"{nopartials}/vocab_parts")
-    # r6 layout: partials present, merged vocabulary without bparts
-    r6style = str(tmp_path / "r6_idx")
-    shutil.copytree(index_dir, r6style)
-    _strip_bparts(r6style)
-    # true legacy: neither source of part info
-    legacy = str(tmp_path / "legacy_idx")
-    shutil.copytree(nopartials, legacy)
-    _strip_bparts(legacy)
 
     for q in ["spark index", "検索 索引"]:
         exp = [(r["doc_id"], r["score"])
@@ -201,24 +182,83 @@ def test_search_legacy_layout_without_vocab_parts(spark, corpus,
                for r in search_index(spark, nopartials, q, k=8).collect()]
         assert got == exp, q
         assert _LAST_SCAN_INFO["live_parts"] == base_parts  # still prunes
-        got = [(r["doc_id"], r["score"])
-               for r in search_index(spark, r6style, q, k=8).collect()]
-        assert got == exp, q
-        assert _LAST_SCAN_INFO["live_parts"] == base_parts
-        got = [(r["doc_id"], r["score"])
-               for r in search_index(spark, legacy, q, k=8).collect()]
-        assert got == exp, q
-        assert _LAST_SCAN_INFO["live_parts"] is None  # no pruning info
-    reader = IndexReader(spark, legacy)
+    reader = IndexReader(spark, nopartials)
     try:
         rows = reader.search_rows("spark index", k=8)
         assert [(d, s) for _, d, s in rows] == [
             (r["doc_id"], r["score"])
-            for r in search_index(spark, legacy, "spark index", k=8)
+            for r in search_index(spark, nopartials, "spark index", k=8)
             .collect()
         ]
     finally:
         reader.close()
+
+
+def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
+                                                tmp_path):
+    """load_meta is the one layout gate: an index whose meta.json
+    carries another codec_version (every r6/pre-r7 layout was written
+    with codec 3) is refused by every entry point before it reads or
+    mutates anything."""
+    import json
+    import shutil
+
+    from oboyu_spark.operators.postings import (
+        append_docs,
+        compact_index,
+        delete_docs,
+        sync_docs,
+    )
+    from oboyu_spark.operators.searchidx import IndexReader
+
+    old = str(tmp_path / "codec3_idx")
+    shutil.copytree(index_dir, old)
+    with open(f"{old}/stats/meta.json") as fh:
+        meta = json.load(fh)
+    meta["codec_version"] = 3
+    with open(f"{old}/stats/meta.json", "w") as fh:
+        json.dump(meta, fh)
+    before = sorted(os.listdir(old))
+
+    docs = corpus.limit(3)
+    for call in (
+        lambda: search_index(spark, old, "spark index"),
+        lambda: IndexReader(spark, old),
+        lambda: append_docs(docs, old),
+        lambda: delete_docs(spark, old, ["x"]),
+        lambda: sync_docs(docs, old),
+        lambda: compact_index(spark, old),
+    ):
+        with pytest.raises(ValueError, match="rebuild"):
+            call()
+    assert sorted(os.listdir(old)) == before  # nothing was written
+
+
+def test_oneshot_search_job_count(spark, index_dir):
+    """One single-query search_index is 8 Spark jobs: vocabulary schema
+    inference + df lookup (2), postings schema inference + the pruned
+    scatter's two AQE jobs (3), docmap schema inference + hydration (2)
+    and the result collect (1). The deleted vocab_parts fallback added
+    a schema-inference job to every call."""
+    import gc
+
+    q = "spark index search"
+    warm = search_index(spark, index_dir, q, k=5).collect()
+    sc = spark.sparkContext
+    # keep cyclic GC out of the pinned window: py4j finalizers it runs
+    # mid-call can route a call over another gateway connection, whose
+    # JVM thread does not carry the job group
+    gc.collect()
+    gc.disable()
+    sc.setJobGroup("oneshot_pin", "one-shot search")
+    try:
+        rows = search_index(spark, index_dir, q, k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        gc.enable()
+    assert rows == warm and len(rows) == 5
+    jobs = sc.statusTracker().getJobIdsForGroup("oneshot_pin")
+    assert len(jobs) == 8, f"one-shot search ran {len(jobs)} jobs: {jobs}"
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):

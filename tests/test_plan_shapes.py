@@ -91,7 +91,7 @@ def test_scan_prunes_columns(spark, index_dir):
 
 def test_search_prunes_parts_by_term(spark, tmp_path):
     """VERDICT r5 #3: postings are doc-range-sharded, so a selective
-    query must NOT open every bpart — the vocab_parts lookup learns
+    query must NOT open every bpart — the vocabulary lookup learns
     which parts contain each term and the postings scan is limited to
     their union (a PartitionFilter on the bpart= directory column).
     A term planted in ONE part must scan only that part's files, with

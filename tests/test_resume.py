@@ -62,6 +62,26 @@ def test_resume_converges_to_fresh_build(spark, tmp_path):
     assert _results(spark, resume_dir) == _results(spark, fresh_dir)
 
 
+def test_resume_refuses_mismatched_geometry(spark, tmp_path):
+    """A resume builds over the FROZEN staged geometry. A caller
+    shard_size / shards_per_part that disagrees with staged.json used to
+    be recorded in meta.json over parts staged with the old geometry —
+    hydration then pruned the docmap to the wrong bparts and searches
+    silently lost hits. It must raise, naming both values, before any
+    part is built."""
+    docs = _corpus(spark)
+    d = str(tmp_path / "idx")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        build_index(docs, d, fail_after_parts=1, **KW)
+    for key, bad in (("shards_per_part", 4), ("shard_size", 100)):
+        with pytest.raises(ValueError,
+                           match=f"{key}={KW[key]}.*{key}={bad}"):
+            build_index(docs, d, **{**KW, key: bad})
+    done = [f for f in os.listdir(f"{d}/manifest") if f.endswith(".json")]
+    assert len(done) == 1
+    assert not os.path.exists(f"{d}/stats/meta.json")
+
+
 def test_manifest_lineage_and_metrics(spark, tmp_path):
     docs = _corpus(spark)
     d = str(tmp_path / "idx")

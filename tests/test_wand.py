@@ -105,10 +105,10 @@ def test_bmw_unit_against_bruteforce():
 
 def test_auto_scorer_picks_by_geometry(spark, tmp_path):
     """scorer="auto" (r7): BMW only on big shards with a uniformly
-    selective batch (the measured win regime — exp_bmw_kernel.py);
-    small shards or hot queries keep TAAT. Results identical to both
-    explicit scorers either way, and mode="and" stays on the TAAT
-    intersection path."""
+    selective batch (the measured win regime — BENCH.md "Block-max
+    WAND: geometry decides"); small shards or hot queries keep TAAT.
+    Results identical to both explicit scorers either way, and
+    mode="and" stays on the TAAT intersection path."""
     from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.operators.postings import build_index
     from oboyu_spark.operators.searchidx import search_index
