@@ -95,7 +95,6 @@ from .. import B_DEFAULT, K1_DEFAULT, MIN_TOKEN_LENGTH_DEFAULT
 from .codec import encode_doc_ids, encode_varbyte
 
 BLOCK = 128
-CODEC_VERSION = 4
 
 # Terms are stored as a 128-bit hash pair (two independent xxhash64
 # passes), NOT as strings. Rationale (measured in this sandbox, and the
@@ -114,7 +113,30 @@ POSTINGS_SCHEMA = (
     "block_last array<long>, block_maxtf array<long>, block_mindl array<long>"
 )
 
+CODEC_VERSION = 4
+# Read schemas of the engine-internal tables, exactly as the parquet
+# reader infers them (the postings root adds its bpart partition
+# column). Queries declare them: a spark.read.parquet without a schema
+# runs a 1-task footer-inference job per relation. Change these only
+# together with CODEC_VERSION. The docmap has no declared schema: its
+# doc_id type is the caller's key column type.
+POSTINGS_READ_SCHEMA = POSTINGS_SCHEMA + ", bpart int"
+VOCABULARY_SCHEMA = (
+    "th1 long, th2 long, document_frequency long, "
+    "collection_frequency long, bparts array<int>"
+)
+
 TERM_HASH_SEED2 = 7  # second hash = xxhash64(term, 7); first = xxhash64(term)
+
+
+def _in_ints(col: str, values: Iterable[int]):
+    """``col IN (v1, v2, ...)`` over integer literals, built with ONE
+    JVM call: ``Column.isin`` makes a py4j call per literal (0.5–1 ms
+    each), which at a few hundred ids outweighs the query it filters.
+    Plain decimal literals type exactly as isin's (int, or bigint past
+    32 bits), so the analyzed and physical plans are the same."""
+    vals = ",".join(str(int(v)) for v in values)
+    return F.expr(f"{col} IN ({vals})") if vals else F.lit(False)
 
 
 def term_hash_cols(term_col):
@@ -465,7 +487,7 @@ def staged_part_df(spark: SparkSession, index_dir: str, p: int,
             sel.append(pid)
             sel_offs[pid] = off
     sub = spark.read.parquet(f"{index_dir}/staged/gen={g['gen']}").filter(
-        F.col("pid").isin(sel)
+        _in_ints("pid", sel)
     )
     omap = F.create_map(
         *[x for pid in sel for x in (F.lit(pid), F.lit(sel_offs[pid]))]
@@ -769,10 +791,6 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     the plan gate: test_plan_shapes pins that the merge carries NO
     range exchange — a range exchange's boundary sampler executes the
     whole merge aggregation a second time)."""
-    vocab_schema = (
-        "th1 long, th2 long, document_frequency long, "
-        "collection_frequency long, bparts array<int>"
-    )
     if os.path.isdir(f"{index_dir}/vocab_parts"):
         # bparts (r7): the merged vocabulary CARRIES each term's
         # containing-part list, so the query-side df lookup is ONE
@@ -816,7 +834,7 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
             .sortWithinPartitions("th1", "th2")
         )
     else:
-        vocab = spark.createDataFrame([], vocab_schema)
+        vocab = spark.createDataFrame([], VOCABULARY_SCHEMA)
     return vocab
 
 
@@ -851,9 +869,7 @@ def finalize_index(
             )
         tomb = load_tombstones(index_dir)
         if tomb:
-            docmap = docmap.filter(
-                ~F.col("doc_int").isin([int(x) for x in tomb])
-            )
+            docmap = docmap.filter(~_in_ints("doc_int", tomb))
         cs = docmap.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.sum("dl"), F.lit(0)).alias("total"),
@@ -1143,9 +1159,7 @@ def sync_docs(
     docmap = spark.read.parquet(f"{index_dir}/docmap")
     tomb = load_tombstones(index_dir)
     if tomb:
-        docmap = docmap.filter(
-            ~F.col("doc_int").isin([int(x) for x in tomb])
-        )
+        docmap = docmap.filter(~_in_ints("doc_int", tomb))
     existing = docmap.select("doc_id", F.col("fp").alias("fp_old"))
     diff = inc.join(existing, "doc_id", "full_outer").select(
         "doc_id",
@@ -1275,7 +1289,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     for (gen, pid), rns in removals.items():
         src = f"{index_dir}/staged/gen={gen}/pid={pid}"
         tmp = f"{index_dir}/staged_tmp/gen={gen}/pid={pid}"
-        spark.read.parquet(src).filter(~F.col("rn").isin(rns)) \
+        spark.read.parquet(src).filter(~_in_ints("rn", rns)) \
             .write.mode("overwrite").parquet(tmp)
     for (gen, pid) in removals:
         src = f"{index_dir}/staged/gen={gen}/pid={pid}"

@@ -33,14 +33,18 @@ from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import py_tokenize
 from .codec import decode_doc_ids, decode_varbyte
-from .postings import load_meta
+from .postings import (POSTINGS_READ_SCHEMA, VOCABULARY_SCHEMA, _in_ints,
+                       load_meta)
 
 RESULT_SCHEMA = "query_id int, doc_int long, score double"
+_READ_SCHEMAS = {"postings": POSTINGS_READ_SCHEMA,
+                 "vocabulary": VOCABULARY_SCHEMA}
 
 # gather strategy cutover: below this many candidate rows
 # (queries × shards × k) the shard winners are rank-cut on the driver
@@ -124,9 +128,24 @@ def _docmap_for_ids(
             "basePath", f"{index_dir}/docmap"
         ).parquet(
             *[f"{index_dir}/docmap/bpart={p}" for p in parts]
-        ).filter(F.col("doc_int").isin(list(ids)))
-    return dm.filter(F.col("doc_int").isin(list(ids))) \
-        .filter(F.col("bpart").isin(parts))
+        ).filter(_in_ints("doc_int", ids))
+    return dm.filter(_in_ints("doc_int", ids)) \
+        .filter(_in_ints("bpart", parts))
+
+
+def _result_frame(spark: SparkSession, rows) -> DataFrame:
+    """(query_id int, doc_id string, score double) frame of driver-side
+    (query_id, doc_id, score) rows, built through Arrow: that gives a
+    LocalRelation, whose collect() runs no Spark job (a createDataFrame
+    of Python rows is an RDD scan, one job per collect). Integer-keyed
+    indexes hydrate int doc_ids; they are str()-ed, so doc_id is a
+    string column for every key type."""
+    qids, dids, scores = zip(*rows) if rows else ((), (), ())
+    return spark.createDataFrame(pa.table({
+        "query_id": pa.array(qids, pa.int32()),
+        "doc_id": pa.array([str(d) for d in dids], pa.string()),
+        "score": pa.array(scores, pa.float64()),
+    }))
 
 
 def _query_maps(queries: Sequence[str], min_token_length: int):
@@ -356,8 +375,11 @@ class IndexReader:
         self.index_dir = index_dir
         self.meta = load_meta(index_dir)
         self._dfs = {
-            "postings": spark.read.parquet(f"{index_dir}/postings"),
-            "vocabulary": spark.read.parquet(f"{index_dir}/vocabulary"),
+            "postings": spark.read.schema(POSTINGS_READ_SCHEMA)
+            .parquet(f"{index_dir}/postings"),
+            "vocabulary": spark.read.schema(VOCABULARY_SCHEMA)
+            .parquet(f"{index_dir}/vocabulary"),
+            # inferred: doc_id has the caller's key type
             "docmap": spark.read.parquet(f"{index_dir}/docmap"),
         }
         if cache:
@@ -386,10 +408,9 @@ class IndexReader:
                     mode: str = "or") -> "list[tuple[int, str, float]]":
         """Like :meth:`search` but returns the final (query_id, doc_id,
         score) tuples driver-side. On the warm driver-cut path the
-        winners are already driver-local, so this skips the
-        createDataFrame→collect round-trip — one whole Spark job off
-        every warm serving query (the serve loop and the hybrid fold
-        consume rows, not a frame)."""
+        winners are already driver-local, so this skips building a
+        result frame and collecting it back (the serve loop and the
+        hybrid fold consume rows, not a frame)."""
         return _search(self.spark, self.meta, self._dfs, self.index_dir,
                        queries, k, scorer, mode, df_cache=self._df_cache,
                        docmap_cache=self._docmap_cache, return_rows=True)
@@ -432,17 +453,23 @@ def _search(
     """``return_rows=True`` returns the final results as a driver list
     of (query_id, doc_id, score) tuples instead of a DataFrame. On the
     driver-cut path the winners are ALREADY driver-local after the
-    scatter, so this skips the createDataFrame→collect round-trip — a
-    whole Spark job off the warm serving path (the fold consumers:
-    ``IndexReader.search_rows``, ``hybrid_search_folded``,
-    serve_index's plain response)."""
+    scatter, so this skips the Arrow frame build and the collect back
+    (the fold consumers: ``IndexReader.search_rows``,
+    ``hybrid_search_folded``, serve_index's plain response). The
+    DataFrame form is an Arrow-built LocalRelation (``_result_frame``),
+    so collecting it runs no Spark job either.
+
+    Driver↔JVM cost per call: integer IN filters are one F.expr call
+    (``_in_ints``), not one py4j call per literal; the postings and
+    vocabulary reads declare their schemas (no footer-inference job)."""
     if isinstance(queries, str):
         queries = [queries]
 
     def table(name: str) -> DataFrame:
         if dfs is not None:
             return dfs[name]
-        return spark.read.parquet(f"{index_dir}/{name}")
+        return spark.read.schema(_READ_SCHEMAS[name]).parquet(
+            f"{index_dir}/{name}")
 
     k1, b = meta["k1"], meta["b"]
     avgdl, n_docs = meta["avgdl"], meta["n_docs"]
@@ -453,11 +480,7 @@ def _search(
     qreq = {qid: len(qterms) for qid, qterms in qmap.items()}
 
     def ret_empty():
-        if return_rows:
-            return []
-        return spark.createDataFrame(
-            [], "query_id int, doc_id string, score double"
-        )
+        return [] if return_rows else _result_frame(spark, [])
 
     if not all_terms or n_docs == 0 or avgdl <= 0:
         return ret_empty()
@@ -510,7 +533,7 @@ def _search(
         # broadcast-join of a tiny literal frame bought nothing but an
         # extra exchange/stage on the cold-query latency path.
         vocab = table("vocabulary").filter(
-            F.col("th1").isin(miss_h1)).collect()
+            _in_ints("th1", miss_h1)).collect()
         found = {}
         for r in vocab:
             if (r["th1"], r["th2"]) not in miss_set:
@@ -561,7 +584,7 @@ def _search(
     live_h1 = sorted({h1 for h1, _ in idf_by_hash})
     # part-level pruning: read ONLY the bpart= directories that contain
     # at least one live query term (bpart is a partition column — the
-    # isin lands in the scan's PartitionFilters, so unrelated parts'
+    # IN filter lands in the scan's PartitionFilters, so unrelated parts'
     # files are never opened, footer reads included). Skipped when any
     # live term's part set was too large to track (it spans everything
     # anyway) or when the union itself stops being selective.
@@ -591,18 +614,16 @@ def _search(
         # store), all of it for directories the filter then discards.
         # A warm IndexReader amortizes discovery in its persisted
         # relations; this gives the cold path the same locality.
-        postings = spark.read.option(
+        postings = spark.read.schema(POSTINGS_READ_SCHEMA).option(
             "basePath", f"{index_dir}/postings"
         ).parquet(*[
             f"{index_dir}/postings/bpart={int(p)}"
             for p in live_parts
-        ]).filter(F.col("th1").isin(live_h1))
+        ]).filter(_in_ints("th1", live_h1))
     else:
-        postings = table("postings").filter(F.col("th1").isin(live_h1))
+        postings = table("postings").filter(_in_ints("th1", live_h1))
         if live_parts is not None:
-            postings = postings.filter(
-                F.col("bpart").isin([int(p) for p in live_parts])
-            )
+            postings = postings.filter(_in_ints("bpart", live_parts))
 
     from .postings import load_tombstones
 
@@ -682,7 +703,7 @@ def _search(
         # winners are driver-known ids → hydrate driver-side: one
         # pruned docmap scan for cache-missed ids (no join job), zero
         # Spark jobs when every winner is already cached in a warm
-        # IndexReader. The docmap is sorted by doc_int, so the isin
+        # IndexReader. The docmap is sorted by doc_int, so the IN
         # filter prunes to the few row groups containing misses.
         ids = sorted({int(r["doc_int"]) for r in top_rows})
         known = docmap_cache if docmap_cache is not None else {}
@@ -720,9 +741,7 @@ def _search(
             return ret_empty()
         if return_rows:
             return final  # already (query_id, doc_id, score) tuples
-        return spark.createDataFrame(
-            final, "query_id int, doc_id string, score double"
-        )
+        return _result_frame(spark, final)
     # cluster scale (10^4+ shards): rank in Spark, then hydrate keys
     # from the docmap with an id-pushed filter — the docmap is sorted
     # by doc_int, so parquet min/max stats prune to the few row groups
@@ -739,11 +758,11 @@ def _search(
     if not top_rows:
         return ret_empty()
     ids = sorted({int(r["doc_int"]) for r in top_rows})
-    tiny = spark.createDataFrame(
-        [(int(r["query_id"]), int(r["doc_int"]), float(r["score"]))
-         for r in top_rows],
-        "query_id int, doc_int long, score double",
-    )
+    tiny = spark.createDataFrame(pa.table({
+        "query_id": pa.array([r["query_id"] for r in top_rows], pa.int32()),
+        "doc_int": pa.array([r["doc_int"] for r in top_rows], pa.int64()),
+        "score": pa.array([r["score"] for r in top_rows], pa.float64()),
+    }))
     docmap = _docmap_for_ids(
         dfs["docmap"] if dfs is not None else None, meta, ids,
         spark=spark, index_dir=index_dir,
@@ -762,4 +781,6 @@ def _search(
     if return_rows:
         return [(int(r["query_id"]), r["doc_id"], float(r["score"]))
                 for r in out.collect()]
-    return out
+    # doc_id as a string, as on the driver-cut path (an integer-keyed
+    # docmap ranks its ties numerically above, on both paths)
+    return out.withColumn("doc_id", F.col("doc_id").cast("string"))

@@ -37,7 +37,7 @@ from pyspark.sql import SparkSession
 from ..sources.transcripts import turns_as_docs
 
 
-#: tombstone sets up to this size are inlined as an isin literal (one
+#: tombstone sets up to this size are inlined as an IN literal list (one
 #: broadcast-free pushed filter); larger sets anti-join instead so the
 #: driver never builds a million-term In-expression
 TOMBSTONE_ISIN_MAX = 10_000
@@ -80,7 +80,8 @@ def handle_batch_factory(index_dir: str):
 
     from pyspark.sql import functions as F
 
-    from ..operators.postings import append_docs, build_index, load_tombstones
+    from ..operators.postings import (_in_ints, append_docs, build_index,
+                                      load_tombstones)
 
     def handle_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -109,9 +110,7 @@ def handle_batch_factory(index_dir: str):
             )
             tomb = load_tombstones(index_dir)
             if tomb and len(tomb) <= TOMBSTONE_ISIN_MAX:
-                docmap = docmap.filter(
-                    ~F.col("doc_int").isin([int(x) for x in tomb])
-                )
+                docmap = docmap.filter(~_in_ints("doc_int", tomb))
             elif tomb:
                 # ADVICE r3: a large pre-compaction tombstone set as an
                 # isin literal is one giant driver-built In-expression;

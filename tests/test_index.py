@@ -235,11 +235,11 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
 
 
 def test_oneshot_search_job_count(spark, index_dir):
-    """One single-query search_index is 8 Spark jobs: vocabulary schema
-    inference + df lookup (2), postings schema inference + the pruned
-    scatter's two AQE jobs (3), docmap schema inference + hydration (2)
-    and the result collect (1). The deleted vocab_parts fallback added
-    a schema-inference job to every call."""
+    """One single-query search_index is 5 Spark jobs: the df lookup
+    (1), the pruned scatter's two AQE jobs (2), docmap schema inference
+    + hydration (2). The postings and vocabulary reads declare their
+    schemas, so they run no footer-inference job, and the result is an
+    Arrow-built LocalRelation, whose collect runs no job."""
     import gc
 
     q = "spark index search"
@@ -258,7 +258,7 @@ def test_oneshot_search_job_count(spark, index_dir):
         gc.enable()
     assert rows == warm and len(rows) == 5
     jobs = sc.statusTracker().getJobIdsForGroup("oneshot_pin")
-    assert len(jobs) == 8, f"one-shot search ran {len(jobs)} jobs: {jobs}"
+    assert len(jobs) == 5, f"one-shot search ran {len(jobs)} jobs: {jobs}"
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):
