@@ -86,9 +86,9 @@ def run_mixed(spark, reps: int = 3) -> dict:
                 dt, n = run(s)
                 rows[s].append(round(dt, 3))
                 out["batch_mixed_rows"] = n
-        out["auto_scorer_decision"] = SI._LAST_SCAN_INFO.get("auto_scorer")
+        out["auto_scorer_decision"] = SI.last_scan_info().get("auto_scorer")
         out["auto_bmw_query_count"] = len(
-            SI._LAST_SCAN_INFO.get("auto_bmw_queries") or [])
+            SI.last_scan_info().get("auto_bmw_queries") or [])
         for s, vals in rows.items():
             out[f"batch_mixed_{s}_bigshard"] = min(vals)
             out[f"batch_mixed_{s}_reps"] = vals

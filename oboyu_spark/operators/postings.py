@@ -4,6 +4,12 @@ Layout (north rule: delta-gap+varbyte postings, per-block max metadata,
 explicit salting, checkpoint-resume with per-partition lineage):
 
     index_dir/
+      staged.json                  the build settings record (geometry,
+                                   salt_chunk, tokenizer, k1/b) frozen
+                                   at staging — every part build,
+                                   append, compaction and finalize
+                                   reads them here — plus the parts
+                                   and per-generation pid offsets
       staged/gen=G/pid=P/*.parquet frozen (doc_id, text, rn) — the
                                    build's deterministic input
                                    snapshot, written in ONE corpus
@@ -50,7 +56,8 @@ explicit salting, checkpoint-resume with per-partition lineage):
                                    compact() rewrites affected parts)
       manifest/part-P.json         per-partition lineage: input
                                    fingerprint, status, metrics
-                                   (docs, tokens, postings, bytes, secs)
+                                   (docs, tokens, postings, bytes, secs,
+                                   the part's own jobs' shuffle bytes)
       stats/meta.json              global stats + aggregate metrics;
                                    its codec_version is the ONE layout
                                    gate — load_meta refuses any other
@@ -84,6 +91,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from typing import Iterable
 
 import numpy as np
@@ -113,7 +121,7 @@ POSTINGS_SCHEMA = (
     "block_last array<long>, block_maxtf array<long>, block_mindl array<long>"
 )
 
-CODEC_VERSION = 4
+CODEC_VERSION = 5
 # Read schemas of the engine-internal tables, exactly as the parquet
 # reader infers them (the postings root adds its bpart partition
 # column). Queries declare them: a spark.read.parquet without a schema
@@ -312,27 +320,47 @@ def wtf_upper(maxtf, mindl, k1: float, b: float, avgdl: float):
     return t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * (d / avgdl)))
 
 
-def shuffle_bytes(spark: SparkSession) -> tuple[int, int] | None:
-    """Cumulative (shuffle write, shuffle read) bytes for this app from
-    the live AppStatusStore — the north rule asks for shuffle bytes in
-    the per-partition build metrics. Best-effort (internal API): returns
+def _tagged_shuffle_bytes(spark: SparkSession, tag: str) -> tuple[int, int] | None:
+    """(shuffle write, shuffle read) bytes of the stages of the jobs
+    carrying job tag ``tag`` — one part build's own jobs, exact under
+    concurrent part builds. Best-effort (internal status-store API):
     None if the py4j path changes across Spark versions."""
+    from py4j.protocol import Py4JError
+
     try:
         sc = spark.sparkContext
-        store = sc._jsc.sc().statusStore()
-        jvm, gw = sc._jvm, sc._gateway
-        stages = store.stageList(
-            jvm.java.util.ArrayList(), False, False,
-            gw.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-        )
+        jsc = sc._jsc.sc()
+        # the status store is fed asynchronously: let it catch up with
+        # the events of the jobs that just returned
+        jsc.listenerBus().waitUntilEmpty(5_000)
+        tracker = sc.statusTracker()
+        stages = set()
+        for j in jsc.statusTracker().getJobIdsForTag(tag):
+            info = tracker.getJobInfo(j)
+            if info is not None:
+                stages.update(info.stageIds)
+        store = jsc.statusStore()
         tw = tr = 0
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            tw += s.shuffleWriteBytes()
-            tr += s.shuffleReadBytes()
+        for s in stages:
+            try:
+                sd = store.lastStageAttempt(s)
+            except Py4JError:  # skipped: no attempt recorded
+                continue
+            tw += sd.shuffleWriteBytes()
+            tr += sd.shuffleReadBytes()
         return int(tw), int(tr)
-    except Exception:
+    except Py4JError:
         return None
+
+
+def _write_json(path: str, obj) -> None:
+    """Atomic JSON write: readers see the old file or the new one,
+    never a torn one (tmp write + rename)."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, indent=2)
+    os.replace(tmp, path)
 
 
 def _manifest_path(index_dir: str, p: int) -> str:
@@ -348,11 +376,7 @@ def _read_manifest(index_dir: str, p: int) -> dict | None:
 
 
 def _write_manifest(index_dir: str, p: int, row: dict) -> None:
-    os.makedirs(f"{index_dir}/manifest", exist_ok=True)
-    tmp = _manifest_path(index_dir, p) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(row, fh, indent=2)
-    os.replace(tmp, _manifest_path(index_dir, p))
+    _write_json(_manifest_path(index_dir, p), row)
 
 
 def _tag_local_ids(df: DataFrame) -> DataFrame:
@@ -462,6 +486,10 @@ def _staged_meta(index_dir: str) -> dict:
         return json.load(fh)
 
 
+def _part_docs(smeta: dict) -> int:
+    return smeta["settings"]["shard_size"] * smeta["settings"]["shards_per_part"]
+
+
 def staged_part_df(spark: SparkSession, index_dir: str, p: int,
                    smeta: dict | None = None) -> DataFrame:
     """The frozen input slice of build partition ``p``:
@@ -471,7 +499,7 @@ def staged_part_df(spark: SparkSession, index_dir: str, p: int,
     the pids overlapping the part's id range are read (directory-level
     partition pruning on pid)."""
     smeta = smeta or _staged_meta(index_dir)
-    part_docs = smeta["shard_size"] * smeta["shards_per_part"]
+    part_docs = _part_docs(smeta)
     lo, hi = p * part_docs, (p + 1) * part_docs
     for g in smeta["gens"]:
         if g["base"] <= lo < g["base"] + g["n"]:
@@ -501,15 +529,15 @@ def _stage(
     index_dir: str,
     id_col: str,
     text_col: str,
-    shard_size: int,
-    shards_per_part: int,
+    settings: dict,
     id_assign_partitions: int | None,
 ) -> dict:
-    """Freeze the input: strided ids + bpart partitions, written once."""
-    staged_meta_path = f"{index_dir}/staged.json"
-    if os.path.exists(staged_meta_path):
-        with open(staged_meta_path) as fh:
-            return json.load(fh)
+    """Freeze the input (strided ids + bpart partitions, written once)
+    and the build ``settings`` with it: staged.json's ``settings``
+    record is the ONE place every later part build, append, compaction
+    and finalize reads them from."""
+    if os.path.exists(f"{index_dir}/staged.json"):
+        return _staged_meta(index_dir)
     # no staged.json → any staged files are a partial crashed write
     import shutil
 
@@ -517,37 +545,26 @@ def _stage(
     spark = docs.sparkSession
     keyed = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     num_partitions = id_assign_partitions or spark.sparkContext.defaultParallelism
-    part_docs = shard_size * shards_per_part
+    part_docs = settings["shard_size"] * settings["shards_per_part"]
     n_docs, parts, offsets = _stage_docs(
         keyed, index_dir, part_docs, num_partitions, 0, 0
     )
     meta = {
+        "settings": settings,
         "n_docs": int(n_docs),
         "parts": parts,
-        "shard_size": shard_size,
-        "shards_per_part": shards_per_part,
         "gens": [
             {"gen": 0, "base": 0, "n": int(n_docs),
              "offsets": {str(k): int(v) for k, v in offsets.items()}}
         ],
     }
-    tmp = staged_meta_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, staged_meta_path)
+    _write_json(f"{index_dir}/staged.json", meta)
     return meta
 
 
-def _build_one_part(
-    spark: SparkSession,
-    index_dir: str,
-    p: int,
-    shard_size: int,
-    salt_chunk: int,
-    min_token_length: int,
-    stop_words,
-) -> dict:
-    """Build postings + vocab partial + docmap for one bpart.
+def _build_one_part(spark: SparkSession, index_dir: str, p: int) -> dict:
+    """Build postings + vocab partial + docmap for one bpart, with the
+    settings frozen in staged.json.
 
     Shuffle budget (the thing that matters at 100 TB): doc length is
     carried through tokenization (dl = size of the filtered token
@@ -559,8 +576,9 @@ def _build_one_part(
     for the vocab partial, and the (shard, term, salt) encode shuffle.
     """
     t0 = time.time()
-    sh0 = shuffle_bytes(spark)
     smeta = _staged_meta(index_dir)
+    cfg = smeta["settings"]
+    shard_size, salt_chunk = cfg["shard_size"], cfg["salt_chunk"]
     sub = staged_part_df(spark, index_dir, p, smeta)
 
     from .termindex import with_tokens
@@ -595,7 +613,8 @@ def _build_one_part(
         )
     else:
         toks = (
-            with_tokens(sub, "text", "tokens", min_token_length, stop_words)
+            with_tokens(sub, "text", "tokens", cfg["min_token_length"],
+                        cfg["stop_words"])
             .withColumn("dl", F.size("tokens"))
             .withColumn("fp", F.md5(collapse_whitespace(F.col("text"))))
             .drop("text")
@@ -614,12 +633,18 @@ def _build_one_part(
     # Spark schedules its stages alongside the tf aggregate instead of
     # serializing the whole docmap write onto the part's critical path
     # (~1.5 s of a ~9 s part wall at bench geometry, and the straggler
-    # tail of every multi-part build). Both consumers materialize the
-    # SAME persisted `toks` frame — block-level cache locks make one
-    # computation win, so tokenization still runs once. step_seconds
-    # are per-step wall clocks; docmap now overlaps tf_vocab.
+    # tail of every multi-part build). Both consumers read the SAME
+    # persisted `toks` frame. The block lock is per executor: there the
+    # first task to reach an uncached partition tokenizes and stores
+    # it, and the other job's concurrent task waits and reads the block
+    # (one tokenization per partition in local mode). Tasks on two
+    # executors share no lock, so on a cluster both jobs can tokenize
+    # the same partition. step_seconds are per-step wall clocks; docmap
+    # overlaps tf_vocab. The thread inherits this one's job group and
+    # tags (the part's tag included).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
 
     obs_dm = Observation()
@@ -639,7 +664,7 @@ def _build_one_part(
         steps["docmap"] = round(time.time() - t_dm, 3)
 
     dm_pool = ThreadPoolExecutor(max_workers=1)
-    dm_fut = dm_pool.submit(_write_docmap)
+    dm_fut = dm_pool.submit(inheritable_thread_target(spark)(_write_docmap))
     t_s = time.time()
 
     try:
@@ -722,7 +747,7 @@ def _build_one_part(
         # spreads the ~|vocab| tiny posting groups evenly over a
         # scale-adaptive task count (≥ cluster parallelism, never fewer
         # than the shard count) and also de-skews hot salted terms.
-        n_enc = max(smeta["shards_per_part"],
+        n_enc = max(cfg["shards_per_part"],
                     spark.sparkContext.defaultParallelism)
         postings = (
             enriched.repartition(max(2, n_enc), "shard", "th1", "th2", "salt")
@@ -763,19 +788,11 @@ def _build_one_part(
     tf.unpersist()
     agg = obs_po.get
     elapsed = time.time() - t0
-    sh1 = shuffle_bytes(spark)
-    # NB: with concurrent part builds the app-level delta attributes
-    # overlapping stages to whichever part reads it — per-part shuffle
-    # bytes are exact only in sequential builds; totals always are.
-    shuffle_w = (sh1[0] - sh0[0]) if (sh0 and sh1) else None
-    shuffle_r = (sh1[1] - sh0[1]) if (sh0 and sh1) else None
     return {
         "bpart": p,
         "status": "done",
         "n_docs": int(n_docs_part),
         "tokens": tokens_part,
-        "shuffle_write_bytes": shuffle_w,
-        "shuffle_read_bytes": shuffle_r,
         "posting_rows": int(agg["rows"]),
         "n_postings": int(agg["postings"]),
         "compressed_payload_bytes": int(agg["bytes"]),
@@ -838,28 +855,24 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     return vocab
 
 
-def finalize_index(
-    spark: SparkSession,
-    index_dir: str,
-    k1: float,
-    b: float,
-    min_token_length: int,
-    shard_size: int,
-    salt_chunk: int,
-) -> dict:
-    """Merge vocab partials, compute collection stats, write meta."""
+def finalize_index(spark: SparkSession, index_dir: str) -> dict:
+    """Merge vocab partials, compute collection stats, write meta (the
+    build settings are copied from staged.json for the query side)."""
     vocab = _merged_vocab_frame(spark, index_dir)
     # the vocab merge shares nothing with the docmap stats / integrity
     # jobs below — run it on a helper thread so Spark schedules them
-    # together (guide §2.6) instead of three sequential barriers
+    # together (guide §2.6) instead of three sequential barriers; the
+    # thread inherits the caller's job group and tags
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+
     fin_pool = ThreadPoolExecutor(max_workers=1)
-    vocab_fut = fin_pool.submit(
+    vocab_fut = fin_pool.submit(inheritable_thread_target(spark)(
         lambda: vocab.write.mode("overwrite").parquet(
             f"{index_dir}/vocabulary"
         )
-    )
+    ))
     try:
         if os.path.isdir(f"{index_dir}/docmap"):
             docmap = spark.read.parquet(f"{index_dir}/docmap")
@@ -912,15 +925,11 @@ def finalize_index(
     meta = {
         "codec_version": CODEC_VERSION,
         "block": BLOCK,
-        "k1": k1,
-        "b": b,
-        "min_token_length": min_token_length,
-        "shard_size": shard_size,
-        "salt_chunk": salt_chunk,
-        # doc_int // (shard_size * shards_per_part) == bpart by
-        # construction (staging assigns dense ids in part order) — the
-        # query side derives docmap PARTITION filters from winner ids
-        "shards_per_part": _staged_meta(index_dir)["shards_per_part"],
+        # k1, b, min_token_length and the geometry: doc_int //
+        # (shard_size * shards_per_part) == bpart by construction
+        # (staging assigns dense ids in part order) — the query side
+        # derives docmap PARTITION filters from winner ids
+        **_staged_meta(index_dir)["settings"],
         "n_docs": n_docs,
         "total_terms": total_terms,
         "avgdl": avgdl,
@@ -949,11 +958,58 @@ def finalize_index(
         if total_secs > 0
         else None,
     }
-    os.makedirs(f"{index_dir}/stats", exist_ok=True)
-    tmp = f"{index_dir}/stats/meta.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh, indent=2)
-    os.replace(tmp, f"{index_dir}/stats/meta.json")
+    _write_json(f"{index_dir}/stats/meta.json", meta)
+    return meta
+
+
+def _build_parts(spark: SparkSession, index_dir: str, parts) -> dict:
+    """The part loop of build, append and compact: build each part of
+    ``parts`` whose manifest row is not ``done`` (≤4 concurrently —
+    disjoint output roots), write its manifest, then finalize.
+
+    Each submission is wrapped by its OWN ``inheritable_thread_target``
+    call, which clones the caller's local properties (job group,
+    scheduler pool) once: cancelling the caller's group cancels the
+    part's jobs, and the part's job tag lands in its own copy (one
+    shared wrapper would share one Properties object and leak tags
+    between concurrent parts)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    t0 = time.time()
+    pending = [
+        p for p in parts
+        if not (
+            (row := _read_manifest(index_dir, p)) and row.get("status") == "done"
+        )
+    ]
+
+    def run(p: int) -> None:
+        sc = spark.sparkContext
+        tag = f"oboyu-part-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            row = _build_one_part(spark, index_dir, p)
+        finally:
+            sc.removeJobTag(tag)
+        sh = _tagged_shuffle_bytes(spark, tag)
+        row["shuffle_write_bytes"], row["shuffle_read_bytes"] = sh or (None, None)
+        _write_manifest(index_dir, p, row)
+
+    if pending:
+        with ThreadPoolExecutor(max_workers=min(4, len(pending))) as ex:
+            futs = [ex.submit(inheritable_thread_target(spark)(run), p)
+                    for p in pending]
+            for f in futs:
+                f.result()
+    t1 = time.time()
+    meta = finalize_index(spark, index_dir)
+    # wall clock of the (overlapping) part builds, then finalize
+    meta["phase_seconds"] = {
+        "parts_wall": round(t1 - t0, 3),
+        "finalize": round(time.time() - t1, 3),
+    }
     return meta
 
 
@@ -970,73 +1026,40 @@ def build_index(
     min_token_length: int = MIN_TOKEN_LENGTH_DEFAULT,
     stop_words: Iterable[str] | None = None,
     id_assign_partitions: int | None = None,
-    fail_after_parts: int | None = None,
 ) -> dict:
     """Checkpoint-resumable index build. Re-running after a crash skips
-    bparts whose manifest rows are ``done`` (``fail_after_parts`` exists
-    for the resume tests: raise after N parts to simulate a crash)."""
-    spark = docs.sparkSession
+    bparts whose manifest rows are ``done``."""
     t_stage0 = time.time()
-    smeta = _stage(docs, index_dir, id_col, text_col, shard_size,
-                   shards_per_part, id_assign_partitions)
-    stage_seconds = round(time.time() - t_stage0, 3)
-    # a resume builds over the FROZEN staged geometry: parts, shard
-    # bases and winner hydration's doc_int → bpart pruning all derive
-    # from it, so a caller geometry that disagrees would mix layouts
-    for key, want in (("shard_size", shard_size),
-                      ("shards_per_part", shards_per_part)):
-        if smeta[key] != want:
-            raise ValueError(
-                f"{index_dir} is staged with {key}={smeta[key]}, the "
-                f"build asked for {key}={want} — resume with the staged "
-                "geometry or delete the directory to rebuild"
-            )
-
-    pending = [
-        p for p in smeta["parts"]
-        if not (
-            (row := _read_manifest(index_dir, p)) and row.get("status") == "done"
-        )
-    ]
-    if fail_after_parts is not None:
-        # sequential mode with deterministic crash injection (tests)
-        built = 0
-        for p in pending:
-            metrics = _build_one_part(
-                spark, index_dir, p, shard_size, salt_chunk,
-                min_token_length, stop_words,
-            )
-            _write_manifest(index_dir, p, metrics)
-            built += 1
-            if built >= fail_after_parts:
-                raise RuntimeError(f"injected failure after {built} parts")
-    elif pending:
-        # concurrent part builds: disjoint output roots, independent
-        # manifests; Spark schedules the jobs across the same executors
-        from concurrent.futures import ThreadPoolExecutor
-
-        def run(p: int) -> None:
-            metrics = _build_one_part(
-                spark, index_dir, p, shard_size, salt_chunk,
-                min_token_length, stop_words,
-            )
-            _write_manifest(index_dir, p, metrics)
-
-        with ThreadPoolExecutor(max_workers=min(4, len(pending))) as ex:
-            list(ex.map(run, pending))
-
-    t_parts1 = time.time()
-    meta = finalize_index(
-        spark, index_dir, k1, b, min_token_length, shard_size, salt_chunk
-    )
-    # phase decomposition for the bench report: staging (the single
-    # corpus materialization + id freeze), the concurrent part builds
-    # (wall clock, not CPU-sum — parts overlap), and finalize
-    meta["phase_seconds"] = {
-        "stage": stage_seconds,
-        "parts_wall": round(t_parts1 - t_stage0 - stage_seconds, 3),
-        "finalize": round(time.time() - t_parts1, 3),
+    settings = {
+        "shard_size": shard_size,
+        "shards_per_part": shards_per_part,
+        "salt_chunk": salt_chunk,
+        "min_token_length": min_token_length,
+        "stop_words": sorted(set(stop_words)) if stop_words else None,
+        "k1": k1,
+        "b": b,
     }
+    smeta = _stage(docs, index_dir, id_col, text_col, settings,
+                   id_assign_partitions)
+    stage_seconds = round(time.time() - t_stage0, 3)
+    # a resume builds with the FROZEN settings: parts, shard bases and
+    # winner hydration's doc_int → bpart pruning derive from the
+    # geometry, and parts built with other tokenizer or salting
+    # settings would mix into one index
+    staged = smeta.get("settings", {})
+    for key, want in settings.items():
+        if staged.get(key) != want:
+            raise ValueError(
+                f"{index_dir} is staged with {key}={staged.get(key)}, the "
+                f"build asked for {key}={want} — resume with the staged "
+                "settings or delete the directory to rebuild"
+            )
+
+    meta = _build_parts(docs.sparkSession, index_dir, smeta["parts"])
+    # phase decomposition for the bench report: staging (the single
+    # corpus materialization + id freeze), then the part builds and
+    # finalize
+    meta["phase_seconds"] = {"stage": stage_seconds, **meta["phase_seconds"]}
     return meta
 
 
@@ -1072,11 +1095,9 @@ def append_docs(
     start at the next part boundary so no existing part is rewritten.
     """
     spark = new_docs.sparkSession
-    meta = load_meta(index_dir)
+    load_meta(index_dir)
     smeta = _staged_meta(index_dir)
-    shard_size = smeta["shard_size"]
-    spp = smeta["shards_per_part"]
-    part_docs = shard_size * spp
+    part_docs = _part_docs(smeta)
     start_part = (max(smeta["parts"]) + 1) if smeta["parts"] else 0
     start_id = start_part * part_docs
     gen = len(smeta["gens"])
@@ -1095,21 +1116,8 @@ def append_docs(
         )
     smeta["n_docs"] = smeta["n_docs"] + int(n_new)
     smeta["parts"] = sorted(set(smeta["parts"]) | set(new_parts))
-    tmp = f"{index_dir}/staged.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(smeta, fh)
-    os.replace(tmp, f"{index_dir}/staged.json")
-
-    for p in new_parts:
-        metrics = _build_one_part(
-            spark, index_dir, int(p), shard_size, meta["salt_chunk"],
-            meta["min_token_length"], None,
-        )
-        _write_manifest(index_dir, int(p), metrics)
-    return finalize_index(
-        spark, index_dir, meta["k1"], meta["b"], meta["min_token_length"],
-        shard_size, meta["salt_chunk"],
-    )
+    _write_json(f"{index_dir}/staged.json", smeta)
+    return _build_parts(spark, index_dir, new_parts)
 
 
 def sync_docs(
@@ -1224,11 +1232,7 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
         for r in docmap.filter(F.col("doc_id").isin(doc_keys)).collect()
     ]
     tomb = load_tombstones(index_dir) | set(int(x) for x in ints)
-    os.makedirs(f"{index_dir}/tombstones", exist_ok=True)
-    tmp = f"{index_dir}/tombstones/doc_ints.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(sorted(tomb), fh)
-    os.replace(tmp, f"{index_dir}/tombstones/doc_ints.json")
+    _write_json(f"{index_dir}/tombstones/doc_ints.json", sorted(tomb))
     # Stats (N/avgdl/df) intentionally stay pre-delete until compaction:
     # tombstoned docs vanish from results immediately; surviving docs'
     # scores are unchanged until compact_index() recomputes everything.
@@ -1260,7 +1264,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     if not tomb:
         return meta
     smeta = _staged_meta(index_dir)
-    part_docs = smeta["shard_size"] * smeta["shards_per_part"]
+    part_docs = _part_docs(smeta)
     affected = sorted({int(d) // part_docs for d in tomb})
 
     # map each tombstoned doc_int to its (gen, pid, rn)
@@ -1298,18 +1302,7 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     shutil.rmtree(f"{index_dir}/staged_tmp", ignore_errors=True)
     for p in affected:
         _write_manifest(index_dir, p, {"bpart": p, "status": "stale"})
-
-    # rebuild stale parts
-    for p in affected:
-        metrics = _build_one_part(
-            spark, index_dir, p, meta["shard_size"], meta["salt_chunk"],
-            meta["min_token_length"], None,
-        )
-        _write_manifest(index_dir, p, metrics)
-    out = finalize_index(
-        spark, index_dir, meta["k1"], meta["b"], meta["min_token_length"],
-        meta["shard_size"], meta["salt_chunk"],
-    )
+    out = _build_parts(spark, index_dir, affected)
     # clear the mask ONLY after the rebuilt parts are live and
     # finalized — the rebuilt docmap no longer contains these ids, so
     # finalize's tombstone filter above was a no-op, and a crash

@@ -70,37 +70,18 @@ PART_PRUNE_MAX_UNION = 16384
 AUTO_BMW_MIN_SHARD = 64_000
 AUTO_BMW_MAX_DF_FRAC = 0.01
 
-class _ThreadLocalScanInfo(threading.local):
-    """Dict-shaped per-THREAD record of the last search's pruning
-    decision — which bparts the postings scan was limited to (None =
-    no pruning applied). Overwritten per _search call; read by
-    test_plan_shapes/test_index. Thread-local (ADVICE r6) so
-    concurrent searches on one SparkSession don't interleave each
-    other's records."""
-
-    def __init__(self) -> None:
-        self._d: dict = {}
-
-    def clear(self) -> None:
-        self._d.clear()
-
-    def get(self, key, default=None):
-        return self._d.get(key, default)
-
-    def __getitem__(self, key):
-        return self._d[key]
-
-    def __setitem__(self, key, value) -> None:
-        self._d[key] = value
-
-    def __contains__(self, key) -> bool:
-        return key in self._d
-
-    def __repr__(self) -> str:
-        return repr(self._d)
+# the last search's pruning/scorer decisions and stage timings, one
+# dict per search, per THREAD (ADVICE r6: concurrent searches on one
+# SparkSession must not interleave records)
+_SCAN_INFO = threading.local()
 
 
-_LAST_SCAN_INFO = _ThreadLocalScanInfo()
+def last_scan_info() -> dict:
+    """This thread's record of its last search: ``live_parts`` (the
+    bparts the postings scan was limited to, None = no pruning),
+    ``stage_seconds`` and, for scorer="auto", ``auto_scorer`` /
+    ``auto_bmw_queries``."""
+    return getattr(_SCAN_INFO, "record", {})
 
 
 def _docmap_for_ids(
@@ -593,18 +574,16 @@ def _search(
     # relation first — as r7 did — paid the full partition-directory
     # listing the explicit-path read exists to skip.
     part_sets = [parts_by_hash.get(h) for h in idf_by_hash]
-    _LAST_SCAN_INFO.clear()
-    # per-stage wall clocks of this search's sequential driver steps
-    # (diagnostic, like live_parts — serving observability + the r8
-    # latency-floor profile)
-    _LAST_SCAN_INFO["stage_seconds"] = stage_secs
-    _LAST_SCAN_INFO["live_parts"] = None
     live_parts = None
     if all(ps is not None for ps in part_sets):
         lp = sorted(set().union(*part_sets))
         if len(lp) <= PART_PRUNE_MAX_UNION:
             live_parts = lp
-            _LAST_SCAN_INFO["live_parts"] = live_parts
+    # per-stage wall clocks of this search's sequential driver steps
+    # (diagnostic, like live_parts — serving observability + the r8
+    # latency-floor profile)
+    info = _SCAN_INFO.record = {"stage_seconds": stage_secs,
+                                "live_parts": live_parts}
     if live_parts is not None and dfs is None:
         # one-shot path (r7): build the relation from the live bpart
         # directories EXPLICITLY instead of filtering a root read —
@@ -661,9 +640,9 @@ def _search(
         else:
             scorer = "mixed"
             qmap, bmw_qmap = hot_q, sel_q
-        _LAST_SCAN_INFO["auto_scorer"] = scorer
+        info["auto_scorer"] = scorer
         if scorer == "mixed":
-            _LAST_SCAN_INFO["auto_bmw_queries"] = sorted(sel_q)
+            info["auto_bmw_queries"] = sorted(sel_q)
 
     if mode == "and":
         # intersection needs per-doc matched-term counts → TAAT

@@ -53,8 +53,12 @@ shutil.rmtree(d + "_warm", ignore_errors=True)
 
 shutil.rmtree(d, ignore_errors=True)
 t0 = time.time()
+from oboyu_spark import B_DEFAULT, K1_DEFAULT, MIN_TOKEN_LENGTH_DEFAULT
 from oboyu_spark.operators.postings import _stage
-_stage(docs, d, "doc_id", "text", 12500, 8, None)
+_stage(docs, d, "doc_id", "text",
+       {"shard_size": 12500, "shards_per_part": 8, "salt_chunk": 200000,
+        "min_token_length": MIN_TOKEN_LENGTH_DEFAULT, "stop_words": None,
+        "k1": K1_DEFAULT, "b": B_DEFAULT}, None)
 stage_s = time.time() - t0
 t1 = time.time()
 meta = build_index(docs, d, shard_size=12500, salt_chunk=200000,

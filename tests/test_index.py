@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from oboyu_spark.operators import termindex as TI
 from oboyu_spark.operators.codec import decode_doc_ids, decode_varbyte
-from oboyu_spark.operators.postings import build_index, load_meta
+from oboyu_spark.operators.postings import CODEC_VERSION, build_index, load_meta
 from oboyu_spark.operators.searchidx import search_index
 from oboyu_spark.oracle.pybm25 import PyBM25
 from oboyu_spark.sources.transcripts import synthesize_transcripts, turns_as_docs
@@ -168,7 +168,7 @@ def test_search_without_vocab_parts(spark, index_dir, tmp_path):
     carries each term's bparts), and search_rows matches search_index."""
     import shutil
 
-    from oboyu_spark.operators.searchidx import IndexReader, _LAST_SCAN_INFO
+    from oboyu_spark.operators.searchidx import IndexReader, last_scan_info
 
     nopartials = str(tmp_path / "nopartials_idx")
     shutil.copytree(index_dir, nopartials)
@@ -177,11 +177,11 @@ def test_search_without_vocab_parts(spark, index_dir, tmp_path):
     for q in ["spark index", "検索 索引"]:
         exp = [(r["doc_id"], r["score"])
                for r in search_index(spark, index_dir, q, k=8).collect()]
-        base_parts = _LAST_SCAN_INFO["live_parts"]
+        base_parts = last_scan_info()["live_parts"]
         got = [(r["doc_id"], r["score"])
                for r in search_index(spark, nopartials, q, k=8).collect()]
         assert got == exp, q
-        assert _LAST_SCAN_INFO["live_parts"] == base_parts  # still prunes
+        assert last_scan_info()["live_parts"] == base_parts  # still prunes
     reader = IndexReader(spark, nopartials)
     try:
         rows = reader.search_rows("spark index", k=8)
@@ -197,9 +197,8 @@ def test_search_without_vocab_parts(spark, index_dir, tmp_path):
 def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
                                                 tmp_path):
     """load_meta is the one layout gate: an index whose meta.json
-    carries another codec_version (every r6/pre-r7 layout was written
-    with codec 3) is refused by every entry point before it reads or
-    mutates anything."""
+    carries another codec_version (here the previous one) is refused by
+    every entry point before it reads or mutates anything."""
     import json
     import shutil
 
@@ -211,11 +210,11 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
     )
     from oboyu_spark.operators.searchidx import IndexReader
 
-    old = str(tmp_path / "codec3_idx")
+    old = str(tmp_path / "old_codec_idx")
     shutil.copytree(index_dir, old)
     with open(f"{old}/stats/meta.json") as fh:
         meta = json.load(fh)
-    meta["codec_version"] = 3
+    meta["codec_version"] = CODEC_VERSION - 1
     with open(f"{old}/stats/meta.json", "w") as fh:
         json.dump(meta, fh)
     before = sorted(os.listdir(old))
@@ -337,13 +336,13 @@ def test_part_pruning_equivalence(spark, corpus, tmp_path, monkeypatch):
     pruned = run() + run(scorer="bmw") + run(mode="and")
     # the rare-only query really pruned: strict subset of parts
     search_index(spark, d, "zza zzb", k=5).collect()
-    live = SI._LAST_SCAN_INFO["live_parts"]
+    live = SI.last_scan_info()["live_parts"]
     assert live is not None and 0 < len(live) < meta["n_parts"], \
-        SI._LAST_SCAN_INFO
+        SI.last_scan_info()
 
     monkeypatch.setattr(SI, "PART_PRUNE_MAX_UNION", -1)  # legacy scan
     legacy = run() + run(scorer="bmw") + run(mode="and")
-    assert SI._LAST_SCAN_INFO["live_parts"] is None
+    assert SI.last_scan_info()["live_parts"] is None
     assert pruned == legacy
 
 

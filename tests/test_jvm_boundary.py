@@ -21,7 +21,6 @@ from oboyu_spark.operators.postings import (
     compact_index,
     delete_docs,
     finalize_index,
-    load_meta,
 )
 from oboyu_spark.sources.transcripts import synthesize_transcripts, turns_as_docs
 
@@ -85,21 +84,18 @@ def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     shutil.copytree(tomb_index, a)
     shutil.copytree(tomb_index, b)
-    meta = load_meta(tomb_index)
-    fin_args = (meta["k1"], meta["b"], meta["min_token_length"],
-                meta["shard_size"], meta["salt_chunk"])
 
     def run(d):
         batch = [tuple(r) for r in
                  SI.search_index(spark, d, QUERIES, k=5, scorer="auto")
                  .collect()]
-        scorer = SI._LAST_SCAN_INFO["auto_scorer"]
+        scorer = SI.last_scan_info()["auto_scorer"]
         reader = SI.IndexReader(spark, d)
         try:
             served = reader.search_rows(QUERIES, k=5, scorer="auto")
         finally:
             reader.close()
-        fin = _stats(finalize_index(spark, d, *fin_args))
+        fin = _stats(finalize_index(spark, d))
         comp = _stats(compact_index(spark, d))
         after = [tuple(r) for r in
                  SI.search_index(spark, d, QUERIES, k=5).collect()]

@@ -114,8 +114,8 @@ def test_search_prunes_parts_by_term(spark, tmp_path):
     res = search_index(spark, d, "zebraquux", k=5).collect()
     assert [r["doc_id"] for r in res] == ["250"]
     # the search limited its scan to a strict subset of parts
-    live = SI._LAST_SCAN_INFO["live_parts"]
-    assert live == [2], SI._LAST_SCAN_INFO
+    live = SI.last_scan_info()["live_parts"]
+    assert live == [2], SI.last_scan_info()
     # and that filter realizes DIRECTORY pruning: same filter shape on
     # the postings scan → PartitionFilters + only bpart=2 files opened
     pruned = spark.read.parquet(f"{d}/postings").filter(
@@ -131,7 +131,7 @@ def test_search_prunes_parts_by_term(spark, tmp_path):
     # a common term present everywhere scans all parts (no false prune)
     res2 = search_index(spark, d, "common filler", k=3).collect()
     assert len(res2) == 3
-    assert SI._LAST_SCAN_INFO["live_parts"] == [0, 1, 2]
+    assert SI.last_scan_info()["live_parts"] == [0, 1, 2]
 
 
 def test_docmap_hydration_prunes_partitions(spark, tmp_path):

@@ -6,11 +6,15 @@ converge to the same index as a fresh full build (FIXTURES.md F7)."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import re
+import time
 
 import pytest
 
+from oboyu_spark import MIN_TOKEN_LENGTH_DEFAULT
 from oboyu_spark.operators.postings import (
     append_docs,
     build_index,
@@ -40,7 +44,54 @@ def _results(spark, d, k=10, scorer="taat"):
     return out
 
 
-def test_resume_converges_to_fresh_build(spark, tmp_path):
+def _run_in_group(spark, group: str, fn):
+    """Run ``fn`` with ``group`` as the caller's job group. Returns
+    (fn's result, ids of ALL jobs submitted meanwhile, ids of the
+    group's jobs). The window is bounded by marker jobs submitted
+    outside the group just before and after."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(name: str) -> list:
+        sc.setJobGroup(name, name)
+        try:
+            spark.range(1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed asynchronously: once it knows the
+        # marker it knows every job submitted before it
+        for _ in range(200):
+            if tracker.getJobIdsForGroup(name):
+                break
+            time.sleep(0.05)
+        return list(tracker.getJobIdsForGroup(name))
+
+    lo = max(marker(f"{group}-before"))
+    # keep cyclic GC out of the window: py4j finalizers it runs mid-call
+    # can route a call over another gateway connection, whose JVM thread
+    # does not carry the job group
+    gc.collect()
+    gc.disable()
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        gc.enable()
+    hi = min(marker(f"{group}-after"))
+    return out, set(range(lo + 1, hi)), set(tracker.getJobIdsForGroup(group))
+
+
+def _manifests(d: str) -> list[dict]:
+    rows = []
+    for fn in sorted(os.listdir(f"{d}/manifest")):
+        with open(f"{d}/manifest/{fn}") as fh:
+            rows.append(json.load(fh))
+    return rows
+
+
+def test_resume_converges_to_fresh_build(spark, tmp_path,
+                                         crash_after_manifests):
     docs = _corpus(spark)
     fresh_dir, resume_dir = str(tmp_path / "fresh"), str(tmp_path / "resume")
 
@@ -48,8 +99,9 @@ def test_resume_converges_to_fresh_build(spark, tmp_path):
     assert meta_fresh["n_parts"] > 2, "need multiple parts for this test"
 
     # crash after 1 part, then resume
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(docs, resume_dir, fail_after_parts=1, **KW)
+    with crash_after_manifests(1), \
+            pytest.raises(RuntimeError, match="injected failure"):
+        build_index(docs, resume_dir, **KW)
     done = [f for f in os.listdir(f"{resume_dir}/manifest") if f.endswith(".json")]
     assert len(done) == 1
     # index is not finalized yet
@@ -62,20 +114,28 @@ def test_resume_converges_to_fresh_build(spark, tmp_path):
     assert _results(spark, resume_dir) == _results(spark, fresh_dir)
 
 
-def test_resume_refuses_mismatched_geometry(spark, tmp_path):
-    """A resume builds over the FROZEN staged geometry. A caller
+def test_resume_refuses_mismatched_geometry(spark, tmp_path,
+                                            crash_after_manifests):
+    """A resume builds with the FROZEN staged settings. A caller
     shard_size / shards_per_part that disagrees with staged.json used to
     be recorded in meta.json over parts staged with the old geometry —
     hydration then pruned the docmap to the wrong bparts and searches
-    silently lost hits. It must raise, naming both values, before any
-    part is built."""
+    silently lost hits; other tokenizer or salting settings would mix
+    differently built parts into one index. It must raise, naming both
+    values, before any part is built."""
     docs = _corpus(spark)
     d = str(tmp_path / "idx")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(docs, d, fail_after_parts=1, **KW)
-    for key, bad in (("shards_per_part", 4), ("shard_size", 100)):
-        with pytest.raises(ValueError,
-                           match=f"{key}={KW[key]}.*{key}={bad}"):
+    with crash_after_manifests(1), \
+            pytest.raises(RuntimeError, match="injected failure"):
+        build_index(docs, d, **KW)
+    staged = {"min_token_length": MIN_TOKEN_LENGTH_DEFAULT,
+              "stop_words": None, **KW}
+    for key, bad in (("shards_per_part", 4), ("shard_size", 100),
+                     ("salt_chunk", 61), ("min_token_length", 3),
+                     ("stop_words", ["the"])):
+        want = re.escape(f"{key}={staged[key]}") + ".*" + re.escape(
+            f"{key}={bad}")
+        with pytest.raises(ValueError, match=want):
             build_index(docs, d, **{**KW, key: bad})
     done = [f for f in os.listdir(f"{d}/manifest") if f.endswith(".json")]
     assert len(done) == 1
@@ -86,10 +146,7 @@ def test_manifest_lineage_and_metrics(spark, tmp_path):
     docs = _corpus(spark)
     d = str(tmp_path / "idx")
     meta = build_index(docs, d, **KW)
-    rows = []
-    for fn in sorted(os.listdir(f"{d}/manifest")):
-        with open(f"{d}/manifest/{fn}") as fh:
-            rows.append(json.load(fh))
+    rows = _manifests(d)
     assert len(rows) == meta["n_parts"]
     assert all(r["status"] == "done" for r in rows)
     assert sum(r["n_docs"] for r in rows) == meta["n_docs"]
@@ -108,9 +165,7 @@ def test_manifest_counts_match_written_files(spark, tmp_path):
     d = str(tmp_path / "idx")
     meta = build_index(docs, d, **KW)
     assert meta["n_parts"] > 1
-    for fn in sorted(os.listdir(f"{d}/manifest")):
-        with open(f"{d}/manifest/{fn}") as fh:
-            row = json.load(fh)
+    for row in _manifests(d):
         disk = (
             spark.read.parquet(f"{d}/postings/bpart={row['bpart']}")
             .agg(
@@ -374,6 +429,109 @@ def test_sync_docs_change_detection(spark, tmp_path):
     assert out2["meta"]["n_docs"] == len(updated)
 
 
+def test_stop_words_survive_append_sync_and_compact(spark, tmp_path):
+    """The build settings are frozen in staged.json, so every rebuild
+    path tokenizes like the build: after append_docs, delete_docs +
+    compact_index and sync_docs the stop word still matches nothing,
+    and avgdl equals a fresh build's over the same docs (append and
+    compact used to rebuild parts without the stop list)."""
+    from pyspark.sql import functions as F
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    kw = {**KW, "stop_words": ["spark"]}
+    docs = _corpus(spark, n_convs=30)
+    d = str(tmp_path / "idx")
+    build_index(docs, d, **kw)
+    rows = {r["doc_id"]: r["text"] for r in docs.collect()}
+    assert sum("spark" in t.lower() for t in rows.values()) > 5
+
+    def check(step: str) -> None:
+        fresh = build_index(
+            spark.createDataFrame(sorted(rows.items()),
+                                  "doc_id string, text string"),
+            str(tmp_path / f"fresh_{step}"), **kw)
+        assert load_meta(d)["avgdl"] == fresh["avgdl"], step
+        assert search_index(spark, d, "spark", k=5).count() == 0, step
+        assert search_index(spark, d, "spark index", k=5).count() == 5, step
+
+    extra = _corpus(spark, n_convs=10, seed=99).select(
+        F.concat(F.lit("x"), "doc_id").alias("doc_id"), "text")
+    append_docs(extra, d)
+    rows.update((r["doc_id"], r["text"]) for r in extra.collect())
+    check("append")
+
+    victims = sorted(rows)[:3]
+    delete_docs(spark, d, victims)
+    compact_index(spark, d)
+    for k in victims:
+        del rows[k]
+    check("compact")
+
+    first = sorted(rows)[0]
+    rows[first] += " spark index revision"
+    del rows[sorted(rows)[1]]
+    rows["brand#new1"] = "a new spark index document"
+    sync_docs(spark.createDataFrame(sorted(rows.items()),
+                                    "doc_id string, text string"), d)
+    check("sync")
+
+
+def test_part_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Every job a multi-part build, an append and a compaction submit
+    belongs to the caller's job group — the part pool, the docmap
+    overlap and the finalize vocabulary thread inherit it — so
+    cancelling that group stops them all."""
+    from pyspark.sql import functions as F
+
+    docs = _corpus(spark, n_convs=40)
+    d = str(tmp_path / "idx")
+    meta, window, group = _run_in_group(
+        spark, "grp-build", lambda: build_index(docs, d, **KW))
+    assert meta["n_parts"] > 2
+    assert window and window == group
+
+    extra = _corpus(spark, n_convs=10, seed=99).select(
+        F.concat(F.lit("x"), "doc_id").alias("doc_id"), "text")
+    _, window, group = _run_in_group(
+        spark, "grp-append", lambda: append_docs(extra, d))
+    assert window and window == group
+
+    delete_docs(spark, d, [r["doc_id"] for r in docs.limit(3).collect()])
+    _, window, group = _run_in_group(
+        spark, "grp-compact", lambda: compact_index(spark, d))
+    assert window and window == group
+
+
+def test_part_shuffle_bytes_are_the_parts_own(spark, tmp_path):
+    """Each part's manifest counts the shuffle bytes of its OWN jobs
+    (found by the part's job tag), so under concurrent part builds
+    the per-part figures sum to at most the build's total — the old
+    app-wide before/after delta counted every overlapping part's
+    stages in each part."""
+    docs = _corpus(spark)
+    d = str(tmp_path / "idx")
+    meta, _, group = _run_in_group(
+        spark, "grp-shuffle", lambda: build_index(docs, d, **KW))
+    assert meta["n_parts"] > 2
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    stages = set()
+    for j in group:
+        stages.update(tracker.getJobInfo(j).stageIds)
+    total = 0
+    for s in stages:
+        try:
+            total += store.lastStageAttempt(s).shuffleWriteBytes()
+        except Exception:  # skipped: no attempt recorded
+            pass
+    rows = _manifests(d)
+    assert all(r["shuffle_write_bytes"] > 0 for r in rows), rows
+    assert sum(r["shuffle_write_bytes"] for r in rows) <= total
+    assert meta["shuffle_write_bytes"] == sum(
+        r["shuffle_write_bytes"] for r in rows)
+
+
 def test_stale_df_guard_raises_clear_error(spark, tmp_path):
     """A half-finalized index (N recomputed under stale df, e.g. manual
     finalize after heavy deletion without compaction) must fail with an
@@ -387,7 +545,7 @@ def test_stale_df_guard_raises_clear_error(spark, tmp_path):
     d = str(tmp_path / "idx")
     build_index(docs, d, **KW)
     delete_docs(spark, d, ["d0", "d1", "d2"])
-    finalize_index(spark, d, 1.2, 0.75, 2, KW["shard_size"], KW["salt_chunk"])
+    finalize_index(spark, d)
     with pytest.raises(ValueError, match="compact_index"):
         search_index(spark, d, "zz", k=5).collect()
     # compaction restores a consistent, queryable index

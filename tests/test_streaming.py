@@ -87,7 +87,8 @@ def test_replay_of_finalized_batch_is_skipped(spark, tmp_path):
     assert load_meta(idx)["n_docs"] == n0 + n_extra  # not double-indexed
 
 
-def test_bootstrap_guard_resumes_crashed_build(spark, tmp_path):
+def test_bootstrap_guard_resumes_crashed_build(spark, tmp_path,
+                                               crash_after_manifests):
     """ADVICE r5 #1: the bootstrap guard keys on the FINALIZE marker
     (stats/meta.json), not staged.json — staged.json lands at the END
     of staging, BEFORE part builds and finalize, so a crash
@@ -108,8 +109,9 @@ def test_bootstrap_guard_resumes_crashed_build(spark, tmp_path):
     n = docs.count()
     # crash mid-bootstrap: staging completes, the build dies before
     # finalize writes the stats/meta.json marker
-    with _pytest.raises(RuntimeError, match="injected failure"):
-        build_index(docs, idx, fail_after_parts=1)
+    with crash_after_manifests(0), \
+            _pytest.raises(RuntimeError, match="injected failure"):
+        build_index(docs, idx)
     assert os.path.exists(f"{idx}/staged.json")
     assert not os.path.exists(f"{idx}/stats/meta.json")
     # checkpoint replay re-delivers the batch: the handler resumes the

@@ -133,7 +133,7 @@ def test_auto_scorer_picks_by_geometry(spark, tmp_path):
     try:
         res = search_index(spark, big, "rareterm common", k=5,
                            scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "bmw"
+        assert SI.last_scan_info()["auto_scorer"] == "bmw"
         exp = search_index(spark, big, "rareterm common", k=5,
                            scorer="taat").collect()
         assert [(r.doc_id, round(r.score, 9)) for r in res] == \
@@ -141,11 +141,11 @@ def test_auto_scorer_picks_by_geometry(spark, tmp_path):
         # hot query (no selective term) -> TAAT even on big shards
         search_index(spark, big, "common filler", k=5,
                      scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "taat"
+        assert SI.last_scan_info()["auto_scorer"] == "taat"
         # small shards -> TAAT even for the selective query
         search_index(spark, small, "rareterm common", k=5,
                      scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "taat"
+        assert SI.last_scan_info()["auto_scorer"] == "taat"
         # conjunctive mode bypasses auto (intersection needs TAAT)
         got = search_index(spark, big, "rareterm common", k=5,
                            scorer="auto", mode="and").collect()
@@ -179,8 +179,8 @@ def test_auto_scorer_mixed_batch_dispatches_per_query(spark, tmp_path):
     try:
         got = search_index(spark, big, queries, k=5,
                            scorer="auto").collect()
-        assert SI._LAST_SCAN_INFO["auto_scorer"] == "mixed"
-        assert SI._LAST_SCAN_INFO["auto_bmw_queries"] == [0, 2]
+        assert SI.last_scan_info()["auto_scorer"] == "mixed"
+        assert SI.last_scan_info()["auto_bmw_queries"] == [0, 2]
         for ref_scorer in ("taat", "bmw"):
             ref = search_index(spark, big, queries, k=5,
                                scorer=ref_scorer).collect()
