@@ -37,12 +37,11 @@ explicit salting, checkpoint-resume with per-partition lineage):
           QUERY time from current k1/b/avgdl — wtf is monotone ↑ in tf
           and ↓ in dl, so the bound stays valid when collection stats
           drift under incremental appends)
-      vocab_parts/bpart=P/         per-partition (th1, th2, df, cf) —
-                                   a build-only finalize input (the
-                                   merge re-reads untouched parts'
-                                   partials on incremental finalize);
-                                   queries never read it
-      vocabulary/                  global merge of the partials,
+      vocabulary/                  (th1, th2, document_frequency,
+                                   bparts), aggregated at finalize from
+                                   the postings' (th1, th2, n, bpart)
+                                   columns — the postings are the ONE
+                                   source of term statistics;
                                    th1-sorted within files and carrying
                                    each term's containing-part list
                                    (bparts array<int>, NULL above
@@ -107,7 +106,8 @@ BLOCK = 128
 # Terms are stored as a 128-bit hash pair (two independent xxhash64
 # passes), NOT as strings. Rationale (measured in this sandbox, and the
 # same physics holds on a real cluster): every wide stage of the build
-# — the (doc, term) tf aggregate, the vocab partial, the encode shuffle
+# — the (doc, term) tf aggregate, the hot-term df aggregate, the encode
+# shuffle, the finalize vocabulary aggregate
 # — then runs on fixed-width primitive keys, which Tungsten hash-
 # aggregates without per-row string allocation (string-keyed explode+
 # groupBy anti-scaled 2x at high thread counts here). Query terms are
@@ -121,7 +121,7 @@ POSTINGS_SCHEMA = (
     "block_last array<long>, block_maxtf array<long>, block_mindl array<long>"
 )
 
-CODEC_VERSION = 5
+CODEC_VERSION = 6
 # Read schemas of the engine-internal tables, exactly as the parquet
 # reader infers them (the postings root adds its bpart partition
 # column). Queries declare them: a spark.read.parquet without a schema
@@ -129,10 +129,7 @@ CODEC_VERSION = 5
 # together with CODEC_VERSION. The docmap has no declared schema: its
 # doc_id type is the caller's key column type.
 POSTINGS_READ_SCHEMA = POSTINGS_SCHEMA + ", bpart int"
-VOCABULARY_SCHEMA = (
-    "th1 long, th2 long, document_frequency long, "
-    "collection_frequency long, bparts array<int>"
-)
+VOCABULARY_SCHEMA = "th1 long, th2 long, document_frequency long, bparts array<int>"
 
 TERM_HASH_SEED2 = 7  # second hash = xxhash64(term, 7); first = xxhash64(term)
 
@@ -563,8 +560,8 @@ def _stage(
 
 
 def _build_one_part(spark: SparkSession, index_dir: str, p: int) -> dict:
-    """Build postings + vocab partial + docmap for one bpart, with the
-    settings frozen in staged.json.
+    """Build postings + docmap for one bpart, with the settings frozen
+    in staged.json.
 
     Shuffle budget (the thing that matters at 100 TB): doc length is
     carried through tokenization (dl = size of the filtered token
@@ -573,7 +570,7 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int) -> dict:
     broadcast map of the few hot terms (df > salt_chunk) so no join
     against the vocabulary either. Net per part: ONE wide shuffle of
     (doc, dl, term) for the tf aggregate, one small term-agg shuffle
-    for the vocab partial, and the (shard, term, salt) encode shuffle.
+    for the hot-term set, and the (shard, term, salt) encode shuffle.
     """
     t0 = time.time()
     smeta = _staged_meta(index_dir)
@@ -682,30 +679,17 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int) -> dict:
         )
         tf = tf.persist()
 
-        vocab_part = tf.groupBy("th1", "th2").agg(
-            F.count(F.lit(1)).cast("long").alias("df"),
-            F.sum("tf").alias("cf"),
-        )
-        # th1-sorted within files like the other term-keyed tables; the
-        # partial is a finalize input only (queries read the merged
-        # vocabulary). The hot-term (skew) set rides the same action as
-        # an Observation (r8) — the separate filter+collect job re-ran
-        # the vocab aggregation; hot terms are few by definition
-        # (df > salt_chunk), so the collect_list stays tiny.
-        obs_vp = Observation()
-        vocab_part.sortWithinPartitions("th1").observe(
-            obs_vp,
-            F.collect_list(
-                F.when(F.col("df") > salt_chunk, F.struct("th1", "th2", "df"))
-            ).alias("hot"),
-        ).write.mode("overwrite").parquet(
-            f"{index_dir}/vocab_parts/bpart={p}"
-        )
-
-        # hot terms (the skew set) are few — broadcast map, no join
+        # the hot-term (skew) set: the part's one term-keyed action,
+        # which also materializes the persisted tf frame for the encode
+        # below. Hot terms are few by definition (df > salt_chunk) —
+        # broadcast map, no join. The vocabulary itself is aggregated
+        # from the written postings at finalize.
         hot = [
             (int(r["th1"]), int(r["th2"]), min(-(-int(r["df"]) // salt_chunk), 64))
-            for r in obs_vp.get["hot"]
+            for r in tf.groupBy("th1", "th2")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") > salt_chunk)
+            .collect()
         ]
         steps["tf_vocab"] = round(time.time() - t_s, 3)
         t_s = time.time()
@@ -804,65 +788,68 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int) -> dict:
 
 
 def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The merged-vocabulary frame finalize_index writes (exposed for
-    the plan gate: test_plan_shapes pins that the merge carries NO
-    range exchange — a range exchange's boundary sampler executes the
-    whole merge aggregation a second time)."""
-    if os.path.isdir(f"{index_dir}/vocab_parts"):
-        # bparts (r7): the merged vocabulary CARRIES each term's
-        # containing-part list, so the query-side df lookup is ONE
-        # th1-sorted table scan instead of a fan-out over every
-        # vocab_parts partial — at 505 parts the partial fan-out alone
-        # cost ~4.5 s/cold query (BENCH.md), at 10⁴ parts it IS the
-        # latency floor. Hot terms present in more parts than
-        # PART_PRUNE_MAX_PER_TERM store NULL (they prune nothing and
-        # their full lists would make the vocabulary O(vocab·parts)).
-        # Consistency: every mutation path (build/append/sync/compact)
-        # ends in finalize_index, so the merged list can never go
-        # stale ahead of the postings layout; delete_docs only
-        # tombstones (pruning stays correct, merely looser).
-        from .searchidx import PART_PRUNE_MAX_PER_TERM as _CAP
+    """The vocabulary frame finalize_index writes, aggregated from the
+    postings (exposed for the plan gate: test_plan_shapes pins that it
+    carries NO range exchange — a range exchange's boundary sampler
+    executes the whole aggregation a second time).
 
-        nparts = max(4, int(spark.sparkContext.defaultParallelism) // 4)
-        vocab = (
-            spark.read.parquet(f"{index_dir}/vocab_parts")
-            .groupBy("th1", "th2")
-            .agg(
-                F.sum("df").alias("document_frequency"),
-                F.sum("cf").alias("collection_frequency"),
-                F.sort_array(F.collect_set(F.col("bpart").cast("int")))
-                .alias("ba"),
-            )
-            .withColumn(
-                "bparts",
-                F.when(F.size("ba") <= F.lit(_CAP), F.col("ba")),
-            )
-            .drop("ba")
-            # th1-HASH-partitioned, th1-sorted WITHIN files (r8 cont.):
-            # the lookup's pushed In(th1) filter prunes via row-group
-            # min/max stats, which only need the within-file sort order
-            # — the same device as the encode stage's output files. The
-            # previous repartitionByRange bought globally disjoint file
-            # ranges at the cost of the range sampler EXECUTING THE
-            # MERGE AGGREGATION A SECOND TIME (a range exchange samples
-            # its child plan to pick boundaries; the child here is the
-            # whole groupBy + collect_set reduce, not a cached scan).
-            .repartition(nparts, "th1")
-            .sortWithinPartitions("th1", "th2")
+    Shards and salt chunks are doc-disjoint, so a term's df is the sum
+    of its posting rows' ``n``; column pruning leaves the scan only
+    (th1, th2, n, bpart), never the posting blobs."""
+    if not os.path.isdir(f"{index_dir}/postings"):
+        return spark.createDataFrame([], VOCABULARY_SCHEMA)
+    # bparts (r7): the vocabulary CARRIES each term's containing-part
+    # list, so the query-side df lookup and the part-pruning input are
+    # ONE th1-sorted table scan. Hot terms present in more parts than
+    # PART_PRUNE_MAX_PER_TERM store NULL (they prune nothing and their
+    # full lists would make the vocabulary O(vocab·parts)).
+    # Consistency: every mutation path (build/append/sync/compact) ends
+    # in finalize_index, so the list can never go stale ahead of the
+    # postings layout; delete_docs only tombstones (pruning stays
+    # correct, merely looser).
+    from .searchidx import PART_PRUNE_MAX_PER_TERM as _CAP
+
+    nparts = max(4, int(spark.sparkContext.defaultParallelism) // 4)
+    return (
+        spark.read.schema(POSTINGS_READ_SCHEMA)
+        .parquet(f"{index_dir}/postings")
+        .groupBy("th1", "th2")
+        .agg(
+            F.sum("n").alias("document_frequency"),
+            F.sort_array(F.collect_set("bpart")).alias("ba"),
         )
-    else:
-        vocab = spark.createDataFrame([], VOCABULARY_SCHEMA)
-    return vocab
+        .withColumn("bparts", F.when(F.size("ba") <= F.lit(_CAP), F.col("ba")))
+        .drop("ba")
+        # th1-HASH-partitioned, th1-sorted WITHIN files (r8 cont.): the
+        # lookup's pushed In(th1) filter prunes via row-group min/max
+        # stats, which only need the within-file sort order — the same
+        # device as the encode stage's output files. A
+        # repartitionByRange would buy globally disjoint file ranges at
+        # the cost of the range sampler EXECUTING THE AGGREGATION A
+        # SECOND TIME (a range exchange samples its child plan to pick
+        # boundaries; the child here is the whole groupBy +
+        # collect_set reduce, not a cached scan).
+        .repartition(nparts, "th1")
+        .sortWithinPartitions("th1", "th2")
+    )
 
 
 def finalize_index(spark: SparkSession, index_dir: str) -> dict:
-    """Merge vocab partials, compute collection stats, write meta (the
-    build settings are copied from staged.json for the query side)."""
-    vocab = _merged_vocab_frame(spark, index_dir)
-    # the vocab merge shares nothing with the docmap stats / integrity
-    # jobs below — run it on a helper thread so Spark schedules them
-    # together (guide §2.6) instead of three sequential barriers; the
-    # thread inherits the caller's job group and tags
+    """Aggregate the vocabulary from the postings, compute collection
+    stats, check every part's postings against its manifest, write meta
+    (the build settings are copied from staged.json for the query
+    side)."""
+    from pyspark.sql import Observation
+
+    # the vocabulary row count rides the write as an Observation: no
+    # count job over the written table
+    obs_vocab = Observation()
+    vocab = _merged_vocab_frame(spark, index_dir).observe(
+        obs_vocab, F.count(F.lit(1)).alias("n"))
+    # the vocabulary aggregate shares nothing with the docmap stats /
+    # integrity jobs below — run it on a helper thread so Spark
+    # schedules them together (guide §2.6) instead of three sequential
+    # barriers; the thread inherits the caller's job group and tags
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -899,28 +886,34 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
                         parts.append(json.load(fh))
         total_secs = sum(pm.get("build_seconds", 0) for pm in parts)
 
-        # integrity gate: the FINAL postings dir must hold exactly the
-        # sum of what the per-part manifests claim (guards against
-        # partition-overwrite modes silently wiping sibling shards)
-        manifest_postings = sum(pm.get("n_postings", 0) for pm in parts)
-        try:
-            final_postings = int(
-                spark.read.parquet(f"{index_dir}/postings")
-                .agg(F.coalesce(F.sum("n"), F.lit(0)))
-                .collect()[0][0]
-            )
-        except Exception:
-            final_postings = 0
+        # integrity gate, per part: each bpart's FINAL postings dir must
+        # hold exactly what its manifest claims (guards against
+        # partition-overwrite modes silently wiping sibling parts, and
+        # names the damaged part — an equal-total redistribution across
+        # parts is caught too)
+        on_disk: dict[int, int] = {}
+        if os.path.isdir(f"{index_dir}/postings"):
+            on_disk = {
+                int(r["bpart"]): int(r["n"])
+                for r in spark.read.schema(POSTINGS_READ_SCHEMA)
+                .parquet(f"{index_dir}/postings")
+                .groupBy("bpart").agg(F.sum("n").alias("n"))
+                .collect()
+            }
     finally:
         vocab_err = vocab_fut.exception()
         fin_pool.shutdown()
     if vocab_err is not None:
         raise vocab_err
-    if final_postings != manifest_postings:
-        raise RuntimeError(
-            f"index integrity violation: postings dir holds {final_postings} "
-            f"postings but manifests claim {manifest_postings}"
-        )
+    claimed = {int(pm["bpart"]): int(pm.get("n_postings", 0)) for pm in parts}
+    bad = [
+        f"bpart {p}: postings dir holds {on_disk.get(p, 0)}, manifest "
+        f"claims {claimed.get(p, 0)}"
+        for p in sorted(set(on_disk) | set(claimed))
+        if on_disk.get(p, 0) != claimed.get(p, 0)
+    ]
+    if bad:
+        raise RuntimeError("index integrity violation: " + "; ".join(bad))
 
     meta = {
         "codec_version": CODEC_VERSION,
@@ -933,13 +926,7 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
         "n_docs": n_docs,
         "total_terms": total_terms,
         "avgdl": avgdl,
-        # count the WRITTEN vocabulary (parquet row-count metadata, no
-        # scan) instead of vocab.count(), which re-ran the whole merge
-        # aggregation — at a 200k-term vocabulary that recompute was
-        # most of the finalize phase (r8)
-        "n_vocab_terms": int(
-            spark.read.parquet(f"{index_dir}/vocabulary").count()
-        ),
+        "n_vocab_terms": int(obs_vocab.get["n"]),
         "posting_rows": sum(pm.get("posting_rows", 0) for pm in parts),
         "n_postings": sum(pm.get("n_postings", 0) for pm in parts),
         "compressed_payload_bytes": sum(
@@ -1041,7 +1028,7 @@ def build_index(
     }
     smeta = _stage(docs, index_dir, id_col, text_col, settings,
                    id_assign_partitions)
-    stage_seconds = round(time.time() - t_stage0, 3)
+    stage_wall = round(time.time() - t_stage0, 3)
     # a resume builds with the FROZEN settings: parts, shard bases and
     # winner hydration's doc_int → bpart pruning derive from the
     # geometry, and parts built with other tokenizer or salting
@@ -1059,7 +1046,7 @@ def build_index(
     # phase decomposition for the bench report: staging (the single
     # corpus materialization + id freeze), then the part builds and
     # finalize
-    meta["phase_seconds"] = {"stage": stage_seconds, **meta["phase_seconds"]}
+    meta["phase_seconds"] = {"stage": stage_wall, **meta["phase_seconds"]}
     return meta
 
 
@@ -1088,7 +1075,7 @@ def append_docs(
     """Incremental append (reference change-detector analog I6, done the
     Iceberg-snapshot way: new data claims FRESH id ranges → fresh build
     partitions; existing shards are never touched; global stats are
-    re-derived from per-partition partials at finalize).
+    re-aggregated from the postings and docmap at finalize).
 
     New keys must not collide with existing ones (caller contract —
     dedupe/upsert is a MERGE on the staged table upstream). New ids
@@ -1242,10 +1229,10 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
     """Rewrite the staged slices containing tombstoned docs: survivors
     keep their (pid, rn) — and therefore their doc_int — untouched;
-    postings/vocab/docmap for the affected parts are rebuilt, index
-    re-finalized, tombstones cleared LAST. Equivalent to the
-    reference's remove_from_index + stats removal (I4/I5), done
-    partition-locally.
+    postings/docmap for the affected parts are rebuilt, the index
+    re-finalized (vocabulary re-aggregated), tombstones cleared LAST.
+    Equivalent to the reference's remove_from_index + stats removal
+    (I4/I5), done partition-locally.
 
     Crash-safe and idempotent: the tombstone file survives until the
     final step, so a crash anywhere mid-compact leaves every search

@@ -13,10 +13,12 @@ Plan shape per batch of queries:
    ids are contiguous (range sharding), so the accumulator is a flat
    float64 array and each posting costs one vectorized add. Each shard
    emits its local top-k with the global tie-break.
-3. gather: global candidates per query (rank window over ≤ shards×k
-   rows, boundary score-ties kept), hydrate original doc keys via the
-   docmap, final top-k cut tie-broken on the ORIGINAL doc_id (doc_int
-   order only matches key order within a shard, not across appends).
+3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
+   rows, boundary score-ties kept — on the driver, or a Spark rank
+   window at cluster scale), hydrate original doc keys driver-side
+   from a pruned docmap scan, final top-k cut tie-broken on the
+   ORIGINAL doc_id (doc_int order only matches key order within a
+   shard, not across appends).
 
 Exactness: TAAT scores every matched posting — results match the
 relational plan bit-for-bit up to float summation order (tests compare
@@ -28,7 +30,6 @@ from __future__ import annotations
 
 import math
 import threading
-import time
 from typing import Callable, Sequence
 
 import numpy as np
@@ -70,17 +71,16 @@ PART_PRUNE_MAX_UNION = 16384
 AUTO_BMW_MIN_SHARD = 64_000
 AUTO_BMW_MAX_DF_FRAC = 0.01
 
-# the last search's pruning/scorer decisions and stage timings, one
-# dict per search, per THREAD (ADVICE r6: concurrent searches on one
-# SparkSession must not interleave records)
+# the last search's pruning/scorer decisions, one dict per search, per
+# THREAD (ADVICE r6: concurrent searches on one SparkSession must not
+# interleave records)
 _SCAN_INFO = threading.local()
 
 
 def last_scan_info() -> dict:
     """This thread's record of its last search: ``live_parts`` (the
-    bparts the postings scan was limited to, None = no pruning),
-    ``stage_seconds`` and, for scorer="auto", ``auto_scorer`` /
-    ``auto_bmw_queries``."""
+    bparts the postings scan was limited to, None = no pruning) and,
+    for scorer="auto", ``auto_scorer`` / ``auto_bmw_queries``."""
     return getattr(_SCAN_INFO, "record", {})
 
 
@@ -432,9 +432,9 @@ def _search(
     return_rows: bool = False,
 ) -> DataFrame:
     """``return_rows=True`` returns the final results as a driver list
-    of (query_id, doc_id, score) tuples instead of a DataFrame. On the
-    driver-cut path the winners are ALREADY driver-local after the
-    scatter, so this skips the Arrow frame build and the collect back
+    of (query_id, doc_id, score) tuples instead of a DataFrame. Both
+    gather paths hydrate the winners driver-side, so this skips the
+    Arrow frame build and the collect back
     (the fold consumers: ``IndexReader.search_rows``,
     ``hybrid_search_folded``, serve_index's plain response). The
     DataFrame form is an Arrow-built LocalRelation (``_result_frame``),
@@ -502,9 +502,7 @@ def _search(
                 df_by_hash[h], parts_by_hash[h] = cached
         else:
             missing.append(h)
-    stage_secs: dict[str, float] = {}
     if missing:
-        _t_vocab = time.time()
         miss_h1 = sorted({h1 for h1, _ in missing})
         miss_set = set(missing)
         # ONE th1-sorted table scan serves df AND the pruning input (a
@@ -536,7 +534,6 @@ def _search(
                     for h in missing
                 }
             )
-        stage_secs["vocab"] = round(time.time() - _t_vocab, 4)
     for h, df in df_by_hash.items():
         if df is not None and n_docs - df + 0.5 <= 0:
             raise ValueError(
@@ -579,11 +576,7 @@ def _search(
         lp = sorted(set().union(*part_sets))
         if len(lp) <= PART_PRUNE_MAX_UNION:
             live_parts = lp
-    # per-stage wall clocks of this search's sequential driver steps
-    # (diagnostic, like live_parts — serving observability + the r8
-    # latency-floor profile)
-    info = _SCAN_INFO.record = {"stage_seconds": stage_secs,
-                                "live_parts": live_parts}
+    info = _SCAN_INFO.record = {"live_parts": live_parts}
     if live_parts is not None and dfs is None:
         # one-shot path (r7): build the relation from the live bpart
         # directories EXPLICITLY instead of filtering a root read —
@@ -669,97 +662,62 @@ def _search(
     # the k boundary (rank semantics) and the final cut happens on the
     # hydrated original keys.
     n_shards = max(1, -(-n_docs // shard_size))
-    driver_cut = len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS
-    if driver_cut:
+    if len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS:
         # small candidate set: collect the shard winners directly and
         # rank-cut on the driver — skips the window's shuffle exchange
         # (one fewer stage on the latency path; p50 matters in serving)
-        _t_sc = time.time()
         top_rows = _driver_rank_cut(local.collect(), k)
-        stage_secs["scatter"] = round(time.time() - _t_sc, 4)
-        if not top_rows:
-            return ret_empty()
-        # winners are driver-known ids → hydrate driver-side: one
-        # pruned docmap scan for cache-missed ids (no join job), zero
-        # Spark jobs when every winner is already cached in a warm
-        # IndexReader. The docmap is sorted by doc_int, so the IN
-        # filter prunes to the few row groups containing misses.
-        ids = sorted({int(r["doc_int"]) for r in top_rows})
-        known = docmap_cache if docmap_cache is not None else {}
-        miss = [i for i in ids if i not in known]
-        fetched: dict[int, str] = {}
-        if miss:
-            _t_hy = time.time()
-            rows = (
-                _docmap_for_ids(
-                    dfs["docmap"] if dfs is not None else None, meta,
-                    miss, spark=spark, index_dir=index_dir,
-                )
-                .select("doc_int", "doc_id")
-                .collect()
-            )
-            stage_secs["hydrate"] = round(time.time() - _t_hy, 4)
-            fetched = {int(r["doc_int"]): r["doc_id"] for r in rows}
-            if (docmap_cache is not None
-                    and len(docmap_cache) < IndexReader.DOCMAP_CACHE_MAX):
-                docmap_cache.update(fetched)
-        by_q: dict[int, list[tuple[float, str]]] = {}
-        for r in top_rows:
-            di = int(r["doc_int"])
-            did = known.get(di, fetched.get(di))
-            if did is None:  # docmap gap — mirror inner-join semantics
-                continue
-            by_q.setdefault(int(r["query_id"]), []).append(
-                (float(r["score"]), did)
-            )
-        final = []
-        for qid in sorted(by_q):
-            ranked = sorted(by_q[qid], key=lambda t: (-t[0], t[1]))[:k]
-            final.extend((qid, d, s) for s, d in ranked)
-        if not final:
-            return ret_empty()
-        if return_rows:
-            return final  # already (query_id, doc_id, score) tuples
-        return _result_frame(spark, final)
-    # cluster scale (10^4+ shards): rank in Spark, then hydrate keys
-    # from the docmap with an id-pushed filter — the docmap is sorted
-    # by doc_int, so parquet min/max stats prune to the few row groups
-    # containing winners instead of scanning all 10^12 rows
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
-    _t_sc = time.time()
-    top_rows = (
-        local.withColumn("rnk", F.rank().over(w))
-        .filter(F.col("rnk") <= k)
-        .drop("rnk")
-        .collect()
-    )
-    stage_secs["scatter"] = round(time.time() - _t_sc, 4)
+    else:
+        # cluster scale (10^4+ shards): the rank-≤-k cut runs in Spark,
+        # so only the per-query winners (ties kept) reach the driver
+        w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
+        top_rows = (
+            local.withColumn("rnk", F.rank().over(w))
+            .filter(F.col("rnk") <= k)
+            .drop("rnk")
+            .collect()
+        )
     if not top_rows:
         return ret_empty()
+    # winners are driver-known ids → hydrate driver-side: one pruned
+    # docmap scan for cache-missed ids (no join job), zero Spark jobs
+    # when every winner is already cached in a warm IndexReader. The
+    # docmap is sorted by doc_int, so the IN filter prunes to the few
+    # row groups containing misses.
     ids = sorted({int(r["doc_int"]) for r in top_rows})
-    tiny = spark.createDataFrame(pa.table({
-        "query_id": pa.array([r["query_id"] for r in top_rows], pa.int32()),
-        "doc_int": pa.array([r["doc_int"] for r in top_rows], pa.int64()),
-        "score": pa.array([r["score"] for r in top_rows], pa.float64()),
-    }))
-    docmap = _docmap_for_ids(
-        dfs["docmap"] if dfs is not None else None, meta, ids,
-        spark=spark, index_dir=index_dir,
-    ).select("doc_int", "doc_id")
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    out = (
-        docmap.join(F.broadcast(tiny), "doc_int")
-        .select("query_id", "doc_id", "score")
-        .withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .orderBy("query_id", F.col("score").desc(), F.col("doc_id").asc())
-    )
+    known = docmap_cache if docmap_cache is not None else {}
+    miss = [i for i in ids if i not in known]
+    fetched: dict[int, str] = {}
+    if miss:
+        rows = (
+            _docmap_for_ids(
+                dfs["docmap"] if dfs is not None else None, meta,
+                miss, spark=spark, index_dir=index_dir,
+            )
+            .select("doc_int", "doc_id")
+            .collect()
+        )
+        fetched = {int(r["doc_int"]): r["doc_id"] for r in rows}
+        if (docmap_cache is not None
+                and len(docmap_cache) < IndexReader.DOCMAP_CACHE_MAX):
+            docmap_cache.update(fetched)
+    by_q: dict[int, list[tuple[float, str]]] = {}
+    for r in top_rows:
+        di = int(r["doc_int"])
+        did = known.get(di, fetched.get(di))
+        if did is None:  # docmap gap — mirror inner-join semantics
+            continue
+        by_q.setdefault(int(r["query_id"]), []).append(
+            (float(r["score"]), did)
+        )
+    # final cut on the ORIGINAL key (an integer-keyed docmap ranks its
+    # ties numerically; _result_frame then renders doc_id as a string)
+    final = []
+    for qid in sorted(by_q):
+        ranked = sorted(by_q[qid], key=lambda t: (-t[0], t[1]))[:k]
+        final.extend((qid, d, s) for s, d in ranked)
+    if not final:
+        return ret_empty()
     if return_rows:
-        return [(int(r["query_id"]), r["doc_id"], float(r["score"]))
-                for r in out.collect()]
-    # doc_id as a string, as on the driver-cut path (an integer-keyed
-    # docmap ranks its ties numerically above, on both paths)
-    return out.withColumn("doc_id", F.col("doc_id").cast("string"))
+        return final  # already (query_id, doc_id, score) tuples
+    return _result_frame(spark, final)

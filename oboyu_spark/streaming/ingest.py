@@ -34,6 +34,7 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..operators.postings import _write_json
 from ..sources.transcripts import turns_as_docs
 
 
@@ -52,11 +53,8 @@ def _done_batches(index_dir: str) -> set[int]:
 
 
 def _mark_batch_done(index_dir: str, batch_id: int) -> None:
-    done = _done_batches(index_dir) | {int(batch_id)}
-    tmp = f"{index_dir}/stream_batches.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(sorted(done), fh)
-    os.replace(tmp, f"{index_dir}/stream_batches.json")
+    _write_json(f"{index_dir}/stream_batches.json",
+                sorted(_done_batches(index_dir) | {int(batch_id)}))
 
 
 def handle_batch_factory(index_dir: str):
@@ -76,8 +74,6 @@ def handle_batch_factory(index_dir: str):
     docmap before the anti-join, so a key deleted via ``delete_docs``
     and later re-emitted on the stream IS re-added — same behavior
     whether or not ``compact_index`` has run in between."""
-    import os
-
     from pyspark.sql import functions as F
 
     from ..operators.postings import (_in_ints, append_docs, build_index,

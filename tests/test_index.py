@@ -162,36 +162,32 @@ def test_conjunctive_mode(spark, corpus, index_dir):
         assert {r["doc_id"] for r in got} <= or_docs
 
 
-def test_search_without_vocab_parts(spark, index_dir, tmp_path):
-    """vocab_parts/ is a build-only finalize input: with it deleted,
-    searches are identical, still part-prune (the merged vocabulary
-    carries each term's bparts), and search_rows matches search_index."""
+def test_no_vocab_parts_after_build_append_compact(spark, corpus, index_dir,
+                                                   tmp_path):
+    """The postings are the one source of term statistics: build,
+    append and delete + compact write no per-part vocabulary table, and
+    the finalized vocabulary still serves searches."""
     import shutil
 
-    from oboyu_spark.operators.searchidx import IndexReader, last_scan_info
+    from oboyu_spark.operators.postings import (
+        append_docs,
+        compact_index,
+        delete_docs,
+    )
 
-    nopartials = str(tmp_path / "nopartials_idx")
-    shutil.copytree(index_dir, nopartials)
-    shutil.rmtree(f"{nopartials}/vocab_parts")
-
-    for q in ["spark index", "検索 索引"]:
-        exp = [(r["doc_id"], r["score"])
-               for r in search_index(spark, index_dir, q, k=8).collect()]
-        base_parts = last_scan_info()["live_parts"]
-        got = [(r["doc_id"], r["score"])
-               for r in search_index(spark, nopartials, q, k=8).collect()]
-        assert got == exp, q
-        assert last_scan_info()["live_parts"] == base_parts  # still prunes
-    reader = IndexReader(spark, nopartials)
-    try:
-        rows = reader.search_rows("spark index", k=8)
-        assert [(d, s) for _, d, s in rows] == [
-            (r["doc_id"], r["score"])
-            for r in search_index(spark, nopartials, "spark index", k=8)
-            .collect()
-        ]
-    finally:
-        reader.close()
+    d = str(tmp_path / "no_vocab_parts_idx")
+    shutil.copytree(index_dir, d)
+    assert not os.path.exists(f"{d}/vocab_parts"), "build"
+    append_docs(corpus.limit(20).select(
+        F.concat(F.lit("new-"), "doc_id").alias("doc_id"), "text"), d)
+    assert not os.path.exists(f"{d}/vocab_parts"), "append"
+    delete_docs(spark, d, [r["doc_id"] for r in corpus.limit(3).collect()])
+    compact_index(spark, d)
+    assert not os.path.exists(f"{d}/vocab_parts"), "compact"
+    meta = load_meta(d)
+    assert meta["n_vocab_terms"] == spark.read.parquet(
+        f"{d}/vocabulary").count() > 0
+    assert search_index(spark, d, "spark index", k=5).count() == 5
 
 
 def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,

@@ -82,6 +82,14 @@ def _run_in_group(spark, group: str, fn):
     return out, set(range(lo + 1, hi)), set(tracker.getJobIdsForGroup(group))
 
 
+def _vocab_rows(vocab) -> list[tuple]:
+    """Sorted (th1, th2, document_frequency, bparts) rows."""
+    return sorted(
+        (r["th1"], r["th2"], r["document_frequency"], r["bparts"])
+        for r in vocab.collect()
+    )
+
+
 def _manifests(d: str) -> list[dict]:
     rows = []
     for fn in sorted(os.listdir(f"{d}/manifest")):
@@ -156,9 +164,9 @@ def test_manifest_lineage_and_metrics(spark, tmp_path):
 
 def test_manifest_counts_match_written_files(spark, tmp_path):
     """r8: the per-part manifest counters ride the postings write as an
-    Observation instead of a separate read-back job — pin that the
-    claimed counts still equal what is actually ON DISK for each part
-    (the finalize integrity gate compares only the global sum)."""
+    Observation instead of a separate read-back job — pin that every
+    claimed count still equals what is actually ON DISK for its part
+    (the finalize integrity gate checks only the postings counts)."""
     from pyspark.sql import functions as F
 
     docs = _corpus(spark)
@@ -187,6 +195,29 @@ def test_manifest_counts_match_written_files(spark, tmp_path):
             spark.read.parquet(f"{d}/docmap/bpart={row['bpart']}").count()
         )
         assert row["n_docs"] == ndocs_disk
+
+
+def test_finalize_gate_names_the_damaged_part(spark, tmp_path):
+    """The finalize integrity gate compares each part's postings on
+    disk with its own manifest: a redistribution that keeps the global
+    sum (one part's claim +3, another's −3) must fail and name both
+    parts with both numbers."""
+    from oboyu_spark.operators.postings import finalize_index
+
+    d = str(tmp_path / "idx")
+    meta = build_index(_corpus(spark), d, **KW)
+    assert meta["n_parts"] > 1
+    rows = _manifests(d)
+    claims = {r["bpart"]: r["n_postings"] for r in rows[:2]}
+    for r, delta in zip(rows[:2], (3, -3)):
+        r["n_postings"] += delta
+        with open(f"{d}/manifest/part-{r['bpart']:05d}.json", "w") as fh:
+            json.dump(r, fh)
+    with pytest.raises(RuntimeError, match="integrity violation") as err:
+        finalize_index(spark, d)
+    for (p, n), delta in zip(claims.items(), (3, -3)):
+        assert (f"bpart {p}: postings dir holds {n}, manifest claims "
+                f"{n + delta}") in str(err.value)
 
 
 def test_append_matches_full_rebuild_oracle(spark, tmp_path):
@@ -288,6 +319,36 @@ def test_delete_then_compact(spark, tmp_path):
         assert [x[0] for x in got.get(qid, [])] == [x[0] for x in exp], q
         for (_, gs), (_, es) in zip(got.get(qid, []), exp):
             assert gs == pytest.approx(es, rel=1e-9, abs=1e-8)
+
+    # the vocabulary is re-aggregated from the rebuilt postings: its
+    # terms and dfs are a fresh build's over the survivors, and each
+    # term's part list names the parts holding its surviving docs (by
+    # the compacted index's doc ids — survivors keep theirs, a fresh
+    # build renumbers them)
+    from pyspark.sql import functions as F
+
+    from oboyu_spark.operators import termindex as TI
+    from oboyu_spark.operators.postings import term_hash_cols
+
+    surv = spark.createDataFrame(remaining, "doc_id string, text string")
+    fresh = str(tmp_path / "fresh")
+    build_index(surv, fresh, **KW)
+    part_docs = KW["shard_size"] * KW["shards_per_part"]
+    doc_part = spark.read.parquet(f"{d}/docmap").select(
+        "doc_id", (F.col("doc_int") / part_docs).cast("int").alias("bpart"))
+    term_parts = (
+        TI.term_frequencies(surv).join(doc_part, "doc_id")
+        .select(*term_hash_cols(F.col("term")), "bpart")
+        .groupBy("th1", "th2")
+        .agg(F.sort_array(F.collect_set("bpart")).alias("bparts"))
+    )
+    exp = (
+        spark.read.parquet(f"{fresh}/vocabulary")
+        .select("th1", "th2", "document_frequency")
+        .join(term_parts, ["th1", "th2"], "full_outer")
+    )
+    assert _vocab_rows(spark.read.parquet(f"{d}/vocabulary")) \
+        == _vocab_rows(exp)
 
 
 def test_compact_crash_windows_recover(spark, tmp_path, monkeypatch):
