@@ -154,7 +154,7 @@ def _entry_index(spark: SparkSession, sf_dir: str) -> str:
 
 def _q_bm25_indexed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The COMPRESSED-INDEX engine under the driver's exact-oracle gate:
-    # full build (staging → term shuffle → varbyte encode → shards) into
+    # full build (staging → term shuffle → list encode → shards) into
     # a temp dir, scatter-gather TAAT search over it, compared against
     # the same relational BM25 SQL as bm25_topk. k=40 prefetch, then
     # the shared rounded-score top-20 cut (boundary ties break on the

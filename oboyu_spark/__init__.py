@@ -9,8 +9,9 @@ idiomatic Apache Spark DataFrame pipeline:
   JVM expressions with a vectorized Arrow pandas-UDF parity path,
 - inverted-index build (postings, vocabulary, document/collection stats)
   as declarative groupBy aggregations shuffled by term,
-- delta-gap + varbyte-compressed partition-local posting lists with
-  per-block max metadata, bucketed by hash(term),
+- delta-gap partition-local posting lists (Parquet list<int> columns,
+  encoded in Spark SQL) with per-block max metadata, bucketed by
+  hash(term),
 - BM25 top-k scoring (k1=1.2, b=0.75, ln-IDF without +1 — the semantics
   pinned by the reference's unit tests) both as a relational plan and as
   a scatter-gather block-max-WAND scorer over the compressed index,

@@ -39,9 +39,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import py_tokenize
-from .codec import decode_doc_ids, decode_varbyte
 from .postings import (POSTINGS_READ_SCHEMA, VOCABULARY_SCHEMA, _in_ints,
-                       load_meta)
+                       docmap_read_schema, load_meta)
 
 RESULT_SCHEMA = "query_id int, doc_int long, score double"
 _READ_SCHEMAS = {"postings": POSTINGS_READ_SCHEMA,
@@ -105,7 +104,9 @@ def _docmap_for_ids(
     part_docs = int(meta["shard_size"]) * int(meta["shards_per_part"])
     parts = sorted({int(i) // part_docs for i in ids})
     if dm is None:
-        return spark.read.option(
+        return spark.read.schema(
+            docmap_read_schema(meta["doc_id_type"])
+        ).option(
             "basePath", f"{index_dir}/docmap"
         ).parquet(
             *[f"{index_dir}/docmap/bpart={p}" for p in parts]
@@ -143,20 +144,21 @@ def _query_maps(queries: Sequence[str], min_token_length: int):
     return qmap, sorted(all_terms)
 
 
-def _decode_rows(pdf: pd.DataFrame, base: int, tomb: np.ndarray | None = None):
+def _decode_rows(pdf: pd.DataFrame, base: int, k1: float, b: float,
+                 avgdl: float, tomb: np.ndarray | None = None):
     """(th1, th2) -> list of (local_ids int64, wtf float64) chunks, each
     sorted by doc id (chunks are salt ranges, mutually disjoint).
     ``tomb``: sorted global doc ints to mask out (deleted docs)."""
     decoded: dict[tuple[int, int], list[tuple[np.ndarray, np.ndarray]]] = {}
     order = pdf.sort_values(["th1", "th2", "salt"])
     for r in order.itertuples():
-        gids = decode_doc_ids(r.gaps).astype(np.int64)
-        wtf = np.asarray(r.wtf, dtype=np.float64)
+        ids = np.cumsum(r.gaps, dtype=np.int64)  # shard-local already
+        wtf = _wtf(r.tfs, r.dls, k1, b, avgdl)
         if tomb is not None and tomb.size:
-            keep = ~np.isin(gids, tomb, assume_unique=False)
-            gids = gids[keep]
+            keep = ~np.isin(ids + base, tomb)
+            ids = ids[keep]
             wtf = wtf[keep]
-        decoded.setdefault((int(r.th1), int(r.th2)), []).append((gids - base, wtf))
+        decoded.setdefault((int(r.th1), int(r.th2)), []).append((ids, wtf))
     return decoded
 
 
@@ -180,14 +182,8 @@ def make_taat_scorer(
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         shard = int(pdf["shard"].iloc[0])
         base = shard * shard_size
-        # decode once per (term, salt) row; precompute the tf-part
-        pdf = pdf.assign(
-            wtf=[
-                _wtf(decode_varbyte(t), decode_varbyte(d), k1, b, avgdl)
-                for t, d in zip(pdf["tfs"], pdf["dls"])
-            ]
-        )
-        decoded = _decode_rows(pdf, base, tomb)
+        # decode once per (term, salt) row, with the tf-part
+        decoded = _decode_rows(pdf, base, k1, b, avgdl, tomb)
         out_q: list[int] = []
         out_d: list[np.ndarray] = []
         out_s: list[np.ndarray] = []
@@ -298,9 +294,12 @@ def make_mixed_scorer(
     return score_shard
 
 
-def _wtf(tfs: np.ndarray, dls: np.ndarray, k1: float, b: float, avgdl: float):
-    t = tfs.astype(np.float64)
-    d = dls.astype(np.float64)
+def _wtf(tfs, dls, k1: float, b: float, avgdl: float) -> np.ndarray:
+    """BM25's tf part per posting. Over a block's (max tf, min dl) it is
+    the block's upper bound: it rises in tf and falls in dl, so the
+    bound holds under the CURRENT k1/b/avgdl as collection stats drift."""
+    t = np.asarray(tfs, dtype=np.float64)
+    d = np.asarray(dls, dtype=np.float64)
     return t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * (d / avgdl)))
 
 
@@ -360,8 +359,9 @@ class IndexReader:
             .parquet(f"{index_dir}/postings"),
             "vocabulary": spark.read.schema(VOCABULARY_SCHEMA)
             .parquet(f"{index_dir}/vocabulary"),
-            # inferred: doc_id has the caller's key type
-            "docmap": spark.read.parquet(f"{index_dir}/docmap"),
+            "docmap": spark.read.schema(
+                docmap_read_schema(self.meta["doc_id_type"])
+            ).parquet(f"{index_dir}/docmap"),
         }
         if cache:
             for df in self._dfs.values():
@@ -441,8 +441,9 @@ def _search(
     so collecting it runs no Spark job either.
 
     Driver↔JVM cost per call: integer IN filters are one F.expr call
-    (``_in_ints``), not one py4j call per literal; the postings and
-    vocabulary reads declare their schemas (no footer-inference job)."""
+    (``_in_ints``), not one py4j call per literal; the postings,
+    vocabulary and docmap reads declare their schemas (no
+    footer-inference job)."""
     if isinstance(queries, str):
         queries = [queries]
 

@@ -15,7 +15,7 @@ Per shard (shard-local doc space [0, shard_size)):
    structures, built once per shard call and reused by every query in
    the batch:
    - off_t   = searchsorted(ids_t, cell boundaries) — O(cells·log df)
-   - cmax_t  = per-cell max of the block upper bound wtf_upper(maxtf,
+   - cmax_t  = per-cell max of the block upper bound _wtf(maxtf,
      mindl): block j covers docs (blast[j-1], blast[j]], an interval
      max-assign over its cell span. Never touches the postings.
 2. Per query: cell_ub = Σ_t max(w_t, 0)·cmax_t. A NEGATIVE term weight
@@ -261,8 +261,6 @@ def make_bmw_scorer(
     shard_size: int,
     tomb: np.ndarray | None = None,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    from .codec import decode_varbyte
-    from .postings import wtf_upper
     from .searchidx import _decode_rows, _wtf
 
     width = _cell_width(shard_size)
@@ -278,16 +276,10 @@ def make_bmw_scorer(
             blasts.setdefault((int(r.th1), int(r.th2)), []).append(
                 (
                     np.asarray(r.block_last, dtype=np.int64) - base,
-                    wtf_upper(r.block_maxtf, r.block_mindl, k1, b, avgdl),
+                    _wtf(r.block_maxtf, r.block_mindl, k1, b, avgdl),
                 )
             )
-        pdf = pdf.assign(
-            wtf=[
-                _wtf(decode_varbyte(t), decode_varbyte(d), k1, b, avgdl)
-                for t, d in zip(pdf["tfs"], pdf["dls"])
-            ]
-        )
-        decoded = _decode_rows(pdf, base, tomb)
+        decoded = _decode_rows(pdf, base, k1, b, avgdl, tomb)
 
         # query-independent per-term structures, built ONCE per shard
         # and shared across the whole query batch

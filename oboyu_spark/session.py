@@ -107,9 +107,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.ui.enabled", "false")
         # snappy, not zstd: measured 2.1x faster end-to-end index build
-        # (zstd compression dominated the staged/postings writes);
-        # posting payloads are already varbyte-compressed, so zstd's
-        # ratio advantage is small exactly where the bytes are big
+        # (zstd compression dominated the staged/postings writes)
         .config("spark.sql.parquet.compression.codec", "snappy")
         # Throughput GC: the index build is an allocation-heavy string
         # workload (tokenize → explode → hash-agg); default G1 showed

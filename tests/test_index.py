@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from oboyu_spark.operators import termindex as TI
-from oboyu_spark.operators.codec import decode_doc_ids, decode_varbyte
 from oboyu_spark.operators.postings import CODEC_VERSION, build_index, load_meta
 from oboyu_spark.operators.searchidx import search_index
 from oboyu_spark.oracle.pybm25 import PyBM25
@@ -74,38 +73,51 @@ def test_sharding_and_salting(spark, index_dir):
     assert postings.agg(F.max("n")).collect()[0][0] <= 100  # <= shard_size
 
 
-def test_decode_roundtrip_vs_relational(spark, corpus, index_dir):
-    """Decompressed postings == the relational (doc, term, tf) rows."""
-    from oboyu_spark.operators.ids import assign_dense_ids
-
-    postings = spark.read.parquet(f"{index_dir}/postings").collect()
-    got = {}
-    meta = load_meta(index_dir)
-    for r in postings:
-        ids = decode_doc_ids(bytes(r["gaps"])).tolist()
-        tfs = decode_varbyte(bytes(r["tfs"])).tolist()
-        dls = decode_varbyte(bytes(r["dls"])).tolist()
-        assert len(ids) == r["n"] == len(tfs) == len(dls)
-        assert ids == sorted(ids)
-        # block metadata shape
-        n_blocks = (r["n"] + 127) // 128
-        assert len(r["block_last"]) == n_blocks == len(r["block_maxtf"])
-        assert len(r["block_mindl"]) == n_blocks
-        assert r["block_last"][-1] == ids[-1]
-        assert max(tfs) == max(r["block_maxtf"])
-        assert min(dls) == min(r["block_mindl"])
-        for d, t in zip(ids, tfs):
-            key = ((r["th1"], r["th2"]), d)
-            got[key] = got.get(key, 0) + t
-
-    docmap = {
-        r["doc_id"]: r["doc_int"]
-        for r in spark.read.parquet(f"{index_dir}/docmap").collect()
-    }
-    tf_rows = TI.term_frequencies(corpus).collect()
-    # map expected term strings to the build's 128-bit hash pairs
+def test_decode_roundtrip_vs_relational(spark, corpus, tmp_path):
+    """Decoded postings == the relational (doc, term, tf, dl) rows, and
+    every block array == numpy per-128 slices of the decoded lists —
+    over a corpus with a multi-block, salted group."""
     from oboyu_spark.operators.postings import term_hash_cols
 
+    hot = spark.createDataFrame(
+        [(f"zzhot#{i:03d}", "zzhot " + "spark " * (i % 5)) for i in range(700)],
+        "doc_id string, text string")
+    docs = corpus.unionByName(hot)
+    d = str(tmp_path / "roundtrip_idx")
+    shard_size = 1000
+    build_index(docs, d, shard_size=shard_size, salt_chunk=150,
+                id_assign_partitions=4)
+    docmap = {
+        r["doc_id"]: (r["doc_int"], r["dl"])
+        for r in spark.read.parquet(f"{d}/docmap").collect()
+    }
+    dl_of = dict(docmap.values())
+    got = {}
+    multi_block_salted = False
+    for r in spark.read.parquet(f"{d}/postings").collect():
+        gaps = np.array(r["gaps"], dtype=np.int64)
+        local = np.cumsum(gaps)
+        tfs = np.array(r["tfs"], dtype=np.int64)
+        dls = np.array(r["dls"], dtype=np.int64)
+        n = r["n"]
+        assert local.size == n == tfs.size == dls.size > 0
+        assert local[0] >= 0 and (gaps[1:] > 0).all()  # strictly ascending
+        assert local[-1] < shard_size
+        ids = local + r["shard"] * shard_size
+        starts = np.arange(0, n, 128)
+        assert r["block_last"] == [int(ids[min(s + 128, n) - 1]) for s in starts]
+        assert r["block_maxtf"] == [int(tfs[s:s + 128].max()) for s in starts]
+        assert r["block_mindl"] == [int(dls[s:s + 128].min()) for s in starts]
+        multi_block_salted |= n > 128 and r["salt"] > 0
+        for di, t, dl in zip(ids.tolist(), tfs.tolist(), dls.tolist()):
+            assert dl == dl_of[di]
+            key = ((r["th1"], r["th2"]), di)
+            assert key not in got  # salt chunks are doc-disjoint
+            got[key] = t
+    assert multi_block_salted, "the corpus must hold a multi-block salted group"
+
+    tf_rows = TI.term_frequencies(docs).collect()
+    # map expected term strings to the build's 128-bit hash pairs
     terms = sorted({r["term"] for r in tf_rows})
     tdf = spark.createDataFrame([(t,) for t in terms], "term string")
     t2h = {
@@ -113,7 +125,7 @@ def test_decode_roundtrip_vs_relational(spark, corpus, index_dir):
         for r in tdf.select("term", *term_hash_cols(F.col("term"))).collect()
     }
     expected = {
-        (t2h[r["term"]], docmap[r["doc_id"]]): r["tf"] for r in tf_rows
+        (t2h[r["term"]], docmap[r["doc_id"]][0]): r["tf"] for r in tf_rows
     }
     assert got == expected
 
@@ -230,9 +242,9 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
 
 
 def test_oneshot_search_job_count(spark, index_dir):
-    """One single-query search_index is 5 Spark jobs: the df lookup
-    (1), the pruned scatter's two AQE jobs (2), docmap schema inference
-    + hydration (2). The postings and vocabulary reads declare their
+    """One single-query search_index is 4 Spark jobs: the df lookup
+    (1), the pruned scatter's two AQE jobs (2) and the docmap hydration
+    (1). The postings, vocabulary and docmap reads declare their
     schemas, so they run no footer-inference job, and the result is an
     Arrow-built LocalRelation, whose collect runs no job."""
     import gc
@@ -253,7 +265,7 @@ def test_oneshot_search_job_count(spark, index_dir):
         gc.enable()
     assert rows == warm and len(rows) == 5
     jobs = sc.statusTracker().getJobIdsForGroup("oneshot_pin")
-    assert len(jobs) == 5, f"one-shot search ran {len(jobs)} jobs: {jobs}"
+    assert len(jobs) == 4, f"one-shot search ran {len(jobs)} jobs: {jobs}"
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):

@@ -1,8 +1,8 @@
 """Driver↔JVM boundary of the index paths: integer IN filters are built
-without ``Column.isin`` (one py4j call per literal), the postings and
-vocabulary reads declare schemas equal to the inferred ones, and result
-frames keep (query_id int, doc_id string, score double) on every gather
-path and key type."""
+without ``Column.isin`` (one py4j call per literal), the postings,
+vocabulary and docmap reads declare schemas equal to the inferred ones,
+and result frames keep (query_id int, doc_id string, score double) on
+every gather path and key type."""
 
 from __future__ import annotations
 
@@ -20,7 +20,9 @@ from oboyu_spark.operators.postings import (
     build_index,
     compact_index,
     delete_docs,
+    docmap_read_schema,
     finalize_index,
+    load_meta,
 )
 from oboyu_spark.sources.transcripts import synthesize_transcripts, turns_as_docs
 
@@ -108,26 +110,41 @@ def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
 
 
 def test_declared_read_schemas_match_inferred(spark, tmp_path):
-    """POSTINGS_READ_SCHEMA and VOCABULARY_SCHEMA equal what the parquet
-    reader infers, after a build, an append and a compaction. Change
-    them only together with CODEC_VERSION."""
-    d = str(tmp_path / "ix")
+    """POSTINGS_READ_SCHEMA, VOCABULARY_SCHEMA and the docmap's
+    docmap_read_schema(<the recorded key type>) equal what the parquet
+    reader infers, after a build, an append and a compaction, for
+    string and bigint keys; an append of the other key type is refused
+    before it writes anything. Change them only together with
+    CODEC_VERSION."""
+    for key_type, other, victims in (("string", "bigint", ["3", "10", "65"]),
+                                     ("bigint", "string", [3, 10, 65])):
+        d = str(tmp_path / key_type)
 
-    def check():
-        for name, ddl in (("postings", POSTINGS_READ_SCHEMA),
-                          ("vocabulary", VOCABULARY_SCHEMA)):
-            inferred = spark.read.parquet(f"{d}/{name}").schema
-            assert StructType.fromDDL(ddl) == inferred, name
-            declared = spark.read.schema(ddl).parquet(f"{d}/{name}").schema
-            assert declared == inferred, name
+        def check():
+            ddls = {"postings": POSTINGS_READ_SCHEMA,
+                    "vocabulary": VOCABULARY_SCHEMA,
+                    "docmap": docmap_read_schema(load_meta(d)["doc_id_type"])}
+            for name, ddl in ddls.items():
+                inferred = spark.read.parquet(f"{d}/{name}").schema
+                assert StructType.fromDDL(ddl) == inferred, (key_type, name)
+                declared = spark.read.schema(ddl).parquet(f"{d}/{name}").schema
+                assert declared == inferred, (key_type, name)
 
-    build_index(_docs(spark, "string"), d, shard_size=8, shards_per_part=2)
-    check()
-    append_docs(_docs(spark, "string", n=20, start=60), d)
-    check()
-    delete_docs(spark, d, ["3", "10", "65"])
-    compact_index(spark, d)
-    check()
+        build_index(_docs(spark, key_type), d, shard_size=8, shards_per_part=2)
+        assert load_meta(d)["doc_id_type"] == key_type
+        check()
+        with open(f"{d}/staged.json") as fh:
+            staged = fh.read()
+        with pytest.raises(ValueError,
+                           match=f"holds {key_type} doc ids.*{other} keys"):
+            append_docs(_docs(spark, other, n=5, start=100), d)
+        with open(f"{d}/staged.json") as fh:
+            assert fh.read() == staged
+        append_docs(_docs(spark, key_type, n=20, start=60), d)
+        check()
+        delete_docs(spark, d, victims)
+        compact_index(spark, d)
+        check()
 
 
 @pytest.mark.parametrize("key_type", ["string", "bigint"])

@@ -73,6 +73,63 @@ def test_vocab_merge_plan_has_no_range_exchange(spark, index_dir):
     assert "hashpartitioning(th1" in plan, plan
 
 
+def _lambda_struct_extracts(df) -> list[str]:
+    """GetArrayStructFields nodes (``p.tf`` over an array of structs)
+    inside a lambda body of ``df``'s optimized plan — each would rebuild
+    the whole array per lambda call (no CSE inside higher-order lambdas)."""
+    found: list[str] = []
+
+    def walk_expr(e, in_lambda: bool) -> None:
+        name = e.getClass().getSimpleName()
+        if in_lambda and name == "GetArrayStructFields":
+            found.append(e.toString())
+        in_lambda = in_lambda or name == "LambdaFunction"
+        kids = e.children()
+        for i in range(kids.size()):
+            walk_expr(kids.apply(i), in_lambda)
+
+    def walk_plan(node) -> None:
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            walk_expr(exprs.apply(i), False)
+        kids = node.children()
+        for i in range(kids.size()):
+            walk_plan(kids.apply(i))
+
+    walk_plan(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def test_postings_encode_is_spark_sql_one_exchange(spark):
+    """The part's postings encode runs no Python: no MapInPandas /
+    ArrowEvalPython / BatchEvalPython node, exactly one Exchange, hashed
+    on the full (shard, th1, th2, salt) group key, and no array-of-struct
+    field extraction inside a lambda (the block arrays read the int
+    list attributes, never ``p.tf`` per block)."""
+    import re
+
+    from oboyu_spark.operators.postings import _encoded_postings
+
+    rows = [(11 + d % 3, 21, d, 1 + d % 5, 9 + d % 4, d // 100, (d % 100) // 50)
+            for d in range(400)]
+    enriched = spark.createDataFrame(
+        rows, "th1 long, th2 long, doc_int long, tf long, dl long, "
+              "shard long, salt int")
+    out = _encoded_postings(enriched, 4, 100)
+    plan = _plan(out)
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1, plan
+    assert re.search(r"hashpartitioning\(shard#\d+L?, th1#\d+L?, "
+                     r"th2#\d+L?, salt#\d+, 4\)", plan), plan
+    assert _lambda_struct_extracts(out) == []
+    # the probe sees the shape it guards against
+    lists = enriched.groupBy("th1").agg(
+        F.collect_list(F.struct("doc_int", "tf")).alias("p"))
+    assert _lambda_struct_extracts(lists.select(F.expr(
+        "transform(sequence(0, 1), i -> array_max(p.tf))")))
+
+
 def test_relational_bm25_joins_are_broadcast(spark, corpus):
     plan = _plan(B.bm25_search(corpus, "spark index", k=5))
     assert "CartesianProduct" not in plan, plan

@@ -130,7 +130,8 @@ def test_resume_refuses_mismatched_geometry(spark, tmp_path,
     hydration then pruned the docmap to the wrong bparts and searches
     silently lost hits; other tokenizer or salting settings would mix
     differently built parts into one index. It must raise, naming both
-    values, before any part is built."""
+    values, before any part is built. A shard_size past the int32 range
+    of the postings' shard-local ids is refused too."""
     docs = _corpus(spark)
     d = str(tmp_path / "idx")
     with crash_after_manifests(1), \
@@ -145,6 +146,9 @@ def test_resume_refuses_mismatched_geometry(spark, tmp_path,
             f"{key}={bad}")
         with pytest.raises(ValueError, match=want):
             build_index(docs, d, **{**KW, key: bad})
+    # shard-local doc ids are int32 gaps: refused before anything else
+    with pytest.raises(ValueError, match=f"shard_size={2**31} must be"):
+        build_index(docs, d, **{**KW, "shard_size": 2**31})
     done = [f for f in os.listdir(f"{d}/manifest") if f.endswith(".json")]
     assert len(done) == 1
     assert not os.path.exists(f"{d}/stats/meta.json")
@@ -166,7 +170,9 @@ def test_manifest_counts_match_written_files(spark, tmp_path):
     """r8: the per-part manifest counters ride the postings write as an
     Observation instead of a separate read-back job — pin that every
     claimed count still equals what is actually ON DISK for its part
-    (the finalize integrity gate checks only the postings counts)."""
+    (the finalize integrity gate checks only the postings counts), and
+    that compressed_payload_bytes is the part's postings directory
+    size."""
     from pyspark.sql import functions as F
 
     docs = _corpus(spark)
@@ -174,23 +180,20 @@ def test_manifest_counts_match_written_files(spark, tmp_path):
     meta = build_index(docs, d, **KW)
     assert meta["n_parts"] > 1
     for row in _manifests(d):
+        pdir = f"{d}/postings/bpart={row['bpart']}"
         disk = (
-            spark.read.parquet(f"{d}/postings/bpart={row['bpart']}")
+            spark.read.parquet(pdir)
             .agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.coalesce(F.sum("n"), F.lit(0)).alias("postings"),
-                F.coalesce(
-                    F.sum(
-                        F.length("gaps") + F.length("tfs") + F.length("dls")
-                    ),
-                    F.lit(0),
-                ).alias("bytes"),
             )
             .collect()[0]
         )
         assert row["posting_rows"] == int(disk["rows"])
         assert row["n_postings"] == int(disk["postings"])
-        assert row["compressed_payload_bytes"] == int(disk["bytes"])
+        assert row["compressed_payload_bytes"] == sum(
+            os.path.getsize(os.path.join(dp, f))
+            for dp, _, fs in os.walk(pdir) for f in fs) > 0
         ndocs_disk = (
             spark.read.parquet(f"{d}/docmap/bpart={row['bpart']}").count()
         )
@@ -612,3 +615,59 @@ def test_stale_df_guard_raises_clear_error(spark, tmp_path):
     # compaction restores a consistent, queryable index
     compact_index(spark, d)
     assert search_index(spark, d, "zz", k=5).count() == 1
+
+
+def test_failing_part_build_fails_fast(spark, tmp_path, monkeypatch):
+    """A part whose postings write fails while its overlapped docmap
+    write is still running raises at once: the part cancels its own
+    tagged jobs instead of waiting the docmap write out, writes no
+    manifest, and leaves none of its jobs running."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    slow_started = threading.Event()
+    part_tags: list = []
+    real_parquet = DataFrameWriter.parquet
+    sc = spark.sparkContext
+
+    def slow(batches):
+        for b in batches:
+            time.sleep(300)
+            yield b
+
+    def parquet(self, path, *a, **kw):
+        if "/docmap/bpart=" in path:
+            # a slow docmap write: a long job on the docmap thread
+            part_tags.extend(sc.getJobTags())
+            slow_started.set()
+            spark.range(1).mapInPandas(slow, "id long").collect()
+        elif "/postings/bpart=" in path:
+            assert slow_started.wait(60)
+            time.sleep(1)  # let the slow job start its task
+            raise RuntimeError("injected postings failure")
+        return real_parquet(self, path, *a, **kw)
+
+    d = str(tmp_path / "idx")
+    docs = _corpus(spark, n_convs=10)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="injected postings failure"):
+        build_index(docs, d, shard_size=1000, salt_chunk=60,
+                    shards_per_part=1, id_assign_partitions=2)
+    assert time.time() - t0 < 120, "the failure waited out the docmap write"
+    mdir = f"{d}/manifest"
+    assert not os.path.isdir(mdir) or not os.listdir(mdir)
+    tags = [t for t in part_tags if t.startswith("oboyu-part-")]
+    assert tags, part_tags
+    jtracker = sc._jsc.sc().statusTracker()
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while True:
+        running = [j for t in tags for j in jtracker.getJobIdsForTag(t)
+                   if (info := tracker.getJobInfo(j)) is not None
+                   and info.status == "RUNNING"]
+        if not running or time.time() > deadline:
+            break
+        time.sleep(0.2)
+    assert not running, f"part jobs still running: {running}"

@@ -67,41 +67,6 @@ def test_staged_ids_dense_and_key_ordered(spark, tmp_path):
     assert search_index(spark, d, "spark index", k=5).count() > 0
 
 
-def test_encode_stream_groups_spanning_batches():
-    """The streaming encoder must reassemble groups that span Arrow
-    batch boundaries (a hot term's postings in one shard can exceed
-    maxRecordsPerBatch) — pure-python check, no Spark."""
-    import numpy as np
-    import pandas as pd
-
-    from oboyu_spark.operators.codec import decode_doc_ids, decode_varbyte
-    from oboyu_spark.operators.postings import _encode_stream
-
-    g1 = pd.DataFrame({
-        "shard": 0, "th1": 11, "th2": 21, "salt": 0,
-        "doc_int": np.arange(25_000, dtype=np.int64),
-        "tf": np.arange(25_000, dtype=np.int64) % 7 + 1,
-        "dl": np.full(25_000, 9, dtype=np.int64),
-    })
-    g2 = pd.DataFrame({
-        "shard": 0, "th1": 12, "th2": 22, "salt": 0,
-        "doc_int": np.array([3, 8], dtype=np.int64),
-        "tf": np.array([2, 4], dtype=np.int64),
-        "dl": np.array([9, 9], dtype=np.int64),
-    })
-    rows = pd.concat([g1, g2], ignore_index=True)
-    batches = [rows.iloc[i:i + 1000] for i in range(0, len(rows), 1000)]
-    out = pd.concat(list(_encode_stream(iter(batches))), ignore_index=True)
-    assert len(out) == 2
-    r1 = out[out.th1 == 11].iloc[0]
-    assert r1["n"] == 25_000
-    assert decode_doc_ids(r1["gaps"]).tolist() == g1["doc_int"].tolist()
-    assert decode_varbyte(r1["tfs"]).tolist() == g1["tf"].tolist()
-    assert len(r1["block_last"]) == (25_000 + 127) // 128
-    r2 = out[out.th1 == 12].iloc[0]
-    assert r2["n"] == 2 and decode_doc_ids(r2["gaps"]).tolist() == [3, 8]
-
-
 def test_empty_corpus_build_and_append(spark, tmp_path):
     """Zero-row builds/appends must produce an empty index gracefully
     (the pid-partitioned staged write emits no data files to infer a
