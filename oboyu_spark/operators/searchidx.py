@@ -337,7 +337,11 @@ class IndexReader:
 
     The serving deployment shape — open once, query many times. The
     first search pays cache materialization; subsequent searches scan
-    the in-memory columnar cache instead of parquet.
+    the in-memory columnar cache instead of parquet. The postings are
+    cached hash-partitioned by shard, so the scatter's
+    ``groupBy("shard")`` scores each shard in the partition that holds
+    it: a warm query whose terms and winners are in the df and docmap
+    caches is ONE Spark job with no shuffle.
 
     Snapshot contract: the reader serves the index AS OF open —
     bparts appended by ``append_docs`` after open (and docs removed by
@@ -364,6 +368,11 @@ class IndexReader:
             ).parquet(f"{index_dir}/docmap"),
         }
         if cache:
+            # the postings cache is hash-partitioned by shard, so the
+            # per-query groupBy("shard") plans no Exchange (uncached,
+            # it would shuffle the whole table on every query)
+            self._dfs["postings"] = self._dfs["postings"].repartition(
+                spark.sparkContext.defaultParallelism, "shard")
             for df in self._dfs.values():
                 df.persist()
         # (th1, th2) -> (document_frequency, containing bparts) or

@@ -6,6 +6,18 @@ AQE on (runtime re-plan + skew-join handling), shuffle partitions sized
 to cores locally (would be ~2-3x total cores on a cluster), Arrow
 enabled for the pandas-UDF paths, UTC session timezone so results are
 comparable with the DuckDB oracle.
+
+Python workers fork from the engine's own daemon module
+(``oboyu_spark._pydaemon``; the package root goes on the workers'
+PYTHONPATH so it imports from any driver cwd). On Python < 3.13 every
+Python task starts with ``importlib.invalidate_caches()``, which makes
+each cached ``zipimporter`` for a package inside ``pyspark.zip``
+re-read the archive's central directory: ≈0.1 s per task, more than a
+warm query's scoring. The daemon re-reads an archive only when it
+changed. From Python 3.13 ``zipimport`` only drops its cache there, and
+the daemon is plain ``pyspark.daemon``. On a cluster the package must be
+installed in the executors' Python: the daemon starts before a task
+fetches any ``--py-files``.
 """
 
 from __future__ import annotations
@@ -115,6 +127,9 @@ def get_spark(
         # (2-3x wall-time vs ParallelGC on the same stage).
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
+        .config("spark.python.daemon.module", "oboyu_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH",
+                os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -283,6 +283,46 @@ def test_index_reader_matches_oneshot(spark, index_dir):
         reader.close()
 
 
+def test_index_reader_snapshot_contract(spark, corpus, index_dir, tmp_path):
+    """An IndexReader serves the index as of open: docs appended after
+    open stay invisible until reopen, while tombstones are re-read per
+    search, so a delete after open masks on the next search. A reopened
+    reader sees the appended docs and agrees with the one-shot path."""
+    import shutil
+
+    from oboyu_spark.operators.postings import append_docs, delete_docs
+    from oboyu_spark.operators.searchidx import IndexReader
+
+    d = str(tmp_path / "snapshot_idx")
+    shutil.copytree(index_dir, d)
+    q = "zzsnapshot spark index"
+    new_ids = [f"new-{r['doc_id']}" for r in corpus.limit(4).collect()]
+    reader = IndexReader(spark, d)
+    try:
+        before = reader.search_rows(q, k=5)
+        assert len(before) == 5
+        append_docs(spark.createDataFrame(
+            [(i, "zzsnapshot zzsnapshot spark index") for i in new_ids],
+            "doc_id string, text string"), d)
+        assert reader.search_rows(q, k=5) == before
+        assert reader.search_rows("zzsnapshot", k=5) == []
+        victim = before[0][1]
+        delete_docs(spark, d, [victim])
+        after_delete = reader.search_rows(q, k=5)
+        assert after_delete and victim not in {r[1] for r in after_delete}
+    finally:
+        reader.close()
+
+    reopened = IndexReader(spark, d)
+    try:
+        rows = reopened.search_rows(q, k=5)
+        assert {r[1] for r in rows} >= set(new_ids)
+        assert rows == [(r["query_id"], r["doc_id"], r["score"])
+                        for r in search_index(spark, d, q, k=5).collect()]
+    finally:
+        reopened.close()
+
+
 def test_gather_paths_identical(spark, corpus, index_dir, monkeypatch):
     """The driver-side rank cut (small candidate sets) and the Spark
     window path (cluster scale) must return identical results."""

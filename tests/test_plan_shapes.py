@@ -191,6 +191,70 @@ def test_search_prunes_parts_by_term(spark, tmp_path):
     assert SI.last_scan_info()["live_parts"] == [0, 1, 2]
 
 
+def _exchanges(plan: str) -> tuple[list[str], list[str]]:
+    """Exchange lines of a physical-plan tree string, split into those
+    outside and those inside an InMemoryRelation's cached plan."""
+    outside: list[str] = []
+    inside: list[str] = []
+    cached_at = None  # indent of the enclosing InMemoryRelation line
+    for ln in plan.splitlines():
+        indent = len(ln) - len(ln.lstrip(" :|+-"))
+        if cached_at is not None and indent <= cached_at:
+            cached_at = None
+        if cached_at is None and "InMemoryRelation" in ln:
+            cached_at = indent
+        elif "Exchange" in ln:
+            (outside if cached_at is None else inside).append(ln)
+    return outside, inside
+
+
+def test_warm_reader_scatter_plans_no_exchange(spark, corpus, tmp_path,
+                                               monkeypatch):
+    """A warm IndexReader caches its postings hash-partitioned by
+    shard, so the scatter's groupBy("shard").applyInPandas reuses the
+    cached partitioning: the executed plan has no Exchange outside the
+    cached relation (the positive control finds the repartition's
+    Exchange inside it). Warm rows equal the one-shot search for every
+    scorer and for conjunctive mode, on a ≥3-shard index."""
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from oboyu_spark.operators.postings import load_meta
+    from oboyu_spark.operators.searchidx import IndexReader, search_index
+
+    d = str(tmp_path / "shardidx")
+    build_index(corpus, d, shard_size=40, id_assign_partitions=4)
+    assert -(-load_meta(d)["n_docs"] // 40) >= 3
+    scatters = []
+    real = PandasGroupedOpsMixin.applyInPandas
+
+    def capture(self, *a, **kw):
+        df = real(self, *a, **kw)
+        scatters.append(df)
+        return df
+
+    monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", capture)
+    queries = ["spark index search", "分散 shuffle partition engine"]
+    reader = IndexReader(spark, d)
+    try:
+        reader.search_rows(queries, k=5)  # materialize the caches
+        for scorer, mode in [("taat", "or"), ("bmw", "or"),
+                             ("auto", "or"), ("taat", "and")]:
+            rows = reader.search_rows(queries, k=5, scorer=scorer,
+                                      mode=mode)
+            plan = scatters[-1]._jdf.queryExecution().executedPlan() \
+                .toString()
+            outside, inside = _exchanges(plan)
+            assert not outside, plan
+            assert any("hashpartitioning(shard" in ln for ln in inside), plan
+            want = search_index(spark, d, queries, k=5, scorer=scorer,
+                                mode=mode).collect()
+            assert rows and rows == [
+                (r["query_id"], r["doc_id"], r["score"]) for r in want
+            ], (scorer, mode)
+    finally:
+        reader.close()
+
+
 def test_docmap_hydration_prunes_partitions(spark, tmp_path):
     """r7: winner hydration derives the docmap PARTITION filter from
     doc_int // part_docs (dense ids are assigned in part order), so

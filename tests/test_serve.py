@@ -112,14 +112,14 @@ def test_handle_hybrid_parity(spark, served, ivf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_warm_hybrid_is_three_spark_jobs(spark, served, ivf_dir):
+def test_warm_hybrid_is_two_spark_jobs(spark, served, ivf_dir):
     """VERDICT r5 #5 structural pin: a fully-warm folded hybrid query
-    launches exactly THREE Spark jobs — the BM25 driver-cut scatter
-    (which AQE accounts as two jobs: the shuffle-map query stage plus
-    the result stage) and the pruned IVF TakeOrdered — with fusion and
-    result assembly in pure python (zero fusion/collect/createDataFrame
-    jobs; search_rows keeps the winners driver-side). Counted via a
-    job group."""
+    launches exactly TWO Spark jobs — the BM25 driver-cut scatter and
+    the pruned IVF TakeOrdered — with fusion and result assembly in
+    pure python (zero fusion/collect/createDataFrame jobs; search_rows
+    keeps the winners driver-side). The reader caches its postings
+    hash-partitioned by shard, so the scatter plans no Exchange and
+    AQE runs no separate shuffle-map job. Counted via a job group."""
     from oboyu_spark.operators.embed import embed_text
     from oboyu_spark.operators.hybrid import hybrid_search_folded
     from oboyu_spark.operators.similarity import IvfReader
@@ -139,16 +139,16 @@ def test_warm_hybrid_is_three_spark_jobs(spark, served, ivf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rows == warm and len(rows) == 5
     jobs = sc.statusTracker().getJobIdsForGroup("warmhybrid_pin")
-    assert len(jobs) == 3, f"warm hybrid ran {len(jobs)} jobs: {jobs}"
-    # and the plain warm BM25 rows path is the scatter alone (2 AQE
-    # jobs, no result-frame job)
+    assert len(jobs) == 2, f"warm hybrid ran {len(jobs)} jobs: {jobs}"
+    # and the plain warm BM25 rows path is the scatter alone (one job,
+    # no result-frame job)
     sc.setJobGroup("warmbm25_pin", "warm bm25 rows")
     try:
         reader.search_rows(q, k=5)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs2 = sc.statusTracker().getJobIdsForGroup("warmbm25_pin")
-    assert len(jobs2) == 2, f"warm bm25 ran {len(jobs2)} jobs: {jobs2}"
+    assert len(jobs2) == 1, f"warm bm25 ran {len(jobs2)} jobs: {jobs2}"
     ivf.close()
 
 
