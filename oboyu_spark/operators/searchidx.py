@@ -6,19 +6,25 @@ Plan shape per batch of queries:
    tokenizer.py:374-376), slice the vocabulary for the union of query
    terms (parquet scan with an IN-pushed filter → a few rows), compute
    idf per term driver-side (tiny), broadcast.
-2. scatter: read postings parquet filtered to query terms (row-group
+2. score: read postings parquet filtered to query terms (row-group
    pruning via term min/max — rows are sorted by term within each
-   shard), group by shard, score inside a vectorized Arrow UDF:
+   shard) and score each shard with a vectorized closure:
    dense-accumulator term-at-a-time (TAAT) scoring — shard-local doc
    ids are contiguous (range sharding), so the accumulator is a flat
    float64 array and each posting costs one vectorized add. Each shard
-   emits its local top-k with the global tie-break.
+   emits its local top-k with the global tie-break. The closure runs
+   at one of two sites, chosen by the driver budget
+   DRIVER_CUT_MAX_ROWS: when Σdf over the live terms and the
+   candidate count (step 3) both fit it, the filtered postings are
+   collected through Arrow (a JVM-only job) and scored on the driver,
+   shard group by shard group; otherwise the closure is the scatter's
+   ``groupBy("shard").applyInPandas`` UDF.
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
-   rows, boundary score-ties kept — on the driver, or a Spark rank
-   window at cluster scale), hydrate original doc keys driver-side
-   from a pruned docmap scan, final top-k cut tie-broken on the
-   ORIGINAL doc_id (doc_int order only matches key order within a
-   shard, not across appends).
+   rows, boundary score-ties kept — on the driver while the candidate
+   count fits the same budget, else a Spark rank window), hydrate
+   original doc keys driver-side from a pruned docmap scan, final
+   top-k cut tie-broken on the ORIGINAL doc_id (doc_int order only
+   matches key order within a shard, not across appends).
 
 Exactness: TAAT scores every matched posting — results match the
 relational plan bit-for-bit up to float summation order (tests compare
@@ -46,10 +52,14 @@ RESULT_SCHEMA = "query_id int, doc_int long, score double"
 _READ_SCHEMAS = {"postings": POSTINGS_READ_SCHEMA,
                  "vocabulary": VOCABULARY_SCHEMA}
 
-# gather strategy cutover: below this many candidate rows
-# (queries × shards × k) the shard winners are rank-cut on the driver
-# (skips a window shuffle — latency path); above it the rank runs in
-# Spark (cluster scale, 10^4+ shards)
+# the rows the driver takes per search, one budget with two uses:
+# when Σdf over the live query terms fits it, the postings are scored
+# on the driver (no Python worker task — its fixed cost outweighs the
+# scoring of a small search); when the candidate rows (queries ×
+# shards × k) fit it, the shard winners are rank-cut on the driver
+# (skips a window shuffle). Above the first bound the scatter scores
+# the shards in Spark; above the second the rank runs there too
+# (cluster scale, 10^4+ shards)
 DRIVER_CUT_MAX_ROWS = 200_000
 
 # part-level pruning bounds: a term found in more bparts than this
@@ -340,8 +350,12 @@ class IndexReader:
     the in-memory columnar cache instead of parquet. The postings are
     cached hash-partitioned by shard, so the scatter's
     ``groupBy("shard")`` scores each shard in the partition that holds
-    it: a warm query whose terms and winners are in the df and docmap
-    caches is ONE Spark job with no shuffle.
+    it with no shuffle. A small search (Σdf within
+    ``DRIVER_CUT_MAX_ROWS``) skips the scatter: it scans the cached
+    postings into the driver and scores them there. Either way a warm
+    query whose terms and winners are in the df and docmap caches is
+    ONE Spark job — below the budget a JVM-only one, with no Python
+    task.
 
     Snapshot contract: the reader serves the index AS OF open —
     bparts appended by ``append_docs`` after open (and docs removed by
@@ -384,7 +398,7 @@ class IndexReader:
         self._df_cache: dict[tuple[int, int], int | None] = {}
         # doc_int -> doc_id for past winners: serving workloads surface
         # hot docs repeatedly; a cached winner skips the docmap job so a
-        # fully-warm query is ONE Spark job (the scorer scatter).
+        # fully-warm query is ONE Spark job (the postings scan).
         self._docmap_cache: dict[int, str] = {}
 
     def search(self, queries: str | Sequence[str], k: int = 10,
@@ -663,8 +677,6 @@ def _search(
     else:
         raise ValueError(f"unknown scorer {scorer!r}")
 
-    local = postings.groupBy("shard").applyInPandas(fn, schema=RESULT_SCHEMA)
-
     # The engine-wide tie-break is (score desc, ORIGINAL doc_id asc).
     # doc_int order equals doc_id order only for the initial build —
     # append_docs hands out strictly higher doc_int ranges regardless
@@ -672,21 +684,36 @@ def _search(
     # the k boundary (rank semantics) and the final cut happens on the
     # hydrated original keys.
     n_shards = max(1, -(-n_docs // shard_size))
-    if len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS:
-        # small candidate set: collect the shard winners directly and
-        # rank-cut on the driver — skips the window's shuffle exchange
-        # (one fewer stage on the latency path; p50 matters in serving)
-        top_rows = _driver_rank_cut(local.collect(), k)
+    driver_cut = len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS
+    if driver_cut and sum(
+            df_by_hash[h] for h in idf_by_hash) <= DRIVER_CUT_MAX_ROWS:
+        # small search: Σdf bounds the postings the scan returns, so
+        # collect them (a JVM-only Arrow job, no Python task) and run
+        # the same closure per shard here — the scatter's Python
+        # worker round trip costs more than the scoring it would do
+        pdf = postings.toArrow().to_pandas()
+        scored = [fn(g) for _, g in pdf.groupby("shard")]
+        top_rows = _driver_rank_cut(
+            pd.concat(scored).to_dict("records") if scored else [], k)
     else:
-        # cluster scale (10^4+ shards): the rank-≤-k cut runs in Spark,
-        # so only the per-query winners (ties kept) reach the driver
-        w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
-        top_rows = (
-            local.withColumn("rnk", F.rank().over(w))
-            .filter(F.col("rnk") <= k)
-            .drop("rnk")
-            .collect()
-        )
+        local = postings.groupBy("shard").applyInPandas(
+            fn, schema=RESULT_SCHEMA)
+        if driver_cut:
+            # few candidates: collect the shard winners directly and
+            # rank-cut on the driver — skips the window's shuffle
+            # exchange (one fewer stage on the latency path)
+            top_rows = _driver_rank_cut(local.collect(), k)
+        else:
+            # cluster scale (10^4+ shards): the rank-≤-k cut runs in
+            # Spark, so only the per-query winners (ties kept) reach
+            # the driver
+            w = Window.partitionBy("query_id").orderBy(F.col("score").desc())
+            top_rows = (
+                local.withColumn("rnk", F.rank().over(w))
+                .filter(F.col("rnk") <= k)
+                .drop("rnk")
+                .collect()
+            )
     if not top_rows:
         return ret_empty()
     # winners are driver-known ids → hydrate driver-side: one pruned

@@ -241,31 +241,44 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
     assert sorted(os.listdir(old)) == before  # nothing was written
 
 
-def test_oneshot_search_job_count(spark, index_dir):
-    """One single-query search_index is 4 Spark jobs: the df lookup
-    (1), the pruned scatter's two AQE jobs (2) and the docmap hydration
-    (1). The postings, vocabulary and docmap reads declare their
-    schemas, so they run no footer-inference job, and the result is an
-    Arrow-built LocalRelation, whose collect runs no job."""
+def test_oneshot_search_job_count(spark, index_dir, monkeypatch):
+    """One single-query search_index is 3 Spark jobs: the df lookup
+    (1), the Arrow collect of the pruned postings, scored on the driver
+    (1), and the docmap hydration (1). With Σdf above the driver budget
+    the scatter replaces the collect and runs two AQE jobs, so the
+    search is 4 jobs. The postings, vocabulary and docmap reads declare
+    their schemas, so they run no footer-inference job, and the result
+    is an Arrow-built LocalRelation, whose collect runs no job."""
     import gc
+
+    from oboyu_spark.operators import searchidx as SI
 
     q = "spark index search"
     warm = search_index(spark, index_dir, q, k=5).collect()
     sc = spark.sparkContext
-    # keep cyclic GC out of the pinned window: py4j finalizers it runs
-    # mid-call can route a call over another gateway connection, whose
-    # JVM thread does not carry the job group
-    gc.collect()
-    gc.disable()
-    sc.setJobGroup("oneshot_pin", "one-shot search")
-    try:
-        rows = search_index(spark, index_dir, q, k=5).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        gc.enable()
-    assert rows == warm and len(rows) == 5
-    jobs = sc.statusTracker().getJobIdsForGroup("oneshot_pin")
-    assert len(jobs) == 4, f"one-shot search ran {len(jobs)} jobs: {jobs}"
+
+    def pinned_jobs(group):
+        # keep cyclic GC out of the pinned window: py4j finalizers it
+        # runs mid-call can route a call over another gateway
+        # connection, whose JVM thread does not carry the job group
+        gc.collect()
+        gc.disable()
+        sc.setJobGroup(group, "one-shot search")
+        try:
+            rows = search_index(spark, index_dir, q, k=5).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            gc.enable()
+        assert rows == warm and len(rows) == 5
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    jobs = pinned_jobs("oneshot_pin")
+    assert len(jobs) == 3, f"one-shot search ran {len(jobs)} jobs: {jobs}"
+    meta = load_meta(index_dir)
+    n_shards = -(-meta["n_docs"] // meta["shard_size"])
+    monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", n_shards * 5)
+    jobs = pinned_jobs("oneshot_scatter_pin")
+    assert len(jobs) == 4, f"scattered search ran {len(jobs)} jobs: {jobs}"
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):
@@ -324,14 +337,15 @@ def test_index_reader_snapshot_contract(spark, corpus, index_dir, tmp_path):
 
 
 def test_gather_paths_identical(spark, corpus, index_dir, monkeypatch):
-    """The driver-side rank cut (small candidate sets) and the Spark
-    window path (cluster scale) must return identical results."""
+    """Driver scoring + driver rank cut (the default at this size) and
+    scatter + Spark rank window (budget 0, cluster scale) must return
+    identical results, as a frame and as rows."""
     from oboyu_spark.operators import searchidx as SI
 
     fast = search_index(spark, index_dir, QUERIES, k=7).collect()
     reader = SI.IndexReader(spark, index_dir, cache=False)
     fast_rows = reader.search_rows(QUERIES, k=7)
-    monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)  # force Spark window
+    monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)  # scatter + window
     slow = search_index(spark, index_dir, QUERIES, k=7).collect()
     slow_rows = reader.search_rows(QUERIES, k=7)
     reader.close()
@@ -418,3 +432,126 @@ def test_pretokenized_build_matches_text_build(spark, corpus, index_dir,
         b = [(r["doc_id"], round(r["score"], 9)) for r in
              search_index(spark, d, q, k=10).collect()]
         assert a == b, q
+
+
+def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
+                                            monkeypatch):
+    """The scorer closure runs at two sites: on the driver over the
+    Arrow-collected postings while Σdf over the live terms fits
+    DRIVER_CUT_MAX_ROWS, else inside the applyInPandas scatter. On a
+    multi-shard, multi-part index with tombstones, three budgets give
+    bit-identical rows: the default (driver scoring + driver cut), the
+    candidate count (scatter + driver cut: Σdf is above it) and 0
+    (scatter + Spark rank window) — for taat, bmw, a mixed auto batch
+    and mode="and", on a warm reader and on the one-shot path."""
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.operators.postings import append_docs, delete_docs
+
+    d = str(tmp_path / "sites_idx")
+    build_index(corpus, d, shard_size=100, salt_chunk=50,
+                shards_per_part=2, id_assign_partitions=4)
+    victims = [r["doc_id"]
+               for r in search_index(spark, d, "spark index", k=3).collect()]
+    append_docs(spark.createDataFrame(
+        [(f"zzsel#{i}", "zzsel spark index search") for i in range(3)],
+        "doc_id string, text string"), d)
+    delete_docs(spark, d, victims + ["zzsel#0"])
+    meta = load_meta(d)
+    assert meta["n_parts"] >= 3
+    n_shards = -(-meta["n_docs"] // meta["shard_size"])
+    assert n_shards >= 3
+    # 100-doc shards count as big, so the auto batch splits: the zzsel
+    # query (df 3) is selective, the others are hot
+    monkeypatch.setattr(SI, "AUTO_BMW_MIN_SHARD", meta["shard_size"])
+    queries = ["zzsel spark", "spark index search",
+               "分散 shuffle partition engine", "missing_term_xyz"]
+    k = 6
+    scatters = []
+    real = PandasGroupedOpsMixin.applyInPandas
+
+    def spy(self, *a, **kw):
+        scatters.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", spy)
+    reader = SI.IndexReader(spark, d)
+
+    def run():
+        out = []
+        for scorer, mode in [("taat", "or"), ("bmw", "or"),
+                             ("auto", "or"), ("taat", "and")]:
+            out.append(reader.search_rows(queries, k=k, scorer=scorer,
+                                          mode=mode))
+            out.append([tuple(r) for r in search_index(
+                spark, d, queries, k=k, scorer=scorer, mode=mode).collect()])
+            if scorer == "auto":
+                assert SI.last_scan_info()["auto_scorer"] == "mixed"
+        return out
+
+    try:
+        driver = run()
+        assert not scatters
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS",
+                            len(queries) * n_shards * k)
+        cut = run()
+        assert len(scatters) == 8
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
+        window = run()
+        assert len(scatters) == 16
+    finally:
+        reader.close()
+    assert all(driver)
+    assert not set(victims + ["zzsel#0"]) & {
+        r[1] for rows in driver for r in rows}
+    assert {r[1] for r in driver[0] if r[0] == 0} >= {"zzsel#1", "zzsel#2"}
+    assert cut == driver
+    assert window == driver
+
+
+def _index_rows(spark, d):
+    """An index as sorted plain rows: the docmap, the decoded postings
+    (one row per posting) and the vocabulary."""
+    size = load_meta(d)["shard_size"]
+    docmap = sorted(tuple(r) for r in spark.read.parquet(f"{d}/docmap")
+                    .select("doc_id", "doc_int", "dl", "fp", "bpart")
+                    .collect())
+    postings = []
+    for r in spark.read.parquet(f"{d}/postings").collect():
+        ids = np.cumsum(np.array(r["gaps"], dtype=np.int64)) \
+            + r["shard"] * size
+        postings.extend(
+            (r["bpart"], r["shard"], r["th1"], r["th2"], r["salt"], di, tf, dl)
+            for di, tf, dl in zip(ids.tolist(), r["tfs"], r["dls"]))
+    vocab = sorted(
+        (r["th1"], r["th2"], r["document_frequency"],
+         None if r["bparts"] is None else tuple(r["bparts"]))
+        for r in spark.read.parquet(f"{d}/vocabulary").collect())
+    return docmap, sorted(postings), vocab
+
+
+def test_rebuild_is_deterministic(spark, corpus, index_dir, tmp_path):
+    """Index determinism: a second build of the same input with the same
+    settings gives the identical docmap (doc_id, doc_int, dl, fp), the
+    identical decoded postings and the identical vocabulary. The FILES
+    may differ: the staging range-sort samples its boundaries with a
+    seed derived from the RDD id, so the staged pid slices move between
+    builds in one session — but ids are dense in key order, so they do
+    not depend on where the slices fall. The rebuild samples one key
+    per partition, so its slices differ from the first build's."""
+    d = str(tmp_path / "rebuild_idx")
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    sample = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        build_index(corpus, d, shard_size=100, salt_chunk=50,
+                    id_assign_partitions=4)
+    finally:
+        spark.conf.set(key, sample)
+    docmap, postings, vocab = _index_rows(spark, d)
+    base = _index_rows(spark, index_dir)
+    assert docmap and postings and vocab
+    assert docmap == base[0]
+    assert postings == base[1]
+    assert vocab == base[2]

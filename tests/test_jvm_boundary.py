@@ -151,9 +151,10 @@ def test_declared_read_schemas_match_inferred(spark, tmp_path):
 def test_result_frame_schema_every_path(spark, tmp_path, monkeypatch,
                                         key_type):
     """search_index returns (query_id int, doc_id string, score double)
-    on the empty, driver-cut and cluster gather paths, for string and
-    bigint keys; bigint keys come back as their decimal strings, ranked
-    the same on both gather paths."""
+    on the empty path, the small-search path (driver scoring + driver
+    cut) and the cluster path (scatter + Spark rank window, budget 0),
+    for string and bigint keys; bigint keys come back as their decimal
+    strings, ranked the same on both paths."""
     d = str(tmp_path / key_type)
     build_index(_docs(spark, key_type), d, shard_size=8, shards_per_part=2)
     qs = ["alpha beta", "gamma", "zzz nomatch", "delta eps zeta"]

@@ -215,15 +215,20 @@ def test_warm_reader_scatter_plans_no_exchange(spark, corpus, tmp_path,
     cached partitioning: the executed plan has no Exchange outside the
     cached relation (the positive control finds the repartition's
     Exchange inside it). Warm rows equal the one-shot search for every
-    scorer and for conjunctive mode, on a ≥3-shard index."""
+    scorer and for conjunctive mode, on a ≥3-shard index. These small
+    searches score on the driver by default, so the driver budget is
+    lowered to the candidate count: Σdf is above it, which forces the
+    scatter, and the shard winners are still rank-cut on the driver."""
     from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
 
+    from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.operators.postings import load_meta
     from oboyu_spark.operators.searchidx import IndexReader, search_index
 
     d = str(tmp_path / "shardidx")
     build_index(corpus, d, shard_size=40, id_assign_partitions=4)
-    assert -(-load_meta(d)["n_docs"] // 40) >= 3
+    n_shards = -(-load_meta(d)["n_docs"] // 40)
+    assert n_shards >= 3
     scatters = []
     real = PandasGroupedOpsMixin.applyInPandas
 
@@ -234,13 +239,16 @@ def test_warm_reader_scatter_plans_no_exchange(spark, corpus, tmp_path,
 
     monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", capture)
     queries = ["spark index search", "分散 shuffle partition engine"]
+    monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", len(queries) * n_shards * 5)
     reader = IndexReader(spark, d)
     try:
         reader.search_rows(queries, k=5)  # materialize the caches
         for scorer, mode in [("taat", "or"), ("bmw", "or"),
                              ("auto", "or"), ("taat", "and")]:
+            n_before = len(scatters)
             rows = reader.search_rows(queries, k=5, scorer=scorer,
                                       mode=mode)
+            assert len(scatters) == n_before + 1, (scorer, mode)
             plan = scatters[-1]._jdf.queryExecution().executedPlan() \
                 .toString()
             outside, inside = _exchanges(plan)
@@ -251,6 +259,68 @@ def test_warm_reader_scatter_plans_no_exchange(spark, corpus, tmp_path,
             assert rows and rows == [
                 (r["query_id"], r["doc_id"], r["score"]) for r in want
             ], (scorer, mode)
+    finally:
+        reader.close()
+
+
+def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
+                                             monkeypatch):
+    """A small warm search (Σdf over its terms within
+    DRIVER_CUT_MAX_ROWS) scores on the driver: one Spark job, the Arrow
+    collect of the cached, term-filtered postings, whose executed plan
+    holds no Python node, and applyInPandas is never called. With Σdf
+    above a lowered budget the scatter runs instead, and the rows are
+    unchanged."""
+    import gc
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+    from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
+
+    from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.operators.postings import load_meta
+
+    collected, scatters = [], []
+    real_arrow = ClassicDataFrame.toArrow
+    real_apply = PandasGroupedOpsMixin.applyInPandas
+
+    def to_arrow(self):
+        collected.append(self)
+        return real_arrow(self)
+
+    def apply(self, *a, **kw):
+        scatters.append(1)
+        return real_apply(self, *a, **kw)
+
+    monkeypatch.setattr(ClassicDataFrame, "toArrow", to_arrow)
+    monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", apply)
+    q = "spark index search"
+    sc = spark.sparkContext
+    reader = SI.IndexReader(spark, index_dir)
+    try:
+        warm = reader.search_rows(q, k=5)  # caches, df and docmap
+        gc.collect()
+        gc.disable()
+        sc.setJobGroup("warm_driver_pin", "warm driver-scored search")
+        try:
+            rows = reader.search_rows(q, k=5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            gc.enable()
+        jobs = sc.statusTracker().getJobIdsForGroup("warm_driver_pin")
+        assert rows == warm and len(rows) == 5
+        assert len(jobs) == 1, f"warm search ran {len(jobs)} jobs: {jobs}"
+        assert not scatters
+        plan = collected[-1]._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, plan  # it scans the cache
+        for node in ("FlatMapGroupsInPandas", "MapInPandas",
+                     "ArrowEvalPython", "BatchEvalPython"):
+            assert node not in plan, plan
+
+        meta = load_meta(index_dir)
+        n_shards = -(-meta["n_docs"] // meta["shard_size"])
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", n_shards * 5)
+        assert reader.search_rows(q, k=5) == warm
+        assert len(scatters) == 1
     finally:
         reader.close()
 

@@ -114,12 +114,14 @@ def test_handle_hybrid_parity(spark, served, ivf_dir):
 
 def test_warm_hybrid_is_two_spark_jobs(spark, served, ivf_dir):
     """VERDICT r5 #5 structural pin: a fully-warm folded hybrid query
-    launches exactly TWO Spark jobs — the BM25 driver-cut scatter and
-    the pruned IVF TakeOrdered — with fusion and result assembly in
-    pure python (zero fusion/collect/createDataFrame jobs; search_rows
-    keeps the winners driver-side). The reader caches its postings
-    hash-partitioned by shard, so the scatter plans no Exchange and
-    AQE runs no separate shuffle-map job. Counted via a job group."""
+    launches exactly TWO Spark jobs — the BM25 postings collect (a
+    small search is scored on the driver) and the pruned IVF
+    TakeOrdered — with fusion and result assembly in pure python (zero
+    fusion/collect/createDataFrame jobs; search_rows keeps the winners
+    driver-side). Above the driver budget the BM25 job is the scatter:
+    the reader caches its postings hash-partitioned by shard, so it
+    plans no Exchange and AQE runs no separate shuffle-map job.
+    Counted via a job group."""
     from oboyu_spark.operators.embed import embed_text
     from oboyu_spark.operators.hybrid import hybrid_search_folded
     from oboyu_spark.operators.similarity import IvfReader
@@ -140,8 +142,8 @@ def test_warm_hybrid_is_two_spark_jobs(spark, served, ivf_dir):
     assert rows == warm and len(rows) == 5
     jobs = sc.statusTracker().getJobIdsForGroup("warmhybrid_pin")
     assert len(jobs) == 2, f"warm hybrid ran {len(jobs)} jobs: {jobs}"
-    # and the plain warm BM25 rows path is the scatter alone (one job,
-    # no result-frame job)
+    # and the plain warm BM25 rows path is the postings collect alone
+    # (one job, no result-frame job)
     sc.setJobGroup("warmbm25_pin", "warm bm25 rows")
     try:
         reader.search_rows(q, k=5)
