@@ -88,8 +88,8 @@ LIKE_TERMS = ["fast", "table"]
 # chunk_documents (rows-only free-text variant; reference parity pinned
 # by tests/test_chunker.py, exact sibling chunk_documents_fixed stays).
 # r6 rotations (VERDICT r5 #2): minhash_signatures retired (exercised
-# inside minhash_lsh_pairs / minhash_incremental_pairs; exact twin
-# stays in plans/oracle_sql.py and tests/test_dedup.py) and simhash64
+# inside minhash_lsh_pairs / minhash_incremental_pairs; pinned by
+# tests/test_dedup.py) and simhash64
 # retired (recomputed inside simhash64_near_pairs; pinned by
 # tests/test_dedup.py) to free slots for sampled_docs and
 # packed_sequences — the two operators that previously sat outside the

@@ -1,12 +1,11 @@
-"""Optional Japanese-specific normalization (reference N1-N3) and the
-morphological tokenizer slot (reference T2).
+"""Optional Japanese-specific normalization (reference N1-N3).
 
 The reference chains ftfy → neologdn → conditional zen-to-han for
 language=="ja" (crawler/services/encoding_detector.py:89-127) and uses
 MeCab via fugashi for morphological tokenization
-(common/services/tokenizer.py:95-172). None of those libraries exist in
-this container — exactly the situation the reference itself handles by
-degrading to the fallback tokenizer (tokenizer.py:348-353).
+(common/services/tokenizer.py:95-172). None of those libraries is an
+engine dependency; for tokenization the engine takes the reference's
+own degradation path, the fallback tokenizer (tokenizer.py:348-353).
 
 This module keeps the same degradation contract: each feature is gated
 behind an import-try; ``available()`` reports what's live; the UDF
@@ -32,10 +31,6 @@ try:  # pragma: no cover
     import mojimoji as _mojimoji
 except ImportError:
     _mojimoji = None
-try:  # pragma: no cover
-    import fugashi as _fugashi
-except ImportError:
-    _fugashi = None
 
 
 def available() -> dict[str, bool]:
@@ -43,7 +38,6 @@ def available() -> dict[str, bool]:
         "ftfy": _ftfy is not None,
         "neologdn": _neologdn is not None,
         "mojimoji": _mojimoji is not None,
-        "fugashi": _fugashi is not None,
     }
 
 
@@ -133,20 +127,3 @@ def ja_normalize_udf(fix_text: bool = True, neologdn_norm: bool = True,
 
     return _norm
 
-
-def morphological_tokenizer_udf(min_token_length: int = 2):
-    """T2: MeCab/fugashi tokenizer behind the same array<string>
-    interface as functions.text.tokenize_udf — initialize the tagger
-    once per python worker (module-level), Arrow-batched.
-
-    Unavailable here (fugashi/unidic-lite not installed); the engine's
-    parity target is the fallback tokenizer, matching the reference's
-    own documented degradation (tokenizer.py:348-353).
-    """
-    if _fugashi is None:
-        raise ImportError(
-            "fugashi/unidic-lite not installed — the engine uses "
-            "FallbackTokenizer parity (the reference's own degradation "
-            "path); install fugashi per-executor to enable T2"
-        )
-    raise NotImplementedError  # pragma: no cover — slot for real impl

@@ -60,15 +60,8 @@ _TOKEN_RE_PY = re.compile(TOKEN_PATTERN)
 
 
 # ---------------------------------------------------------------------------
-# Normalization (reference: indexer/core/text_normalizer.py:13-27 (N5),
-# crawler/services/encoding_detector.py:129-147 (N4))
+# Normalization (reference: indexer/core/text_normalizer.py:13-27 (N5))
 # ---------------------------------------------------------------------------
-
-def normalize_line_endings(col: Column) -> Column:
-    """CRLF/CR -> LF, >=3 consecutive newlines -> 2 (reference N4)."""
-    col = F.regexp_replace(col, "\\r\\n?", "\n")
-    return F.regexp_replace(col, "\\n{3,}", "\n\n")
-
 
 def collapse_whitespace(col: Column) -> Column:
     """All whitespace runs -> single space, then trim (reference N5)."""

@@ -101,10 +101,11 @@ def handle_request(
             return {"error": "hybrid mode needs --ivf", "query": query}
 
         def hybrid_rows(limit: int) -> "list[tuple[str, float]]":
-            # the warm fold (VERDICT r5 #5): one Spark job per branch
-            # (BM25 driver-cut + cached-IVF pruned TakeOrdered), fusion
-            # in pure python on the ≤ k_each collected rows — a warm
-            # hybrid query is two jobs, down from job-per-fusion-stage
+            # the warm fold (VERDICT r5 #5): at most one Spark job per
+            # branch (BM25 driver-cut, none when its terms and winners
+            # are cached; cached-IVF pruned TakeOrdered), fusion in pure
+            # python on the ≤ k_each collected rows — a warm hybrid
+            # query is one job, down from job-per-fusion-stage
             from oboyu_spark.operators.embed import embed_text
             from oboyu_spark.operators.hybrid import hybrid_search_folded
 

@@ -152,9 +152,10 @@ def hybrid_search_folded(
     nprobe: int = 4,
 ) -> "list[tuple[str, float]]":
     """Warm-serving fold of :func:`hybrid_search_indexed` (VERDICT r5
-    #5): run the two branch top-k searches (one Spark job each — the
-    BM25 reader's driver-cut path and the IVF reader's pruned
-    TakeOrdered), collect their ≤ ``k_each`` rows, and fuse on the
+    #5): run the two branch top-k searches (at most one Spark job each
+    — the BM25 reader's driver-cut path, none when its terms and
+    winners are cached, and the IVF reader's pruned TakeOrdered),
+    collect their ≤ ``k_each`` rows, and fuse on the
     DRIVER with the pure-python fusion twins — zero Spark jobs for
     fusion, no result-frame round-trip. Returns fused (doc_id, score)
     tuples ready for the serving response. Score- and rank-identical

@@ -18,7 +18,10 @@ Plan shape per batch of queries:
    candidate count (step 3) both fit it, the filtered postings are
    collected through Arrow (a JVM-only job) and scored on the driver,
    shard group by shard group; otherwise the closure is the scatter's
-   ``groupBy("shard").applyInPandas`` UDF.
+   ``groupBy("shard").applyInPandas`` UDF. A warm ``IndexReader``
+   keeps each term's collected rows in its driver term cache, so it
+   collects only the terms it has not seen, and a search whose terms
+   are all cached runs no postings job.
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
    rows, boundary score-ties kept — on the driver while the candidate
    count fits the same budget, else a Spark rank window), hydrate
@@ -63,7 +66,7 @@ _READ_SCHEMAS = {"postings": POSTINGS_READ_SCHEMA,
 DRIVER_CUT_MAX_ROWS = 200_000
 
 # part-level pruning bounds: a term found in more bparts than this
-# prunes nothing (and its full part list would bloat the df cache at
+# prunes nothing (and its full part list would bloat the term cache at
 # hot-term vocabularies) — recorded as "all parts"; and a query whose
 # union of part lists exceeds the second bound skips the bpart filter
 # (a 10^4-literal In over a partition column costs more than it saves)
@@ -342,8 +345,40 @@ def search_index(
     )
 
 
+class _TermCache(dict):
+    """A warm reader's term cache: (th1, th2) -> None for a term absent
+    from the vocabulary, else (df, bparts, rows). ``rows`` is the
+    term's raw posting rows as the driver collected them (the frame the
+    scorers take), or None when only df and bparts are cached: a term
+    first seen by a scattered search, whose rows never reached the
+    driver. Its size is counted in cached postings — df per row-cached
+    term, one per other entry — and bounded by ``limit``: an entry that
+    does not fit is not stored (the cache stops filling; it never
+    evicts). Concurrent searches on one reader may fill it: ``put`` holds a lock
+    around its check and count."""
+
+    def __init__(self, limit: int) -> None:
+        super().__init__()
+        self.limit = limit
+        self.postings = 0
+        self._lock = threading.Lock()
+
+    @staticmethod
+    def _cost(entry) -> int:
+        return 1 if entry is None or entry[2] is None else entry[0]
+
+    def put(self, h: tuple[int, int], entry) -> None:
+        with self._lock:
+            cost = self._cost(entry) - (
+                self._cost(self[h]) if h in self else 0)
+            if self.postings + cost <= self.limit:
+                self[h] = entry
+                self.postings += cost
+
+
 class IndexReader:
-    """Warm query handle: index tables cached in executor memory.
+    """Warm query handle: index tables cached in executor memory, and
+    each query term's df, bparts and posting rows cached on the driver.
 
     The serving deployment shape — open once, query many times. The
     first search pays cache materialization; subsequent searches scan
@@ -351,20 +386,25 @@ class IndexReader:
     cached hash-partitioned by shard, so the scatter's
     ``groupBy("shard")`` scores each shard in the partition that holds
     it with no shuffle. A small search (Σdf within
-    ``DRIVER_CUT_MAX_ROWS``) skips the scatter: it scans the cached
-    postings into the driver and scores them there. Either way a warm
-    query whose terms and winners are in the df and docmap caches is
-    ONE Spark job — below the budget a JVM-only one, with no Python
-    task.
+    ``DRIVER_CUT_MAX_ROWS``) skips the scatter and scores on the
+    driver, over posting rows kept in the term cache: it collects only
+    the rows of terms not cached yet, in one JVM-only Arrow job. A warm
+    query whose terms and winners are all cached runs NO Spark job;
+    above the budget it is one job, the scatter.
 
     Snapshot contract: the reader serves the index AS OF open —
     bparts appended by ``append_docs`` after open (and docs removed by
     ``compact_index``'s rewrite) are not visible until reopen (the
-    cached relations and the df/parts/docmap caches are all
-    open-time snapshots). Tombstones ARE re-read per search (deletes
-    mask immediately). Same contract as ``similarity.IvfReader``."""
+    cached relations and the term and docmap caches are all open-time
+    snapshots). Tombstones ARE re-read per search and masked at decode
+    (deletes mask immediately, cached rows included). Same contract as
+    ``similarity.IvfReader``."""
 
-    DF_CACHE_MAX = 1_000_000  # term-df cache entries (driver memory)
+    # term-cache bound in cached postings (driver memory): df per
+    # row-cached term plus one per df-only or absent entry. Besides its
+    # postings' int32 arrays, a row-cached term holds ≈3 KB of frame
+    # overhead, so the worst case (all df-1 terms) is ≈1.5 GB
+    TERM_CACHE_MAX_POSTINGS = 500_000
     DOCMAP_CACHE_MAX = 1_000_000  # doc_int -> doc_id entries (driver memory)
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -384,27 +424,25 @@ class IndexReader:
         if cache:
             # the postings cache is hash-partitioned by shard, so the
             # per-query groupBy("shard") plans no Exchange (uncached,
-            # it would shuffle the whole table on every query)
+            # it would shuffle the whole table on every query); the
+            # scatter of searches above the driver budget reads it
             self._dfs["postings"] = self._dfs["postings"].repartition(
                 spark.sparkContext.defaultParallelism, "shard")
             for df in self._dfs.values():
                 df.persist()
-        # (th1, th2) -> (document_frequency, containing bparts) or
-        # None for absent terms, filled lazily per search.
-        # Serving workloads repeat query terms heavily; once a term is
-        # cached, searches using only cached terms skip the vocabulary
-        # job entirely (one less Spark job per query). Bounded — the
-        # full 10^8-term vocabulary never lands on the driver.
-        self._df_cache: dict[tuple[int, int], int | None] = {}
+        # the term cache (see _TermCache), filled lazily per search.
+        # Serving workloads repeat query terms heavily: a search whose
+        # terms are all cached runs no vocabulary job and, below the
+        # driver budget, no postings job
+        self._df_cache = _TermCache(self.TERM_CACHE_MAX_POSTINGS)
         # doc_int -> doc_id for past winners: serving workloads surface
-        # hot docs repeatedly; a cached winner skips the docmap job so a
-        # fully-warm query is ONE Spark job (the postings scan).
+        # hot docs repeatedly; a cached winner skips the docmap job
         self._docmap_cache: dict[int, str] = {}
 
     def search(self, queries: str | Sequence[str], k: int = 10,
                scorer: str = "taat", mode: str = "or") -> DataFrame:
         return _search(self.spark, self.meta, self._dfs, self.index_dir,
-                       queries, k, scorer, mode, df_cache=self._df_cache,
+                       queries, k, scorer, mode, term_cache=self._df_cache,
                        docmap_cache=self._docmap_cache)
 
     def search_rows(self, queries: str | Sequence[str], k: int = 10,
@@ -416,7 +454,7 @@ class IndexReader:
         result frame and collecting it back (the serve loop and the
         hybrid fold consume rows, not a frame)."""
         return _search(self.spark, self.meta, self._dfs, self.index_dir,
-                       queries, k, scorer, mode, df_cache=self._df_cache,
+                       queries, k, scorer, mode, term_cache=self._df_cache,
                        docmap_cache=self._docmap_cache, return_rows=True)
 
     def close(self) -> None:
@@ -441,6 +479,20 @@ def _driver_rank_cut(rows, k: int):
     return out
 
 
+def _live_parts(parts_by_hash: dict, hashes) -> list[int] | None:
+    """Part-level pruning: the bparts that contain at least one of the
+    terms ``hashes`` (bpart is a partition column — the IN filter lands
+    in the scan's PartitionFilters, so unrelated parts' files are never
+    opened, footer reads included). None — no pruning — when any term's
+    part set was too large to track (it spans everything anyway) or
+    when the union itself stops being selective."""
+    part_sets = [parts_by_hash.get(h) for h in hashes]
+    if any(ps is None for ps in part_sets):
+        return None
+    lp = sorted(set().union(*part_sets))
+    return lp if len(lp) <= PART_PRUNE_MAX_UNION else None
+
+
 def _search(
     spark: SparkSession,
     meta: dict,
@@ -450,7 +502,7 @@ def _search(
     k: int,
     scorer: str,
     mode: str = "or",
-    df_cache: dict | None = None,
+    term_cache: _TermCache | None = None,
     docmap_cache: dict | None = None,
     return_rows: bool = False,
 ) -> DataFrame:
@@ -503,9 +555,9 @@ def _search(
         )
         for t in all_terms
     }
-    # df per term: serve from the reader's cache where possible (the
-    # cache stores the reader's SNAPSHOT of (df, containing bparts),
-    # incl. "absent" as None — consistent with the persisted
+    # df per term: serve from the reader's term cache where possible
+    # (it stores the reader's SNAPSHOT of (df, containing bparts, posting
+    # rows), incl. "absent" as None — consistent with the persisted
     # DataFrames); run the lookup job only for terms not seen before.
     # idf is derived fresh from df + current n_docs, so collection
     # stats are never cached. The lookup reads the merged vocabulary,
@@ -516,14 +568,17 @@ def _search(
     # fan-out is the latency floor for selective queries).
     df_by_hash: dict[tuple[int, int], int | None] = {}
     parts_by_hash: dict[tuple[int, int], tuple | None] = {}
+    rows_by_hash: dict[tuple[int, int], pd.DataFrame] = {}
     missing: list[tuple[int, int]] = []
     for h in term_to_hash.values():
-        if df_cache is not None and h in df_cache:
-            cached = df_cache[h]
+        if term_cache is not None and h in term_cache:
+            cached = term_cache[h]
             if cached is None:
                 df_by_hash[h] = None
             else:
-                df_by_hash[h], parts_by_hash[h] = cached
+                df_by_hash[h], parts_by_hash[h], rows = cached
+                if rows is not None:
+                    rows_by_hash[h] = rows
         else:
             missing.append(h)
     if missing:
@@ -550,14 +605,10 @@ def _search(
             df_by_hash[h] = found[h][0] if h in found else None
             if h in found:
                 parts_by_hash[h] = found[h][1]
-        if df_cache is not None and len(df_cache) < IndexReader.DF_CACHE_MAX:
-            df_cache.update(
-                {
-                    h: (None if df_by_hash[h] is None
-                        else (df_by_hash[h], parts_by_hash.get(h)))
-                    for h in missing
-                }
-            )
+            if term_cache is not None:
+                # df and bparts only: a driver-site search adds the rows
+                # when it collects them
+                term_cache.put(h, (*found[h], None) if h in found else None)
     for h, df in df_by_hash.items():
         if df is not None and n_docs - df + 0.5 <= 0:
             raise ValueError(
@@ -583,43 +634,39 @@ def _search(
         for qid, qterms in qmap.items()
     }
     idf_map = idf_by_hash
-    live_h1 = sorted({h1 for h1, _ in idf_by_hash})
     # part-level pruning: read ONLY the bpart= directories that contain
-    # at least one live query term (bpart is a partition column — the
-    # IN filter lands in the scan's PartitionFilters, so unrelated parts'
-    # files are never opened, footer reads included). Skipped when any
-    # live term's part set was too large to track (it spans everything
-    # anyway) or when the union itself stops being selective.
-    # The prune decision runs BEFORE any relation is created (r8,
-    # ADVICE r7): on the one-shot path, eagerly building the root
-    # relation first — as r7 did — paid the full partition-directory
-    # listing the explicit-path read exists to skip.
-    part_sets = [parts_by_hash.get(h) for h in idf_by_hash]
-    live_parts = None
-    if all(ps is not None for ps in part_sets):
-        lp = sorted(set().union(*part_sets))
-        if len(lp) <= PART_PRUNE_MAX_UNION:
-            live_parts = lp
+    # at least one live query term. The prune decision runs BEFORE any
+    # relation is created (r8, ADVICE r7): on the one-shot path,
+    # eagerly building the root relation first — as r7 did — paid the
+    # full partition-directory listing the explicit-path read exists
+    # to skip.
+    live_parts = _live_parts(parts_by_hash, idf_by_hash)
     info = _SCAN_INFO.record = {"live_parts": live_parts}
-    if live_parts is not None and dfs is None:
-        # one-shot path (r7): build the relation from the live bpart
-        # directories EXPLICITLY instead of filtering a root read —
-        # root relation creation LISTS every partition directory
-        # before PartitionFilters apply (measured ~1 s at 505 local
-        # parts, and a per-query 10⁴-prefix listing on an object
-        # store), all of it for directories the filter then discards.
-        # A warm IndexReader amortizes discovery in its persisted
-        # relations; this gives the cold path the same locality.
-        postings = spark.read.schema(POSTINGS_READ_SCHEMA).option(
-            "basePath", f"{index_dir}/postings"
-        ).parquet(*[
-            f"{index_dir}/postings/bpart={int(p)}"
-            for p in live_parts
-        ]).filter(_in_ints("th1", live_h1))
-    else:
-        postings = table("postings").filter(_in_ints("th1", live_h1))
-        if live_parts is not None:
-            postings = postings.filter(_in_ints("bpart", live_parts))
+
+    def scan(hashes) -> DataFrame:
+        """The postings of the terms ``hashes``, read from their live
+        bparts only where pruning applies."""
+        h1s = sorted({h1 for h1, _ in hashes})
+        parts = _live_parts(parts_by_hash, hashes)
+        if parts is not None and dfs is None:
+            # one-shot path (r7): build the relation from the live bpart
+            # directories EXPLICITLY instead of filtering a root read —
+            # root relation creation LISTS every partition directory
+            # before PartitionFilters apply (measured ~1 s at 505 local
+            # parts, and a per-query 10⁴-prefix listing on an object
+            # store), all of it for directories the filter then
+            # discards. A warm IndexReader amortizes discovery in its
+            # persisted relations; this gives the cold path the same
+            # locality.
+            return spark.read.schema(POSTINGS_READ_SCHEMA).option(
+                "basePath", f"{index_dir}/postings"
+            ).parquet(*[
+                f"{index_dir}/postings/bpart={int(p)}" for p in parts
+            ]).filter(_in_ints("th1", h1s))
+        postings = table("postings").filter(_in_ints("th1", h1s))
+        if parts is not None:
+            postings = postings.filter(_in_ints("bpart", parts))
+        return postings
 
     from .postings import load_tombstones
 
@@ -690,13 +737,29 @@ def _search(
         # small search: Σdf bounds the postings the scan returns, so
         # collect them (a JVM-only Arrow job, no Python task) and run
         # the same closure per shard here — the scatter's Python
-        # worker round trip costs more than the scoring it would do
-        pdf = postings.toArrow().to_pandas()
-        scored = [fn(g) for _, g in pdf.groupby("shard")]
+        # worker round trip costs more than the scoring it would do.
+        # A warm reader collects only the terms its cache lacks, and
+        # none when every term hits
+        fetch = [h for h in idf_by_hash if h not in rows_by_hash]
+        pdf = scan(fetch).toArrow().to_pandas() if fetch else None
+        if term_cache is not None:
+            # split the collected rows by exact term in one pass (a
+            # th1-colliding term's rows, which no scorer reads, drop out)
+            by_term = (dict(iter(pdf.groupby(["th1", "th2"], sort=False)))
+                       if fetch else {})
+            for h in fetch:
+                rows_by_hash[h] = by_term[h] if h in by_term else pdf.iloc[:0]
+                term_cache.put(h, (df_by_hash[h], parts_by_hash.get(h),
+                                   rows_by_hash[h]))
+            frames = [rows_by_hash[h] for h in idf_by_hash
+                      if len(rows_by_hash[h])]
+            pdf = pd.concat(frames, ignore_index=True) if frames else None
+        scored = ([] if pdf is None
+                  else [fn(g) for _, g in pdf.groupby("shard")])
         top_rows = _driver_rank_cut(
             pd.concat(scored).to_dict("records") if scored else [], k)
     else:
-        local = postings.groupBy("shard").applyInPandas(
+        local = scan(list(idf_by_hash)).groupBy("shard").applyInPandas(
             fn, schema=RESULT_SCHEMA)
         if driver_cut:
             # few candidates: collect the shard winners directly and

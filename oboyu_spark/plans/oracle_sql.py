@@ -192,15 +192,6 @@ scored AS (
 )"""
 
 
-def transcripts_bm25_topk_sql(query: str, k: int = 10) -> str:
-    """BM25 top-k over per-turn documents derived from ``documents``."""
-    return f"""WITH {TRANSCRIPTS_CTE}, {_bm25_scored_cte(query)}
-SELECT doc_id, round(score, {ROUND}) AS score
-FROM scored
-ORDER BY round(score, {ROUND}) DESC, doc_id ASC
-LIMIT {k}"""
-
-
 def transcripts_role_filter_bm25_sql(query: str, role: str, k: int = 10) -> str:
     """Q8 analog: score on the FULL corpus, filter by role PRE-limit
     (documented deviation from the reference's post-limit quirk)."""
@@ -354,42 +345,6 @@ FROM common
 JOIN sizes sa ON sa.doc_id = doc_a
 JOIN sizes sb ON sb.doc_id = doc_b
 WHERE round(common::DOUBLE / (sa.n_sh + sb.n_sh - common), {ROUND}) >= {threshold}"""
-
-
-def minhash_signatures_sql(num_perm: int = 4, n: int = 3,
-                           source: str = "documents") -> str:
-    sigs = ", ".join(
-        f"min(md5(shingle || ':{i}')) AS sig_{i}" for i in range(num_perm)
-    )
-    return f"""WITH {_shingles_cte(source, n)}
-SELECT doc_id, {sigs} FROM sh GROUP BY doc_id"""
-
-
-def simhash_sql(bits: int = 32, source: str = "documents") -> str:
-    bitsums = ", ".join(
-        f"sum(CASE WHEN (h >> {j}) & 1 = 1 THEN tf ELSE -tf END) AS s_{j}"
-        for j in range(bits)
-    )
-    recompose = " + ".join(
-        f"(CASE WHEN s_{j} > 0 THEN {2 ** j} ELSE 0 END)" for j in range(bits)
-    )
-    return f"""WITH
-tok AS (
-  SELECT doc_id,
-         unnest(regexp_extract_all(lower(text), '{DUCKDB_TOKEN_PATTERN}')) AS term
-  FROM {source}
-),
-tf AS (
-  SELECT doc_id, term, count(*)::BIGINT AS tf FROM tok
-  WHERE length(term) >= {MIN_TOKEN_LENGTH} GROUP BY doc_id, term
-),
-h AS (
-  SELECT doc_id, tf,
-         ('0x' || substr(md5(term), 1, 8))::UBIGINT::BIGINT AS h
-  FROM tf
-),
-bitsums AS (SELECT doc_id, {bitsums} FROM h GROUP BY doc_id)
-SELECT doc_id, ({recompose})::BIGINT AS simhash FROM bitsums"""
 
 
 def discover_stopwords_sql(max_df_ratio: float = 0.5,
@@ -643,19 +598,6 @@ FROM common m
 JOIN sizes sa ON sa.doc_id = m.doc_a
 JOIN sizes sb ON sb.doc_id = m.doc_b
 WHERE m.common_fp >= {min_common}"""
-
-
-def simhash_near_pairs_sql(bits: int = 32, max_hamming: int = 3,
-                           source: str = "documents") -> str:
-    """Exhaustive O(n²) hamming pairs — the oracle for the engine's
-    banded (pigeonhole) candidate generation, which is guaranteed to
-    find EVERY pair with hamming ≤ max_hamming, so the sets match
-    exactly."""
-    return f"""WITH sh AS ({simhash_sql(bits, source)})
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       bit_count(xor(a.simhash, b.simhash))::INT AS hamming
-FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}"""
 
 
 def weighted_fusion_sql(query_a: str, query_b: str, k: int = 20,

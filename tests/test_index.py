@@ -436,18 +436,26 @@ def test_pretokenized_build_matches_text_build(spark, corpus, index_dir,
 
 def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
                                             monkeypatch):
-    """The scorer closure runs at two sites: on the driver over the
+    """The scorer closure runs at two sites: on the driver over
     Arrow-collected postings while Σdf over the live terms fits
     DRIVER_CUT_MAX_ROWS, else inside the applyInPandas scatter. On a
-    multi-shard, multi-part index with tombstones, three budgets give
-    bit-identical rows: the default (driver scoring + driver cut), the
-    candidate count (scatter + driver cut: Σdf is above it) and 0
-    (scatter + Spark rank window) — for taat, bmw, a mixed auto batch
-    and mode="and", on a warm reader and on the one-shot path."""
+    multi-shard, multi-part index with tombstones, for taat, bmw, a
+    mixed auto batch and mode="and", a warm reader first collects its
+    terms' rows once, then — after a delete — takes them all from its
+    term cache (no collect). Those rows are bit-identical to the
+    one-shot path, to a reader whose term cache is bounded to 0, to the
+    scatter with the driver cut (budget = the candidate count: Σdf is
+    above it) and to the scatter with the Spark rank window (budget 0).
+    A term whose df exceeds the budget is cached as df and bparts only,
+    and every search that uses it scatters."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
     from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
 
+    from oboyu_spark.functions.hashing import (spark_xxhash64_str,
+                                               spark_xxhash64_str_int)
     from oboyu_spark.operators import searchidx as SI
-    from oboyu_spark.operators.postings import append_docs, delete_docs
+    from oboyu_spark.operators.postings import (TERM_HASH_SEED2, append_docs,
+                                                delete_docs)
 
     d = str(tmp_path / "sites_idx")
     build_index(corpus, d, shard_size=100, salt_chunk=50,
@@ -468,46 +476,179 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
     queries = ["zzsel spark", "spark index search",
                "分散 shuffle partition engine", "missing_term_xyz"]
     k = 6
-    scatters = []
-    real = PandasGroupedOpsMixin.applyInPandas
+    scatters, arrows = [], []
+    real_apply = PandasGroupedOpsMixin.applyInPandas
+    real_arrow = ClassicDataFrame.toArrow
 
     def spy(self, *a, **kw):
         scatters.append(1)
-        return real(self, *a, **kw)
+        return real_apply(self, *a, **kw)
+
+    def to_arrow(self):
+        arrows.append(1)
+        return real_arrow(self)
 
     monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", spy)
-    reader = SI.IndexReader(spark, d)
+    monkeypatch.setattr(ClassicDataFrame, "toArrow", to_arrow)
 
-    def run():
-        out = []
+    def run(reader, oneshot=True):
+        """Warm rows and one-shot rows per scorer, and how many
+        collects the warm searches ran."""
+        warm, cold, collects = [], [], 0
         for scorer, mode in [("taat", "or"), ("bmw", "or"),
                              ("auto", "or"), ("taat", "and")]:
-            out.append(reader.search_rows(queries, k=k, scorer=scorer,
-                                          mode=mode))
-            out.append([tuple(r) for r in search_index(
-                spark, d, queries, k=k, scorer=scorer, mode=mode).collect()])
+            n = len(arrows)
+            warm.append(reader.search_rows(queries, k=k, scorer=scorer,
+                                           mode=mode))
+            collects += len(arrows) - n
             if scorer == "auto":
                 assert SI.last_scan_info()["auto_scorer"] == "mixed"
-        return out
+            if oneshot:
+                cold.append([tuple(r) for r in search_index(
+                    spark, d, queries, k=k, scorer=scorer,
+                    mode=mode).collect()])
+        return warm, cold, collects
 
+    def key(term):
+        return (spark_xxhash64_str(term),
+                spark_xxhash64_str_int(term, TERM_HASH_SEED2))
+
+    budget = SI.DRIVER_CUT_MAX_ROWS
+    reader = SI.IndexReader(spark, d)
     try:
-        driver = run()
+        first, first_cold, collects = run(reader)
+        assert first == first_cold
+        assert collects == 1  # the first search collects every term
+        assert {r[1] for r in first[0] if r[0] == 0} >= {"zzsel#1",
+                                                          "zzsel#2"}
+        # a delete after open masks the term cache's rows too
+        second = [r[1] for r in first[0]
+                  if r[0] == 1 and "zzsel" not in r[1]][:1] + ["zzsel#2"]
+        delete_docs(spark, d, second)
+        driver, cold, collects = run(reader)
         assert not scatters
+        assert collects == 0  # every term's rows come from the cache
+        assert driver == cold
+
+        cache_max = SI.IndexReader.TERM_CACHE_MAX_POSTINGS
+        monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS", 0)
+        uncached = SI.IndexReader(spark, d)
+        monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS",
+                            cache_max)
+        try:
+            nocache, _, collects = run(uncached, oneshot=False)
+            assert collects == 4 and len(uncached._df_cache) == 0
+        finally:
+            uncached.close()
+
         monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS",
                             len(queries) * n_shards * k)
-        cut = run()
+        cut, cut_cold, _ = run(reader)
         assert len(scatters) == 8
         monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
-        window = run()
+        window, window_cold, _ = run(reader)
         assert len(scatters) == 16
+
+        # a single-term search within the budget scores on the driver,
+        # and caches its rows; "spark" is above it
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", budget)
+        single = ["spark", "zzsel", "zzsel spark", "spark"]
+        expected = [reader.search_rows(q, k=k) for q in single]
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", n_shards * k)
+        small = SI.IndexReader(spark, d)
+        try:
+            n = len(scatters)
+            assert [small.search_rows(q, k=k) for q in single] == expected
+            assert len(scatters) == n + 3
+            df_hot, parts_hot, rows_hot = small._df_cache[key("spark")]
+            df_sel, parts_sel, rows_sel = small._df_cache[key("zzsel")]
+        finally:
+            small.close()
     finally:
         reader.close()
+    assert df_hot > n_shards * k and rows_hot is None and parts_hot
+    assert df_sel == 3 and len(rows_sel) and parts_sel
     assert all(driver)
-    assert not set(victims + ["zzsel#0"]) & {
-        r[1] for rows in driver for r in rows}
-    assert {r[1] for r in driver[0] if r[0] == 0} >= {"zzsel#1", "zzsel#2"}
-    assert cut == driver
-    assert window == driver
+    deleted = set(victims + ["zzsel#0"] + second)
+    assert not deleted & {r[1] for rows in driver for r in rows}
+    assert "zzsel#1" in {r[1] for r in driver[0] if r[0] == 0}
+    assert nocache == driver
+    assert cut == cut_cold == driver
+    assert window == window_cold == driver
+
+
+def test_term_cache_bound(spark, index_dir, monkeypatch):
+    """The reader's term cache holds at most TERM_CACHE_MAX_POSTINGS
+    cached postings (df per row-cached term, one per other entry). A
+    stream whose terms need three times the bound stops filling it —
+    the count never exceeds the bound and always equals the entries' —
+    and every answer equals an unbounded reader's."""
+    from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.sources.transcripts import WORDS
+
+    stream = QUERIES + list(WORDS[:24]) + QUERIES
+    full = SI.IndexReader(spark, index_dir)
+    try:
+        expected = [full.search_rows(q, k=5) for q in stream]
+        need = full._df_cache.postings
+    finally:
+        full.close()
+    limit = need // 3
+    monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS", limit)
+    reader = SI.IndexReader(spark, index_dir)
+    try:
+        got = []
+        for q in stream:
+            got.append(reader.search_rows(q, k=5))
+            cache = reader._df_cache
+            assert cache.postings <= limit
+            assert cache.postings == sum(
+                1 if e is None or e[2] is None else e[0]
+                for e in cache.values())
+    finally:
+        reader.close()
+    assert got == expected
+
+    def row_cached(c):
+        return sum(e is not None and e[2] is not None for e in c.values())
+
+    assert row_cached(cache) < row_cached(full._df_cache)
+
+
+def test_term_cache_put_is_atomic():
+    """Concurrent searches on one reader fill its term cache from
+    several threads: with more threads than cores and a short switch
+    interval, overlapping puts (df-only entries, then row entries)
+    keep the count equal to the entries' and within the bound."""
+    import sys
+    import threading
+
+    from oboyu_spark.operators.searchidx import _TermCache
+
+    cache = _TermCache(5_000)
+    rows = object()  # stands in for a term's rows frame
+
+    def work(n):
+        for i in range(2_000):
+            h = ((n * 7 + i) % 600, 0)
+            cache.put(h, (i % 9 + 1, None, None))
+            cache.put(h, (i % 9 + 1, None, rows))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(n,))
+                   for n in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert cache.postings <= cache.limit
+    assert cache.postings == sum(1 if e is None or e[2] is None else e[0]
+                                 for e in cache.values())
 
 
 def _index_rows(spark, d):

@@ -266,11 +266,13 @@ def test_warm_reader_scatter_plans_no_exchange(spark, corpus, tmp_path,
 def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
                                              monkeypatch):
     """A small warm search (Σdf over its terms within
-    DRIVER_CUT_MAX_ROWS) scores on the driver: one Spark job, the Arrow
-    collect of the cached, term-filtered postings, whose executed plan
-    holds no Python node, and applyInPandas is never called. With Σdf
-    above a lowered budget the scatter runs instead, and the rows are
-    unchanged."""
+    DRIVER_CUT_MAX_ROWS) scores on the driver. When its terms' posting
+    rows are not in the reader's term cache yet it is one Spark job,
+    the Arrow collect of the cached, term-filtered postings, whose
+    executed plan holds no Python node; a repeat takes the rows from
+    the term cache and runs no Spark job and no collect. applyInPandas
+    is never called. With Σdf above a lowered budget the scatter runs
+    instead, and the rows are unchanged."""
     import gc
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -295,32 +297,48 @@ def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
     monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", apply)
     q = "spark index search"
     sc = spark.sparkContext
-    reader = SI.IndexReader(spark, index_dir)
-    try:
-        warm = reader.search_rows(q, k=5)  # caches, df and docmap
+    meta = load_meta(index_dir)
+    n_shards = -(-meta["n_docs"] // meta["shard_size"])
+    budget = SI.DRIVER_CUT_MAX_ROWS
+
+    def pinned(group):
         gc.collect()
         gc.disable()
-        sc.setJobGroup("warm_driver_pin", "warm driver-scored search")
+        sc.setJobGroup(group, "warm driver-scored search")
         try:
             rows = reader.search_rows(q, k=5)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             gc.enable()
-        jobs = sc.statusTracker().getJobIdsForGroup("warm_driver_pin")
+        return rows, sc.statusTracker().getJobIdsForGroup(group)
+
+    reader = SI.IndexReader(spark, index_dir)
+    try:
+        # a scattered search caches the terms' df and bparts (not their
+        # rows) and the winners' doc ids
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", n_shards * 5)
+        warm = reader.search_rows(q, k=5)
+        assert len(scatters) == 1 and not collected
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", budget)
+
+        rows, jobs = pinned("warm_driver_pin")
         assert rows == warm and len(rows) == 5
         assert len(jobs) == 1, f"warm search ran {len(jobs)} jobs: {jobs}"
-        assert not scatters
+        assert len(collected) == 1 and len(scatters) == 1
         plan = collected[-1]._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, plan  # it scans the cache
         for node in ("FlatMapGroupsInPandas", "MapInPandas",
                      "ArrowEvalPython", "BatchEvalPython"):
             assert node not in plan, plan
 
-        meta = load_meta(index_dir)
-        n_shards = -(-meta["n_docs"] // meta["shard_size"])
+        rows, jobs = pinned("warm_cached_pin")
+        assert rows == warm
+        assert not jobs, f"cached search ran {len(jobs)} jobs: {jobs}"
+        assert len(collected) == 1 and len(scatters) == 1
+
         monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", n_shards * 5)
         assert reader.search_rows(q, k=5) == warm
-        assert len(scatters) == 1
+        assert len(scatters) == 2
     finally:
         reader.close()
 

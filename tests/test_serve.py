@@ -112,16 +112,17 @@ def test_handle_hybrid_parity(spark, served, ivf_dir):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_warm_hybrid_is_two_spark_jobs(spark, served, ivf_dir):
+def test_warm_hybrid_is_one_spark_job(spark, served, ivf_dir):
     """VERDICT r5 #5 structural pin: a fully-warm folded hybrid query
-    launches exactly TWO Spark jobs — the BM25 postings collect (a
-    small search is scored on the driver) and the pruned IVF
-    TakeOrdered — with fusion and result assembly in pure python (zero
-    fusion/collect/createDataFrame jobs; search_rows keeps the winners
-    driver-side). Above the driver budget the BM25 job is the scatter:
-    the reader caches its postings hash-partitioned by shard, so it
-    plans no Exchange and AQE runs no separate shuffle-map job.
-    Counted via a job group."""
+    launches exactly ONE Spark job — the pruned IVF TakeOrdered. The
+    BM25 side is a small search whose terms' posting rows and winners
+    are in the reader's term and docmap caches, so it is scored on the
+    driver with no Spark job; fusion and result assembly are pure
+    python (zero fusion/collect/createDataFrame jobs; search_rows keeps
+    the winners driver-side). Above the driver budget the BM25 side is
+    the scatter: the reader caches its postings hash-partitioned by
+    shard, so it plans no Exchange and AQE runs no separate shuffle-map
+    job. Counted via a job group."""
     from oboyu_spark.operators.embed import embed_text
     from oboyu_spark.operators.hybrid import hybrid_search_folded
     from oboyu_spark.operators.similarity import IvfReader
@@ -130,10 +131,10 @@ def test_warm_hybrid_is_two_spark_jobs(spark, served, ivf_dir):
     ivf = IvfReader(spark, ivf_dir)
     q = "spark index search"
     vec = embed_text(q, dim=16)
-    # warm: cache materialization, term-df + docmap caches
+    # warm: cache materialization, term + docmap caches
     warm = hybrid_search_folded(reader, ivf, q, vec, k_each=10, limit=5)
     sc = spark.sparkContext
-    sc.setJobGroup("warmhybrid_pin", "two-job warm hybrid")
+    sc.setJobGroup("warmhybrid_pin", "one-job warm hybrid")
     try:
         rows = hybrid_search_folded(reader, ivf, q, vec, k_each=10,
                                     limit=5)
@@ -141,16 +142,15 @@ def test_warm_hybrid_is_two_spark_jobs(spark, served, ivf_dir):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert rows == warm and len(rows) == 5
     jobs = sc.statusTracker().getJobIdsForGroup("warmhybrid_pin")
-    assert len(jobs) == 2, f"warm hybrid ran {len(jobs)} jobs: {jobs}"
-    # and the plain warm BM25 rows path is the postings collect alone
-    # (one job, no result-frame job)
+    assert len(jobs) == 1, f"warm hybrid ran {len(jobs)} jobs: {jobs}"
+    # and the plain warm BM25 rows path runs no job at all
     sc.setJobGroup("warmbm25_pin", "warm bm25 rows")
     try:
         reader.search_rows(q, k=5)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs2 = sc.statusTracker().getJobIdsForGroup("warmbm25_pin")
-    assert len(jobs2) == 1, f"warm bm25 ran {len(jobs2)} jobs: {jobs2}"
+    assert len(jobs2) == 0, f"warm bm25 ran {len(jobs2)} jobs: {jobs2}"
     ivf.close()
 
 
