@@ -9,10 +9,10 @@
         [--keep-missing] [--no-compact]
 
 The reference's change detector (change_detector.py:64-105) as a batch
-job: hash-diff the incoming corpus against the index docmap, then
-append new docs, tombstone+re-add modified ones, tombstone deleted
-ones, and (by default) compact so df/avgdl are exact again. Prints the
-change summary + post-sync metrics JSON.
+job: hash-diff the incoming corpus against the index docmap; then one
+mutation step (one part loop, one finalize) tombstones modified and
+deleted docs, stages new and modified ones, and by default compacts so
+df/avgdl are exact again. Prints the change summary + metrics JSON.
 """
 
 from __future__ import annotations

@@ -143,6 +143,13 @@ def docmap_read_schema(doc_id_type: str) -> str:
     return f"doc_id {doc_id_type}, doc_int long, dl long, fp string, bpart int"
 
 
+def read_docmap(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The docmap, read with its declared schema: staged.json (present
+    whenever docmap/ is) records the key type."""
+    return spark.read.schema(docmap_read_schema(
+        _staged_meta(index_dir)["doc_id_type"])).parquet(f"{index_dir}/docmap")
+
+
 def _in_ints(col: str, values: Iterable[int]):
     """``col IN (v1, v2, ...)`` over integer literals, built with ONE
     JVM call: ``Column.isin`` makes a py4j call per literal (0.5–1 ms
@@ -315,7 +322,8 @@ def _stage_docs(
     offsets = base + cumulative per-pid counts. The read-back that
     derives offsets and runs the integrity gate reads ONLY (pid, rn)
     and doc_id — parquet column pruning keeps the text bytes (the bulk
-    at 100 TB) untouched. Returns (n_docs, parts, offsets)."""
+    at 100 TB) untouched. Returns (the generation's staged.json record
+    {gen, base, n, offsets}, its parts)."""
     spark = keyed.sparkSession
     gdir = f"{index_dir}/staged/gen={gen}"
     # the range-sort's boundary sample would otherwise materialize the
@@ -335,25 +343,22 @@ def _stage_docs(
     finally:
         keyed.unpersist()
     # zero-row input writes only _SUCCESS — no pid=* dirs to infer a
-    # schema from; return the empty staging gracefully (round-1 parity)
-    if not any(f.startswith("pid=") for f in os.listdir(gdir)):
-        return 0, [], {}
-    back = spark.read.parquet(gdir)
-    # one integrity/offsets job: range partitioning puts EQUAL keys in
-    # the same pid, so global key-distinctness == Σ per-pid distincts
-    per_pid = {
-        int(r["pid"]): (int(r["n"]), int(r["mx"]), int(r["nk"]))
-        for r in back.groupBy("pid")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max("rn").alias("mx"),
-            F.countDistinct("doc_id").alias("nk"),
-        )
-        .collect()
-    }
-    n_docs = sum(n for n, _, _ in per_pid.values())
-    if n_docs == 0:
-        return 0, [], {}
+    # schema from: an empty generation (round-1 parity)
+    per_pid: dict[int, tuple[int, int, int]] = {}
+    if any(f.startswith("pid=") for f in os.listdir(gdir)):
+        # one integrity/offsets job: range partitioning puts EQUAL keys
+        # in the same pid, so global key-distinctness == Σ per-pid
+        # distincts
+        per_pid = {
+            int(r["pid"]): (int(r["n"]), int(r["mx"]), int(r["nk"]))
+            for r in spark.read.parquet(gdir).groupBy("pid")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.max("rn").alias("mx"),
+                F.countDistinct("doc_id").alias("nk"),
+            )
+            .collect()
+        }
     for pid, (n, mx, nk) in sorted(per_pid.items()):
         if mx != n - 1:
             raise RuntimeError(
@@ -365,13 +370,13 @@ def _stage_docs(
                 f"staging integrity violation: gen {gen} pid {pid} holds "
                 f"{n} rows but {nk} distinct keys"
             )
-    offsets: dict[int, int] = {}
+    offsets: dict[str, int] = {}
     acc = base
     for pid in sorted(per_pid):
-        offsets[pid] = acc
+        offsets[str(pid)] = acc
         acc += per_pid[pid][0]
     parts = list(range(base // part_docs, (acc - 1) // part_docs + 1))
-    return n_docs, parts, offsets
+    return {"gen": gen, "base": base, "n": acc - base, "offsets": offsets}, parts
 
 
 def _staged_meta(index_dir: str) -> dict:
@@ -439,19 +444,14 @@ def _stage(
     keyed = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
     num_partitions = id_assign_partitions or spark.sparkContext.defaultParallelism
     part_docs = settings["shard_size"] * settings["shards_per_part"]
-    n_docs, parts, offsets = _stage_docs(
-        keyed, index_dir, part_docs, num_partitions, 0, 0
-    )
+    g, parts = _stage_docs(keyed, index_dir, part_docs, num_partitions, 0, 0)
     meta = {
         "settings": settings,
         # the docmap's key type: its read schema is declared from it
         "doc_id_type": keyed.schema["doc_id"].dataType.simpleString(),
-        "n_docs": int(n_docs),
+        "n_docs": g["n"],
         "parts": parts,
-        "gens": [
-            {"gen": 0, "base": 0, "n": int(n_docs),
-             "offsets": {str(k): int(v) for k, v in offsets.items()}}
-        ],
+        "gens": [g],
     }
     _write_json(f"{index_dir}/staged.json", meta)
     return meta
@@ -707,9 +707,8 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     # ONE th1-sorted table scan. Hot terms present in more parts than
     # PART_PRUNE_MAX_PER_TERM store NULL (they prune nothing and their
     # full lists would make the vocabulary O(vocab·parts)).
-    # Consistency: every mutation path (build/append/sync/compact) ends
-    # in finalize_index, so the list can never go stale ahead of the
-    # postings layout; delete_docs only tombstones (pruning stays
+    # Consistency: every build and every _mutate step that builds a part
+    # ends in finalize_index; a delete only tombstones (pruning stays
     # correct, merely looser).
     from .searchidx import PART_PRUNE_MAX_PER_TERM as _CAP
 
@@ -855,9 +854,10 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
 
 
 def _build_parts(spark: SparkSession, index_dir: str, parts) -> dict:
-    """The part loop of build, append and compact: build each part of
+    """The part loop of build_index and _mutate: build each part of
     ``parts`` whose manifest row is not ``done`` (≤4 concurrently —
-    disjoint output roots), write its manifest, then finalize.
+    disjoint output roots), write its manifest, then finalize. A part
+    failing before it ever had a manifest leaves no postings or docmap.
 
     Each submission is wrapped by its OWN ``inheritable_thread_target``
     call, which clones the caller's local properties (job group,
@@ -865,6 +865,7 @@ def _build_parts(spark: SparkSession, index_dir: str, parts) -> dict:
     part's jobs, and the part's job tag lands in its own copy (one
     shared wrapper would share one Properties object and leak tags
     between concurrent parts)."""
+    import shutil
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -883,6 +884,12 @@ def _build_parts(spark: SparkSession, index_dir: str, parts) -> dict:
         sc.addJobTag(tag)
         try:
             row = _build_one_part(spark, index_dir, p, tag)
+        except BaseException:
+            if _read_manifest(index_dir, p) is None:
+                for t in ("postings", "docmap"):
+                    shutil.rmtree(f"{index_dir}/{t}/bpart={p}",
+                                  ignore_errors=True)
+            raise
         finally:
             sc.removeJobTag(tag)
         sh = _tagged_shuffle_bytes(spark, tag)
@@ -976,141 +983,9 @@ def load_meta(index_dir: str) -> dict:
     return meta
 
 
-def append_docs(
-    new_docs: DataFrame,
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> dict:
-    """Incremental append (reference change-detector analog I6, done the
-    Iceberg-snapshot way: new data claims FRESH id ranges → fresh build
-    partitions; existing shards are never touched; global stats are
-    re-aggregated from the postings and docmap at finalize).
-
-    New keys must not collide with existing ones (caller contract —
-    dedupe/upsert is a MERGE on the staged table upstream). New ids
-    start at the next part boundary so no existing part is rewritten.
-    """
-    spark = new_docs.sparkSession
-    load_meta(index_dir)
-    smeta = _staged_meta(index_dir)
-    part_docs = _part_docs(smeta)
-    start_part = (max(smeta["parts"]) + 1) if smeta["parts"] else 0
-    start_id = start_part * part_docs
-    gen = len(smeta["gens"])
-
-    keyed = new_docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    key_type = keyed.schema["doc_id"].dataType.simpleString()
-    if key_type != smeta["doc_id_type"]:
-        raise ValueError(
-            f"{index_dir} holds {smeta['doc_id_type']} doc ids, the "
-            f"appended docs have {key_type} keys — cast the key column"
-        )
-    n_new, new_parts, offsets = _stage_docs(
-        keyed, index_dir, part_docs,
-        spark.sparkContext.defaultParallelism, start_id, gen,
-    )
-    if n_new:
-        smeta["gens"].append(
-            {"gen": gen, "base": start_id, "n": int(n_new),
-             "offsets": {str(k): int(v) for k, v in offsets.items()}}
-        )
-    smeta["n_docs"] = smeta["n_docs"] + int(n_new)
-    smeta["parts"] = sorted(set(smeta["parts"]) | set(new_parts))
-    _write_json(f"{index_dir}/staged.json", smeta)
-    return _build_parts(spark, index_dir, new_parts)
-
-
-def sync_docs(
-    docs: DataFrame,
-    index_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    delete_missing: bool = True,
-    compact: bool = True,
-) -> dict:
-    """Automatic change detection + incremental sync — the reference's
-    change_detector.py:64-105 ("hash" strategy) as ONE operator:
-
-    diff incoming (doc_id, content-hash) against the docmap's stored
-    fp column (full-outer join, one shuffle, no text re-read) →
-    - NEW keys            → append
-    - MODIFIED (fp diff)  → tombstone the old doc_int + append anew
-    - DELETED (absent)    → tombstone (``delete_missing=False`` keeps
-      them — the "incoming is a partial feed" mode)
-
-    Only the CHANGED key set is collected (churn-bounded, not corpus-
-    bounded). ``compact=True`` (the default) rewrites the affected
-    parts so df/N/avgdl are exact after the sync; ``compact=False``
-    defers that (tombstoned docs vanish from results immediately but
-    stats stay stale per the delete_docs contract — on heavy churn a
-    term's stale df can exceed the post-append N, which the query path
-    rejects with an explicit "run compact_index" error rather than
-    serving broken scores). Returns
-    {"new": n, "modified": n, "deleted": n, "meta": meta}.
-    """
-    spark = docs.sparkSession
-    # a delete-only sync without compaction returns this entry meta
-    # unchanged, per the delete_docs contract: tombstoned docs vanish
-    # from results NOW, stats (N/avgdl/df) stay pre-delete until
-    # compact_index — a partial finalize here would shrink N under
-    # stale df (df > N breaks the ln-IDF domain) and desync every
-    # surviving score
-    meta = load_meta(index_dir)
-    incoming = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    from ..functions.text import collapse_whitespace
-
-    inc = incoming.select(
-        "doc_id", F.md5(collapse_whitespace(F.col("text"))).alias("fp_new")
-    )
-    docmap = spark.read.schema(docmap_read_schema(meta["doc_id_type"])) \
-        .parquet(f"{index_dir}/docmap")
-    tomb = load_tombstones(index_dir)
-    if tomb:
-        docmap = docmap.filter(~_in_ints("doc_int", tomb))
-    existing = docmap.select("doc_id", F.col("fp").alias("fp_old"))
-    diff = inc.join(existing, "doc_id", "full_outer").select(
-        "doc_id",
-        F.when(F.col("fp_old").isNull(), "new")
-        .when(F.col("fp_new").isNull(), "deleted")
-        .when(F.col("fp_new") != F.col("fp_old"), "modified")
-        .otherwise("unchanged")
-        .alias("change"),
-    )
-    changed = diff.filter(F.col("change") != "unchanged").collect()
-    new_keys = [r["doc_id"] for r in changed if r["change"] == "new"]
-    mod_keys = [r["doc_id"] for r in changed if r["change"] == "modified"]
-    del_keys = [r["doc_id"] for r in changed if r["change"] == "deleted"]
-    if not delete_missing:
-        del_keys = []
-
-    if mod_keys or del_keys:
-        delete_docs(spark, index_dir, mod_keys + del_keys)
-    if new_keys or mod_keys:
-        to_add = incoming.join(
-            spark.createDataFrame(
-                [(k,) for k in new_keys + mod_keys], "doc_id string"
-            ),
-            "doc_id",
-            "left_semi",
-        )
-        meta = append_docs(to_add, index_dir)
-    if compact:
-        meta = compact_index(spark, index_dir)
-    return {
-        "new": len(new_keys),
-        "modified": len(mod_keys),
-        "deleted": len(del_keys),
-        "meta": meta,
-    }
-
-
 # ---------------------------------------------------------------------------
-# Deletion (reference I4/I5 analog) — tombstones + compaction
+# Mutation (reference I4-I7 analog): append, delete, compaction and sync
+# all run ONE step, _mutate
 # ---------------------------------------------------------------------------
 
 def load_tombstones(index_dir: str) -> set[int]:
@@ -1122,95 +997,222 @@ def load_tombstones(index_dir: str) -> set[int]:
         return set()
 
 
-def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
-    """Mark docs deleted (by original key). Scorers mask tombstoned ids
-    at decode; ``finalize_index`` recomputes N/avgdl without them; df
-    stays stale until ``compact_index`` rewrites the affected parts
-    (the reference rewrites posting lists eagerly —
-    inverted_index_builder.py:70-92 — which at 10^12 docs is exactly
-    what we must NOT do per deletion)."""
-    meta = load_meta(index_dir)
-    docmap = spark.read.schema(docmap_read_schema(meta["doc_id_type"])) \
-        .parquet(f"{index_dir}/docmap")
-    ints = [
-        r["doc_int"]
-        for r in docmap.filter(F.col("doc_id").isin(doc_keys)).collect()
-    ]
-    tomb = load_tombstones(index_dir) | set(int(x) for x in ints)
-    _write_json(f"{index_dir}/tombstones/doc_ints.json", sorted(tomb))
-    # Stats (N/avgdl/df) intentionally stay pre-delete until compaction:
-    # tombstoned docs vanish from results immediately; surviving docs'
-    # scores are unchanged until compact_index() recomputes everything.
-    return meta
+def _key_frame(spark: SparkSession, keys: list, doc_id_type: str) -> DataFrame:
+    """(doc_id) frame of driver-side keys in the index's key type, built
+    through Arrow: a LocalRelation for a broadcast semi-join (Python
+    rows are an RDD scan; ``Column.isin`` is one py4j call per key)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+
+    typ = StructType.fromDDL(f"doc_id {doc_id_type}")["doc_id"].dataType
+    return spark.createDataFrame(
+        pa.table({"doc_id": pa.array(keys, to_arrow_type(typ))}))
 
 
-def compact_index(spark: SparkSession, index_dir: str) -> dict:
-    """Rewrite the staged slices containing tombstoned docs: survivors
-    keep their (pid, rn) — and therefore their doc_int — untouched;
-    postings/docmap for the affected parts are rebuilt, the index
-    re-finalized (vocabulary re-aggregated), tombstones cleared LAST.
-    Equivalent to the reference's remove_from_index + stats removal
-    (I4/I5), done partition-locally.
-
-    Crash-safe and idempotent: the tombstone file survives until the
-    final step, so a crash anywhere mid-compact leaves every search
-    still masking the deleted docs (the staged rewrite preserves
-    survivor (pid, rn) — re-running compact re-applies a no-op filter,
-    rebuilds the affected parts, and only then clears the mask). The
-    two-step slice swap's crash window (rmtree done, rename not) is
-    rolled FORWARD on entry: all replacement slices are fully written
-    before any swap starts, so an orphaned ``staged_tmp`` slice with
-    no live sibling is always complete."""
+def _drop_staged(spark: SparkSession, index_dir: str, smeta: dict,
+                 tomb: set[int]) -> None:
+    """Rewrite the staged slices holding tombstoned ids without them;
+    survivors keep their (pid, rn), so their doc_int. Every replacement
+    is written to staged_tmp before any swap starts, so a slice
+    orphaned between a swap's rmtree(live) and rename(tmp, live) is
+    complete and rolls FORWARD on the next entry."""
     import bisect
     import shutil
-
-    tomb = load_tombstones(index_dir)
-    meta = load_meta(index_dir)
-    if not tomb:
-        return meta
-    smeta = _staged_meta(index_dir)
-    part_docs = _part_docs(smeta)
-    affected = sorted({int(d) // part_docs for d in tomb})
 
     # map each tombstoned doc_int to its (gen, pid, rn)
     removals: dict[tuple[int, int], list[int]] = {}
     for g in smeta["gens"]:
         offs = sorted((int(v), int(k)) for k, v in g["offsets"].items())
-        if not offs:
-            continue
         starts = [v for v, _ in offs]
-        for d in sorted(int(x) for x in tomb):
+        for d in sorted(tomb):
             if g["base"] <= d < g["base"] + g["n"]:
-                i = bisect.bisect_right(starts, d) - 1
-                off, pid = offs[i]
+                off, pid = offs[bisect.bisect_right(starts, d) - 1]
                 removals.setdefault((int(g["gen"]), pid), []).append(d - off)
-
-    # entry recovery: a prior compact that crashed between
-    # rmtree(live) and rename(tmp, live) left the slice orphaned in
-    # staged_tmp — roll it forward (it is complete by construction:
-    # every tmp is written before any swap begins)
-    for (gen, pid) in removals:
-        src = f"{index_dir}/staged/gen={gen}/pid={pid}"
-        tmp = f"{index_dir}/staged_tmp/gen={gen}/pid={pid}"
+    paths = {k: (f"{index_dir}/staged/gen={k[0]}/pid={k[1]}",
+                 f"{index_dir}/staged_tmp/gen={k[0]}/pid={k[1]}")
+             for k in removals}
+    for src, tmp in paths.values():
         if not os.path.isdir(src) and os.path.isdir(tmp):
             os.rename(tmp, src)
-
-    for (gen, pid), rns in removals.items():
-        src = f"{index_dir}/staged/gen={gen}/pid={pid}"
-        tmp = f"{index_dir}/staged_tmp/gen={gen}/pid={pid}"
-        spark.read.parquet(src).filter(~_in_ints("rn", rns)) \
-            .write.mode("overwrite").parquet(tmp)
-    for (gen, pid) in removals:
-        src = f"{index_dir}/staged/gen={gen}/pid={pid}"
+    for k, rns in removals.items():
+        spark.read.parquet(paths[k][0]).filter(~_in_ints("rn", rns)) \
+            .write.mode("overwrite").parquet(paths[k][1])
+    for src, tmp in paths.values():
         shutil.rmtree(src, ignore_errors=True)
-        os.rename(f"{index_dir}/staged_tmp/gen={gen}/pid={pid}", src)
+        os.rename(tmp, src)
     shutil.rmtree(f"{index_dir}/staged_tmp", ignore_errors=True)
-    for p in affected:
-        _write_manifest(index_dir, p, {"bpart": p, "status": "stale"})
-    out = _build_parts(spark, index_dir, affected)
-    # clear the mask ONLY after the rebuilt parts are live and
-    # finalized — the rebuilt docmap no longer contains these ids, so
-    # finalize's tombstone filter above was a no-op, and a crash
-    # before this line merely masks ids that no longer exist
-    os.remove(f"{index_dir}/tombstones/doc_ints.json")
+
+
+def _mutate(spark: SparkSession, index_dir: str, meta: dict,
+            tomb: Iterable[int] = (), docs: DataFrame | None = None,
+            compact: bool = False) -> dict:
+    """The ONE step that changes an index after its build (``meta`` is
+    the caller's load_meta). In order: (1) tombstone the doc_ints
+    ``tomb`` — searches mask them from here on; (2) stage ``docs``
+    (doc_id, text) as a new generation at the next part boundary;
+    (3) with ``compact``, drop every tombstoned id from the staged
+    slices and mark their parts stale; (4) ONE part loop over the stale
+    and new parts, which build concurrently, and ONE finalize; (5) with
+    ``compact``, clear the tombstones LAST, so a crash anywhere before
+    leaves every deleted doc masked.
+
+    A crash between (2) and (4) leaves the new generation unbuilt; its
+    keys are absent from the docmap, so the caller's next diff (sync)
+    or anti-join (streaming ingest) stages them again as a newer
+    generation, and nothing builds the abandoned one. With nothing to
+    build the entry ``meta`` is returned: a delete without compaction
+    keeps N/avgdl/df pre-delete (a finalize would shrink N under stale
+    df, and df > N breaks the ln-IDF domain)."""
+    smeta = _staged_meta(index_dir)
+    if docs is not None:
+        key_type = docs.schema["doc_id"].dataType.simpleString()
+        if key_type != smeta["doc_id_type"]:
+            raise ValueError(
+                f"{index_dir} holds {smeta['doc_id_type']} doc ids, the "
+                f"appended docs have {key_type} keys — cast the key column"
+            )
+    tombs = load_tombstones(index_dir)
+    if not tombs >= set(tomb):
+        tombs |= set(tomb)
+        _write_json(f"{index_dir}/tombstones/doc_ints.json", sorted(tombs))
+    part_docs = _part_docs(smeta)
+    build: set[int] = set()
+    if docs is not None:
+        gen = len(smeta["gens"])
+        base = (max(smeta["parts"], default=-1) + 1) * part_docs
+        g, new_parts = _stage_docs(
+            docs, index_dir, part_docs,
+            spark.sparkContext.defaultParallelism, base, gen,
+        )
+        if g["n"]:
+            smeta["gens"].append(g)
+            smeta["n_docs"] += g["n"]
+            smeta["parts"] = sorted(set(smeta["parts"]) | set(new_parts))
+            _write_json(f"{index_dir}/staged.json", smeta)
+            build.update(new_parts)
+    compact = compact and bool(tombs)
+    if compact:
+        _drop_staged(spark, index_dir, smeta, tombs)
+        stale = {d // part_docs for d in tombs}
+        for p in sorted(stale):
+            _write_manifest(index_dir, p, {"bpart": p, "status": "stale"})
+        build |= stale
+    if not build:
+        return meta
+    out = _build_parts(spark, index_dir, sorted(build))
+    if compact:
+        # the rebuilt docmap no longer holds these ids: a crash before
+        # this line merely masks ids that no longer exist
+        os.remove(f"{index_dir}/tombstones/doc_ints.json")
     return out
+
+
+def append_docs(
+    new_docs: DataFrame,
+    index_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> dict:
+    """Incremental append (reference change-detector analog I6, done the
+    Iceberg-snapshot way): _mutate stages the docs with FRESH id ranges
+    from the next part boundary → fresh build partitions, builds them
+    and re-finalizes; existing shards are never touched, and tombstones
+    stay until compaction. New keys must not collide with existing ones
+    (caller contract — updates go through ``sync_docs``)."""
+    keyed = new_docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    )
+    return _mutate(new_docs.sparkSession, index_dir, load_meta(index_dir),
+                   docs=keyed)
+
+
+def sync_docs(
+    docs: DataFrame,
+    index_dir: str,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    delete_missing: bool = True,
+    compact: bool = True,
+) -> dict:
+    """Automatic change detection + incremental sync — the reference's
+    change_detector.py:64-105 ("hash" strategy) as ONE pass: a diff of
+    incoming (doc_id, content-hash) against the live docmap's (doc_id,
+    doc_int, fp) — full-outer join, one shuffle, no text re-read, only
+    the CHANGED rows collected, each with its old doc_int — then ONE
+    _mutate step (one part loop, one finalize):
+    - NEW keys            → staged
+    - MODIFIED (fp diff)  → old doc_int tombstoned, new text staged
+    - DELETED (absent)    → tombstoned (``delete_missing=False`` keeps
+      them — the "incoming is a partial feed" mode)
+    The rows to stage come from ``docs`` by a semi-join against an
+    Arrow-built key frame. ``compact=True`` (the default) also rewrites
+    the parts holding tombstoned docs, so df/N/avgdl are exact;
+    ``compact=False`` defers that per the delete_docs contract (a
+    delete-only sync returns the entry meta; on heavy churn a stale df
+    can exceed N, which the query path rejects with a "run
+    compact_index" error). Returns
+    {"new": n, "modified": n, "deleted": n, "meta": meta}."""
+    spark = docs.sparkSession
+    meta = load_meta(index_dir)
+    incoming = docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    )
+    from ..functions.text import collapse_whitespace
+
+    inc = incoming.select(
+        "doc_id", F.md5(collapse_whitespace(F.col("text"))).alias("fp_new")
+    )
+    docmap = read_docmap(spark, index_dir)
+    tomb = load_tombstones(index_dir)
+    if tomb:
+        docmap = docmap.filter(~_in_ints("doc_int", tomb))
+    existing = docmap.select("doc_id", "doc_int", F.col("fp").alias("fp_old"))
+    change = (
+        F.when(F.col("fp_old").isNull(), "new")
+        .when(F.col("fp_new").isNull(), "deleted")
+        .when(F.col("fp_new") != F.col("fp_old"), "modified")
+    )
+    rows: dict[str, list] = {"new": [], "modified": [], "deleted": []}
+    for r in (inc.join(existing, "doc_id", "full_outer")
+              .select("doc_id", "doc_int", change.alias("change"))
+              .filter(F.col("change").isNotNull()).collect()):
+        rows[r["change"]].append(r)
+    if not delete_missing:
+        rows["deleted"] = []
+    add = [r["doc_id"] for r in rows["new"] + rows["modified"]]
+    meta = _mutate(
+        spark, index_dir, meta,
+        tomb={int(r["doc_int"]) for r in rows["modified"] + rows["deleted"]},
+        docs=incoming.join(_key_frame(spark, add, meta["doc_id_type"]),
+                           "doc_id", "left_semi") if add else None,
+        compact=compact,
+    )
+    return {**{k: len(v) for k, v in rows.items()}, "meta": meta}
+
+
+def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
+    """Mark docs deleted (by original key, resolved by a semi-join
+    against an Arrow-built key frame): _mutate tombstones them, scorers
+    mask them at decode, and the entry meta is returned — stats stay
+    pre-delete until a finalize recomputes N/avgdl and
+    ``compact_index`` the df (the reference rewrites posting lists
+    eagerly — inverted_index_builder.py:70-92 — which at 10^12 docs is
+    exactly what we must NOT do per deletion)."""
+    meta = load_meta(index_dir)
+    keys = _key_frame(spark, list(doc_keys), meta["doc_id_type"])
+    ints = {int(r["doc_int"]) for r in read_docmap(spark, index_dir)
+            .join(keys, "doc_id", "left_semi").select("doc_int").collect()}
+    return _mutate(spark, index_dir, meta, tomb=ints)
+
+
+def compact_index(spark: SparkSession, index_dir: str) -> dict:
+    """Drop the tombstoned docs for good (the reference's
+    remove_from_index + stats removal, I4/I5, done partition-locally):
+    _mutate rewrites their staged slices, rebuilds the affected parts,
+    re-finalizes and clears the tombstones LAST. Crash-safe and
+    idempotent: a crash anywhere mid-compact leaves the deleted docs
+    masked, and re-running rolls an orphaned ``staged_tmp`` slice
+    forward, re-applies a no-op filter, rebuilds and only then clears
+    the mask."""
+    return _mutate(spark, index_dir, load_meta(index_dir), compact=True)

@@ -150,7 +150,7 @@ def _near_dedup_handler(base, index_dir: str, minhash_dir: str,
     from ..operators.dedup import (
         minhash_index_append_pairs, minhash_index_build,
     )
-    from ..operators.postings import delete_docs, load_tombstones
+    from ..operators.postings import delete_docs, load_tombstones, read_docmap
     from .ingest import _done_batches
 
     def handler(batch_df, batch_id: int) -> None:
@@ -194,7 +194,7 @@ def _near_dedup_handler(base, index_dir: str, minhash_dir: str,
                 # driver-plan bloat either way)
                 if os.path.isdir(f"{index_dir}/docmap"):
                     tomb = {int(t) for t in load_tombstones(index_dir)}
-                    dm = spark.read.parquet(f"{index_dir}/docmap")
+                    dm = read_docmap(spark, index_dir)
                     dm = (dm.filter(F.col("doc_id").isin(drop_ids))
                           if small
                           else dm.join(drops, "doc_id", "left_semi"))

@@ -77,7 +77,7 @@ def handle_batch_factory(index_dir: str):
     from pyspark.sql import functions as F
 
     from ..operators.postings import (_in_ints, append_docs, build_index,
-                                      load_tombstones)
+                                      load_tombstones, read_docmap)
 
     def handle_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -101,9 +101,7 @@ def handle_batch_factory(index_dir: str):
             _mark_batch_done(index_dir, batch_id)
             return
         if os.path.isdir(f"{index_dir}/docmap"):
-            docmap = batch_df.sparkSession.read.parquet(
-                f"{index_dir}/docmap"
-            )
+            docmap = read_docmap(batch_df.sparkSession, index_dir)
             tomb = load_tombstones(index_dir)
             if tomb and len(tomb) <= TOMBSTONE_ISIN_MAX:
                 docmap = docmap.filter(~_in_ints("doc_int", tomb))

@@ -281,6 +281,44 @@ def test_oneshot_search_job_count(spark, index_dir, monkeypatch):
     assert len(jobs) == 4, f"scattered search ran {len(jobs)} jobs: {jobs}"
 
 
+def test_sync_job_count(spark, corpus, index_dir, tmp_path):
+    """A sync with new, modified and deleted docs and compaction is ONE
+    mutation step: the diff collect, the staging of the new rows, one
+    part loop over the rebuilt and the new part, and one finalize —
+    52 Spark jobs on this corpus. When a sync chained
+    delete_docs → append_docs → compact_index (a docmap re-scan, a
+    Python-row key frame, two part loops and two finalizes) the same
+    sync ran 62 jobs."""
+    import gc
+    import shutil
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    rows = sorted((r["doc_id"], r["text"]) for r in corpus.collect())
+    feed = [(k, t + " revised spark text" if i % 41 == 3 else t)
+            for i, (k, t) in enumerate(rows) if i % 53 != 7]
+    feed += [(f"new#{i}", f"fresh spark index doc {i}") for i in range(5)]
+    feed_df = spark.createDataFrame(feed, "doc_id string, text string")
+    sc = spark.sparkContext
+    d = str(tmp_path / "sync_jobs")
+    shutil.copytree(index_dir, d)
+    # keep cyclic GC out of the pinned window (see the one-shot pin)
+    gc.collect()
+    gc.disable()
+    sc.setJobGroup("sync_pin", "sync")
+    try:
+        out = sync_docs(feed_df, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        gc.enable()
+    n_mod = sum(1 for i in range(len(rows)) if i % 41 == 3 and i % 53 != 7)
+    n_del = sum(1 for i in range(len(rows)) if i % 53 == 7)
+    assert (out["new"], out["modified"], out["deleted"]) == (5, n_mod, n_del)
+    assert out["meta"]["n_docs"] == len(feed)
+    jobs = sc.statusTracker().getJobIdsForGroup("sync_pin")
+    assert len(jobs) == 52, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
+
+
 def test_index_reader_matches_oneshot(spark, index_dir):
     from oboyu_spark.operators.searchidx import IndexReader
 

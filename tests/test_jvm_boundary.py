@@ -46,15 +46,20 @@ def _docs(spark, key_type: str, n: int = 60, start: int = 0):
     return spark.createDataFrame(rows, f"doc_id {key_type}, text string")
 
 
-@pytest.fixture(scope="module")
-def tomb_index(spark, tmp_path_factory):
-    """Multi-part transcript index with tombstoned docs; two rare-term
-    docs make the last two QUERIES selective."""
+def _tomb_corpus(spark):
+    """Transcript docs plus two rare-term docs that make the last two
+    QUERIES selective."""
     tr = synthesize_transcripts(spark, n_convs=60, max_turns=8, seed=7)
-    corpus = turns_as_docs(tr).select("doc_id", "text").unionByName(
+    return turns_as_docs(tr).select("doc_id", "text").unionByName(
         spark.createDataFrame([("rare0", "zselzero spark index"),
                                ("rare1", "zselone search")],
                               "doc_id string, text string"))
+
+
+@pytest.fixture(scope="module")
+def tomb_index(spark, tmp_path_factory):
+    """Multi-part index of _tomb_corpus with tombstoned docs."""
+    corpus = _tomb_corpus(spark)
     d = str(tmp_path_factory.mktemp("tomb_idx"))
     meta = build_index(corpus, d, shard_size=60, shards_per_part=2,
                        salt_chunk=40)
@@ -79,13 +84,21 @@ def _stats(meta: dict) -> tuple:
 def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
                                      monkeypatch):
     """With Column.isin raising, the one-shot batch search, the warm
-    reader, finalize_index and compact_index all run and return exactly
-    what they return with it."""
+    reader, finalize_index, compact_index, delete_docs and sync_docs
+    (with and without compaction) all run and return exactly what they
+    return with it."""
+    from oboyu_spark.operators.postings import sync_docs
+
     # route the selective queries of the batch to BMW: a mixed batch
     monkeypatch.setattr(SI, "AUTO_BMW_MIN_SHARD", 0)
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     shutil.copytree(tomb_index, a)
     shutil.copytree(tomb_index, b)
+    some = sorted(tuple(r) for r in _tomb_corpus(spark).collect())[1::17]
+    feed = [(k, t + " revised" if i % 5 == 0 else t)
+            for i, (k, t) in enumerate(some) if i % 7 != 3]
+    feed += [(f"new{i}", "spark index search fresh") for i in range(3)]
+    feed_df = spark.createDataFrame(feed, "doc_id string, text string")
 
     def run(d):
         batch = [tuple(r) for r in
@@ -99,12 +112,17 @@ def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
             reader.close()
         fin = _stats(finalize_index(spark, d))
         comp = _stats(compact_index(spark, d))
+        dele = _stats(delete_docs(spark, d, [k for k, _ in some[::9]]))
+        syncs = [(o["new"], o["modified"], o["deleted"], _stats(o["meta"]))
+                 for o in (sync_docs(feed_df, d, compact=c)
+                           for c in (False, True))]
         after = [tuple(r) for r in
                  SI.search_index(spark, d, QUERIES, k=5).collect()]
-        return batch, scorer, served, fin, comp, after
+        return batch, scorer, served, fin, comp, dele, syncs, after
 
     want = run(a)
     assert want[1] == "mixed" and want[0]
+    assert all(want[6][0][:3]), "the first sync adds, modifies and deletes"
     _refuse_isin(monkeypatch)
     assert run(b) == want
 

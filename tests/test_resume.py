@@ -449,14 +449,15 @@ def test_append_tiebreak_on_original_key(spark, tmp_path):
         assert got == ["a0", "a1", "a2", "a3", "b0"], (scorer, got)
 
 
-def test_sync_docs_change_detection(spark, tmp_path):
+def test_sync_docs_change_detection(spark, tmp_path, monkeypatch):
     """sync_docs = the reference change-detector in one call: hash-diff
     against the docmap fp column → new/modified/deleted classified,
-    tombstone + append + compact — final scores equal a fresh build
-    over the updated corpus (so a modified doc's score CHANGES and N
-    stays exact)."""
+    tombstone + append + compact in ONE mutation step (one part loop,
+    one finalize) — final scores equal a fresh build over the updated
+    corpus (so a modified doc's score CHANGES and N stays exact)."""
     from pyspark.sql import functions as F
 
+    from oboyu_spark.operators import postings as P
     from oboyu_spark.operators.postings import sync_docs
 
     docs = _corpus(spark, n_convs=30)
@@ -474,8 +475,16 @@ def test_sync_docs_change_detection(spark, tmp_path):
     ] + [("brand#new1", "completely new spark index document")]
     incoming = spark.createDataFrame(updated, "doc_id string, text string")
 
+    calls = {"_build_parts": 0, "finalize_index": 0}
+    for name in calls:
+        def spy(*a, _name=name, _real=getattr(P, name), **kw):
+            calls[_name] += 1
+            return _real(*a, **kw)
+
+        monkeypatch.setattr(P, name, spy)
     out = sync_docs(incoming, d, compact=True)
     assert out["new"] == 1 and out["modified"] == 2 and out["deleted"] == 1
+    assert calls == {"_build_parts": 1, "finalize_index": 1}
     assert out["meta"]["n_docs"] == len(updated)
 
     oracle = PyBM25()
@@ -491,6 +500,7 @@ def test_sync_docs_change_detection(spark, tmp_path):
     out2 = sync_docs(incoming, d)
     assert (out2["new"], out2["modified"], out2["deleted"]) == (0, 0, 0)
     assert out2["meta"]["n_docs"] == len(updated)
+    assert calls == {"_build_parts": 1, "finalize_index": 1}
 
 
 def test_stop_words_survive_append_sync_and_compact(spark, tmp_path):
@@ -671,3 +681,218 @@ def test_failing_part_build_fails_fast(spark, tmp_path, monkeypatch):
             break
         time.sleep(0.2)
     assert not running, f"part jobs still running: {running}"
+
+
+# ---------------------------------------------------------------------------
+# sync_docs as one mutation step: crash windows, faults, chain identity
+# ---------------------------------------------------------------------------
+
+def _sync_case(spark, tmp_path):
+    """A built index, a sync feed over it (two top-ranked docs modified,
+    one deleted, one new doc), the changed keys, and what an uncrashed
+    sync leaves on a clone: (search results, (n_docs, avgdl))."""
+    import shutil
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    docs = _corpus(spark, n_convs=30)
+    d = str(tmp_path / "idx")
+    build_index(docs, d, **KW)
+    top = sorted({x[0] for res in _results(spark, d, k=20).values()
+                  for x in res[:3]})
+    mod, gone = set(top[:2]), {top[2]}
+    feed = [(r["doc_id"],
+             r["text"] + " updated revision text" if r["doc_id"] in mod
+             else r["text"])
+            for r in docs.collect() if r["doc_id"] not in gone]
+    feed.append(("brand#new1", "completely new spark index document"))
+    incoming = spark.createDataFrame(feed, "doc_id string, text string")
+    clone = str(tmp_path / "clone")
+    shutil.copytree(d, clone)
+    sync_docs(incoming, clone)
+    meta = load_meta(clone)
+    return d, incoming, mod | gone, (_results(spark, clone, k=12),
+                                     (meta["n_docs"], meta["avgdl"]))
+
+
+def _converged(spark, d, want) -> None:
+    """``d`` serves what ``want`` holds, holds no key twice and no
+    tombstones."""
+    meta = load_meta(d)
+    assert (_results(spark, d, k=12), (meta["n_docs"], meta["avgdl"])) == want
+    dm = spark.read.parquet(f"{d}/docmap")
+    assert dm.count() == dm.select("doc_id").distinct().count()
+    assert not os.path.exists(f"{d}/tombstones/doc_ints.json")
+
+
+def _masked(spark, d, keys) -> bool:
+    return not {x[0] for res in _results(spark, d, k=50).values()
+                for x in res} & keys
+
+
+def _running_tagged_jobs(sc, tags, wait_s: float = 30) -> list:
+    """Ids of the jobs carrying one of ``tags`` still RUNNING after up
+    to ``wait_s`` seconds."""
+    jtracker = sc._jsc.sc().statusTracker()
+    tracker = sc.statusTracker()
+    deadline = time.time() + wait_s
+    while True:
+        running = [j for t in tags for j in jtracker.getJobIdsForTag(t)
+                   if (info := tracker.getJobInfo(j)) is not None
+                   and info.status == "RUNNING"]
+        if not running or time.time() > deadline:
+            return running
+        time.sleep(0.2)
+
+
+def test_sync_crash_before_part_loop_converges(spark, tmp_path, monkeypatch):
+    """A sync that crashes after its staged writes (tombstones, the new
+    generation, the rewritten slices) but before the part loop keeps
+    the deleted and modified docs masked. The re-run's diff runs
+    against a docmap that lacks the staged docs, so it stages them
+    again as a newer generation and the unbuilt one is never built: no
+    key lands in the docmap twice, and searches and stats equal an
+    uncrashed sync's."""
+    from oboyu_spark.operators import postings as P
+    from oboyu_spark.operators.postings import sync_docs
+
+    d, incoming, changed, want = _sync_case(spark, tmp_path)
+    assert not _masked(spark, d, changed)
+
+    def boom(*a, **k):
+        raise RuntimeError("injected sync crash")
+
+    with monkeypatch.context() as m:
+        m.setattr(P, "_build_parts", boom)
+        with pytest.raises(RuntimeError, match="injected sync crash"):
+            sync_docs(incoming, d)
+    with open(f"{d}/staged.json") as fh:
+        assert len(json.load(fh)["gens"]) == 2, "the new rows were staged"
+    assert os.path.exists(f"{d}/tombstones/doc_ints.json")
+    assert _masked(spark, d, changed), "changed docs must stay masked"
+
+    out = sync_docs(incoming, d)
+    assert (out["new"], out["modified"], out["deleted"]) == (3, 0, 0)
+    _converged(spark, d, want)
+
+
+def test_sync_docmap_write_failure_fails_fast(spark, tmp_path, monkeypatch):
+    """Fault: the part docmap writes of a sync fail. The sync raises in
+    bounded time, writes no done manifest for the failed parts (the new
+    part leaves no postings behind), leaves none of their jobs running
+    and keeps the changed docs masked; re-running the sync converges to
+    an uncrashed sync's searches and stats."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    d, incoming, changed, want = _sync_case(spark, tmp_path)
+    before = {m["bpart"] for m in _manifests(d)}
+    sc = spark.sparkContext
+    part_tags: list = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        if "/docmap/bpart=" in path:
+            part_tags.extend(sc.getJobTags())
+            raise RuntimeError("injected docmap failure")
+        return real_parquet(self, path, *a, **kw)
+
+    t0 = time.time()
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="injected docmap failure"):
+            sync_docs(incoming, d)
+    assert time.time() - t0 < 120
+    rows = {m["bpart"]: m for m in _manifests(d)}
+    assert set(rows) == before, "no manifest for the new part"
+    stale = [p for p, m in rows.items() if m["status"] == "stale"]
+    with open(f"{d}/staged.json") as fh:
+        new = set(json.load(fh)["parts"]) - before
+    assert stale and new
+    assert not any(os.path.exists(f"{d}/postings/bpart={p}") for p in new)
+    # one failed docmap write per rebuilt or new part, none still running
+    tags = [t for t in part_tags if t.startswith("oboyu-part-")]
+    assert len(set(tags)) == len(stale) + len(new), part_tags
+    assert not _running_tagged_jobs(sc, tags)
+    assert _masked(spark, d, changed)
+
+    sync_docs(incoming, d)
+    _converged(spark, d, want)
+
+
+def test_sync_vocabulary_write_failure_keeps_meta(spark, tmp_path,
+                                                  monkeypatch):
+    """Fault: finalize's vocabulary write fails during a sync. The sync
+    raises, stats/meta.json stays byte-identical and the tombstones
+    stay; re-running the sync converges to an uncrashed sync's
+    searches and stats."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    d, incoming, changed, want = _sync_case(spark, tmp_path)
+    with open(f"{d}/stats/meta.json", "rb") as fh:
+        meta_bytes = fh.read()
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        if path.rstrip("/").endswith("/vocabulary"):
+            raise RuntimeError("injected vocabulary failure")
+        return real_parquet(self, path, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="injected vocabulary failure"):
+            sync_docs(incoming, d)
+    with open(f"{d}/stats/meta.json", "rb") as fh:
+        assert fh.read() == meta_bytes
+    assert os.path.exists(f"{d}/tombstones/doc_ints.json")
+    assert _masked(spark, d, changed)
+
+    sync_docs(incoming, d)
+    _converged(spark, d, want)
+
+
+@pytest.mark.parametrize("key_type", ["string", "bigint"])
+def test_sync_equals_delete_append_compact(spark, tmp_path, key_type):
+    """One sync step leaves the index that delete_docs → append_docs →
+    compact_index leave on a clone: the same docmap (doc_id, doc_int,
+    dl, fp, bpart), postings rows and vocabulary, for string and
+    bigint keys."""
+    import shutil
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+
+    def key(i: int):
+        return f"k{i:03d}" if key_type == "string" else i
+
+    def frame(rows):
+        return spark.createDataFrame(rows, f"doc_id {key_type}, text string")
+
+    base = [(key(i), " ".join(words[(i * j) % 6] for j in range(1, 2 + i % 5)))
+            for i in range(90)]
+    d, clone = str(tmp_path / "sync"), str(tmp_path / "chain")
+    build_index(frame(base), d, shard_size=20, salt_chunk=15,
+                shards_per_part=2, id_assign_partitions=4)
+    shutil.copytree(d, clone)
+    mod, gone = {key(3), key(47)}, {key(10), key(88)}
+    new = [(key(i), f"fresh alpha doc {i}") for i in range(100, 106)]
+    feed = [(k, t + " zeta revised" if k in mod else t)
+            for k, t in base if k not in gone] + new
+    out = sync_docs(frame(feed), d)
+    assert (out["new"], out["modified"], out["deleted"]) == (6, 2, 2)
+
+    delete_docs(spark, clone, sorted(mod | gone))
+    append_docs(frame([r for r in feed if r[0] in mod] + new), clone)
+    compact_index(spark, clone)
+
+    def rows(x: str, name: str) -> list:
+        return sorted(repr(tuple(r)) for r in
+                      spark.read.parquet(f"{x}/{name}").collect())
+
+    assert load_meta(d)["n_docs"] == len(feed)
+    for name in ("docmap", "postings", "vocabulary"):
+        assert rows(d, name) == rows(clone, name), name
