@@ -927,7 +927,8 @@ def build_index(
     id_assign_partitions: int | None = None,
 ) -> dict:
     """Checkpoint-resumable index build. Re-running after a crash skips
-    bparts whose manifest rows are ``done``."""
+    bparts whose manifest rows are ``done``; it builds generation 0's
+    parts only (later generations belong to append and sync steps)."""
     if not 0 < shard_size < 2**31:
         raise ValueError(
             f"shard_size={shard_size} must be in [1, 2**31): the postings "
@@ -959,7 +960,11 @@ def build_index(
                 "settings or delete the directory to rebuild"
             )
 
-    meta = _build_parts(docs.sparkSession, index_dir, smeta["parts"])
+    # generation 0 only: a later one is an append's or one a crashed
+    # sync abandoned, whose keys a newer generation holds again
+    part_docs = _part_docs(smeta)
+    meta = _build_parts(docs.sparkSession, index_dir, [
+        p for p in smeta["parts"] if p * part_docs < smeta["gens"][0]["n"]])
     # phase decomposition for the bench report: staging (the single
     # corpus materialization + id freeze), then the part builds and
     # finalize
@@ -1100,6 +1105,10 @@ def _mutate(spark: SparkSession, index_dir: str, meta: dict,
         build |= stale
     if not build:
         return meta
+    # parts a crashed compaction marked stale (slices rewritten, no
+    # postings) build too, or finalize's integrity gate refuses
+    build |= {p for p in smeta["parts"]
+              if (_read_manifest(index_dir, p) or {}).get("status") == "stale"}
     out = _build_parts(spark, index_dir, sorted(build))
     if compact:
         # the rebuilt docmap no longer holds these ids: a crash before

@@ -8,20 +8,19 @@ Plan shape per batch of queries:
    idf per term driver-side (tiny), broadcast.
 2. score: read postings parquet filtered to query terms (row-group
    pruning via term min/max — rows are sorted by term within each
-   shard) and score each shard with a vectorized closure:
-   dense-accumulator term-at-a-time (TAAT) scoring — shard-local doc
-   ids are contiguous (range sharding), so the accumulator is a flat
-   float64 array and each posting costs one vectorized add. Each shard
-   emits its local top-k with the global tie-break. The closure runs
-   at one of two sites, chosen by the driver budget
-   DRIVER_CUT_MAX_ROWS: when Σdf over the live terms and the
-   candidate count (step 3) both fit it, the filtered postings are
-   collected through Arrow (a JVM-only job) and scored on the driver,
-   shard group by shard group; otherwise the closure is the scatter's
+   shard) with the dense-accumulator term-at-a-time (TAAT) kernel
+   ``_score_dense`` — shard-local doc ids are contiguous (range
+   sharding), so the accumulator is a flat float64 array and each
+   posting costs one vectorized add; each shard emits its local top-k
+   with the global tie-break. When Σdf over the live terms and the
+   candidate count (step 3) both fit DRIVER_CUT_MAX_ROWS, the postings
+   are collected through Arrow (a JVM-only job), decoded from the
+   Arrow columns to per-shard numpy arrays and scored on the driver,
+   with no pandas; otherwise a scorer closure (TAAT, block-max WAND or
+   an "auto" per-query mix) is the scatter's
    ``groupBy("shard").applyInPandas`` UDF. A warm ``IndexReader``
-   keeps each term's collected rows in its driver term cache, so it
-   collects only the terms it has not seen, and a search whose terms
-   are all cached runs no postings job.
+   keeps each term's decoded arrays in its driver term cache, so a
+   search whose terms are all cached runs no postings job.
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
    rows, boundary score-ties kept — on the driver while the candidate
    count fits the same budget, else a Spark rank window), hydrate
@@ -44,6 +43,7 @@ from typing import Callable, Sequence
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -91,8 +91,9 @@ _SCAN_INFO = threading.local()
 
 def last_scan_info() -> dict:
     """This thread's record of its last search: ``live_parts`` (the
-    bparts the postings scan was limited to, None = no pruning) and,
-    for scorer="auto", ``auto_scorer`` / ``auto_bmw_queries``."""
+    bparts the postings scan was limited to, None = no pruning), ``site``
+    ("driver" or "scatter") and, for a scattered scorer="auto",
+    ``auto_scorer`` / ``auto_bmw_queries``."""
     return getattr(_SCAN_INFO, "record", {})
 
 
@@ -175,6 +176,97 @@ def _decode_rows(pdf: pd.DataFrame, base: int, k1: float, b: float,
     return decoded
 
 
+def _decode_arrow(tbl: pa.Table, k1: float, b: float, avgdl: float):
+    """(th1, th2) -> {shard: (local ids int32, wtf float64)} of collected
+    posting rows, from the flat Arrow lists: one cumsum restarted at
+    each row, salt rows joined in salt order, no tombstone masking."""
+    decoded: dict[tuple[int, int], dict[int, tuple]] = {}
+    lens = pc.list_value_length(tbl.column("gaps")).to_numpy()
+    c = np.cumsum(pc.list_flatten(tbl.column("gaps")).to_numpy(),
+                  dtype=np.int64)
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    ids = (c - np.repeat(np.concatenate(([0], c))[starts], lens)).astype(
+        np.int32)
+    wtf = _wtf(pc.list_flatten(tbl.column("tfs")).to_numpy(),
+               pc.list_flatten(tbl.column("dls")).to_numpy(), k1, b, avgdl)
+    key = [tbl.column(n).to_numpy() for n in ("salt", "shard", "th2", "th1")]
+    rows: dict[tuple[int, int, int], list[int]] = {}
+    for i in np.lexsort(key).tolist():
+        rows.setdefault((int(key[3][i]), int(key[2][i]), int(key[1][i])),
+                        []).append(i)
+    for (th1, th2, shard), rs in rows.items():
+        decoded.setdefault((th1, th2), {})[shard] = tuple(
+            np.concatenate([a[starts[r]:ends[r]] for r in rs])
+            for a in (ids, wtf))
+    return decoded
+
+
+def _score_dense(qmap, idf_map, terms: dict, k: int, base: int,
+                 tomb=None, mode: str = "or", qreq=None):
+    """The TAAT kernel of one shard, at both sites: ``terms`` maps a
+    term to the shard's (local ids, wtf). Per query a dense accumulator
+    adds w·wtf term by term (one summation order everywhere, so scores
+    are bit-equal), tombstoned ids (sorted global ints) are masked and
+    the local top-k by (score desc, doc asc) is kept; ``mode="and"``
+    keeps only docs matching all ``qreq[qid]`` distinct query terms.
+    Returns per-query pieces: (query ids, doc-int arrays, scores)."""
+    out_q, out_d, out_s = [], [], []
+    size = max((int(ids[-1]) + 1 for ids, _ in terms.values() if ids.size),
+               default=0)
+    acc = np.zeros(size, dtype=np.float64)
+    touched = np.zeros(size, dtype=bool)
+    ntm = np.zeros(size, dtype=np.int32) if mode == "and" else None
+    for qid, qterms in qmap.items():
+        if ntm is not None and len(qterms) < qreq[qid]:
+            continue  # some query term absent from corpus → empty
+        hit = False
+        for term, qtf in qterms:
+            idf = idf_map.get(term)
+            if idf is None or term not in terms:
+                continue
+            w = qtf * idf
+            ids, wtf = terms[term]
+            acc[ids] += w * wtf
+            touched[ids] = True
+            if ntm is not None:
+                ntm[ids] += 1  # a term's ids are distinct per shard
+            hit = True
+        if not hit:
+            continue
+        all_cand = np.flatnonzero(touched)
+        cand = all_cand
+        if ntm is not None:
+            cand = cand[ntm[cand] == qreq[qid]]
+        if tomb is not None:
+            cand = cand[~np.isin(cand + base, tomb)]
+        s = acc[cand]
+        if cand.size > k:  # keep the k-th score's ties, order those few
+            keep = s >= np.partition(s, cand.size - k)[cand.size - k]
+            cand, s = cand[keep], s[keep]
+        if cand.size:
+            order = np.lexsort((cand, -s))[:k]
+            out_q.append(qid)
+            out_d.append(cand[order] + base)
+            out_s.append(s[order])
+        # reset only the touched region — O(matched), not O(shard_size),
+        # per query (matters for 120-query batches over 1M-doc shards)
+        acc[all_cand] = 0.0
+        touched[all_cand] = False
+        if ntm is not None:
+            ntm[all_cand] = 0
+    return out_q, out_d, out_s
+
+
+def _shard_frame(qids, docs, scores) -> pd.DataFrame:
+    """A scatter closure's result frame of per-query top-k pieces."""
+    return pd.DataFrame({
+        "query_id": np.repeat(np.array(qids, dtype=np.int32),
+                              [d.size for d in docs]),
+        "doc_int": np.concatenate(docs or [np.empty(0, np.int64)]),
+        "score": np.concatenate(scores or [np.empty(0)])})
+
+
 def make_taat_scorer(
     qmap: dict[int, list[tuple[str, int]]],
     idf_map: dict[str, float],
@@ -187,73 +279,16 @@ def make_taat_scorer(
     mode: str = "or",
     qreq: dict[int, int] | None = None,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """``mode="and"``: posting-list intersection — a doc qualifies only
-    when it contains ALL of the query's distinct terms (``qreq[qid]``
-    counts them, including terms absent from the corpus, which then
-    make the query return empty)."""
+    """The scatter's TAAT closure: decode one shard's pandas group and
+    run :func:`_score_dense` over it. ``mode="and"``: posting-list
+    intersection (``qreq[qid]`` counts the query's distinct terms)."""
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        base = shard * shard_size
-        # decode once per (term, salt) row, with the tf-part
-        decoded = _decode_rows(pdf, base, k1, b, avgdl, tomb)
-        out_q: list[int] = []
-        out_d: list[np.ndarray] = []
-        out_s: list[np.ndarray] = []
-        acc = np.zeros(shard_size, dtype=np.float64)
-        touched = np.zeros(shard_size, dtype=bool)
-        ntm = np.zeros(shard_size, dtype=np.int32) if mode == "and" else None
-        for qid, qterms in qmap.items():
-            if mode == "and" and qreq is not None and len(qterms) < qreq[qid]:
-                continue  # some query term absent from corpus → empty
-            hit = False
-            for term, qtf in qterms:
-                idf = idf_map.get(term)
-                if idf is None:
-                    continue
-                w = qtf * idf
-                for ids, wtf in decoded.get(term, []):
-                    acc[ids] += w * wtf
-                    touched[ids] = True
-                    if ntm is not None:
-                        ntm[ids] += 1  # salt chunks are doc-disjoint
-                    hit = True
-            if not hit:
-                continue
-            all_cand = np.flatnonzero(touched)
-            cand = all_cand
-            if ntm is not None:
-                cand = cand[ntm[cand] == qreq[qid]]
-            if cand.size:
-                s = acc[cand]
-                # deterministic local top-k: (score desc, doc asc)
-                order = np.lexsort((cand, -s))[:k]
-                out_q.append(qid)
-                out_d.append(cand[order] + base)
-                out_s.append(s[order])
-            # reset only the touched region — O(matched), not
-            # O(shard_size), per query (matters for 120-query batches
-            # over 1M-doc shards)
-            acc[all_cand] = 0.0
-            touched[all_cand] = False
-            if ntm is not None:
-                ntm[all_cand] = 0
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int32"),
-                 "doc_int": pd.Series([], dtype="int64"),
-                 "score": pd.Series([], dtype="float64")}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(
-                    np.array(out_q, dtype=np.int32),
-                    [d.size for d in out_d],
-                ),
-                "doc_int": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
+        base = int(pdf["shard"].iloc[0]) * shard_size
+        terms = {h: tuple(np.concatenate(a) for a in zip(*chunks)) for
+                 h, chunks in _decode_rows(pdf, base, k1, b, avgdl).items()}
+        return _shard_frame(*_score_dense(qmap, idf_map, terms, k, base,
+                                          tomb, mode, qreq))
 
     return score_shard
 
@@ -296,13 +331,8 @@ def make_mixed_scorer(
         if len(sub):
             outs.append(fn_taat(sub))
         outs = [o for o in outs if len(o)]
-        if not outs:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int32"),
-                 "doc_int": pd.Series([], dtype="int64"),
-                 "score": pd.Series([], dtype="float64")}
-            )
-        return pd.concat(outs, ignore_index=True)
+        return (pd.concat(outs, ignore_index=True) if outs
+                else _shard_frame([], [], []))
 
     return score_shard
 
@@ -347,11 +377,11 @@ def search_index(
 
 class _TermCache(dict):
     """A warm reader's term cache: (th1, th2) -> None for a term absent
-    from the vocabulary, else (df, bparts, rows). ``rows`` is the
-    term's raw posting rows as the driver collected them (the frame the
-    scorers take), or None when only df and bparts are cached: a term
-    first seen by a scattered search, whose rows never reached the
-    driver. Its size is counted in cached postings — df per row-cached
+    from the vocabulary, else (df, bparts, postings): {shard: (local
+    ids, wtf)} decoded with the reader's open-time k1/b/avgdl, unmasked
+    (tombstones apply per search), or None when only df and bparts are
+    cached: a term first seen by a scattered search, whose rows never
+    reached the driver. Its size is counted in cached postings — df per row-cached
     term, one per other entry — and bounded by ``limit``: an entry that
     does not fit is not stored (the cache stops filling; it never
     evicts). Concurrent searches on one reader may fill it: ``put`` holds a lock
@@ -378,7 +408,7 @@ class _TermCache(dict):
 
 class IndexReader:
     """Warm query handle: index tables cached in executor memory, and
-    each query term's df, bparts and posting rows cached on the driver.
+    each query term's df, bparts and decoded postings on the driver.
 
     The serving deployment shape — open once, query many times. The
     first search pays cache materialization; subsequent searches scan
@@ -387,8 +417,8 @@ class IndexReader:
     ``groupBy("shard")`` scores each shard in the partition that holds
     it with no shuffle. A small search (Σdf within
     ``DRIVER_CUT_MAX_ROWS``) skips the scatter and scores on the
-    driver, over posting rows kept in the term cache: it collects only
-    the rows of terms not cached yet, in one JVM-only Arrow job. A warm
+    driver, over decoded postings kept in the term cache: it collects
+    only the terms not cached yet, in one JVM-only Arrow job. A warm
     query whose terms and winners are all cached runs NO Spark job;
     above the budget it is one job, the scatter.
 
@@ -396,14 +426,15 @@ class IndexReader:
     bparts appended by ``append_docs`` after open (and docs removed by
     ``compact_index``'s rewrite) are not visible until reopen (the
     cached relations and the term and docmap caches are all open-time
-    snapshots). Tombstones ARE re-read per search and masked at decode
-    (deletes mask immediately, cached rows included). Same contract as
+    snapshots, tf weights included). Tombstones ARE re-read per search
+    and masked at score time (deletes mask immediately, cached postings
+    included). Same contract as
     ``similarity.IvfReader``."""
 
     # term-cache bound in cached postings (driver memory): df per
-    # row-cached term plus one per df-only or absent entry. Besides its
-    # postings' int32 arrays, a row-cached term holds ≈3 KB of frame
-    # overhead, so the worst case (all df-1 terms) is ≈1.5 GB
+    # row-cached term plus one per df-only or absent entry. A decoded
+    # term holds 12 B per posting plus ≈0.8 KB of entry and array
+    # overhead, so the worst case (all df-1 terms) is ≈0.4 GB
     TERM_CACHE_MAX_POSTINGS = 500_000
     DOCMAP_CACHE_MAX = 1_000_000  # doc_int -> doc_id entries (driver memory)
 
@@ -556,8 +587,8 @@ def _search(
         for t in all_terms
     }
     # df per term: serve from the reader's term cache where possible
-    # (it stores the reader's SNAPSHOT of (df, containing bparts, posting
-    # rows), incl. "absent" as None — consistent with the persisted
+    # (it stores the reader's SNAPSHOT of (df, containing bparts,
+    # decoded postings), incl. "absent" as None — consistent with the persisted
     # DataFrames); run the lookup job only for terms not seen before.
     # idf is derived fresh from df + current n_docs, so collection
     # stats are never cached. The lookup reads the merged vocabulary,
@@ -568,7 +599,7 @@ def _search(
     # fan-out is the latency floor for selective queries).
     df_by_hash: dict[tuple[int, int], int | None] = {}
     parts_by_hash: dict[tuple[int, int], tuple | None] = {}
-    rows_by_hash: dict[tuple[int, int], pd.DataFrame] = {}
+    post_by_hash: dict[tuple[int, int], dict] = {}
     missing: list[tuple[int, int]] = []
     for h in term_to_hash.values():
         if term_cache is not None and h in term_cache:
@@ -576,9 +607,9 @@ def _search(
             if cached is None:
                 df_by_hash[h] = None
             else:
-                df_by_hash[h], parts_by_hash[h], rows = cached
-                if rows is not None:
-                    rows_by_hash[h] = rows
+                df_by_hash[h], parts_by_hash[h], post = cached
+                if post is not None:
+                    post_by_hash[h] = post
         else:
             missing.append(h)
     if missing:
@@ -606,8 +637,8 @@ def _search(
             if h in found:
                 parts_by_hash[h] = found[h][1]
             if term_cache is not None:
-                # df and bparts only: a driver-site search adds the rows
-                # when it collects them
+                # df and bparts only: a driver-site search adds the
+                # decoded postings when it collects them
                 term_cache.put(h, (*found[h], None) if h in found else None)
     for h, df in df_by_hash.items():
         if df is not None and n_docs - df + 0.5 <= 0:
@@ -675,8 +706,22 @@ def _search(
         np.array(sorted(tomb_set), dtype=np.int64) if tomb_set else None
     )
 
+    if scorer not in ("taat", "bmw", "auto"):
+        raise ValueError(f"unknown scorer {scorer!r}")
+    # The engine-wide tie-break is (score desc, ORIGINAL doc_id asc).
+    # doc_int order equals doc_id order only for the initial build —
+    # append_docs hands out strictly higher doc_int ranges regardless
+    # of key order — so the pre-hydration cut keeps ALL score-ties at
+    # the k boundary (rank semantics) and the final cut happens on the
+    # hydrated original keys.
+    n_shards = max(1, -(-n_docs // shard_size))
+    driver_cut = len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS
+    on_driver = driver_cut and sum(
+        df_by_hash[h] for h in idf_by_hash) <= DRIVER_CUT_MAX_ROWS
+    info["site"] = "driver" if on_driver else "scatter"
+
     bmw_qmap: dict | None = None
-    if scorer == "auto" and mode != "and":
+    if scorer == "auto" and mode != "and" and not on_driver:
         # geometry-driven choice (r7, BENCH.md "Block-max WAND:
         # geometry decides"): BMW only where it measured faster — big
         # shards (long per-shard lists) AND the query selective (its most-selective
@@ -686,6 +731,7 @@ def _search(
         # scatter (one dispatching closure), instead of one hot query
         # forfeiting the measured 2.7× BMW batch win for everyone.
         # Exact either way — the scorers are pinned rank-identical.
+        # The driver site always runs TAAT: Σdf bounds its work there
         sel_q: dict = {}
         hot_q: dict = {}
         big = shard_size >= AUTO_BMW_MIN_SHARD
@@ -708,57 +754,46 @@ def _search(
         if scorer == "mixed":
             info["auto_bmw_queries"] = sorted(sel_q)
 
-    if mode == "and":
-        # intersection needs per-doc matched-term counts → TAAT
-        fn = make_taat_scorer(qmap, idf_map, k1, b, avgdl, k, shard_size,
-                              tomb, mode="and", qreq=qreq)
-    elif scorer == "taat":
-        fn = make_taat_scorer(qmap, idf_map, k1, b, avgdl, k, shard_size, tomb)
-    elif scorer == "bmw":
-        from .wand import make_bmw_scorer
-
-        fn = make_bmw_scorer(qmap, idf_map, k1, b, avgdl, k, shard_size, tomb)
-    elif scorer == "mixed":
-        fn = make_mixed_scorer(qmap, bmw_qmap, idf_map, k1, b, avgdl, k,
-                               shard_size, tomb)
-    else:
-        raise ValueError(f"unknown scorer {scorer!r}")
-
-    # The engine-wide tie-break is (score desc, ORIGINAL doc_id asc).
-    # doc_int order equals doc_id order only for the initial build —
-    # append_docs hands out strictly higher doc_int ranges regardless
-    # of key order — so the pre-hydration cut keeps ALL score-ties at
-    # the k boundary (rank semantics) and the final cut happens on the
-    # hydrated original keys.
-    n_shards = max(1, -(-n_docs // shard_size))
-    driver_cut = len(queries) * n_shards * k <= DRIVER_CUT_MAX_ROWS
-    if driver_cut and sum(
-            df_by_hash[h] for h in idf_by_hash) <= DRIVER_CUT_MAX_ROWS:
+    if on_driver:
         # small search: Σdf bounds the postings the scan returns, so
         # collect them (a JVM-only Arrow job, no Python task) and run
-        # the same closure per shard here — the scatter's Python
-        # worker round trip costs more than the scoring it would do.
-        # A warm reader collects only the terms its cache lacks, and
-        # none when every term hits
-        fetch = [h for h in idf_by_hash if h not in rows_by_hash]
-        pdf = scan(fetch).toArrow().to_pandas() if fetch else None
-        if term_cache is not None:
-            # split the collected rows by exact term in one pass (a
-            # th1-colliding term's rows, which no scorer reads, drop out)
-            by_term = (dict(iter(pdf.groupby(["th1", "th2"], sort=False)))
-                       if fetch else {})
+        # the kernel per shard here — the scatter's Python worker round
+        # trip costs more than the scoring it would do. A warm reader
+        # collects only the terms its cache lacks, none when all hit
+        fetch = [h for h in idf_by_hash if h not in post_by_hash]
+        if fetch:
+            got = _decode_arrow(scan(fetch).toArrow(), k1, b, avgdl)
             for h in fetch:
-                rows_by_hash[h] = by_term[h] if h in by_term else pdf.iloc[:0]
-                term_cache.put(h, (df_by_hash[h], parts_by_hash.get(h),
-                                   rows_by_hash[h]))
-            frames = [rows_by_hash[h] for h in idf_by_hash
-                      if len(rows_by_hash[h])]
-            pdf = pd.concat(frames, ignore_index=True) if frames else None
-        scored = ([] if pdf is None
-                  else [fn(g) for _, g in pdf.groupby("shard")])
-        top_rows = _driver_rank_cut(
-            pd.concat(scored).to_dict("records") if scored else [], k)
+                post_by_hash[h] = got.get(h, {})
+                if term_cache is not None:
+                    term_cache.put(h, (df_by_hash[h], parts_by_hash.get(h),
+                                       post_by_hash[h]))
+        live = [post_by_hash[h] for h in idf_by_hash]
+        top_rows = []
+        for s in sorted(set().union(*live)):
+            terms = {h: p[s] for h, p in zip(idf_by_hash, live) if s in p}
+            for qid, ds, ss in zip(*_score_dense(
+                    qmap, idf_map, terms, k, s * shard_size, tomb, mode,
+                    qreq)):
+                top_rows += [{"query_id": qid, "doc_int": d, "score": x}
+                             for d, x in zip(ds.tolist(), ss.tolist())]
+        top_rows = _driver_rank_cut(top_rows, k)
     else:
+        if mode == "and":
+            # intersection needs per-doc matched-term counts → TAAT
+            fn = make_taat_scorer(qmap, idf_map, k1, b, avgdl, k,
+                                  shard_size, tomb, mode="and", qreq=qreq)
+        elif scorer == "taat":
+            fn = make_taat_scorer(qmap, idf_map, k1, b, avgdl, k,
+                                  shard_size, tomb)
+        elif scorer == "bmw":
+            from .wand import make_bmw_scorer
+
+            fn = make_bmw_scorer(qmap, idf_map, k1, b, avgdl, k,
+                                 shard_size, tomb)
+        else:
+            fn = make_mixed_scorer(qmap, bmw_qmap, idf_map, k1, b, avgdl, k,
+                                   shard_size, tomb)
         local = scan(list(idf_by_hash)).groupBy("shard").applyInPandas(
             fn, schema=RESULT_SCHEMA)
         if driver_cut:

@@ -261,7 +261,7 @@ def make_bmw_scorer(
     shard_size: int,
     tomb: np.ndarray | None = None,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    from .searchidx import _decode_rows, _wtf
+    from .searchidx import _decode_rows, _shard_frame, _wtf
 
     width = _cell_width(shard_size)
     n_cells = -(-shard_size // width)
@@ -315,21 +315,6 @@ def make_bmw_scorer(
             rows_q.append(qid)
             rows_d.append(docs[sel] + base)
             rows_s.append(scores[sel])
-        if not rows_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series([], dtype="int32"),
-                 "doc_int": pd.Series([], dtype="int64"),
-                 "score": pd.Series([], dtype="float64")}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(
-                    np.array(rows_q, dtype=np.int32),
-                    [d.size for d in rows_d],
-                ),
-                "doc_int": np.concatenate(rows_d),
-                "score": np.concatenate(rows_s),
-            }
-        )
+        return _shard_frame(rows_q, rows_d, rows_s)
 
     return score_shard

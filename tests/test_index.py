@@ -474,11 +474,12 @@ def test_pretokenized_build_matches_text_build(spark, corpus, index_dir,
 
 def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
                                             monkeypatch):
-    """The scorer closure runs at two sites: on the driver over
+    """Scoring runs at two sites: the driver's TAAT kernel over
     Arrow-collected postings while Σdf over the live terms fits
-    DRIVER_CUT_MAX_ROWS, else inside the applyInPandas scatter. On a
-    multi-shard, multi-part index with tombstones, for taat, bmw, a
-    mixed auto batch and mode="and", a warm reader first collects its
+    DRIVER_CUT_MAX_ROWS, else the scorer closure inside the
+    applyInPandas scatter (where an auto batch splits into a mixed
+    one). On a multi-shard, multi-part index with tombstones, for taat,
+    bmw, auto and mode="and", a warm reader first collects its
     terms' rows once, then — after a delete — takes them all from its
     term cache (no collect). Those rows are bit-identical to the
     one-shot path, to a reader whose term cache is bounded to 0, to the
@@ -529,9 +530,10 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
     monkeypatch.setattr(PandasGroupedOpsMixin, "applyInPandas", spy)
     monkeypatch.setattr(ClassicDataFrame, "toArrow", to_arrow)
 
-    def run(reader, oneshot=True):
+    def run(reader, oneshot=True, site="driver"):
         """Warm rows and one-shot rows per scorer, and how many
-        collects the warm searches ran."""
+        collects the warm searches ran. The auto batch splits where
+        the dispatch runs, in the scatter."""
         warm, cold, collects = [], [], 0
         for scorer, mode in [("taat", "or"), ("bmw", "or"),
                              ("auto", "or"), ("taat", "and")]:
@@ -539,8 +541,12 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
             warm.append(reader.search_rows(queries, k=k, scorer=scorer,
                                            mode=mode))
             collects += len(arrows) - n
-            if scorer == "auto":
-                assert SI.last_scan_info()["auto_scorer"] == "mixed"
+            info = SI.last_scan_info()
+            assert info["site"] == site
+            if scorer == "auto" and site == "scatter":
+                assert info["auto_scorer"] == "mixed"
+            else:
+                assert "auto_scorer" not in info
             if oneshot:
                 cold.append([tuple(r) for r in search_index(
                     spark, d, queries, k=k, scorer=scorer,
@@ -581,10 +587,10 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
 
         monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS",
                             len(queries) * n_shards * k)
-        cut, cut_cold, _ = run(reader)
+        cut, cut_cold, _ = run(reader, site="scatter")
         assert len(scatters) == 8
         monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
-        window, window_cold, _ = run(reader)
+        window, window_cold, _ = run(reader, site="scatter")
         assert len(scatters) == 16
 
         # a single-term search within the budget scores on the driver,
@@ -613,6 +619,110 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
     assert nocache == driver
     assert cut == cut_cold == driver
     assert window == window_cold == driver
+
+
+def test_arrow_decoder_equals_decode_rows(spark, index_dir):
+    """The driver's Arrow decoder gives, per term and shard, the ids and
+    tf weights of the scatter's pandas decoder (_decode_rows, its salt
+    chunks joined), bit for bit: over every posting row of a multi-shard
+    index with multi-salt terms, a multi-chunk table, rows with empty
+    lists, and tombstones (masked after the Arrow decode, during the
+    pandas one)."""
+    import pyarrow as pa
+
+    from oboyu_spark.operators.postings import POSTINGS_READ_SCHEMA
+    from oboyu_spark.operators.searchidx import _decode_arrow, _decode_rows
+
+    meta = load_meta(index_dir)
+    k1, b, avgdl, size = meta["k1"], meta["b"], meta["avgdl"], \
+        meta["shard_size"]
+    real = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
+        f"{index_dir}/postings").toArrow()
+    empty = real.slice(0, 2).to_pylist()
+    for i, r in enumerate(empty):  # two empty salt rows of a new term
+        r.update(th1=7, th2=11, salt=9 + i, n=0, gaps=[], tfs=[], dls=[])
+    tbl = pa.concat_tables([real, pa.Table.from_pylist(empty, real.schema)])
+    assert tbl.column("gaps").num_chunks > 1
+    pdf = tbl.to_pandas()
+    assert (pdf.groupby(["shard", "th1", "th2"]).size() > 1).any()
+    got = _decode_arrow(tbl, k1, b, avgdl)
+    assert all(ids.size == wtf.size == 0
+               for ids, wtf in got[(7, 11)].values())
+    doc_ints = sorted(
+        int(s) * size + int(np.cumsum(g)[0])
+        for s, g in zip(pdf["shard"], pdf["gaps"]) if len(g))
+    for tomb in (None, np.array(doc_ints[::7], dtype=np.int64)):
+        pairs = 0
+        for shard, grp in pdf.groupby("shard"):
+            base = int(shard) * size
+            want = _decode_rows(grp, base, k1, b, avgdl, tomb)
+            for term, chunks in want.items():
+                ids, wtf = got[term][int(shard)]
+                assert ids.dtype == np.int32 and wtf.dtype == np.float64
+                if tomb is not None:
+                    keep = ~np.isin(ids.astype(np.int64) + base, tomb)
+                    ids, wtf = ids[keep], wtf[keep]
+                assert np.array_equal(ids, np.concatenate(
+                    [c[0] for c in chunks])), (term, shard)
+                assert np.array_equal(wtf, np.concatenate(
+                    [c[1] for c in chunks])), (term, shard)
+                pairs += 1
+        assert pairs == sum(len(v) for v in got.values())
+
+
+def test_dense_kernel_matches_oracle(spark, tmp_path):
+    """The driver's dense TAAT kernel (one-shot and warm reader) ranks
+    and scores like the PyBM25 oracle on negative-IDF terms (df > N/2)
+    and in mode="and", with tombstones, and after a delete that follows
+    the reader's open: deletes only mask, so the oracle indexes every
+    doc and drops the deleted ones from its ranking."""
+    from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.operators.postings import delete_docs
+
+    words = ["common", "half", "rare", "pad", "filler"]
+    rows = [(f"d{i:02d}", " ".join(
+        ["common"] * (1 + i % 3) + ["half"] * (i % 4 < 3) * (1 + i % 2)
+        + ["rare"] * (i % 13 == 0) + [words[3 + i % 2]] * (i % 5)))
+        for i in range(48)]
+    d = str(tmp_path / "negidf")
+    build_index(spark.createDataFrame(rows, "doc_id string, text string"), d,
+                shard_size=8, salt_chunk=3, shards_per_part=2,
+                id_assign_partitions=4)
+    oracle = PyBM25()
+    oracle.index(rows)
+    assert oracle.idf("common") < 0 and oracle.idf("half") < 0
+    queries = ["common half", "half rare", "common common rare pad",
+               "rare filler", "common zz_missing"]
+
+    def expect(q, mode, gone):
+        exp = [x for x in oracle.search(q, k=100, mode=mode)
+               if x[0] not in gone]
+        return exp[:6]
+
+    def check(got, mode, gone):
+        for qid, q in enumerate(queries):
+            g = [(dd, sc) for qq, dd, sc in got if qq == qid]
+            exp = expect(q, mode, gone)
+            assert [x for x, _ in g] == [x for x, _ in exp], (q, mode)
+            for (_, gs), (_, es) in zip(g, exp):
+                assert gs == pytest.approx(es, rel=1e-9), (q, mode)
+
+    delete_docs(spark, d, ["d00", "d05", "d26"])
+    gone = {"d00", "d05", "d26"}
+    reader = SI.IndexReader(spark, d)
+    try:
+        for mode in ("or", "and"):
+            check(reader.search_rows(queries, k=6, mode=mode), mode, gone)
+            assert SI.last_scan_info()["site"] == "driver"
+            check([tuple(r) for r in search_index(
+                spark, d, queries, k=6, mode=mode).collect()], mode, gone)
+            assert SI.last_scan_info()["site"] == "driver"
+        delete_docs(spark, d, ["d13", "d39", "d02"])
+        gone |= {"d13", "d39", "d02"}
+        for mode in ("or", "and"):
+            check(reader.search_rows(queries, k=6, mode=mode), mode, gone)
+    finally:
+        reader.close()
 
 
 def test_term_cache_bound(spark, index_dir, monkeypatch):

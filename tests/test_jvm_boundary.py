@@ -104,7 +104,14 @@ def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
         batch = [tuple(r) for r in
                  SI.search_index(spark, d, QUERIES, k=5, scorer="auto")
                  .collect()]
+        # the auto dispatch runs in the scatter: force it with budget 0
+        with monkeypatch.context() as m:
+            m.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
+            scattered = [tuple(r) for r in
+                         SI.search_index(spark, d, QUERIES, k=5,
+                                         scorer="auto").collect()]
         scorer = SI.last_scan_info()["auto_scorer"]
+        assert scattered == batch
         reader = SI.IndexReader(spark, d)
         try:
             served = reader.search_rows(QUERIES, k=5, scorer="auto")

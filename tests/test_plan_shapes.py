@@ -343,6 +343,71 @@ def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
         reader.close()
 
 
+def test_driver_site_search_runs_no_pandas(spark, index_dir, monkeypatch):
+    """The driver site scores decoded numpy arrays: a warm search whose
+    terms and winners are all cached runs no Spark job and calls none
+    of pd.concat, DataFrame.groupby, DataFrame.itertuples or
+    DataFrame.to_dict; a one-shot driver-site search decodes its
+    collected Arrow table without Table.to_pandas."""
+    import gc
+
+    import pandas as pd
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from oboyu_spark.operators import searchidx as SI
+
+    q = ["spark index search", "分散 shuffle partition engine"]
+    reader = SI.IndexReader(spark, index_dir)
+    try:
+        warm = reader.search_rows(q, k=5)
+
+        def refuse(*a, **kw):
+            raise AssertionError("pandas on the driver-site search path")
+
+        sc = spark.sparkContext
+        with monkeypatch.context() as m:
+            m.setattr(pd, "concat", refuse)
+            for name in ("groupby", "itertuples", "to_dict"):
+                m.setattr(pd.DataFrame, name, refuse)
+            gc.collect()
+            gc.disable()
+            sc.setJobGroup("warm_no_pandas", "warm all-hit search")
+            try:
+                rows = reader.search_rows(q, k=5)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                gc.enable()
+        assert SI.last_scan_info()["site"] == "driver"
+        assert rows == warm and rows
+        assert not sc.statusTracker().getJobIdsForGroup("warm_no_pandas")
+    finally:
+        reader.close()
+
+    class NoPandasTable:
+        """A collected Arrow table whose to_pandas refuses."""
+
+        def __init__(self, tbl):
+            self._tbl = tbl
+
+        def to_pandas(self, *a, **kw):
+            raise AssertionError("Table.to_pandas on the driver site")
+
+        def __getattr__(self, name):
+            return getattr(self._tbl, name)
+
+    real_arrow = ClassicDataFrame.toArrow
+    tables = []
+
+    def to_arrow(self):
+        tables.append(NoPandasTable(real_arrow(self)))
+        return tables[-1]
+
+    monkeypatch.setattr(ClassicDataFrame, "toArrow", to_arrow)
+    got = SI.search_index(spark, index_dir, q, k=5).collect()
+    assert SI.last_scan_info()["site"] == "driver" and len(tables) == 1
+    assert [(r["query_id"], r["doc_id"], r["score"]) for r in got] == warm
+
+
 def test_docmap_hydration_prunes_partitions(spark, tmp_path):
     """r7: winner hydration derives the docmap PARTITION filter from
     doc_int // part_docs (dense ids are assigned in part order), so

@@ -776,6 +776,68 @@ def test_sync_crash_before_part_loop_converges(spark, tmp_path, monkeypatch):
     _converged(spark, d, want)
 
 
+def test_build_resume_skips_abandoned_generation(spark, tmp_path,
+                                                monkeypatch):
+    """A sync crashes before its part loop and is re-run, so its first
+    new generation is abandoned (its keys sit in a newer one). A later
+    build_index on the same directory resumes generation 0 only: no key
+    lands in the docmap twice, n_docs counts the distinct keys, and
+    searches and stats stay an uncrashed sync's."""
+    from oboyu_spark.operators import postings as P
+    from oboyu_spark.operators.postings import sync_docs
+
+    d, incoming, _, want = _sync_case(spark, tmp_path)
+    with monkeypatch.context() as m:
+        m.setattr(P, "_build_parts", lambda *a, **k: 1 / 0)
+        with pytest.raises(ZeroDivisionError):
+            sync_docs(incoming, d)
+    sync_docs(incoming, d)
+    with open(f"{d}/staged.json") as fh:
+        assert len(json.load(fh)["gens"]) == 3
+    meta = build_index(incoming, d, **KW)
+    dm = spark.read.parquet(f"{d}/docmap")
+    keys = dm.select("doc_id").distinct().count()
+    assert dm.count() == keys == meta["n_docs"]
+    _converged(spark, d, want)
+
+
+def test_append_after_compaction_crash_builds_stale_parts(spark, tmp_path,
+                                                          monkeypatch):
+    """A compaction crashes after marking its parts stale (their staged
+    slices already rewritten). The next append_docs builds those parts
+    with its own, so it passes finalize's integrity gate and leaves the
+    stats and searches of a clean compaction followed by the same
+    append."""
+    import shutil
+
+    from oboyu_spark.operators import postings as P
+
+    d = str(tmp_path / "idx")
+    build_index(_corpus(spark, n_convs=30), d, **KW)
+    victims = sorted({x[0] for res in _results(spark, d, k=20).values()
+                      for x in res[:2]})[:2]
+    delete_docs(spark, d, victims)
+    clone = str(tmp_path / "clone")
+    shutil.copytree(d, clone)
+    new = spark.createDataFrame(
+        [(f"fresh#{i}", "spark index search fresh posting") for i in range(4)],
+        "doc_id string, text string")
+
+    with monkeypatch.context() as m:
+        m.setattr(P, "_build_one_part", lambda *a, **k: 1 / 0)
+        with pytest.raises(ZeroDivisionError):
+            compact_index(spark, d)
+    assert any(row["status"] == "stale" for row in _manifests(d))
+    got = append_docs(new, d)
+    assert all(row["status"] == "done" for row in _manifests(d))
+
+    compact_index(spark, clone)
+    want = append_docs(new, clone)
+    keys = ("n_docs", "total_terms", "avgdl", "n_postings", "n_vocab_terms")
+    assert [got[x] for x in keys] == [want[x] for x in keys]
+    assert _results(spark, d, k=12) == _results(spark, clone, k=12)
+
+
 def test_sync_docmap_write_failure_fails_fast(spark, tmp_path, monkeypatch):
     """Fault: the part docmap writes of a sync fail. The sync raises in
     bounded time, writes no done manifest for the failed parts (the new

@@ -103,12 +103,15 @@ def test_bmw_unit_against_bruteforce():
             assert gs == pytest.approx(es, rel=1e-12)
 
 
-def test_auto_scorer_picks_by_geometry(spark, tmp_path):
+def test_auto_scorer_picks_by_geometry(spark, tmp_path, monkeypatch):
     """scorer="auto" (r7): BMW only on big shards with a uniformly
     selective batch (the measured win regime — BENCH.md "Block-max
     WAND: geometry decides"); small shards or hot queries keep TAAT.
     Results identical to both explicit scorers either way, and
-    mode="and" stays on the TAAT intersection path."""
+    mode="and" stays on the TAAT intersection path. The choice is made
+    where it runs, in the scatter (forced here with a zero driver
+    budget); a driver-site search records no choice and answers the
+    same."""
     from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.operators.postings import build_index
     from oboyu_spark.operators.searchidx import search_index
@@ -130,14 +133,25 @@ def test_auto_scorer_picks_by_geometry(spark, tmp_path):
     # tiny fixture exercises both sides of the rule
     old = S.AUTO_BMW_MIN_SHARD
     S.AUTO_BMW_MIN_SHARD = 300
+    budget = SI.DRIVER_CUT_MAX_ROWS
+    monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
     try:
         res = search_index(spark, big, "rareterm common", k=5,
                            scorer="auto").collect()
         assert SI.last_scan_info()["auto_scorer"] == "bmw"
-        exp = search_index(spark, big, "rareterm common", k=5,
-                           scorer="taat").collect()
-        assert [(r.doc_id, round(r.score, 9)) for r in res] == \
-               [(r.doc_id, round(r.score, 9)) for r in exp]
+        assert SI.last_scan_info()["site"] == "scatter"
+        for ref_scorer in ("taat", "bmw"):
+            exp = search_index(spark, big, "rareterm common", k=5,
+                               scorer=ref_scorer).collect()
+            assert [(r.doc_id, round(r.score, 9)) for r in res] == \
+                   [(r.doc_id, round(r.score, 9)) for r in exp]
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", budget)
+        drv = search_index(spark, big, "rareterm common", k=5,
+                           scorer="auto").collect()
+        assert SI.last_scan_info()["site"] == "driver"
+        assert "auto_scorer" not in SI.last_scan_info()
+        assert [tuple(r) for r in drv] == [tuple(r) for r in res]
+        monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
         # hot query (no selective term) -> TAAT even on big shards
         search_index(spark, big, "common filler", k=5,
                      scorer="auto").collect()
@@ -154,11 +168,12 @@ def test_auto_scorer_picks_by_geometry(spark, tmp_path):
         S.AUTO_BMW_MIN_SHARD = old
 
 
-def test_auto_scorer_mixed_batch_dispatches_per_query(spark, tmp_path):
+def test_auto_scorer_mixed_batch_dispatches_per_query(spark, tmp_path,
+                                                     monkeypatch):
     """r8 (VERDICT r7 #1): a MIXED batch no longer collapses to TAAT —
     selective queries run under the BMW closure and hot queries under
-    TAAT in the SAME scatter, results rank-identical to both explicit
-    scorers per query."""
+    TAAT in the SAME scatter (forced with a zero driver budget),
+    results rank-identical to both explicit scorers per query."""
     from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.operators.postings import build_index
     from oboyu_spark.operators.searchidx import search_index
@@ -176,6 +191,7 @@ def test_auto_scorer_mixed_batch_dispatches_per_query(spark, tmp_path):
                "rareterm filler"]      # selective -> BMW subset
     old = SI.AUTO_BMW_MIN_SHARD
     SI.AUTO_BMW_MIN_SHARD = 300
+    monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
     try:
         got = search_index(spark, big, queries, k=5,
                            scorer="auto").collect()
