@@ -433,7 +433,15 @@ def test_part_pruning_equivalence(spark, corpus, tmp_path, monkeypatch):
                 for r in rows)))
         return out
 
-    pruned = run() + run(scorer="bmw") + run(mode="and")
+    def run_bmw():
+        # BMW runs only in the scatter: force it there (zero budget)
+        with monkeypatch.context() as m:
+            m.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
+            out = run(scorer="bmw")
+        assert SI.last_scan_info()["site"] == "scatter"
+        return out
+
+    pruned = run() + run_bmw() + run(mode="and")
     # the rare-only query really pruned: strict subset of parts
     search_index(spark, d, "zza zzb", k=5).collect()
     live = SI.last_scan_info()["live_parts"]
@@ -441,7 +449,7 @@ def test_part_pruning_equivalence(spark, corpus, tmp_path, monkeypatch):
         SI.last_scan_info()
 
     monkeypatch.setattr(SI, "PART_PRUNE_MAX_UNION", -1)  # legacy scan
-    legacy = run() + run(scorer="bmw") + run(mode="and")
+    legacy = run() + run_bmw() + run(mode="and")
     assert SI.last_scan_info()["live_parts"] is None
     assert pruned == legacy
 

@@ -38,6 +38,22 @@ def _corpus(spark, n_convs=60, seed=11):
 
 def _results(spark, d, k=10, scorer="taat"):
     rows = search_index(spark, d, QUERIES, k=k, scorer=scorer).collect()
+    return _rounded(rows)
+
+
+def _scattered_bmw(spark, d, monkeypatch, **kw):
+    """BMW results forced into the scatter (zero driver budget): the
+    driver site always runs TAAT, whatever ``scorer`` says."""
+    from oboyu_spark.operators import searchidx as SI
+
+    with monkeypatch.context() as m:
+        m.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
+        rows = search_index(spark, d, QUERIES, scorer="bmw", **kw).collect()
+    assert SI.last_scan_info()["site"] == "scatter"
+    return _rounded(rows)
+
+
+def _rounded(rows):
     out = {}
     for r in rows:
         out.setdefault(r["query_id"], []).append((r["doc_id"], round(r["score"], 9)))
@@ -282,7 +298,7 @@ def test_update_docs_via_delete_append(spark, tmp_path):
             assert gs == pytest.approx(es, rel=1e-9, abs=1e-8)
 
 
-def test_delete_then_compact(spark, tmp_path):
+def test_delete_then_compact(spark, tmp_path, monkeypatch):
     docs = _corpus(spark, n_convs=40)
     d = str(tmp_path / "idx")
     build_index(docs, d, **KW)
@@ -303,7 +319,7 @@ def test_delete_then_compact(spark, tmp_path):
         assert after[qid][: len(exp)] == exp
 
     # both scorers respect tombstones
-    assert _results(spark, d, scorer="bmw", k=20) == after
+    assert _scattered_bmw(spark, d, monkeypatch, k=20) == after
 
     # compaction: exact oracle over the surviving corpus
     compact_index(spark, d)

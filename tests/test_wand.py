@@ -44,10 +44,22 @@ def _by_query(rows):
     return out
 
 
+def _scattered(spark, index_dir, monkeypatch, **kw):
+    """A search forced into the scatter (zero driver budget), the only
+    site where ``scorer`` picks the kernel; asserts it ran there."""
+    from oboyu_spark.operators import searchidx as SI
+
+    with monkeypatch.context() as m:
+        m.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)
+        rows = search_index(spark, index_dir, QUERIES, **kw).collect()
+    assert SI.last_scan_info()["site"] == "scatter"
+    return _by_query(rows)
+
+
 @pytest.mark.parametrize("k", [3, 10, 50])
-def test_bmw_equals_taat(spark, index_dir, k):
+def test_bmw_equals_taat(spark, index_dir, k, monkeypatch):
     taat = _by_query(search_index(spark, index_dir, QUERIES, k=k, scorer="taat").collect())
-    bmw = _by_query(search_index(spark, index_dir, QUERIES, k=k, scorer="bmw").collect())
+    bmw = _scattered(spark, index_dir, monkeypatch, k=k, scorer="bmw")
     assert set(taat) == set(bmw)
     for qid in taat:
         assert [d for d, _ in taat[qid]] == [d for d, _ in bmw[qid]], QUERIES[qid]
@@ -55,11 +67,11 @@ def test_bmw_equals_taat(spark, index_dir, k):
             assert a == pytest.approx(b, rel=1e-12), QUERIES[qid]
 
 
-def test_bmw_matches_oracle(spark, corpus, index_dir):
+def test_bmw_matches_oracle(spark, corpus, index_dir, monkeypatch):
     docs_local = [(r["doc_id"], r["text"]) for r in corpus.collect()]
     oracle = PyBM25()
     oracle.index(docs_local)
-    got = _by_query(search_index(spark, index_dir, QUERIES, k=15, scorer="bmw").collect())
+    got = _scattered(spark, index_dir, monkeypatch, k=15, scorer="bmw")
     for qid, q in enumerate(QUERIES):
         exp = oracle.search(q, k=15)
         assert [d for d, _ in got.get(qid, [])] == [d for d, _ in exp], q
