@@ -27,7 +27,9 @@ def main() -> None:
     ap.add_argument("--queries-file")
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--scorer", choices=["taat", "bmw", "auto"],
-                default="taat")
+                    default="taat",
+                    help="the scatter's kernel (a search small enough "
+                         "for the driver site always runs TAAT)")
     ap.add_argument("--mode", choices=["or", "and"], default="or",
                     help="'and' = posting-list intersection (docs must "
                          "contain every distinct query term)")

@@ -245,7 +245,9 @@ def main() -> None:
     ap.add_argument("--docs", help="documents parquet for hydrate/rerank")
     ap.add_argument("--k", type=int, default=10)
     ap.add_argument("--scorer", choices=["taat", "bmw", "auto"],
-                default="taat")
+                    default="taat",
+                    help="the scatter's kernel (a search small enough "
+                         "for the driver site always runs TAAT)")
     ap.add_argument("--ivf",
                     help="persisted ivf_build index dir — enables "
                          '{"mode": "hybrid"} requests (BM25 + '

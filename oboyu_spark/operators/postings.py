@@ -1,7 +1,7 @@
 """Compressed, doc-sharded inverted index — build side (resumable).
 
-Layout (north rule: delta-gap postings, per-block max metadata,
-explicit salting, checkpoint-resume with per-partition lineage):
+Layout (north rule: delta-gap postings, explicit salting,
+checkpoint-resume with per-partition lineage):
 
     index_dir/
       staged.json                  the build settings record (geometry,
@@ -35,13 +35,9 @@ explicit salting, checkpoint-resume with per-partition lineage):
           (Parquet's dictionary/bit-packed list pages plus snappy page
           compression stand in for a hand-rolled varbyte codec; the
           whole encode is Spark SQL — see _encoded_postings)
-          block_last  array<long> — last doc_int per 128-posting block
-          block_maxtf array<long> — max tf per block
-          block_mindl array<long> — min dl per block
-          (block upper bound = idf · wtf(maxtf, mindl) is computed at
-          QUERY time from current k1/b/avgdl — wtf is monotone ↑ in tf
-          and ↓ in dl, so the bound stays valid when collection stats
-          drift under incremental appends)
+          No block-max metadata is stored: every posting of a query
+          term is decoded before any pruning decision, so the block-max
+          scorer (wand.py) takes its bounds from the decoded weights
       vocabulary/                  (th1, th2, document_frequency,
                                    bparts), aggregated at finalize from
                                    the postings' (th1, th2, n, bpart)
@@ -83,8 +79,8 @@ Salting: a term whose global-ish df (within-part df here — at 10^12
 scale parts are large enough that hot terms are hot in every part)
 exceeds ``salt_chunk`` is split into range-disjoint sub-chunks BEFORE
 the build shuffle, bounding every reducer group even for stop-word
-terms. Chunks stay ordered and disjoint → block-max skipping sees one
-ordered stream.
+terms. Chunks stay ordered and disjoint → the decoder joins them into
+one ordered stream per term and shard.
 
 The reference's analog of this file is the in-memory dict index build
 (inverted_index_builder.py:50-68, bm25_indexer.py:121-233) plus the
@@ -105,8 +101,6 @@ from pyspark.sql import functions as F
 
 from .. import B_DEFAULT, K1_DEFAULT, MIN_TOKEN_LENGTH_DEFAULT
 
-BLOCK = 128
-
 # Terms are stored as a 128-bit hash pair (two independent xxhash64
 # passes), NOT as strings. Rationale (measured in this sandbox, and the
 # same physics holds on a real cluster): every wide stage of the build
@@ -121,11 +115,10 @@ BLOCK = 128
 # relational vocabulary table, not in the index hot path.
 POSTINGS_SCHEMA = (
     "shard long, th1 long, th2 long, salt int, n long, "
-    "gaps array<int>, tfs array<int>, dls array<int>, "
-    "block_last array<long>, block_maxtf array<long>, block_mindl array<long>"
+    "gaps array<int>, tfs array<int>, dls array<int>"
 )
 
-CODEC_VERSION = 7
+CODEC_VERSION = 8
 # Read schemas of the engine-internal tables, exactly as the parquet
 # reader infers them (the postings and docmap roots add their bpart
 # partition column). Queries declare them: a spark.read.parquet without
@@ -180,12 +173,11 @@ def _encoded_postings(enriched: DataFrame, n_enc: int,
     doc id; ``gaps`` holds the shard-local ids (doc_int −
     shard·shard_size, int32 — build_index caps shard_size below 2^31)
     delta-coded, first value absolute; ``tfs``/``dls`` are the tf and
-    doc-length lists; the block arrays come from 128-posting
-    ``slice``s. ``ids``/``tfs``/``dls`` are computed in their own
-    projection and the block lambdas read them as attributes: the
-    int casts keep CollapseProject from inlining ``p.tf`` into every
-    block's lambda (no CSE inside higher-order lambdas — each block
-    would rebuild the whole list)."""
+    doc-length lists, cast to the schema's ``array<int>``. ``ids`` is
+    computed once in its own projection and read twice, as an
+    attribute, by the gaps ``zip_with`` (CollapseProject keeps a
+    non-trivial expression that is read twice in its own projection,
+    so the list is built once)."""
     key = ("shard", "th1", "th2", "salt")
     lists = (
         enriched.repartition(n_enc, *key)
@@ -201,7 +193,6 @@ def _encoded_postings(enriched: DataFrame, n_enc: int,
             F.col("p.dl").cast("array<int>").alias("dls"),
         )
     )
-    seq = f"sequence(0, (n - 1) div {BLOCK})"  # block indexes; n ≥ 1
     return lists.select(
         *key,
         F.col("n").cast("long").alias("n"),
@@ -209,14 +200,6 @@ def _encoded_postings(enriched: DataFrame, n_enc: int,
                " (a, b) -> a - b)").alias("gaps"),
         "tfs",
         "dls",
-        F.expr(f"transform({seq}, i -> shard * {shard_size}"
-               f" + ids[least((i + 1) * {BLOCK}, n) - 1])").alias("block_last"),
-        F.expr(f"transform({seq}, i -> cast(array_max("
-               f"slice(tfs, i * {BLOCK} + 1, {BLOCK})) as long))")
-        .alias("block_maxtf"),
-        F.expr(f"transform({seq}, i -> cast(array_min("
-               f"slice(dls, i * {BLOCK} + 1, {BLOCK})) as long))")
-        .alias("block_mindl"),
     ).sortWithinPartitions("th1", "th2", "salt", "shard")
 
 
@@ -460,9 +443,10 @@ def _stage(
 def _build_one_part(spark: SparkSession, index_dir: str, p: int,
                     tag: str) -> dict:
     """Build postings + docmap for one bpart, with the settings frozen
-    in staged.json. ``tag`` is the part's job tag: a failing tf →
-    postings chain cancels the part's jobs with it, so the error
-    surfaces without waiting out the overlapped docmap write.
+    in staged.json. ``tag`` is the part's job tag: whichever of the
+    tf → postings chain and the overlapped docmap write fails first
+    cancels the part's jobs with it, so its own error surfaces without
+    waiting the other one out.
 
     Shuffle budget (the thing that matters at 100 TB): doc length is
     carried through tokenization (dl = size of the filtered token
@@ -540,12 +524,17 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
     # the same partition. step_seconds are per-step wall clocks; docmap
     # overlaps tf_vocab. The thread inherits this one's job group and
     # tags (the part's tag included).
+    import threading
     from concurrent.futures import ThreadPoolExecutor, wait
 
     from pyspark import inheritable_thread_target
     from pyspark.sql import Observation
 
     obs_dm = Observation()
+    # the side that failed first, "chain" or "docmap" (list appends
+    # are atomic); the other side's error is then the cancel's
+    failed: list[str] = []
+    chain_over = threading.Event()
 
     def _write_docmap() -> None:
         t_dm = time.time()
@@ -561,8 +550,21 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
             .write.mode("overwrite").parquet(f"{index_dir}/docmap/bpart={p}")
         steps["docmap"] = round(time.time() - t_dm, 3)
 
+    def _docmap_thread() -> None:
+        try:
+            _write_docmap()
+        except BaseException:
+            failed.append("docmap")
+            # stop the part: cancel its tf → postings jobs until the
+            # chain returns (a job it submits after one cancel meets
+            # the next)
+            while failed[0] == "docmap" and not chain_over.is_set():
+                spark.sparkContext.cancelJobsWithTag(tag)
+                chain_over.wait(0.5)
+            raise
+
     dm_pool = ThreadPoolExecutor(max_workers=1)
-    dm_fut = dm_pool.submit(inheritable_thread_target(spark)(_write_docmap))
+    dm_fut = dm_pool.submit(inheritable_thread_target(spark)(_docmap_thread))
     t_s = time.time()
     tf = None
 
@@ -651,16 +653,18 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
         ).write.mode("overwrite").parquet(f"{index_dir}/postings/bpart={p}")
         steps["encode"] = round(time.time() - t_s, 3)
     except BaseException:
+        failed.append("chain")
         # fail fast: a failed chain must not wait out the overlapped
         # docmap write — cancel the part's jobs until the docmap thread
         # returns (a job it submits after one cancel meets the next)
-        while not dm_fut.done():
+        while failed[0] == "chain" and not dm_fut.done():
             spark.sparkContext.cancelJobsWithTag(tag)
             wait([dm_fut], timeout=0.5)
-        raise
+        if failed[0] == "chain":
+            raise  # else the docmap's own error is raised below
     finally:
-        # join the overlapped docmap write before leaving the part (on
-        # the error path its own failure must not mask the chain's)
+        chain_over.set()
+        # join the overlapped docmap write before leaving the part
         dm_err = dm_fut.exception()
         dm_pool.shutdown()
         toks.unpersist()
@@ -820,7 +824,6 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
 
     meta = {
         "codec_version": CODEC_VERSION,
-        "block": BLOCK,
         # k1, b, min_token_length and the geometry: doc_int //
         # (shard_size * shards_per_part) == bpart by construction
         # (staging assigns dense ids in part order) — the query side

@@ -16,9 +16,10 @@ Plan shape per batch of queries:
    candidate count (step 3) both fit DRIVER_CUT_MAX_ROWS, the postings
    are collected through Arrow (a JVM-only job), decoded from the
    Arrow columns to per-shard numpy arrays and scored on the driver,
-   with no pandas; otherwise a scorer closure (TAAT, block-max WAND or
-   an "auto" per-query mix) is the scatter's
-   ``groupBy("shard").applyInPandas`` UDF. A warm ``IndexReader``
+   with no pandas, always by TAAT; otherwise a scorer closure (TAAT,
+   block-max WAND or an "auto" per-query mix) is the scatter's
+   ``groupBy("shard").applyInPandas`` UDF, each decoding its shard
+   through ``_decode_rows`` to per-term (ids, wtf). A warm ``IndexReader``
    keeps each term's decoded arrays in its driver term cache, so a
    search whose terms are all cached runs no postings job.
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
@@ -31,7 +32,8 @@ Plan shape per batch of queries:
 Exactness: TAAT scores every matched posting — results match the
 relational plan bit-for-bit up to float summation order (tests compare
 at 1e-9 and rank-identical). The block-max WAND scorer (wand.py) is the
-pruned alternative; both must agree exactly on fixtures.
+pruned alternative, bounded by the decoded weights (the postings
+store no block metadata); both must agree exactly on fixtures.
 """
 
 from __future__ import annotations
@@ -160,20 +162,20 @@ def _query_maps(queries: Sequence[str], min_token_length: int):
 
 def _decode_rows(pdf: pd.DataFrame, base: int, k1: float, b: float,
                  avgdl: float, tomb: np.ndarray | None = None):
-    """(th1, th2) -> list of (local_ids int64, wtf float64) chunks, each
-    sorted by doc id (chunks are salt ranges, mutually disjoint).
-    ``tomb``: sorted global doc ints to mask out (deleted docs)."""
-    decoded: dict[tuple[int, int], list[tuple[np.ndarray, np.ndarray]]] = {}
-    order = pdf.sort_values(["th1", "th2", "salt"])
-    for r in order.itertuples():
+    """The scatter's decoder, shared by its scorer closures: (th1, th2)
+    -> (local ids int64, wtf float64) of one shard's pandas group, the
+    term's salt chunks (disjoint ascending doc ranges) joined in salt
+    order. ``tomb``: sorted global doc ints to mask out (deleted docs)."""
+    chunks: dict[tuple[int, int], list[tuple[np.ndarray, np.ndarray]]] = {}
+    for r in pdf.sort_values(["th1", "th2", "salt"]).itertuples():
         ids = np.cumsum(r.gaps, dtype=np.int64)  # shard-local already
         wtf = _wtf(r.tfs, r.dls, k1, b, avgdl)
         if tomb is not None and tomb.size:
             keep = ~np.isin(ids + base, tomb)
-            ids = ids[keep]
-            wtf = wtf[keep]
-        decoded.setdefault((int(r.th1), int(r.th2)), []).append((ids, wtf))
-    return decoded
+            ids, wtf = ids[keep], wtf[keep]
+        chunks.setdefault((int(r.th1), int(r.th2)), []).append((ids, wtf))
+    return {h: tuple(np.concatenate(a) for a in zip(*cs))
+            for h, cs in chunks.items()}
 
 
 def _decode_arrow(tbl: pa.Table, k1: float, b: float, avgdl: float):
@@ -285,8 +287,7 @@ def make_taat_scorer(
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         base = int(pdf["shard"].iloc[0]) * shard_size
-        terms = {h: tuple(np.concatenate(a) for a in zip(*chunks)) for
-                 h, chunks in _decode_rows(pdf, base, k1, b, avgdl).items()}
+        terms = _decode_rows(pdf, base, k1, b, avgdl)
         return _shard_frame(*_score_dense(qmap, idf_map, terms, k, base,
                                           tomb, mode, qreq))
 
@@ -338,9 +339,8 @@ def make_mixed_scorer(
 
 
 def _wtf(tfs, dls, k1: float, b: float, avgdl: float) -> np.ndarray:
-    """BM25's tf part per posting. Over a block's (max tf, min dl) it is
-    the block's upper bound: it rises in tf and falls in dl, so the
-    bound holds under the CURRENT k1/b/avgdl as collection stats drift."""
+    """BM25's tf part per posting, under the CURRENT k1/b/avgdl: TAAT's
+    weights and, through their per-cell maxima, BMW's bounds."""
     t = np.asarray(tfs, dtype=np.float64)
     d = np.asarray(dls, dtype=np.float64)
     return t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * (d / avgdl)))
@@ -358,7 +358,9 @@ def search_index(
     (query_id, doc_id <original key>, score), globally tie-broken
     (score desc, doc_id asc per query). ``mode="and"`` = posting-list
     intersection (docs containing ALL distinct query terms; always the
-    TAAT scorer).
+    TAAT scorer). ``scorer`` ("taat", "bmw" or "auto") picks the
+    scatter's kernel only: a search whose Σdf fits
+    ``DRIVER_CUT_MAX_ROWS`` is scored on the driver, always by TAAT.
 
     One-shot form — re-reads the index tables per call. For repeated /
     interactive queries use :class:`IndexReader`, which pins the
@@ -472,6 +474,9 @@ class IndexReader:
 
     def search(self, queries: str | Sequence[str], k: int = 10,
                scorer: str = "taat", mode: str = "or") -> DataFrame:
+        """Like :func:`search_index`, over the warm caches: ``scorer``
+        picks the scatter's kernel only, a driver-site search always
+        runs TAAT."""
         return _search(self.spark, self.meta, self._dfs, self.index_dir,
                        queries, k, scorer, mode, term_cache=self._df_cache,
                        docmap_cache=self._docmap_cache)

@@ -1,23 +1,22 @@
 """Block-max pruned top-k scorer (WAND family) — vectorized.
 
-Runs inside the same scatter-gather harness as the TAAT scorer
-(searchidx.search_index(scorer="bmw")). Round 1 shipped a classic
-per-pivot WAND loop; its per-doc Python interpreter cost made it SLOWER
-than unpruned numpy TAAT (VERDICT r1). This is the vectorized redesign:
-block-max bounds are aggregated to fixed-width doc CELLS, pruning
-decisions are made per cell, and exact scoring is restricted to
-surviving cells — every per-posting operation is a numpy slice, no
-per-document Python.
+Runs in the scatter of search_index(scorer="bmw") (a driver-site
+search always runs TAAT), over the TAAT closure's decoded arrays.
+Round 1 shipped a classic per-pivot WAND loop; its per-doc Python
+interpreter cost made it SLOWER than unpruned numpy TAAT (VERDICT r1).
+This is the vectorized redesign: term weights are bounded per
+fixed-width doc CELL, pruning decisions are made per cell, and exact
+scoring is restricted to surviving cells — every per-posting operation
+is a numpy slice, no per-document Python.
 
 Per shard (shard-local doc space [0, shard_size)):
 
-1. Cell grid: width W (≈ shard_size/256). Query-INDEPENDENT per-term
-   structures, built once per shard call and reused by every query in
-   the batch:
+1. Cell grid: width W (≥ 16 docs, ≤ 8192 cells per shard).
+   Query-INDEPENDENT per-term structures, built once per shard call
+   and reused by every query in the batch:
    - off_t   = searchsorted(ids_t, cell boundaries) — O(cells·log df)
-   - cmax_t  = per-cell max of the block upper bound _wtf(maxtf,
-     mindl): block j covers docs (blast[j-1], blast[j]], an interval
-     max-assign over its cell span. Never touches the postings.
+   - cmax_t  = per-cell max of the term's decoded weights wtf, one
+     ``np.maximum.reduceat`` over the non-empty cells' offsets.
 2. Per query: cell_ub = Σ_t max(w_t, 0)·cmax_t. A NEGATIVE term weight
    (ln-IDF goes negative for df > N/2) upper-bounds at 0 — the doc may
    simply not contain the term — so negative-IDF queries are handled
@@ -37,17 +36,21 @@ score ≤ cell_ub < θ ≤ final k-th score — strictly below, so ties at
 the boundary cannot be lost. Pinned by tests against the TAAT scorer
 and the python oracle (test_wand).
 
-Salt chunks of one term are concatenated (they are disjoint ascending
-doc ranges by construction) so the scorer sees one ordered stream per
-term.
+Nothing is stored for the bounds: Block-max WAND stores per-block
+maxima so that a scorer can skip decoding blocks, but the scatter
+decodes every posting of every query term (searchidx._decode_rows)
+before any pruning decision. One pass over the decoded weights then
+gives each cell's exact maximum, tighter than any stored block maximum
+and valid under the current k1/b/avgdl by construction.
 
 Lineage: block-max bounds per Ding & Suel's Block-Max WAND (SIGIR
 2011); evaluating them at fixed doc-range granularity instead of a
 per-document pivot loop is the vectorization-friendly variant (cf. the
 columnar/vectorized inverted-index line of work, e.g. "Columnar
 Formatted Inverted Index for Highly-Paralleled, Vectorized Query
-Processing", ICDE 2025 — see PAPERS.md), which trades a slightly
-looser bound for batch-scoring whole candidate ranges in numpy.
+Processing", ICDE 2025 — see PAPERS.md — which likewise bounds
+decoded columnar blocks), batch-scoring whole candidate ranges in
+numpy.
 """
 
 from __future__ import annotations
@@ -63,19 +66,6 @@ import pandas as pd
 # docs; a 1M shard → 8192 cells of ~128 docs.
 MAX_CELLS = 8192
 MIN_CELL_WIDTH = 16
-
-
-def _cell_width(size: int) -> int:
-    return max(MIN_CELL_WIDTH, -(-size // MAX_CELLS))
-
-
-def _concat_term_chunks(chunks):
-    """Merge salt chunks (disjoint ascending ranges) into one list."""
-    ids = np.concatenate([c[0] for c in chunks])
-    wtf = np.concatenate([c[1] for c in chunks])
-    blast = np.concatenate([c[2] for c in chunks])
-    bmaxw = np.concatenate([c[3] for c in chunks])
-    return ids, wtf, blast, bmaxw
 
 
 def _multi_arange(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
@@ -94,53 +84,32 @@ class _TermStruct:
     """Query-independent per-term shard structures (built once per
     shard, shared by every query in the batch)."""
 
-    __slots__ = ("ids", "wtf", "off", "cmax", "n")
+    __slots__ = ("ids", "wtf", "off", "cmax")
 
-    def __init__(self, ids, wtf, blast, bmaxw, n_cells: int, width: int):
+    def __init__(self, ids, wtf, n_cells: int, width: int):
         self.ids = ids
         self.wtf = wtf
-        self.n = ids.size
         bounds = np.arange(n_cells + 1, dtype=np.int64) * width
         self.off = np.searchsorted(ids, bounds, side="left")
-        cmax = np.zeros(n_cells, dtype=np.float64)
-        if ids.size:
-            # per-cell max contribution: from block metadata intervals
-            # when the term is dense (cheap, spans are narrow), from the
-            # exact per-posting wtf when sparse (block intervals of a
-            # sparse term over-cover — a 128-posting block can span the
-            # whole shard and would mark EVERY cell, killing pruning).
-            # Whichever touches fewer elements is also the tighter one.
-            spans = None
-            if blast.size:
-                firsts = np.empty_like(blast)
-                firsts[0] = ids[0]
-                firsts[1:] = blast[:-1] + 1
-                c0 = np.clip(firsts // width, 0, n_cells - 1)
-                c1 = np.clip(blast // width, 0, n_cells - 1)
-                lens = c1 - c0 + 1
-                spans = int(lens.sum())
-            if spans is not None and spans <= ids.size:
-                cells = _multi_arange(c0, c1 + 1)
-                np.maximum.at(cmax, cells, np.repeat(bmaxw, lens))
-            else:
-                np.maximum.at(cmax, ids // width, wtf)
-        self.cmax = cmax
+        # each cell's bound: the max wtf of the term's postings in it.
+        # Cells are contiguous posting ranges, so one reduceat over the
+        # non-empty cells' starts reduces each cell's own slice
+        self.cmax = np.zeros(n_cells, dtype=np.float64)
+        nonempty = np.flatnonzero(np.diff(self.off))
+        if nonempty.size:
+            self.cmax[nonempty] = np.maximum.reduceat(
+                wtf, self.off[nonempty])
 
 
 class _TermList:
-    """Unit-test/bench construction shim: raw posting arrays + weight.
-    ``contrib`` is the exact per-posting contribution (w·wtf)."""
+    """Unit-test construction shim: raw posting arrays + weight."""
 
-    __slots__ = ("ids", "wtf", "blast", "bmaxw", "w", "contrib", "n")
+    __slots__ = ("ids", "wtf", "w")
 
-    def __init__(self, ids, wtf, blast, bmaxw, w):
+    def __init__(self, ids, wtf, w):
         self.ids = np.asarray(ids, dtype=np.int64)
         self.wtf = np.asarray(wtf, dtype=np.float64)
-        self.blast = np.asarray(blast, dtype=np.int64)
-        self.bmaxw = np.asarray(bmaxw, dtype=np.float64)
         self.w = float(w)
-        self.contrib = self.w * self.wtf
-        self.n = self.ids.size
 
 
 def _score_pruned(
@@ -149,16 +118,12 @@ def _score_pruned(
     n_cells: int,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Exact top-k candidates via cell-level block-max pruning.
-    ``terms`` = [(query weight, shard structures)]. Returns
-    (doc ids, scores) of the pooled (scored) docs — the caller applies
-    the final (score desc, doc asc) cut."""
-    live_terms = [(w, t) for w, t in terms if t.n > 0]
-    if not live_terms:
-        return np.empty(0, dtype=np.int64), np.empty(0)
-
+    ``terms`` = [(query weight, shard structures)], each with at least
+    one posting. Returns (doc ids, scores) of the pooled (scored) docs
+    — the caller applies the final (score desc, doc asc) cut."""
     cell_ub = np.zeros(n_cells, dtype=np.float64)
     pcount = np.zeros(n_cells, dtype=np.int64)
-    for w, t in live_terms:
+    for w, t in terms:
         if w > 0:
             cell_ub += w * t.cmax
         pcount += np.diff(t.off)
@@ -167,7 +132,7 @@ def _score_pruned(
         return np.empty(0, dtype=np.int64), np.empty(0)
     order = live[np.argsort(-cell_ub[live], kind="stable")]
 
-    size = int(max(t.ids[-1] for _, t in live_terms)) + 1
+    size = int(max(t.ids[-1] for _, t in terms)) + 1
     acc = np.zeros(size, dtype=np.float64)
 
     pool_d: list[np.ndarray] = []
@@ -185,7 +150,7 @@ def _score_pruned(
             break
         cells = order[i:j]
         sel: list[np.ndarray] = []
-        for w, t in live_terms:
+        for w, t in terms:
             lo = t.off[cells]
             hi = t.off[cells + 1]
             m = hi > lo
@@ -217,7 +182,7 @@ def _score_pruned(
             if remaining > 0.5 * int(csum[-1]):
                 acc = np.zeros(size, dtype=np.float64)
                 touched = np.zeros(size, dtype=bool)
-                for w, t in live_terms:
+                for w, t in terms:
                     acc[t.ids] += w * t.wtf
                     touched[t.ids] = True
                 docs = np.flatnonzero(touched)
@@ -234,16 +199,14 @@ def _bmw_one(lists: list[_TermList], k: int):
     """Exact top-k (score desc, doc asc) — unit-test entry over raw
     _TermList inputs; builds cell structures ad hoc and delegates to
     the vectorized pruned scorer."""
-    lists = [t for t in lists if t.n > 0]
+    lists = [t for t in lists if t.ids.size]
     if not lists:
         return []
     size = int(max(t.ids[-1] for t in lists)) + 1
     width = max(8, -(-size // MAX_CELLS))
     n_cells = -(-size // width)
-    terms = [
-        (t.w, _TermStruct(t.ids, t.wtf, t.blast, t.bmaxw, n_cells, width))
-        for t in lists
-    ]
+    terms = [(t.w, _TermStruct(t.ids, t.wtf, n_cells, width))
+             for t in lists]
     docs, scores = _score_pruned(terms, k, n_cells)
     if docs.size == 0:
         return []
@@ -261,41 +224,22 @@ def make_bmw_scorer(
     shard_size: int,
     tomb: np.ndarray | None = None,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    from .searchidx import _decode_rows, _shard_frame, _wtf
+    from .searchidx import _decode_rows, _shard_frame
 
-    width = _cell_width(shard_size)
+    width = max(MIN_CELL_WIDTH, -(-shard_size // MAX_CELLS))
     n_cells = -(-shard_size // width)
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(pdf["shard"].iloc[0])
-        base = shard * shard_size
-        # block upper bounds from stats-drift-robust (maxtf, mindl)
-        # metadata, evaluated with the CURRENT k1/b/avgdl
-        blasts: dict[tuple[int, int], list] = {}
-        for r in pdf.sort_values(["th1", "th2", "salt"]).itertuples():
-            blasts.setdefault((int(r.th1), int(r.th2)), []).append(
-                (
-                    np.asarray(r.block_last, dtype=np.int64) - base,
-                    _wtf(r.block_maxtf, r.block_mindl, k1, b, avgdl),
-                )
-            )
-        decoded = _decode_rows(pdf, base, k1, b, avgdl, tomb)
-
+        base = int(pdf["shard"].iloc[0]) * shard_size
         # query-independent per-term structures, built ONCE per shard
-        # and shared across the whole query batch
-        structs: dict[tuple[int, int], _TermStruct] = {}
-        for term, chunks in decoded.items():
-            joined = [
-                (ids, wtf, bl, bm)
-                for (ids, wtf), (bl, bm) in zip(chunks, blasts[term])
-            ]
-            ids, wtf, bl, bm = _concat_term_chunks(joined)
-            if ids.size == 0:
-                # every posting tombstone-masked in _decode_rows
-                continue
-            # (under tombstones the block metadata stays a valid, now
-            # looser, upper bound — masked docs only remove candidates)
-            structs[term] = _TermStruct(ids, wtf, bl, bm, n_cells, width)
+        # and shared across the whole query batch; tombstones are
+        # masked at decode, so a fully deleted term drops out here
+        structs = {
+            term: _TermStruct(ids, wtf, n_cells, width)
+            for term, (ids, wtf) in _decode_rows(
+                pdf, base, k1, b, avgdl, tomb).items()
+            if ids.size
+        }
 
         rows_q: list[int] = []
         rows_d: list[np.ndarray] = []

@@ -104,8 +104,8 @@ def test_postings_encode_is_spark_sql_one_exchange(spark):
     """The part's postings encode runs no Python: no MapInPandas /
     ArrowEvalPython / BatchEvalPython node, exactly one Exchange, hashed
     on the full (shard, th1, th2, salt) group key, and no array-of-struct
-    field extraction inside a lambda (the block arrays read the int
-    list attributes, never ``p.tf`` per block)."""
+    field extraction inside a lambda (the gaps lambda reads the int
+    ``ids`` attribute, never the struct list)."""
     import re
 
     from oboyu_spark.operators.postings import _encoded_postings

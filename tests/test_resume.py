@@ -699,6 +699,61 @@ def test_failing_part_build_fails_fast(spark, tmp_path, monkeypatch):
     assert not running, f"part jobs still running: {running}"
 
 
+def test_docmap_failure_stops_its_part(spark, tmp_path, monkeypatch):
+    """A part whose overlapped docmap write fails stops at once: the
+    docmap thread cancels the part's tagged jobs while the tf → postings
+    chain is held (a sleeping step patched into tokenization), so the
+    part raises the docmap's own error well inside the hold, writes no
+    manifest and leaves none of its jobs running; a re-run converges to
+    a fresh build."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from oboyu_spark.operators import termindex
+
+    hold_s = 300
+    sc = spark.sparkContext
+    part_tags: list = []
+    real_parquet = DataFrameWriter.parquet
+    real_tokens = termindex.with_tokens
+
+    def held(batches):
+        for b in batches:
+            time.sleep(hold_s)
+            yield b
+
+    def with_tokens(*a, **kw):
+        out = real_tokens(*a, **kw)
+        return out.mapInPandas(held, out.schema)
+
+    def parquet(self, path, *a, **kw):
+        if "/docmap/bpart=" in path:
+            part_tags.extend(sc.getJobTags())
+            raise RuntimeError("injected docmap failure")
+        return real_parquet(self, path, *a, **kw)
+
+    d = str(tmp_path / "idx")
+    docs = _corpus(spark, n_convs=10)
+    geometry = dict(shard_size=1000, salt_chunk=60, shards_per_part=1,
+                    id_assign_partitions=2)
+    t0 = time.time()
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", parquet)
+        m.setattr(termindex, "with_tokens", with_tokens)
+        with pytest.raises(RuntimeError, match="injected docmap failure"):
+            build_index(docs, d, **geometry)
+    assert time.time() - t0 < hold_s / 3, "the part waited out the chain"
+    mdir = f"{d}/manifest"
+    assert not os.path.isdir(mdir) or not os.listdir(mdir)
+    tags = [t for t in part_tags if t.startswith("oboyu-part-")]
+    assert tags, part_tags
+    assert not _running_tagged_jobs(sc, tags)
+
+    build_index(docs, d, **geometry)
+    fresh = str(tmp_path / "fresh")
+    build_index(docs, fresh, **geometry)
+    assert _results(spark, d, k=12) == _results(spark, fresh, k=12)
+
+
 # ---------------------------------------------------------------------------
 # sync_docs as one mutation step: crash windows, faults, chain identity
 # ---------------------------------------------------------------------------

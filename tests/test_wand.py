@@ -80,10 +80,11 @@ def test_bmw_matches_oracle(spark, corpus, index_dir, monkeypatch):
 
 
 def test_bmw_unit_against_bruteforce():
-    """Pure-python property check of _bmw_one on random posting lists."""
+    """Pure-python property check of _bmw_one on random posting lists;
+    every posting's weight is within its cell's bound."""
     import numpy as np
 
-    from oboyu_spark.operators.wand import _TermList, _bmw_one
+    from oboyu_spark.operators.wand import _TermList, _TermStruct, _bmw_one
 
     rng = random.Random(1234)
     for trial in range(40):
@@ -97,15 +98,13 @@ def test_bmw_unit_against_bruteforce():
             ids = np.array(sorted(rng.sample(range(n_docs), df)), dtype=np.int64)
             wtf = np.array([rng.random() for _ in range(df)])
             w = rng.random() * 3
-            block = 8
-            nb = (df + block - 1) // block
-            blast = np.array(
-                [ids[min((i + 1) * block, df) - 1] for i in range(nb)], dtype=np.int64
-            )
-            bmaxw = np.array(
-                [wtf[i * block : (i + 1) * block].max() for i in range(nb)]
-            )
-            lists.append(_TermList(ids, wtf, blast, bmaxw, w))
+            width = (1, 8, 16)[trial % 3]
+            t = _TermStruct(ids, wtf, -(-n_docs // width), width)
+            assert (wtf <= t.cmax[ids // width]).all(), f"trial {trial}"
+            exact = np.zeros_like(t.cmax)
+            np.maximum.at(exact, ids // width, wtf)
+            assert np.array_equal(t.cmax, exact), f"trial {trial}"
+            lists.append(_TermList(ids, wtf, w))
             for d, x in zip(ids.tolist(), (w * wtf).tolist()):
                 brute[d] = brute.get(d, 0.0) + x
         expected = sorted(brute.items(), key=lambda x: (-x[1], x[0]))[:k]
