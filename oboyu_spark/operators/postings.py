@@ -8,8 +8,11 @@ checkpoint-resume with per-partition lineage):
                                    salt_chunk, tokenizer, k1/b) frozen
                                    at staging — every part build,
                                    append, compaction and finalize
-                                   reads them here — plus the parts
-                                   and per-generation pid offsets
+                                   reads them here — the key and text
+                                   types (doc_id_type, text_type: every
+                                   staged read declares its schema from
+                                   them), plus the parts and
+                                   per-generation pid offsets
       staged/gen=G/pid=P/*.parquet frozen (doc_id, text, rn) — the
                                    build's deterministic input
                                    snapshot, written in ONE corpus
@@ -60,7 +63,9 @@ checkpoint-resume with per-partition lineage):
                                    fingerprint, status, metrics
                                    (docs, tokens, postings, bytes, secs,
                                    the part's own jobs' shuffle bytes)
-      stats/meta.json              global stats + aggregate metrics;
+      stats/meta.json              global stats + aggregate metrics
+                                   (n_docs, total_terms: the manifests'
+                                   sums less the tombstoned docs);
                                    its codec_version is the ONE layout
                                    gate — load_meta refuses any other
                                    version
@@ -80,7 +85,9 @@ scale parts are large enough that hot terms are hot in every part)
 exceeds ``salt_chunk`` is split into range-disjoint sub-chunks BEFORE
 the build shuffle, bounding every reducer group even for stop-word
 terms. Chunks stay ordered and disjoint → the decoder joins them into
-one ordered stream per term and shard.
+one ordered stream per term and shard. A within-part df is at most the
+part's doc count, so a geometry with shard_size·shards_per_part ≤
+salt_chunk has no hot term and its parts skip the hot-term job.
 
 The reference's analog of this file is the in-memory dict index build
 (inverted_index_builder.py:50-68, bm25_indexer.py:121-233) plus the
@@ -118,7 +125,7 @@ POSTINGS_SCHEMA = (
     "gaps array<int>, tfs array<int>, dls array<int>"
 )
 
-CODEC_VERSION = 8
+CODEC_VERSION = 9
 # Read schemas of the engine-internal tables, exactly as the parquet
 # reader infers them (the postings and docmap roots add their bpart
 # partition column). Queries declare them: a spark.read.parquet without
@@ -134,6 +141,20 @@ def docmap_read_schema(doc_id_type: str) -> str:
     """The docmap's read schema: doc_id has the caller's key type,
     recorded at staging as ``doc_id_type`` in staged.json and meta.json."""
     return f"doc_id {doc_id_type}, doc_int long, dl long, fp string, bpart int"
+
+
+def staged_read_schema(smeta: dict) -> str:
+    """A staged slice's file schema: doc_id and text have the caller's
+    types, recorded at staging as ``doc_id_type`` and ``text_type`` in
+    staged.json; a generation-root read adds the ``pid int`` column."""
+    return f"doc_id {smeta['doc_id_type']}, text {smeta['text_type']}, rn bigint"
+
+
+def _staged_types(keyed: DataFrame) -> dict:
+    """staged.json's type record of a (doc_id, text) frame, taken from
+    its schema (no job)."""
+    return {f"{c}_type": keyed.schema[c].dataType.simpleString()
+            for c in ("doc_id", "text")}
 
 
 def read_docmap(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -272,16 +293,12 @@ def _tag_local_ids(df: DataFrame) -> DataFrame:
     collecting counts from a *recomputable* shuffle between two
     actions; counting the immutable staged parquet is not that.
 
-    r8 (guide §4): the tag is two JVM integer expressions over
-    ``monotonically_increasing_id()`` — whose value IS
-    (partition id << 33) | within-partition row index — instead of a
-    mapInPandas wrapper, which round-tripped every corpus text byte
-    JVM→Python→JVM just to attach two integers. Same recompute
-    contract as before (the id source is nondeterministic under
-    retries either way, which is exactly why ids are always re-derived
-    from the FROZEN written files, never from this live expression).
-    Row-index width caps a staging partition at 2^33 rows — far above
-    any real per-partition row count."""
+    The tag is two JVM integer expressions over
+    ``monotonically_increasing_id()``, whose value IS (partition id <<
+    33) | within-partition row index: no Python pass over the text. It
+    is nondeterministic under retries, which is why ids are re-derived
+    from the FROZEN written files. A staging partition holds < 2^33
+    rows."""
     mid = F.monotonically_increasing_id()
     tagged = df.withColumn("__mid", mid)
     return tagged.select(
@@ -325,23 +342,22 @@ def _stage_docs(
         tagged.write.mode("overwrite").partitionBy("pid").parquet(gdir)
     finally:
         keyed.unpersist()
-    # zero-row input writes only _SUCCESS — no pid=* dirs to infer a
-    # schema from: an empty generation (round-1 parity)
-    per_pid: dict[int, tuple[int, int, int]] = {}
-    if any(f.startswith("pid=") for f in os.listdir(gdir)):
-        # one integrity/offsets job: range partitioning puts EQUAL keys
-        # in the same pid, so global key-distinctness == Σ per-pid
-        # distincts
-        per_pid = {
-            int(r["pid"]): (int(r["n"]), int(r["mx"]), int(r["nk"]))
-            for r in spark.read.parquet(gdir).groupBy("pid")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max("rn").alias("mx"),
-                F.countDistinct("doc_id").alias("nk"),
-            )
-            .collect()
-        }
+    # one integrity/offsets job: range partitioning puts EQUAL keys in
+    # the same pid, so global key-distinctness == Σ per-pid distincts.
+    # The schema is declared, so zero-row input (only _SUCCESS written)
+    # reads as an empty generation.
+    per_pid = {
+        int(r["pid"]): (int(r["n"]), int(r["mx"]), int(r["nk"]))
+        for r in spark.read.schema(
+            staged_read_schema(_staged_types(keyed)) + ", pid int",
+        ).parquet(gdir).groupBy("pid")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max("rn").alias("mx"),
+            F.countDistinct("doc_id").alias("nk"),
+        )
+        .collect()
+    }
     for pid, (n, mx, nk) in sorted(per_pid.items()):
         if mx != n - 1:
             raise RuntimeError(
@@ -364,7 +380,11 @@ def _stage_docs(
 
 def _staged_meta(index_dir: str) -> dict:
     with open(f"{index_dir}/staged.json") as fh:
-        return json.load(fh)
+        smeta = json.load(fh)
+    if "text_type" not in smeta:  # staged by an older codec version
+        raise ValueError(f"{index_dir}/staged.json records no text_type "
+                         "— rebuild the index")
+    return smeta
 
 
 def _part_docs(smeta: dict) -> int:
@@ -388,18 +408,16 @@ def staged_part_df(spark: SparkSession, index_dir: str, p: int,
     else:
         raise ValueError(f"part {p} is not covered by any staged generation")
     offs = sorted((int(k), int(v)) for k, v in g["offsets"].items())
-    sel: list[int] = []
-    sel_offs: dict[int, int] = {}
+    sel: dict[int, int] = {}  # pid → offset of the pids overlapping p
     for i, (pid, off) in enumerate(offs):
         pid_end = offs[i + 1][1] if i + 1 < len(offs) else g["base"] + g["n"]
         if off < hi and pid_end > lo:
-            sel.append(pid)
-            sel_offs[pid] = off
-    sub = spark.read.parquet(f"{index_dir}/staged/gen={g['gen']}").filter(
-        _in_ints("pid", sel)
-    )
+            sel[pid] = off
+    sub = spark.read.schema(staged_read_schema(smeta) + ", pid int") \
+        .parquet(f"{index_dir}/staged/gen={g['gen']}") \
+        .filter(_in_ints("pid", sel))
     omap = F.create_map(
-        *[x for pid in sel for x in (F.lit(pid), F.lit(sel_offs[pid]))]
+        *[x for pid, off in sel.items() for x in (F.lit(pid), F.lit(off))]
     )
     sub = sub.withColumn("doc_int", omap[F.col("pid")] + F.col("rn"))
     return sub.filter((F.col("doc_int") >= lo) & (F.col("doc_int") < hi))
@@ -430,8 +448,9 @@ def _stage(
     g, parts = _stage_docs(keyed, index_dir, part_docs, num_partitions, 0, 0)
     meta = {
         "settings": settings,
-        # the docmap's key type: its read schema is declared from it
-        "doc_id_type": keyed.schema["doc_id"].dataType.simpleString(),
+        # the key and text types: the staged and docmap read schemas are
+        # declared from them
+        **_staged_types(keyed),
         "n_docs": g["n"],
         "parts": parts,
         "gens": [g],
@@ -456,6 +475,8 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
     against the vocabulary either. Net per part: ONE wide shuffle of
     (doc, dl, term) for the tf aggregate, one small term-agg shuffle
     for the hot-term set, and the (shard, term, salt) encode shuffle.
+    A part of at most ``salt_chunk`` docs holds no hot term (a df
+    within the part is at most its doc count), so it skips that job.
     """
     t0 = time.time()
     smeta = _staged_meta(index_dir)
@@ -475,18 +496,13 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
     # consumers below never touch the wide column again.
     from ..functions.text import collapse_whitespace
 
-    from pyspark.sql.types import ArrayType
-
-    if isinstance(sub.schema["text"].dataType, ArrayType):
+    if smeta["text_type"].startswith("array<"):
         # PRE-TOKENIZED input (array<string> text column): the caller
         # already ran the tokenizer — pass the array through. The
         # change-detection fingerprint hashes the space-joined token
-        # stream (consistent for any index built from the same
-        # pretokenized source; don't mix raw-text and pretokenized
-        # builds of one index). Used by scaling_bench's compute-phase
-        # isolation (VERDICT r6 #7): the timed parts phase is then the
-        # aggregate+encode compute, with the regex tokenizer out of
-        # the measurement.
+        # stream (_mutate refuses to mix raw and pretokenized text in
+        # one index). scaling_bench uses it to time the parts phase
+        # without the regex tokenizer.
         toks = (
             sub.withColumn("tokens", F.col("text"))
             .withColumn("dl", F.size("tokens"))
@@ -504,19 +520,16 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
     toks = toks.persist()
     steps: dict[str, float] = {}
 
-    # docmap for this part — straight projection, no join, no agg; the
-    # per-part (n_docs, tokens) stats ride the SAME action as an
-    # Observation (r8: one fewer barrier per part — the standalone
-    # toks.agg job re-scanned the persisted frame just for two
-    # scalars). observe() sits ABOVE the range exchange so its
-    # accumulators never see the exchange's boundary-sampling pass.
-    # The write is submitted from a helper thread (r8 cont., guide
-    # §2.6): it shares no dependency with the tf→encode chain below, so
-    # Spark schedules its stages alongside the tf aggregate instead of
-    # serializing the whole docmap write onto the part's critical path
-    # (~1.5 s of a ~9 s part wall at bench geometry, and the straggler
-    # tail of every multi-part build). Both consumers read the SAME
-    # persisted `toks` frame. The block lock is per executor: there the
+    # docmap for this part — straight projection, no join, no agg, no
+    # exchange: sortWithinPartitions writes doc_int-sorted files, whose
+    # row groups cover narrow id ranges for hydration's pushed doc_int
+    # IN filter (a range exchange adds a boundary-sampling job). The
+    # part's (n_docs, tokens) ride the write as an Observation; finalize
+    # sums them. The write is submitted from a helper thread: it shares
+    # no dependency with the tf→encode chain below, so Spark schedules
+    # its stages alongside the tf aggregate instead of on the part's
+    # critical path. Both consumers read the SAME persisted `toks`
+    # frame. The block lock is per executor: there the
     # first task to reach an uncached partition tokenizes and stores
     # it, and the other job's concurrent task waits and reads the block
     # (one tokenization per partition in local mode). Tasks on two
@@ -536,23 +549,17 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
     failed: list[str] = []
     chain_over = threading.Event()
 
-    def _write_docmap() -> None:
+    def _docmap_thread() -> None:
         t_dm = time.time()
-        toks.select(
-            "doc_id", "doc_int", F.col("dl").cast("long").alias("dl"), "fp",
-        ) \
-            .repartitionByRange(4, "doc_int").sortWithinPartitions("doc_int") \
-            .observe(
+        try:
+            toks.select(
+                "doc_id", "doc_int", F.col("dl").cast("long").alias("dl"),
+                "fp",
+            ).sortWithinPartitions("doc_int").observe(
                 obs_dm,
                 F.count(F.lit(1)).alias("n"),
                 F.coalesce(F.sum("dl"), F.lit(0)).alias("tokens"),
-            ) \
-            .write.mode("overwrite").parquet(f"{index_dir}/docmap/bpart={p}")
-        steps["docmap"] = round(time.time() - t_dm, 3)
-
-    def _docmap_thread() -> None:
-        try:
-            _write_docmap()
+            ).write.mode("overwrite").parquet(f"{index_dir}/docmap/bpart={p}")
         except BaseException:
             failed.append("docmap")
             # stop the part: cancel its tf → postings jobs until the
@@ -562,6 +569,7 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
                 spark.sparkContext.cancelJobsWithTag(tag)
                 chain_over.wait(0.5)
             raise
+        steps["docmap"] = round(time.time() - t_dm, 3)
 
     dm_pool = ThreadPoolExecutor(max_workers=1)
     dm_fut = dm_pool.submit(inheritable_thread_target(spark)(_docmap_thread))
@@ -581,20 +589,23 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
             .groupBy("doc_int", "dl", "th1", "th2")
             .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         )
-        tf = tf.persist()
-
         # the hot-term (skew) set: the part's one term-keyed action,
         # which also materializes the persisted tf frame for the encode
         # below. Hot terms are few by definition (df > salt_chunk) —
         # broadcast map, no join. The vocabulary itself is aggregated
-        # from the written postings at finalize.
-        hot = [
-            (int(r["th1"]), int(r["th2"]), min(-(-int(r["df"]) // salt_chunk), 64))
-            for r in tf.groupBy("th1", "th2")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > salt_chunk)
-            .collect()
-        ]
+        # from the written postings at finalize. A part of at most
+        # salt_chunk docs has none: no action, and tf keeps one consumer.
+        hot = []
+        if _part_docs(smeta) > salt_chunk:
+            tf = tf.persist()
+            hot = [
+                (int(r["th1"]), int(r["th2"]),
+                 min(-(-int(r["df"]) // salt_chunk), 64))
+                for r in tf.groupBy("th1", "th2")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .filter(F.col("df") > salt_chunk)
+                .collect()
+            ]
         steps["tf_vocab"] = round(time.time() - t_s, 3)
         t_s = time.time()
         if hot:
@@ -617,34 +628,20 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
         )
         # ONE encode shuffle, hashed on the FULL (shard, th1, th2, salt)
         # group key, then the group-by and list encode in Spark SQL (see
-        # _encoded_postings); the output is sorted by th1 within each
-        # file for row-group pruning, so no post-encode repartition.
-        # th1-first sort nesting: files keep ascending th1 → tight
-        # parquet row-group min/max for the query-side term filter (each
-        # file holds a hash-scattered SUBSET of terms, but the rows
-        # within it are th1-sorted, so row groups still cover narrow
-        # disjoint th1 ranges).
-        # Partitioning key (r8): hashing on `shard` alone capped the encode
-        # stage's parallelism at the part's shard count — 6 tasks for the
-        # wide-vocab bench geometry, ONE task for a 130k-doc big-shard part
-        # — which is the measured wide-vocab scaling floor (VERDICT r7 #2:
-        # 2→8 cores = 0.54). Groups need not be co-located per shard
-        # (the query side re-groups by shard anyway), so hashing the
-        # full key spreads the ~|vocab| tiny posting groups evenly over a
-        # scale-adaptive task count (≥ cluster parallelism, never fewer
-        # than the shard count) and also de-skews hot salted terms.
+        # _encoded_postings). Each file's rows are th1-sorted, so row
+        # groups cover narrow th1 ranges for the query-side term filter:
+        # no post-encode repartition. Hashing on shard alone would cap
+        # the stage at the part's shard count (ONE task for a big-shard
+        # part); the full key spreads the tiny posting groups over ≥
+        # cluster parallelism tasks and de-skews hot salted terms.
         n_enc = max(cfg["shards_per_part"],
                     spark.sparkContext.defaultParallelism)
         postings = _encoded_postings(enriched, max(2, n_enc), shard_size)
         # each part owns its own postings root → part builds can run
-        # CONCURRENTLY (disjoint output paths, no shared-directory
-        # partition-overwrite semantics to get wrong); readers discover
-        # bpart=*/ via normal partition inference.
-        # The manifest counters ride the write as an Observation (r8
-        # cont.): the separate read-back job existed only to fetch two
-        # sums (~0.3 s/part of pure job latency). Sibling-wipe detection is
-        # unchanged — finalize_index still reads the FINAL postings dir and
-        # compares it against these claimed counts.
+        # CONCURRENTLY (disjoint output paths); readers discover bpart=*/
+        # by partition inference. The manifest counters ride the write
+        # as an Observation; finalize_index's integrity gate compares
+        # the FINAL postings dir against them.
         obs_po = Observation()
         postings.observe(
             obs_po,
@@ -727,15 +724,10 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
         )
         .withColumn("bparts", F.when(F.size("ba") <= F.lit(_CAP), F.col("ba")))
         .drop("ba")
-        # th1-HASH-partitioned, th1-sorted WITHIN files (r8 cont.): the
-        # lookup's pushed In(th1) filter prunes via row-group min/max
-        # stats, which only need the within-file sort order — the same
-        # device as the encode stage's output files. A
-        # repartitionByRange would buy globally disjoint file ranges at
-        # the cost of the range sampler EXECUTING THE AGGREGATION A
-        # SECOND TIME (a range exchange samples its child plan to pick
-        # boundaries; the child here is the whole groupBy +
-        # collect_set reduce, not a cached scan).
+        # th1-HASH-partitioned, th1-sorted WITHIN files: the lookup's
+        # pushed In(th1) filter prunes via row-group min/max stats,
+        # which only need the within-file sort order. A range exchange
+        # would sample its child, running the whole aggregation twice.
         .repartition(nparts, "th1")
         .sortWithinPartitions("th1", "th2")
     )
@@ -745,17 +737,19 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     """Aggregate the vocabulary from the postings, compute collection
     stats, check every part's postings against its manifest, write meta
     (the build settings are copied from staged.json for the query
-    side)."""
+    side). n_docs and total_terms are the manifests' sums (each part
+    observes them on its docmap write) less the docmap rows of the
+    tombstoned ids, read by a bpart- and doc_int-pruned scan: no full
+    docmap scan."""
     from pyspark.sql import Observation
 
     smeta = _staged_meta(index_dir)
-    dm_schema = docmap_read_schema(smeta["doc_id_type"])
     # the vocabulary row count rides the write as an Observation: no
     # count job over the written table
     obs_vocab = Observation()
     vocab = _merged_vocab_frame(spark, index_dir).observe(
         obs_vocab, F.count(F.lit(1)).alias("n"))
-    # the vocabulary aggregate shares nothing with the docmap stats /
+    # the vocabulary aggregate shares nothing with the tombstone /
     # integrity jobs below — run it on a helper thread so Spark
     # schedules them together (guide §2.6) instead of three sequential
     # barriers; the thread inherits the caller's job group and tags
@@ -770,20 +764,6 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
         )
     ))
     try:
-        if os.path.isdir(f"{index_dir}/docmap"):
-            docmap = spark.read.schema(dm_schema).parquet(f"{index_dir}/docmap")
-        else:
-            docmap = spark.createDataFrame([], dm_schema)
-        tomb = load_tombstones(index_dir)
-        if tomb:
-            docmap = docmap.filter(~_in_ints("doc_int", tomb))
-        cs = docmap.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("total"),
-        ).collect()[0]
-        n_docs, total_terms = int(cs["n"]), int(cs["total"])
-        avgdl = total_terms / n_docs if n_docs else 0.0
-
         parts = []
         mdir = f"{index_dir}/manifest"
         if os.path.isdir(mdir):
@@ -792,6 +772,20 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
                     with open(f"{mdir}/{fn}") as fh:
                         parts.append(json.load(fh))
         total_secs = sum(pm.get("build_seconds", 0) for pm in parts)
+        n_docs = sum(pm.get("n_docs", 0) for pm in parts)
+        total_terms = sum(pm.get("tokens", 0) for pm in parts)
+        tomb = load_tombstones(index_dir)
+        if tomb:
+            # a tombstoned id a compaction already dropped matches no row
+            part_docs = _part_docs(smeta)
+            gone = read_docmap(spark, index_dir).filter(
+                _in_ints("bpart", {d // part_docs for d in tomb})
+                & _in_ints("doc_int", tomb)
+            ).agg(F.count(F.lit(1)).alias("n"),
+                  F.coalesce(F.sum("dl"), F.lit(0)).alias("total")).collect()[0]
+            n_docs -= int(gone["n"])
+            total_terms -= int(gone["total"])
+        avgdl = total_terms / n_docs if n_docs else 0.0
 
         # integrity gate, per part: each bpart's FINAL postings dir must
         # hold exactly what its manifest claims (guards against
@@ -1044,7 +1038,8 @@ def _drop_staged(spark: SparkSession, index_dir: str, smeta: dict,
         if not os.path.isdir(src) and os.path.isdir(tmp):
             os.rename(tmp, src)
     for k, rns in removals.items():
-        spark.read.parquet(paths[k][0]).filter(~_in_ints("rn", rns)) \
+        spark.read.schema(staged_read_schema(smeta)).parquet(paths[k][0]) \
+            .filter(~_in_ints("rn", rns)) \
             .write.mode("overwrite").parquet(paths[k][1])
     for src, tmp in paths.values():
         shutil.rmtree(src, ignore_errors=True)
@@ -1074,11 +1069,14 @@ def _mutate(spark: SparkSession, index_dir: str, meta: dict,
     df, and df > N breaks the ln-IDF domain)."""
     smeta = _staged_meta(index_dir)
     if docs is not None:
-        key_type = docs.schema["doc_id"].dataType.simpleString()
-        if key_type != smeta["doc_id_type"]:
+        have = _staged_types(docs)
+        want = {k: smeta[k] for k in have}
+        if have != want:
             raise ValueError(
-                f"{index_dir} holds {smeta['doc_id_type']} doc ids, the "
-                f"appended docs have {key_type} keys — cast the key column"
+                f"{index_dir} holds {want['doc_id_type']} doc ids and "
+                f"{want['text_type']} text, the appended docs have "
+                f"{have['doc_id_type']} keys and {have['text_type']} text — "
+                "cast the columns (raw and pretokenized text do not mix)"
             )
     tombs = load_tombstones(index_dir)
     if not tombs >= set(tomb):

@@ -201,7 +201,10 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
                                                 tmp_path):
     """load_meta is the one layout gate: an index whose meta.json
     carries another codec_version (here the previous one) is refused by
-    every entry point before it reads or mutates anything."""
+    every entry point before it reads or mutates anything. CODEC 9
+    records the staged text type in staged.json; a resumed build of a
+    directory staged before it, whose staged.json has no text_type, is
+    refused with the same "rebuild" error, not a KeyError."""
     import json
     import shutil
 
@@ -220,6 +223,11 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
     meta["codec_version"] = CODEC_VERSION - 1
     with open(f"{old}/stats/meta.json", "w") as fh:
         json.dump(meta, fh)
+    with open(f"{old}/staged.json") as fh:
+        staged = json.load(fh)
+    del staged["text_type"]
+    with open(f"{old}/staged.json", "w") as fh:
+        json.dump(staged, fh)
     before = sorted(os.listdir(old))
 
     docs = corpus.limit(3)
@@ -230,6 +238,8 @@ def test_older_codec_version_refused_everywhere(spark, corpus, index_dir,
         lambda: delete_docs(spark, old, ["x"]),
         lambda: sync_docs(docs, old),
         lambda: compact_index(spark, old),
+        lambda: build_index(docs, old, shard_size=100, salt_chunk=50,
+                            id_assign_partitions=4),
     ):
         with pytest.raises(ValueError, match="rebuild"):
             call()
@@ -280,10 +290,13 @@ def test_sync_job_count(spark, corpus, index_dir, tmp_path):
     """A sync with new, modified and deleted docs and compaction is ONE
     mutation step: the diff collect, the staging of the new rows, one
     part loop over the rebuilt and the new part, and one finalize —
-    52 Spark jobs on this corpus. When a sync chained
-    delete_docs → append_docs → compact_index (a docmap re-scan, a
-    Python-row key frame, two part loops and two finalizes) the same
-    sync ran 62 jobs."""
+    39 Spark jobs on this corpus. It was 52 before the staged reads
+    declared their schema (no footer-inference job per read), the
+    docmap write dropped its range exchange (no boundary-sampling job
+    per part) and finalize took its stats from the part manifests. When
+    a sync chained delete_docs → append_docs → compact_index (a docmap
+    re-scan, a Python-row key frame, two part loops and two finalizes)
+    the same sync ran 62 jobs."""
     import gc
     import shutil
 
@@ -311,7 +324,161 @@ def test_sync_job_count(spark, corpus, index_dir, tmp_path):
     assert (out["new"], out["modified"], out["deleted"]) == (5, n_mod, n_del)
     assert out["meta"]["n_docs"] == len(feed)
     jobs = sc.statusTracker().getJobIdsForGroup("sync_pin")
-    assert len(jobs) == 52, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
+    assert len(jobs) == 39, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
+
+
+def test_build_job_count(spark, corpus, tmp_path):
+    """A one-part build_index of this corpus (the index_dir geometry) is
+    21 Spark jobs: staging, one part build, finalize. It was 28 before
+    the staged reads declared their schema, the docmap write dropped its
+    range exchange and finalize stopped scanning the docmap."""
+    import gc
+
+    sc = spark.sparkContext
+    gc.collect()
+    gc.disable()
+    sc.setJobGroup("build_pin", "build")
+    try:
+        meta = build_index(corpus, str(tmp_path / "build_jobs"),
+                           shard_size=100, salt_chunk=50,
+                           id_assign_partitions=4)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        gc.enable()
+    assert meta["n_parts"] == 1
+    jobs = sc.statusTracker().getJobIdsForGroup("build_pin")
+    assert len(jobs) == 21, f"build ran {len(jobs)} jobs: {sorted(jobs)}"
+
+
+def test_unsaltable_part_skips_hot_term_job(spark, corpus, tmp_path,
+                                            monkeypatch):
+    """A term's df within one part is at most the part's doc count, so a
+    part of at most salt_chunk docs runs no hot-term collect; with
+    salt_chunk one below the part size every part runs it (the control).
+    Both builds give the same index. Either way the docmap write plans
+    no Exchange: it only sorts within partitions."""
+    import threading
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from oboyu_spark.operators import postings as P
+
+    in_part = threading.local()
+    collects: list = []
+    docmap_plans: list[str] = []
+    real_build = P._build_one_part
+    real_collect = ClassicDataFrame.collect
+    real_parquet = DataFrameWriter.parquet
+
+    def build(*a, **kw):
+        in_part.on = True
+        try:
+            return real_build(*a, **kw)
+        finally:
+            in_part.on = False
+
+    def collect(self):
+        if getattr(in_part, "on", False):
+            collects.append(self)
+        return real_collect(self)
+
+    def parquet(self, path, *a, **kw):
+        if "/docmap/bpart=" in path:
+            docmap_plans.append(
+                self._df._jdf.queryExecution().executedPlan().toString())
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(P, "_build_one_part", build)
+    monkeypatch.setattr(ClassicDataFrame, "collect", collect)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    vocab = {}
+    for salt_chunk, hot_jobs in ((200, 0), (199, 1)):
+        collects.clear()
+        docmap_plans.clear()
+        d = str(tmp_path / f"salt{salt_chunk}")
+        meta = build_index(corpus, d, shard_size=100, shards_per_part=2,
+                           salt_chunk=salt_chunk, id_assign_partitions=4)
+        assert meta["n_parts"] >= 2
+        assert len(collects) == hot_jobs * meta["n_parts"], salt_chunk
+        assert len(docmap_plans) == meta["n_parts"]
+        for plan in docmap_plans:
+            assert "Sort [doc_int" in plan and "Exchange" not in plan, plan
+        for pm in (P._read_manifest(d, p) for p in range(meta["n_parts"])):
+            assert isinstance(pm["step_seconds"]["tf_vocab"], float)
+        vocab[salt_chunk] = sorted(
+            tuple(r) for r in spark.read.parquet(f"{d}/vocabulary")
+            .select("th1", "th2", "document_frequency").collect())
+    assert vocab[200] == vocab[199]
+
+
+def test_finalize_stats_from_manifests(spark, corpus, tmp_path):
+    """finalize_index takes n_docs and total_terms from the part
+    manifests, less the docmap rows of outstanding tombstones. They,
+    and avgdl, equal a full docmap scan of the live docs and PyBM25
+    over the live corpus after a fresh build, after delete_docs then
+    append_docs (tombstones outstanding at that finalize), after a
+    compacting sync_docs, and with tombstoned ids that no longer exist
+    in the docmap."""
+    import json
+
+    from oboyu_spark.operators.postings import (
+        append_docs,
+        delete_docs,
+        finalize_index,
+        load_tombstones,
+        read_docmap,
+        sync_docs,
+    )
+
+    d = str(tmp_path / "stats_idx")
+    live = {r["doc_id"]: r["text"] for r in corpus.collect()}
+
+    def check(meta):
+        tomb = load_tombstones(d)
+        dls = [r["dl"] for r in read_docmap(spark, d).collect()
+               if r["doc_int"] not in tomb]
+        oracle = PyBM25()
+        oracle.index(sorted(live.items()))
+        assert meta["n_docs"] == len(dls) == oracle.document_count
+        assert meta["total_terms"] == sum(dls) \
+            == oracle.total_document_length
+        assert meta["avgdl"] == oracle.avgdl
+        assert load_meta(d)["n_docs"] == meta["n_docs"]
+
+    geometry = dict(shard_size=50, shards_per_part=2, salt_chunk=50,
+                    id_assign_partitions=4)
+    check(build_index(corpus, d, **geometry))
+
+    keys = sorted(live)
+    victims = keys[::19]
+    victim_ints = [r["doc_int"] for r in read_docmap(spark, d)
+                   .filter(F.col("doc_id").isin(victims)).collect()]
+    delete_docs(spark, d, victims)
+    for k in victims:
+        del live[k]
+    new = [(f"stats#{i}", f"fresh spark stats doc {i} " * (i % 3 + 1))
+           for i in range(7)]
+    live.update(new)
+    meta = append_docs(
+        spark.createDataFrame(new, "doc_id string, text string"), d)
+    assert len(load_tombstones(d)) == len(victims)
+    check(meta)
+
+    feed = {k: (t + " revised text" if i % 23 == 5 else t)
+            for i, (k, t) in enumerate(sorted(live.items())) if i % 31 != 4}
+    feed["stats#new"] = "one more spark doc"
+    out = sync_docs(spark.createDataFrame(sorted(feed.items()),
+                                          "doc_id string, text string"), d)
+    assert out["modified"] and out["deleted"] and out["new"] == 1
+    live = feed
+    assert not load_tombstones(d)
+    check(out["meta"])
+
+    # ids the compaction already dropped, and one past every part
+    with open(f"{d}/tombstones/doc_ints.json", "w") as fh:
+        json.dump(victim_ints + [10**9], fh)
+    check(finalize_index(spark, d))
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):

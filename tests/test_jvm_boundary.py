@@ -172,6 +172,68 @@ def test_declared_read_schemas_match_inferred(spark, tmp_path):
         check()
 
 
+def test_declared_staged_schema_matches_inferred(spark, tmp_path):
+    """staged_read_schema(<staged.json>) equals what the parquet reader
+    infers for every staged slice, after a build, an append and a
+    compaction (which rewrites the slices holding deleted docs), for
+    string keys, bigint keys and pretokenized array<string> text; a
+    generation-root read adds pid int. staged.json records the text
+    type, and an append of the other text type is refused before it
+    writes anything. Change the schema only together with
+    CODEC_VERSION."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from oboyu_spark.operators.postings import staged_read_schema
+
+    cases = (("string", "string", ["3", "10", "65"]),
+             ("bigint", "string", [3, 10, 65]),
+             ("string", "array<string>", ["3", "10", "65"]))
+    for key_type, text_type, victims in cases:
+        d = str(tmp_path / f"{key_type}_{text_type[:5]}")
+
+        def docs(n=60, start=0, text=text_type):
+            df = _docs(spark, key_type, n=n, start=start)
+            if text == "string":
+                return df
+            return df.withColumn("text", F.split("text", " "))
+
+        def check():
+            with open(f"{d}/staged.json") as fh:
+                smeta = json.load(fh)
+            assert (smeta["doc_id_type"], smeta["text_type"]) == (key_type,
+                                                                 text_type)
+            ddl = staged_read_schema(smeta)
+            for g in smeta["gens"]:
+                gdir = f"{d}/staged/gen={g['gen']}"
+                assert spark.read.parquet(gdir).schema == \
+                    StructType.fromDDL(ddl + ", pid int"), (d, g["gen"])
+                for pid in os.listdir(gdir):
+                    if pid.startswith("pid="):
+                        inferred = spark.read.parquet(f"{gdir}/{pid}").schema
+                        assert inferred == StructType.fromDDL(ddl), (d, pid)
+
+        build_index(docs(), d, shard_size=8, shards_per_part=2)
+        check()
+        other = "string" if text_type != "string" else "array<string>"
+        with open(f"{d}/staged.json") as fh:
+            staged = fh.read()
+        with pytest.raises(ValueError,
+                           match=f"holds {key_type} doc ids and {text_type}"
+                                 f" text.*{other} text"):
+            append_docs(docs(n=5, start=100, text=other), d)
+        with open(f"{d}/staged.json") as fh:
+            assert fh.read() == staged
+        append_docs(docs(n=20, start=60), d)
+        check()
+        delete_docs(spark, d, victims)
+        compact_index(spark, d)
+        check()
+        assert load_meta(d)["n_docs"] == 80 - len(victims)
+
+
 @pytest.mark.parametrize("key_type", ["string", "bigint"])
 def test_result_frame_schema_every_path(spark, tmp_path, monkeypatch,
                                         key_type):
