@@ -733,14 +733,17 @@ def _merged_vocab_frame(spark: SparkSession, index_dir: str) -> DataFrame:
     )
 
 
-def finalize_index(spark: SparkSession, index_dir: str) -> dict:
+def finalize_index(spark: SparkSession, index_dir: str, *,
+                   docmap_tombstones: bool = True) -> dict:
     """Aggregate the vocabulary from the postings, compute collection
     stats, check every part's postings against its manifest, write meta
     (the build settings are copied from staged.json for the query
     side). n_docs and total_terms are the manifests' sums (each part
     observes them on its docmap write) less the docmap rows of the
     tombstoned ids, read by a bpart- and doc_int-pruned scan: no full
-    docmap scan."""
+    docmap scan. ``docmap_tombstones=False`` is a compacting _mutate's
+    word that it has just rebuilt every part holding a tombstoned id,
+    so no tombstone names a docmap row and that scan is skipped."""
     from pyspark.sql import Observation
 
     smeta = _staged_meta(index_dir)
@@ -774,7 +777,7 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
         total_secs = sum(pm.get("build_seconds", 0) for pm in parts)
         n_docs = sum(pm.get("n_docs", 0) for pm in parts)
         total_terms = sum(pm.get("tokens", 0) for pm in parts)
-        tomb = load_tombstones(index_dir)
+        tomb = load_tombstones(index_dir) if docmap_tombstones else set()
         if tomb:
             # a tombstoned id a compaction already dropped matches no row
             part_docs = _part_docs(smeta)
@@ -850,11 +853,13 @@ def finalize_index(spark: SparkSession, index_dir: str) -> dict:
     return meta
 
 
-def _build_parts(spark: SparkSession, index_dir: str, parts) -> dict:
+def _build_parts(spark: SparkSession, index_dir: str, parts, *,
+                 docmap_tombstones: bool = True) -> dict:
     """The part loop of build_index and _mutate: build each part of
     ``parts`` whose manifest row is not ``done`` (≤4 concurrently —
-    disjoint output roots), write its manifest, then finalize. A part
-    failing before it ever had a manifest leaves no postings or docmap.
+    disjoint output roots), write its manifest, then finalize (passing
+    it ``docmap_tombstones``). A part failing before it ever had a
+    manifest leaves no postings or docmap.
 
     Each submission is wrapped by its OWN ``inheritable_thread_target``
     call, which clones the caller's local properties (job group,
@@ -900,7 +905,8 @@ def _build_parts(spark: SparkSession, index_dir: str, parts) -> dict:
             for f in futs:
                 f.result()
     t1 = time.time()
-    meta = finalize_index(spark, index_dir)
+    meta = finalize_index(spark, index_dir,
+                          docmap_tombstones=docmap_tombstones)
     # wall clock of the (overlapping) part builds, then finalize
     meta["phase_seconds"] = {
         "parts_wall": round(t1 - t0, 3),
@@ -1015,35 +1021,46 @@ def _key_frame(spark: SparkSession, keys: list, doc_id_type: str) -> DataFrame:
 def _drop_staged(spark: SparkSession, index_dir: str, smeta: dict,
                  tomb: set[int]) -> None:
     """Rewrite the staged slices holding tombstoned ids without them;
-    survivors keep their (pid, rn), so their doc_int. Every replacement
-    is written to staged_tmp before any swap starts, so a slice
-    orphaned between a swap's rmtree(live) and rename(tmp, live) is
-    complete and rolls FORWARD on the next entry."""
+    survivors keep their (pid, rn), so their doc_int. ONE scan and ONE
+    partitionBy("pid") write per touched generation, dropping the rows
+    whose (pid << 33) | rn is a tombstoned id's. Every replacement is
+    written to staged_tmp before any swap starts, so a slice orphaned
+    between a swap's rmtree(live) and rename(tmp, live) is complete and
+    rolls FORWARD on the next entry. A slice whose rows are all
+    tombstoned gets no replacement directory: its swap only removes the
+    live slice (a missing pid reads as no rows)."""
     import bisect
     import shutil
 
-    # map each tombstoned doc_int to its (gen, pid, rn)
-    removals: dict[tuple[int, int], list[int]] = {}
+    # each tombstoned doc_int's (pid << 33) | rn key, per generation
+    keys: dict[int, set[int]] = {}
     for g in smeta["gens"]:
         offs = sorted((int(v), int(k)) for k, v in g["offsets"].items())
         starts = [v for v, _ in offs]
-        for d in sorted(tomb):
+        for d in tomb:
             if g["base"] <= d < g["base"] + g["n"]:
                 off, pid = offs[bisect.bisect_right(starts, d) - 1]
-                removals.setdefault((int(g["gen"]), pid), []).append(d - off)
-    paths = {k: (f"{index_dir}/staged/gen={k[0]}/pid={k[1]}",
-                 f"{index_dir}/staged_tmp/gen={k[0]}/pid={k[1]}")
-             for k in removals}
-    for src, tmp in paths.values():
+                keys.setdefault(int(g["gen"]), set()) \
+                    .add((pid << 33) | (d - off))
+    pids = {gen: {k >> 33 for k in ks} for gen, ks in keys.items()}
+    paths = [(f"{index_dir}/staged/gen={gen}/pid={pid}",
+              f"{index_dir}/staged_tmp/gen={gen}/pid={pid}")
+             for gen, ps in pids.items() for pid in ps]
+    for src, tmp in paths:
         if not os.path.isdir(src) and os.path.isdir(tmp):
             os.rename(tmp, src)
-    for k, rns in removals.items():
-        spark.read.schema(staged_read_schema(smeta)).parquet(paths[k][0]) \
-            .filter(~_in_ints("rn", rns)) \
-            .write.mode("overwrite").parquet(paths[k][1])
-    for src, tmp in paths.values():
+    for gen, ks in keys.items():
+        spark.read.schema(staged_read_schema(smeta) + ", pid int") \
+            .parquet(f"{index_dir}/staged/gen={gen}") \
+            .filter(_in_ints("pid", pids[gen])
+                    & ~_in_ints("(shiftleft(CAST(pid AS BIGINT), 33) | rn)",
+                                ks)) \
+            .write.mode("overwrite").partitionBy("pid") \
+            .parquet(f"{index_dir}/staged_tmp/gen={gen}")
+    for src, tmp in paths:
         shutil.rmtree(src, ignore_errors=True)
-        os.rename(tmp, src)
+        if os.path.isdir(tmp):
+            os.rename(tmp, src)
     shutil.rmtree(f"{index_dir}/staged_tmp", ignore_errors=True)
 
 
@@ -1110,7 +1127,10 @@ def _mutate(spark: SparkSession, index_dir: str, meta: dict,
     # postings) build too, or finalize's integrity gate refuses
     build |= {p for p in smeta["parts"]
               if (_read_manifest(index_dir, p) or {}).get("status") == "stale"}
-    out = _build_parts(spark, index_dir, sorted(build))
+    # a compaction rebuilds every part holding a tombstoned id, so
+    # finalize has no tombstoned docmap row to subtract
+    out = _build_parts(spark, index_dir, sorted(build),
+                       docmap_tombstones=not compact)
     if compact:
         # the rebuilt docmap no longer holds these ids: a crash before
         # this line merely masks ids that no longer exist

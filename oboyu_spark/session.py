@@ -127,6 +127,14 @@ def get_spark(
         # (2-3x wall-time vs ParallelGC on the same stage).
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
+        # Spark compiles a generated class (Janino, ≈5 ms) on every
+        # codegen-cache miss. At the default 100 entries an ingest run
+        # (≈150 classes: stage, part build, finalize, diff) evicts its
+        # own classes, so every warm build + sync recompiled 80-130 of
+        # them on the thread that submits the job. A query run compiles
+        # 730-830, mostly one-off serving-miss classes (CLAUDE.md).
+        # Static conf: it takes effect only when the session starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.python.daemon.module", "oboyu_spark._pydaemon")
         .config("spark.executorEnv.PYTHONPATH",
                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))))

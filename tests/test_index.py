@@ -290,8 +290,11 @@ def test_sync_job_count(spark, corpus, index_dir, tmp_path):
     """A sync with new, modified and deleted docs and compaction is ONE
     mutation step: the diff collect, the staging of the new rows, one
     part loop over the rebuilt and the new part, and one finalize —
-    39 Spark jobs on this corpus. It was 52 before the staged reads
-    declared their schema (no footer-inference job per read), the
+    34 Spark jobs on this corpus. It was 39 while the staged rewrite ran
+    one job per touched slice (4 here, now one per generation) and the
+    compacting finalize scanned the docmap for tombstoned rows the
+    rebuild had already dropped (2 jobs). It was 52 before the staged
+    reads declared their schema (no footer-inference job per read), the
     docmap write dropped its range exchange (no boundary-sampling job
     per part) and finalize took its stats from the part manifests. When
     a sync chained delete_docs → append_docs → compact_index (a docmap
@@ -324,7 +327,7 @@ def test_sync_job_count(spark, corpus, index_dir, tmp_path):
     assert (out["new"], out["modified"], out["deleted"]) == (5, n_mod, n_del)
     assert out["meta"]["n_docs"] == len(feed)
     jobs = sc.statusTracker().getJobIdsForGroup("sync_pin")
-    assert len(jobs) == 39, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
+    assert len(jobs) == 34, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
 
 
 def test_build_job_count(spark, corpus, tmp_path):
@@ -479,6 +482,61 @@ def test_finalize_stats_from_manifests(spark, corpus, tmp_path):
     with open(f"{d}/tombstones/doc_ints.json", "w") as fh:
         json.dump(victim_ints + [10**9], fh)
     check(finalize_index(spark, d))
+
+
+def test_compacting_finalize_skips_tombstone_scan(spark, corpus, tmp_path,
+                                                  monkeypatch):
+    """A compacting mutation rebuilds every part holding a tombstoned id
+    before it finalizes, so its finalize_index runs no tombstone docmap
+    scan: neither compact_index nor a compacting sync_docs does. After
+    delete_docs, the tombstones are still outstanding at append_docs'
+    finalize, which subtracts them with one scan."""
+    import threading
+
+    from oboyu_spark.operators import postings as P
+
+    in_finalize = threading.local()
+    scans: list[str] = []
+    real_finalize, real_read = P.finalize_index, P.read_docmap
+
+    def finalize(*a, **kw):
+        in_finalize.on = True
+        try:
+            return real_finalize(*a, **kw)
+        finally:
+            in_finalize.on = False
+
+    def read(*a, **kw):
+        if getattr(in_finalize, "on", False):
+            scans.append(a[1])
+        return real_read(*a, **kw)
+
+    monkeypatch.setattr(P, "finalize_index", finalize)
+    monkeypatch.setattr(P, "read_docmap", read)
+    d = str(tmp_path / "scan_idx")
+    build_index(corpus, d, shard_size=50, shards_per_part=2, salt_chunk=50,
+                id_assign_partitions=4)
+    assert not scans
+    rows = sorted((r["doc_id"], r["text"]) for r in corpus.collect())
+    victims = [k for k, _ in rows[::17]]
+    P.delete_docs(spark, d, victims)
+    meta = P.append_docs(spark.createDataFrame(
+        [("scan#0", "fresh spark doc")], "doc_id string, text string"), d)
+    assert scans == [d], "a finalize with outstanding tombstones scans"
+    assert meta["n_docs"] == len(rows) - len(victims) + 1
+
+    scans.clear()
+    P.compact_index(spark, d)
+    assert not scans and not P.load_tombstones(d)
+    assert load_meta(d)["n_docs"] == len(rows) - len(victims) + 1
+
+    feed = [(k, t + " revised" if i % 13 == 2 else t)
+            for i, (k, t) in enumerate(rows) if i % 17 and i % 29 != 5]
+    out = P.sync_docs(spark.createDataFrame(
+        feed, "doc_id string, text string"), d)
+    assert out["modified"] and out["deleted"]
+    assert not scans and not P.load_tombstones(d)
+    assert out["meta"]["n_docs"] == len(feed)
 
 
 def test_index_reader_matches_oneshot(spark, index_dir):

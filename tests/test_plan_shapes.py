@@ -408,6 +408,38 @@ def test_driver_site_search_runs_no_pandas(spark, index_dir, monkeypatch):
     assert [(r["query_id"], r["doc_id"], r["score"]) for r in got] == warm
 
 
+def test_warm_build_and_sync_reuse_generated_code(spark, corpus, tmp_path):
+    """The session's codegen cache (spark.sql.codegen.cache.maxEntries,
+    set by session.get_spark) holds an ingest run's working set of
+    whole-stage generated classes, so a build + sync repeated in the
+    same session compiles almost no class again. Counted by Spark's
+    CodegenMetrics compilation histogram, one entry per Janino compile.
+    At Spark's default of 100 entries the build and sync evict their
+    own classes, and the repeat recompiled 156 of them (0 at 1000)."""
+    from oboyu_spark.operators.postings import sync_docs
+
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled() -> int:
+        return codegen.METRIC_COMPILATION_TIME().getCount()
+
+    rows = sorted((r["doc_id"], r["text"]) for r in corpus.collect())
+    feed = [(k, t + " revised" if i % 17 == 3 else t)
+            for i, (k, t) in enumerate(rows) if i % 23 != 5]
+    feed += [(f"new#{i}", f"fresh doc {i}") for i in range(3)]
+    feed_df = spark.createDataFrame(feed, "doc_id string, text string")
+    counts = []
+    for rep in range(2):
+        d = str(tmp_path / f"rep{rep}")
+        c0 = compiled()
+        build_index(corpus, d, shard_size=50, shards_per_part=2,
+                    salt_chunk=60, id_assign_partitions=4)
+        out = sync_docs(feed_df, d)
+        assert out["new"] == 3 and out["modified"] and out["deleted"]
+        counts.append(compiled() - c0)
+    assert counts[1] <= 4, f"compiled classes per build + sync: {counts}"
+
+
 def test_docmap_hydration_prunes_partitions(spark, tmp_path):
     """r7: winner hydration derives the docmap PARTITION filter from
     doc_int // part_docs (dense ids are assigned in part order), so

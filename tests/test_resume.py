@@ -443,6 +443,95 @@ def test_compact_crash_windows_recover(spark, tmp_path, monkeypatch):
     assert _results(spark, d, k=12) == expected
 
 
+def _per_slice_drop_staged(spark, index_dir, smeta, tomb):
+    """The per-slice staged rewrite that _drop_staged batches: one read
+    and one write job per touched (gen, pid) slice, then the swaps."""
+    import bisect
+    import shutil
+
+    from oboyu_spark.operators.postings import _in_ints, staged_read_schema
+
+    removals: dict[tuple[int, int], list[int]] = {}
+    for g in smeta["gens"]:
+        offs = sorted((int(v), int(k)) for k, v in g["offsets"].items())
+        starts = [v for v, _ in offs]
+        for d in sorted(tomb):
+            if g["base"] <= d < g["base"] + g["n"]:
+                off, pid = offs[bisect.bisect_right(starts, d) - 1]
+                removals.setdefault((int(g["gen"]), pid), []).append(d - off)
+    for (gen, pid), rns in removals.items():
+        src = f"{index_dir}/staged/gen={gen}/pid={pid}"
+        tmp = f"{index_dir}/staged_tmp/gen={gen}/pid={pid}"
+        spark.read.schema(staged_read_schema(smeta)).parquet(src) \
+            .filter(~_in_ints("rn", rns)).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(src)
+        os.rename(tmp, src)
+    shutil.rmtree(f"{index_dir}/staged_tmp", ignore_errors=True)
+
+
+def test_drop_staged_one_write_per_generation(spark, tmp_path, monkeypatch):
+    """A compaction rewrites the touched staged slices of a generation
+    with ONE Spark job: one scan of the slices, filtered on
+    (pid << 33) | rn, written partitionBy("pid"). Here it touches every
+    slice of generation 0, one of them wholly tombstoned (no pid=
+    directory is left for it), and leaves the staged rows, docmap,
+    postings, vocabulary, stats and results that the per-slice rewrite
+    (one job per slice) leaves on a clone."""
+    import shutil
+
+    from oboyu_spark.operators import postings as P
+
+    docs = _corpus(spark, n_convs=40)
+    d, clone = str(tmp_path / "batched"), str(tmp_path / "per_slice")
+    build_index(docs, d, **KW)
+    staged = [(r["pid"], r["doc_id"]) for r in
+              spark.read.parquet(f"{d}/staged/gen=0").collect()]
+    pids = sorted({p for p, _ in staged})
+    assert len(pids) >= 3
+    victims = sorted({k for p, k in staged if p == pids[0]}
+                     | {k for i, (p, k) in enumerate(sorted(staged))
+                        if p != pids[0] and i % 9 == 4})
+    assert {p for p, k in staged if k in set(victims)} == set(pids)
+    delete_docs(spark, d, victims)
+    shutil.copytree(d, clone)
+
+    sc = spark.sparkContext
+    real_drop = P._drop_staged
+    drop_jobs: list[int] = []
+
+    def pinned_drop(*a, **kw):
+        gc.collect()
+        gc.disable()
+        sc.setJobGroup("drop_staged_pin", "staged rewrite")
+        try:
+            real_drop(*a, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            gc.enable()
+        drop_jobs.extend(sc.statusTracker().getJobIdsForGroup(
+            "drop_staged_pin"))
+
+    with monkeypatch.context() as m:
+        m.setattr(P, "_drop_staged", pinned_drop)
+        compact_index(spark, d)
+    assert len(drop_jobs) == 1, f"staged rewrite ran {drop_jobs}"
+    assert not os.path.exists(f"{d}/staged/gen=0/pid={pids[0]}")
+    with monkeypatch.context() as m:
+        m.setattr(P, "_drop_staged", _per_slice_drop_staged)
+        compact_index(spark, clone)
+
+    def rows(x: str, name: str) -> list:
+        return sorted(repr(tuple(r)) for r in
+                      spark.read.parquet(f"{x}/{name}").collect())
+
+    for name in ("staged/gen=0", "docmap", "postings", "vocabulary"):
+        assert rows(d, name) == rows(clone, name), name
+    assert len(rows(d, "staged/gen=0")) == len(staged) - len(victims)
+    for key in ("n_docs", "total_terms", "avgdl", "n_postings"):
+        assert load_meta(d)[key] == load_meta(clone)[key], key
+    assert _results(spark, d) == _results(spark, clone)
+
+
 def test_append_tiebreak_on_original_key(spark, tmp_path):
     """Appended docs get HIGHER doc_ints even when their keys sort
     before existing ones; exact score-ties at the k boundary must still
