@@ -8,8 +8,9 @@ The reference serves interactively through its CLI query loop and MCP
 server (src/oboyu/cli/, src/oboyu/mcp/server.py:70-219 — a
 long-lived process holding the index open, answering one query at a
 time). This job is that surface re-expressed for Spark: a warm
-``IndexReader`` (tables persisted in executor memory, term-df memoized
-on the driver) answers line-oriented requests on stdin and emits one
+``IndexReader`` (vocabulary and docmap held as driver maps, postings
+persisted in executor memory, decoded postings cached on the driver)
+answers line-oriented requests on stdin and emits one
 JSON object per request on stdout — trivially wrappable by an MCP
 adapter, a socket server, or a shell pipe.
 

@@ -158,10 +158,16 @@ def _staged_types(keyed: DataFrame) -> dict:
 
 
 def read_docmap(spark: SparkSession, index_dir: str) -> DataFrame:
-    """The docmap, read with its declared schema: staged.json (present
-    whenever docmap/ is) records the key type."""
-    return spark.read.schema(docmap_read_schema(
+    """The docmap of the bparts that have a manifest (any status), read
+    with its declared schema: staged.json (present whenever docmap/ is)
+    records the key type. A part killed between its docmap write and
+    its manifest leaves rows of docs it never indexed; every diff reads
+    through here, so those keys count as not indexed and are staged
+    again (the next part loop removes the orphaned directories)."""
+    dm = spark.read.schema(docmap_read_schema(
         _staged_meta(index_dir)["doc_id_type"])).parquet(f"{index_dir}/docmap")
+    orphans = _orphan_parts(index_dir)
+    return dm.filter(~_in_ints("bpart", orphans)) if orphans else dm
 
 
 def _in_ints(col: str, values: Iterable[int]):
@@ -281,6 +287,18 @@ def _read_manifest(index_dir: str, p: int) -> dict | None:
 
 def _write_manifest(index_dir: str, p: int, row: dict) -> None:
     _write_json(_manifest_path(index_dir, p), row)
+
+
+def _orphan_parts(index_dir: str, building=()) -> list[int]:
+    """The bparts with postings or docmap directories but no manifest,
+    other than those in ``building``."""
+    found = {int(fn[len("bpart="):])
+             for t in ("postings", "docmap")
+             if os.path.isdir(f"{index_dir}/{t}")
+             for fn in os.listdir(f"{index_dir}/{t}")
+             if fn.startswith("bpart=")}
+    return sorted(p for p in found - set(building)
+                  if not os.path.exists(_manifest_path(index_dir, p)))
 
 
 def _tag_local_ids(df: DataFrame) -> DataFrame:
@@ -859,7 +877,9 @@ def _build_parts(spark: SparkSession, index_dir: str, parts, *,
     ``parts`` whose manifest row is not ``done`` (≤4 concurrently —
     disjoint output roots), write its manifest, then finalize (passing
     it ``docmap_tombstones``). A part failing before it ever had a
-    manifest leaves no postings or docmap.
+    manifest leaves no postings or docmap, and the directories of a
+    part killed before its manifest was written (see read_docmap) are
+    removed here unless ``parts`` builds it again.
 
     Each submission is wrapped by its OWN ``inheritable_thread_target``
     call, which clones the caller's local properties (job group,
@@ -873,6 +893,9 @@ def _build_parts(spark: SparkSession, index_dir: str, parts, *,
     from pyspark import inheritable_thread_target
 
     t0 = time.time()
+    for p in _orphan_parts(index_dir, parts):
+        for t in ("postings", "docmap"):
+            shutil.rmtree(f"{index_dir}/{t}/bpart={p}", ignore_errors=True)
     pending = [
         p for p in parts
         if not (

@@ -3,9 +3,11 @@
 Plan shape per batch of queries:
 
 1. driver: tokenize queries (same tokenizer as the build — reference
-   tokenizer.py:374-376), slice the vocabulary for the union of query
-   terms (parquet scan with an IN-pushed filter → a few rows), compute
-   idf per term driver-side (tiny), broadcast.
+   tokenizer.py:374-376), look up each query term's df and containing
+   bparts — in a warm ``IndexReader``'s open-time vocabulary map, else
+   by slicing the vocabulary for the union of query terms (parquet scan
+   with an IN-pushed filter → a few rows) — and compute idf per term
+   driver-side (tiny).
 2. score: read postings parquet filtered to query terms (row-group
    pruning via term min/max — rows are sorted by term within each
    shard) with the dense-accumulator term-at-a-time (TAAT) kernel
@@ -25,9 +27,10 @@ Plan shape per batch of queries:
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
    rows, boundary score-ties kept — on the driver while the candidate
    count fits the same budget, else a Spark rank window), hydrate
-   original doc keys driver-side from a pruned docmap scan, final
-   top-k cut tie-broken on the ORIGINAL doc_id (doc_int order only
-   matches key order within a shard, not across appends).
+   original doc keys driver-side (a warm reader's open-time docmap map,
+   else a pruned docmap scan), final top-k cut tie-broken on the
+   ORIGINAL doc_id (doc_int order only matches key order within a
+   shard, not across appends).
 
 Exactness: TAAT scores every matched posting — results match the
 relational plan bit-for-bit up to float summation order (tests compare
@@ -54,8 +57,6 @@ from .postings import (POSTINGS_READ_SCHEMA, VOCABULARY_SCHEMA, _in_ints,
                        docmap_read_schema, load_meta)
 
 RESULT_SCHEMA = "query_id int, doc_int long, score double"
-_READ_SCHEMAS = {"postings": POSTINGS_READ_SCHEMA,
-                 "vocabulary": VOCABULARY_SCHEMA}
 
 # the rows the driver takes per search, one budget with two uses:
 # when Σdf over the live query terms fits it, the postings are scored
@@ -99,36 +100,49 @@ def last_scan_info() -> dict:
     return getattr(_SCAN_INFO, "record", {})
 
 
-def _docmap_for_ids(
-    dm: DataFrame | None,
-    meta: dict,
-    ids: Sequence[int],
-    spark: SparkSession | None = None,
-    index_dir: str | None = None,
-) -> DataFrame:
-    """Docmap rows for specific winner doc_ints, PARTITION-pruned:
-    doc_int // (shard_size · shards_per_part) == bpart by construction
-    (staging assigns dense ids in part order, appends continue the
-    sequence, compaction preserves survivor ids), so the winners' few
-    containing parts become a bpart directory filter — at 10⁴ parts
-    this skips 10⁴−ε footer reads per hydration; the In(doc_int)
-    filter then row-group-prunes inside them. Pass ``dm=None`` (with
-    ``spark``/``index_dir``) on the one-shot path: the relation is
-    then built from ONLY the containing bpart directories, skipping
-    root partition discovery too (a root read lists every directory
-    before PartitionFilters apply)."""
+def _docmap_for_ids(spark: SparkSession, index_dir: str,
+                    ids: Sequence[int], meta: dict) -> DataFrame:
+    """Docmap rows for specific winner doc_ints, read from ONLY their
+    containing bpart directories: doc_int // (shard_size ·
+    shards_per_part) == bpart by construction (staging assigns dense
+    ids in part order, appends continue the sequence, compaction
+    preserves survivor ids). Building the relation from those
+    directories skips root partition discovery too (a root read lists
+    every directory before PartitionFilters apply — at 10⁴ parts, 10⁴−ε
+    footer reads per hydration); the In(doc_int) filter then
+    row-group-prunes inside them."""
     part_docs = int(meta["shard_size"]) * int(meta["shards_per_part"])
     parts = sorted({int(i) // part_docs for i in ids})
-    if dm is None:
-        return spark.read.schema(
-            docmap_read_schema(meta["doc_id_type"])
-        ).option(
-            "basePath", f"{index_dir}/docmap"
-        ).parquet(
-            *[f"{index_dir}/docmap/bpart={p}" for p in parts]
-        ).filter(_in_ints("doc_int", ids))
-    return dm.filter(_in_ints("doc_int", ids)) \
-        .filter(_in_ints("bpart", parts))
+    return spark.read.schema(
+        docmap_read_schema(meta["doc_id_type"])
+    ).option(
+        "basePath", f"{index_dir}/docmap"
+    ).parquet(
+        *[f"{index_dir}/docmap/bpart={p}" for p in parts]
+    ).filter(_in_ints("doc_int", ids))
+
+
+def _vocab_entries(rows) -> dict:
+    """(th1, th2) -> (df, bparts) of vocabulary rows (th1, th2,
+    document_frequency, bparts); bparts is a tuple, or None for a term
+    found in too many parts to track (it prunes nothing)."""
+    return {(th1, th2): (int(df), None if bp is None else tuple(bp))
+            for th1, th2, df, bp in rows}
+
+
+def _vocab_lookup(spark: SparkSession, index_dir: str, hashes) -> dict:
+    """The vocabulary entries (see :func:`_vocab_entries`) of the term
+    hashes ``hashes``; an absent term has none. ONE th1-sorted table
+    scan serves df AND the pruning input (a fan-out over the per-part
+    vocab partials cost ~4.5 s per cold query at 505 parts). The exact
+    (th1, th2) pair match runs DRIVER-side over the few th1-matched rows
+    (r8) — the broadcast-join of a tiny literal frame bought nothing but
+    an extra exchange/stage on the cold-query latency path."""
+    want = set(hashes)
+    rows = spark.read.schema(VOCABULARY_SCHEMA).parquet(
+        f"{index_dir}/vocabulary"
+    ).filter(_in_ints("th1", sorted({h1 for h1, _ in want}))).collect()
+    return {h: e for h, e in _vocab_entries(rows).items() if h in want}
 
 
 def _result_frame(spark: SparkSession, rows) -> DataFrame:
@@ -363,30 +377,21 @@ def search_index(
     ``DRIVER_CUT_MAX_ROWS`` is scored on the driver, always by TAAT.
 
     One-shot form — re-reads the index tables per call. For repeated /
-    interactive queries use :class:`IndexReader`, which pins the
-    postings/vocabulary/docmap in executor memory."""
-    return _search(
-        spark,
-        load_meta(index_dir),
-        None,
-        index_dir,
-        queries,
-        k,
-        scorer,
-        mode,
-    )
+    interactive queries use :class:`IndexReader`, which holds the
+    vocabulary and docmap as driver maps and pins the postings in
+    executor memory."""
+    return _search(spark, load_meta(index_dir), index_dir, queries, k,
+                   scorer, mode)
 
 
 class _TermCache(dict):
-    """A warm reader's term cache: (th1, th2) -> None for a term absent
-    from the vocabulary, else (df, bparts, postings): {shard: (local
-    ids, wtf)} decoded with the reader's open-time k1/b/avgdl, unmasked
-    (tombstones apply per search), or None when only df and bparts are
-    cached: a term first seen by a scattered search, whose rows never
-    reached the driver. Its size is counted in cached postings — df per row-cached
-    term, one per other entry — and bounded by ``limit``: an entry that
-    does not fit is not stored (the cache stops filling; it never
-    evicts). Concurrent searches on one reader may fill it: ``put`` holds a lock
+    """A warm reader's term cache: (th1, th2) -> the term's postings,
+    {shard: (local ids, wtf)} decoded with the reader's open-time
+    k1/b/avgdl, unmasked (tombstones apply per search). Its size is
+    counted in postings — the rows the reader loaded at open, then df
+    per cached term — and bounded by ``limit``: an entry that does not
+    fit is not stored (the cache stops filling; it never evicts).
+    Concurrent searches on one reader may fill it: ``put`` holds a lock
     around its check and count."""
 
     def __init__(self, limit: int) -> None:
@@ -395,91 +400,86 @@ class _TermCache(dict):
         self.postings = 0
         self._lock = threading.Lock()
 
-    @staticmethod
-    def _cost(entry) -> int:
-        return 1 if entry is None or entry[2] is None else entry[0]
-
-    def put(self, h: tuple[int, int], entry) -> None:
+    def put(self, h: tuple[int, int], df: int, postings: dict) -> None:
         with self._lock:
-            cost = self._cost(entry) - (
-                self._cost(self[h]) if h in self else 0)
-            if self.postings + cost <= self.limit:
-                self[h] = entry
-                self.postings += cost
+            if h not in self and self.postings + df <= self.limit:
+                self[h] = postings
+                self.postings += df
 
 
 class IndexReader:
-    """Warm query handle: index tables cached in executor memory, and
-    each query term's df, bparts and decoded postings on the driver.
+    """Warm query handle: the vocabulary and docmap as driver maps
+    collected at open, the postings cached in executor memory, and each
+    query term's decoded postings in a driver term cache.
 
-    The serving deployment shape — open once, query many times. The
-    first search pays cache materialization; subsequent searches scan
-    the in-memory columnar cache instead of parquet. The postings are
-    cached hash-partitioned by shard, so the scatter's
-    ``groupBy("shard")`` scores each shard in the partition that holds
-    it with no shuffle. A small search (Σdf within
-    ``DRIVER_CUT_MAX_ROWS``) skips the scatter and scores on the
-    driver, over decoded postings kept in the term cache: it collects
-    only the terms not cached yet, in one JVM-only Arrow job. A warm
-    query whose terms and winners are all cached runs NO Spark job;
-    above the budget it is one job, the scatter.
+    The serving deployment shape — open once, query many times. At open,
+    when the vocabulary and docmap rows fit the one driver bound
+    ``TERM_CACHE_MAX_POSTINGS``, the reader collects them once, as
+    (th1, th2) -> (df, bparts) and doc_int -> doc_id, so a search takes
+    df, part pruning and hydration from the driver with no Spark job;
+    above the bound it runs the one-shot path's vocabulary and docmap
+    lookup jobs. The postings are cached hash-partitioned by shard, so
+    the scatter's ``groupBy("shard")`` scores each shard in the
+    partition that holds it with no shuffle. A small search (Σdf within
+    ``DRIVER_CUT_MAX_ROWS``) skips the scatter and scores on the driver,
+    over decoded postings kept in the term cache: it collects only the
+    terms not cached yet, in one JVM-only Arrow job. A warm query whose
+    terms are all cached or absent from the vocabulary runs NO Spark
+    job; above the budget it is one job, the scatter.
 
     Snapshot contract: the reader serves the index AS OF open —
     bparts appended by ``append_docs`` after open (and docs removed by
     ``compact_index``'s rewrite) are not visible until reopen (the
-    cached relations and the term and docmap caches are all open-time
-    snapshots, tf weights included). Tombstones ARE re-read per search
-    and masked at score time (deletes mask immediately, cached postings
-    included). Same contract as
+    driver maps, the cached postings relation and the term cache are
+    all open-time snapshots, tf weights included). Tombstones ARE
+    re-read per search and masked at score time (deletes mask
+    immediately, cached postings included). Same contract as
     ``similarity.IvfReader``."""
 
-    # term-cache bound in cached postings (driver memory): df per
-    # row-cached term plus one per df-only or absent entry. A decoded
-    # term holds 12 B per posting plus ≈0.8 KB of entry and array
-    # overhead, so the worst case (all df-1 terms) is ≈0.4 GB
+    # the reader's one driver bound, in rows: the vocabulary and docmap
+    # rows loaded at open are charged first (≈165 B per vocabulary and
+    # ≈150 B per docmap entry), then df per cached term (a decoded term
+    # holds 12 B per posting plus ≈0.8 KB of entry and array overhead,
+    # so the worst case, all df-1 terms, is ≈0.4 GB)
     TERM_CACHE_MAX_POSTINGS = 500_000
-    DOCMAP_CACHE_MAX = 1_000_000  # doc_int -> doc_id entries (driver memory)
 
     def __init__(self, spark: SparkSession, index_dir: str,
                  cache: bool = True) -> None:
         self.spark = spark
         self.index_dir = index_dir
         self.meta = load_meta(index_dir)
-        self._dfs = {
-            "postings": spark.read.schema(POSTINGS_READ_SCHEMA)
-            .parquet(f"{index_dir}/postings"),
-            "vocabulary": spark.read.schema(VOCABULARY_SCHEMA)
-            .parquet(f"{index_dir}/vocabulary"),
-            "docmap": spark.read.schema(
-                docmap_read_schema(self.meta["doc_id_type"])
-            ).parquet(f"{index_dir}/docmap"),
-        }
+        self._postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
+            f"{index_dir}/postings")
         if cache:
             # the postings cache is hash-partitioned by shard, so the
             # per-query groupBy("shard") plans no Exchange (uncached,
             # it would shuffle the whole table on every query); the
             # scatter of searches above the driver budget reads it
-            self._dfs["postings"] = self._dfs["postings"].repartition(
-                spark.sparkContext.defaultParallelism, "shard")
-            for df in self._dfs.values():
-                df.persist()
-        # the term cache (see _TermCache), filled lazily per search.
-        # Serving workloads repeat query terms heavily: a search whose
-        # terms are all cached runs no vocabulary job and, below the
-        # driver budget, no postings job
+            self._postings = self._postings.repartition(
+                spark.sparkContext.defaultParallelism, "shard").persist()
         self._df_cache = _TermCache(self.TERM_CACHE_MAX_POSTINGS)
-        # doc_int -> doc_id for past winners: serving workloads surface
-        # hot docs repeatedly; a cached winner skips the docmap job
-        self._docmap_cache: dict[int, str] = {}
+        self._vocab: dict | None = None
+        self._docmap: dict | None = None
+        if (self.meta["n_vocab_terms"] + self.meta["n_docs"]
+                <= self._df_cache.limit):
+            vocab = spark.read.schema(VOCABULARY_SCHEMA).parquet(
+                f"{index_dir}/vocabulary").toArrow()
+            self._vocab = _vocab_entries(zip(*(
+                c.to_pylist() for c in vocab.columns)))
+            dm = spark.read.schema(
+                docmap_read_schema(self.meta["doc_id_type"])
+            ).parquet(f"{index_dir}/docmap").select(
+                "doc_int", "doc_id").toArrow()
+            self._docmap = dict(zip(*(c.to_pylist() for c in dm.columns)))
+            self._df_cache.postings = len(self._vocab) + len(self._docmap)
 
     def search(self, queries: str | Sequence[str], k: int = 10,
                scorer: str = "taat", mode: str = "or") -> DataFrame:
         """Like :func:`search_index`, over the warm caches: ``scorer``
         picks the scatter's kernel only, a driver-site search always
         runs TAAT."""
-        return _search(self.spark, self.meta, self._dfs, self.index_dir,
-                       queries, k, scorer, mode, term_cache=self._df_cache,
-                       docmap_cache=self._docmap_cache)
+        return _search(self.spark, self.meta, self.index_dir, queries, k,
+                       scorer, mode, reader=self)
 
     def search_rows(self, queries: str | Sequence[str], k: int = 10,
                     scorer: str = "taat",
@@ -489,13 +489,11 @@ class IndexReader:
         winners are already driver-local, so this skips building a
         result frame and collecting it back (the serve loop and the
         hybrid fold consume rows, not a frame)."""
-        return _search(self.spark, self.meta, self._dfs, self.index_dir,
-                       queries, k, scorer, mode, term_cache=self._df_cache,
-                       docmap_cache=self._docmap_cache, return_rows=True)
+        return _search(self.spark, self.meta, self.index_dir, queries, k,
+                       scorer, mode, reader=self, return_rows=True)
 
     def close(self) -> None:
-        for df in self._dfs.values():
-            df.unpersist()
+        self._postings.unpersist()
 
 
 def _driver_rank_cut(rows, k: int):
@@ -532,17 +530,18 @@ def _live_parts(parts_by_hash: dict, hashes) -> list[int] | None:
 def _search(
     spark: SparkSession,
     meta: dict,
-    dfs: dict | None,
     index_dir: str,
     queries: str | Sequence[str],
     k: int,
     scorer: str,
     mode: str = "or",
-    term_cache: _TermCache | None = None,
-    docmap_cache: dict | None = None,
+    reader: IndexReader | None = None,
     return_rows: bool = False,
 ) -> DataFrame:
-    """``return_rows=True`` returns the final results as a driver list
+    """One search, one-shot (``reader=None``) or over a warm reader's
+    postings relation, driver maps and term cache.
+
+    ``return_rows=True`` returns the final results as a driver list
     of (query_id, doc_id, score) tuples instead of a DataFrame. Both
     gather paths hydrate the winners driver-side, so this skips the
     Arrow frame build and the collect back
@@ -557,12 +556,11 @@ def _search(
     footer-inference job)."""
     if isinstance(queries, str):
         queries = [queries]
-
-    def table(name: str) -> DataFrame:
-        if dfs is not None:
-            return dfs[name]
-        return spark.read.schema(_READ_SCHEMAS[name]).parquet(
-            f"{index_dir}/{name}")
+    postings = vocab = docmap = term_cache = None
+    if reader is not None:
+        postings, vocab, docmap = reader._postings, reader._vocab, \
+            reader._docmap
+        term_cache = reader._df_cache
 
     k1, b = meta["k1"], meta["b"]
     avgdl, n_docs = meta["avgdl"], meta["n_docs"]
@@ -580,7 +578,7 @@ def _search(
 
     # hash the query terms exactly as the build did — driver-side
     # (pure-python XXH64 pinned against F.xxhash64; saves a Spark job
-    # per search), then slice the hash-keyed vocabulary for their df
+    # per search), then look up their df
     from ..functions.hashing import spark_xxhash64_str, spark_xxhash64_str_int
     from .postings import TERM_HASH_SEED2
 
@@ -591,62 +589,24 @@ def _search(
         )
         for t in all_terms
     }
-    # df per term: serve from the reader's term cache where possible
-    # (it stores the reader's SNAPSHOT of (df, containing bparts,
-    # decoded postings), incl. "absent" as None — consistent with the persisted
-    # DataFrames); run the lookup job only for terms not seen before.
-    # idf is derived fresh from df + current n_docs, so collection
-    # stats are never cached. The lookup reads the merged vocabulary,
-    # which carries each term's global df AND its (capped) containing-
-    # bpart list, written at finalize — the part-level pruning input
-    # (VERDICT r5 #3: postings are doc-range-sharded, so without it
-    # every search opens every bpart's footers; at 10^4+ parts that
-    # fan-out is the latency floor for selective queries).
-    df_by_hash: dict[tuple[int, int], int | None] = {}
+    # df and the containing-bpart list per term: from the reader's
+    # open-time vocabulary map, else from a lookup job (absent terms
+    # have no entry). idf is derived fresh from df + current n_docs, so
+    # collection stats are never cached. The merged vocabulary carries
+    # each term's global df AND its (capped) containing-bpart list,
+    # written at finalize — the part-level pruning input (VERDICT r5
+    # #3: postings are doc-range-sharded, so without it every search
+    # opens every bpart's footers; at 10^4+ parts that fan-out is the
+    # latency floor for selective queries).
+    if vocab is None:
+        vocab = _vocab_lookup(spark, index_dir, term_to_hash.values())
+    df_by_hash: dict[tuple[int, int], int] = {}
     parts_by_hash: dict[tuple[int, int], tuple | None] = {}
-    post_by_hash: dict[tuple[int, int], dict] = {}
-    missing: list[tuple[int, int]] = []
     for h in term_to_hash.values():
-        if term_cache is not None and h in term_cache:
-            cached = term_cache[h]
-            if cached is None:
-                df_by_hash[h] = None
-            else:
-                df_by_hash[h], parts_by_hash[h], post = cached
-                if post is not None:
-                    post_by_hash[h] = post
-        else:
-            missing.append(h)
-    if missing:
-        miss_h1 = sorted({h1 for h1, _ in missing})
-        miss_set = set(missing)
-        # ONE th1-sorted table scan serves df AND the pruning input (a
-        # fan-out over the per-part vocab partials cost ~4.5 s per cold
-        # query at 505 parts). The exact (th1, th2) pair match runs
-        # DRIVER-side over the few th1-matched rows (r8) — the
-        # broadcast-join of a tiny literal frame bought nothing but an
-        # extra exchange/stage on the cold-query latency path.
-        vocab = table("vocabulary").filter(
-            _in_ints("th1", miss_h1)).collect()
-        found = {}
-        for r in vocab:
-            if (r["th1"], r["th2"]) not in miss_set:
-                continue  # th1 hash collision with a non-query term
-            parts = (None if r["bparts"] is None
-                     else tuple(int(p) for p in r["bparts"]))
-            found[(r["th1"], r["th2"])] = (
-                int(r["document_frequency"]), parts
-            )
-        for h in missing:
-            df_by_hash[h] = found[h][0] if h in found else None
-            if h in found:
-                parts_by_hash[h] = found[h][1]
-            if term_cache is not None:
-                # df and bparts only: a driver-site search adds the
-                # decoded postings when it collects them
-                term_cache.put(h, (*found[h], None) if h in found else None)
+        if h in vocab:
+            df_by_hash[h], parts_by_hash[h] = vocab[h]
     for h, df in df_by_hash.items():
-        if df is not None and n_docs - df + 0.5 <= 0:
+        if n_docs - df + 0.5 <= 0:
             raise ValueError(
                 f"term df={df} exceeds collection size N={n_docs} — the "
                 "index has uncompacted deletions/updates whose stale df "
@@ -655,7 +615,6 @@ def _search(
     idf_by_hash = {
         h: math.log((n_docs - df + 0.5) / (df + 0.5))
         for h, df in df_by_hash.items()
-        if df is not None
     }
     if not idf_by_hash:
         return ret_empty()
@@ -684,7 +643,7 @@ def _search(
         bparts only where pruning applies."""
         h1s = sorted({h1 for h1, _ in hashes})
         parts = _live_parts(parts_by_hash, hashes)
-        if parts is not None and dfs is None:
+        if parts is not None and postings is None:
             # one-shot path (r7): build the relation from the live bpart
             # directories EXPLICITLY instead of filtering a root read —
             # root relation creation LISTS every partition directory
@@ -692,17 +651,19 @@ def _search(
             # parts, and a per-query 10⁴-prefix listing on an object
             # store), all of it for directories the filter then
             # discards. A warm IndexReader amortizes discovery in its
-            # persisted relations; this gives the cold path the same
-            # locality.
+            # persisted postings relation; this gives the cold path the
+            # same locality.
             return spark.read.schema(POSTINGS_READ_SCHEMA).option(
                 "basePath", f"{index_dir}/postings"
             ).parquet(*[
                 f"{index_dir}/postings/bpart={int(p)}" for p in parts
             ]).filter(_in_ints("th1", h1s))
-        postings = table("postings").filter(_in_ints("th1", h1s))
+        rel = postings if postings is not None else spark.read.schema(
+            POSTINGS_READ_SCHEMA).parquet(f"{index_dir}/postings")
+        rel = rel.filter(_in_ints("th1", h1s))
         if parts is not None:
-            postings = postings.filter(_in_ints("bpart", parts))
-        return postings
+            rel = rel.filter(_in_ints("bpart", parts))
+        return rel
 
     from .postings import load_tombstones
 
@@ -741,8 +702,7 @@ def _search(
         hot_q: dict = {}
         big = shard_size >= AUTO_BMW_MIN_SHARD
         for qid, qterms in qmap.items():
-            dfs_q = [df_by_hash[h] for h, _ in qterms
-                     if df_by_hash.get(h) is not None]
+            dfs_q = [df_by_hash[h] for h, _ in qterms]
             frac = (min(dfs_q) / max(n_docs, 1)) if dfs_q else 0.0
             if big and 0.0 < frac <= AUTO_BMW_MAX_DF_FRAC:
                 sel_q[qid] = qterms
@@ -765,14 +725,15 @@ def _search(
         # the kernel per shard here — the scatter's Python worker round
         # trip costs more than the scoring it would do. A warm reader
         # collects only the terms its cache lacks, none when all hit
+        post_by_hash = {h: term_cache[h] for h in idf_by_hash
+                        if term_cache is not None and h in term_cache}
         fetch = [h for h in idf_by_hash if h not in post_by_hash]
         if fetch:
             got = _decode_arrow(scan(fetch).toArrow(), k1, b, avgdl)
             for h in fetch:
                 post_by_hash[h] = got.get(h, {})
                 if term_cache is not None:
-                    term_cache.put(h, (df_by_hash[h], parts_by_hash.get(h),
-                                       post_by_hash[h]))
+                    term_cache.put(h, df_by_hash[h], post_by_hash[h])
         live = [post_by_hash[h] for h in idf_by_hash]
         top_rows = []
         for s in sorted(set().union(*live)):
@@ -819,32 +780,18 @@ def _search(
             )
     if not top_rows:
         return ret_empty()
-    # winners are driver-known ids → hydrate driver-side: one pruned
-    # docmap scan for cache-missed ids (no join job), zero Spark jobs
-    # when every winner is already cached in a warm IndexReader. The
-    # docmap is sorted by doc_int, so the IN filter prunes to the few
-    # row groups containing misses.
-    ids = sorted({int(r["doc_int"]) for r in top_rows})
-    known = docmap_cache if docmap_cache is not None else {}
-    miss = [i for i in ids if i not in known]
-    fetched: dict[int, str] = {}
-    if miss:
-        rows = (
-            _docmap_for_ids(
-                dfs["docmap"] if dfs is not None else None, meta,
-                miss, spark=spark, index_dir=index_dir,
-            )
-            .select("doc_int", "doc_id")
-            .collect()
-        )
-        fetched = {int(r["doc_int"]): r["doc_id"] for r in rows}
-        if (docmap_cache is not None
-                and len(docmap_cache) < IndexReader.DOCMAP_CACHE_MAX):
-            docmap_cache.update(fetched)
+    # winners are driver-known ids → hydrate driver-side: from the
+    # reader's open-time docmap map (no Spark job), else one pruned
+    # docmap scan (no join job). The docmap is sorted by doc_int, so the
+    # IN filter prunes to the few row groups holding the winners.
+    if docmap is None:
+        ids = sorted({int(r["doc_int"]) for r in top_rows})
+        docmap = dict(_docmap_for_ids(spark, index_dir, ids, meta)
+                      .select("doc_int", "doc_id").collect())
     by_q: dict[int, list[tuple[float, str]]] = {}
     for r in top_rows:
         di = int(r["doc_int"])
-        did = known.get(di, fetched.get(di))
+        did = docmap.get(di)
         if did is None:  # docmap gap — mirror inner-join semantics
             continue
         by_q.setdefault(int(r["query_id"]), []).append(

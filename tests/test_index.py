@@ -713,8 +713,9 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
     one-shot path, to a reader whose term cache is bounded to 0, to the
     scatter with the driver cut (budget = the candidate count: Σdf is
     above it) and to the scatter with the Spark rank window (budget 0).
-    A term whose df exceeds the budget is cached as df and bparts only,
-    and every search that uses it scatters."""
+    A term whose df exceeds the budget never has its rows cached (its
+    df and bparts come from the open-time vocabulary map), and every
+    search that uses it scatters."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
     from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
 
@@ -808,6 +809,7 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
         monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS",
                             cache_max)
         try:
+            assert uncached._vocab is None and uncached._docmap is None
             nocache, _, collects = run(uncached, oneshot=False)
             assert collects == 4 and len(uncached._df_cache) == 0
         finally:
@@ -832,13 +834,15 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
             n = len(scatters)
             assert [small.search_rows(q, k=k) for q in single] == expected
             assert len(scatters) == n + 3
-            df_hot, parts_hot, rows_hot = small._df_cache[key("spark")]
-            df_sel, parts_sel, rows_sel = small._df_cache[key("zzsel")]
+            df_hot, parts_hot = small._vocab[key("spark")]
+            hot_cached = key("spark") in small._df_cache
+            df_sel, parts_sel = small._vocab[key("zzsel")]
+            rows_sel = small._df_cache[key("zzsel")]
         finally:
             small.close()
     finally:
         reader.close()
-    assert df_hot > n_shards * k and rows_hot is None and parts_hot
+    assert df_hot > n_shards * k and not hot_cached and parts_hot
     assert df_sel == 3 and len(rows_sel) and parts_sel
     assert all(driver)
     deleted = set(victims + ["zzsel#0"] + second)
@@ -952,11 +956,13 @@ def test_dense_kernel_matches_oracle(spark, tmp_path):
 
 
 def test_term_cache_bound(spark, index_dir, monkeypatch):
-    """The reader's term cache holds at most TERM_CACHE_MAX_POSTINGS
-    cached postings (df per row-cached term, one per other entry). A
-    stream whose terms need three times the bound stops filling it —
-    the count never exceeds the bound and always equals the entries' —
-    and every answer equals an unbounded reader's."""
+    """The reader's one driver bound, TERM_CACHE_MAX_POSTINGS, charges
+    the vocabulary and docmap rows it loads at open first, then df per
+    row-cached term. A stream whose terms need three times what the
+    bound leaves after the maps stops filling the term cache — the
+    count never exceeds the bound and always equals the loaded rows
+    plus the entries' df — and every answer equals an unbounded
+    reader's."""
     from oboyu_spark.operators import searchidx as SI
     from oboyu_spark.sources.transcripts import WORDS
 
@@ -964,49 +970,49 @@ def test_term_cache_bound(spark, index_dir, monkeypatch):
     full = SI.IndexReader(spark, index_dir)
     try:
         expected = [full.search_rows(q, k=5) for q in stream]
-        need = full._df_cache.postings
+        loaded = len(full._vocab) + len(full._docmap)
+        need = full._df_cache.postings - loaded
     finally:
         full.close()
-    limit = need // 3
+    limit = loaded + need // 3
     monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS", limit)
     reader = SI.IndexReader(spark, index_dir)
     try:
+        assert reader._df_cache.postings == loaded
         got = []
         for q in stream:
             got.append(reader.search_rows(q, k=5))
             cache = reader._df_cache
             assert cache.postings <= limit
-            assert cache.postings == sum(
-                1 if e is None or e[2] is None else e[0]
-                for e in cache.values())
+            assert cache.postings == loaded + sum(
+                reader._vocab[h][0] for h in cache)
     finally:
         reader.close()
     assert got == expected
-
-    def row_cached(c):
-        return sum(e is not None and e[2] is not None for e in c.values())
-
-    assert row_cached(cache) < row_cached(full._df_cache)
+    assert len(cache) < len(full._df_cache)
 
 
 def test_term_cache_put_is_atomic():
     """Concurrent searches on one reader fill its term cache from
     several threads: with more threads than cores and a short switch
-    interval, overlapping puts (df-only entries, then row entries)
-    keep the count equal to the entries' and within the bound."""
+    interval, overlapping puts of the same terms, whose df sum exceeds
+    the bound, store each term at most once and keep the count equal
+    to the entries' df and within the bound."""
     import sys
     import threading
 
     from oboyu_spark.operators.searchidx import _TermCache
 
     cache = _TermCache(5_000)
-    rows = object()  # stands in for a term's rows frame
+    rows = object()  # stands in for a term's decoded postings
+
+    def df(h):
+        return h[0] % 17 + 1  # 600 terms, Σdf 5,400
 
     def work(n):
         for i in range(2_000):
             h = ((n * 7 + i) % 600, 0)
-            cache.put(h, (i % 9 + 1, None, None))
-            cache.put(h, (i % 9 + 1, None, rows))
+            cache.put(h, df(h), rows)
 
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
@@ -1020,9 +1026,9 @@ def test_term_cache_put_is_atomic():
     finally:
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
+    assert len(cache) < 600
     assert cache.postings <= cache.limit
-    assert cache.postings == sum(1 if e is None or e[2] is None else e[0]
-                                 for e in cache.values())
+    assert cache.postings == sum(df(h) for h in cache)
 
 
 def _index_rows(spark, d):

@@ -272,7 +272,8 @@ def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
     executed plan holds no Python node; a repeat takes the rows from
     the term cache and runs no Spark job and no collect. applyInPandas
     is never called. With Σdf above a lowered budget the scatter runs
-    instead, and the rows are unchanged."""
+    instead, and the rows are unchanged. Collects are counted after
+    open, which collects the vocabulary and docmap once."""
     import gc
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -313,9 +314,9 @@ def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
         return rows, sc.statusTracker().getJobIdsForGroup(group)
 
     reader = SI.IndexReader(spark, index_dir)
+    del collected[:]  # open's vocabulary and docmap collects
     try:
-        # a scattered search caches the terms' df and bparts (not their
-        # rows) and the winners' doc ids
+        # a scattered search caches no term rows
         monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", n_shards * 5)
         warm = reader.search_rows(q, k=5)
         assert len(scatters) == 1 and not collected
@@ -341,6 +342,83 @@ def test_warm_small_query_is_one_jvm_only_job(spark, index_dir,
         assert len(scatters) == 2
     finally:
         reader.close()
+
+
+def test_reader_maps_take_lookups_off_spark(spark, index_dir, monkeypatch):
+    """At open the reader collects the vocabulary and docmap as driver
+    maps (this index fits its bound). After open, a search of
+    never-seen terms runs exactly one Spark job, the postings collect:
+    its df, part pruning and the hydration of its never-seen winners
+    run none and read no vocabulary or docmap. A search whose terms are
+    all absent from the vocabulary runs none. With the bound
+    monkeypatched below the table sizes the reader loads no maps, runs
+    the vocabulary lookup, the postings collect and the docmap
+    hydration per search (three jobs), and returns identical rows."""
+    import gc
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.operators.postings import load_meta
+
+    sc = spark.sparkContext
+    lookups = []
+    for name in ("_vocab_lookup", "_docmap_for_ids"):
+        def spy(*a, _name=name, _real=getattr(SI, name), **kw):
+            lookups.append(_name)
+            return _real(*a, **kw)
+        monkeypatch.setattr(SI, name, spy)
+
+    def pinned(reader, group, queries):
+        gc.collect()
+        gc.disable()
+        sc.setJobGroup(group, "reader lookup pin")
+        try:
+            rows = reader.search_rows(queries, k=5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            gc.enable()
+        return rows, sc.statusTracker().getJobIdsForGroup(group)
+
+    warmup = ["parquet iceberg snapshot"]  # materializes the postings cache
+    queries = ["spark index search", "分散 shuffle partition engine"]
+    reader = SI.IndexReader(spark, index_dir)
+    try:
+        assert reader._vocab and reader._docmap and not reader._df_cache
+        reader.search_rows(warmup, k=5)
+        arrows = []
+        real_arrow = ClassicDataFrame.toArrow
+
+        def to_arrow(self):
+            arrows.append(1)
+            return real_arrow(self)
+
+        with monkeypatch.context() as m:
+            m.setattr(ClassicDataFrame, "toArrow", to_arrow)
+            rows, jobs = pinned(reader, "maps_new_terms", queries)
+            assert SI.last_scan_info()["site"] == "driver"
+            assert len(jobs) == 1 and len(arrows) == 1, jobs
+            absent, jobs = pinned(reader, "maps_absent_terms",
+                                  ["zzabsent qqnowhere"])
+            assert absent == [] and not jobs and len(arrows) == 1
+        assert rows and not lookups
+    finally:
+        reader.close()
+
+    meta = load_meta(index_dir)
+    monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS",
+                        meta["n_vocab_terms"] + meta["n_docs"] - 1)
+    bounded = SI.IndexReader(spark, index_dir)
+    try:
+        assert bounded._vocab is None and bounded._docmap is None
+        bounded.search_rows(warmup, k=5)
+        del lookups[:]
+        got, jobs = pinned(bounded, "maps_off", queries)
+    finally:
+        bounded.close()
+    assert got == rows
+    assert lookups == ["_vocab_lookup", "_docmap_for_ids"]
+    assert len(jobs) == 3, jobs
 
 
 def test_driver_site_search_runs_no_pandas(spark, index_dir, monkeypatch):
@@ -441,12 +519,13 @@ def test_warm_build_and_sync_reuse_generated_code(spark, corpus, tmp_path):
 
 
 def test_docmap_hydration_prunes_partitions(spark, tmp_path):
-    """r7: winner hydration derives the docmap PARTITION filter from
-    doc_int // part_docs (dense ids are assigned in part order), so
-    only the winners' bpart directories are listed/read — at 10⁴ parts
-    the per-query docmap footer fan-out disappears. Pinned: the
-    derived filter lands in PartitionFilters, only the winner's part's
-    files are touched, and the rows match the plain id filter."""
+    """r7: winner hydration derives the winners' bparts from doc_int //
+    part_docs (dense ids are assigned in part order) and reads ONLY
+    those bpart directories — at 10⁴ parts the per-query docmap footer
+    fan-out and the root partition listing disappear. Pinned: the
+    scan's location is the winner's part directory alone, only that
+    part's files are touched, the doc_int filter is pushed into the
+    scan, and the rows match the plain id filter."""
     import re
 
     from oboyu_spark.operators.postings import load_meta
@@ -460,10 +539,13 @@ def test_docmap_hydration_prunes_partitions(spark, tmp_path):
     meta = load_meta(d)
     assert meta.get("shards_per_part") == 2
     dm = spark.read.parquet(f"{d}/docmap")
-    pruned = _docmap_for_ids(dm, meta, [250, 260])
+    pruned = _docmap_for_ids(spark, d, [250, 260], meta)
     plan = _plan(pruned)
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "bpart" in m.group(1), plan
+    m = re.search(r"Location: InMemoryFileIndex[^\n]*\[([^\]]*)\]", plan)
+    assert m and [p.rstrip("/").rsplit("/", 1)[-1]
+                  for p in m.group(1).split(", ")] == ["bpart=2"], plan
+    m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert m and "doc_int" in m.group(1), plan
     files = {r[0] for r in
              pruned.select(F.input_file_name()).distinct().collect()}
     touched = {int(re.search(r"bpart=(\d+)", f).group(1)) for f in files}

@@ -1076,6 +1076,47 @@ def test_sync_vocabulary_write_failure_keeps_meta(spark, tmp_path,
     _converged(spark, d, want)
 
 
+def test_sync_orphan_part_without_manifest_converges(spark, tmp_path,
+                                                     monkeypatch):
+    """Fault: a sync's new part writes its postings and docmap, then its
+    ``done`` manifest write fails (a kill in that window leaves the
+    same state). The orphaned part's docmap rows name docs it never
+    indexed, so the re-run's diff must not count them: it stages the
+    new and modified docs again, removes the orphaned directories and
+    converges to an uncrashed sync's searches and stats, with no key
+    twice in the docmap."""
+    from oboyu_spark.operators import postings as P
+    from oboyu_spark.operators.postings import sync_docs
+
+    d, incoming, changed, want = _sync_case(spark, tmp_path)
+    before = {m["bpart"] for m in _manifests(d)}
+    real_write = P._write_manifest
+
+    def write(index_dir, p, row):
+        if p not in before and row.get("status") == "done":
+            raise RuntimeError("injected manifest failure")
+        real_write(index_dir, p, row)
+
+    with monkeypatch.context() as m:
+        m.setattr(P, "_write_manifest", write)
+        with pytest.raises(RuntimeError, match="injected manifest failure"):
+            sync_docs(incoming, d)
+    with open(f"{d}/staged.json") as fh:
+        new = set(json.load(fh)["parts"]) - before
+    assert new and {m["bpart"] for m in _manifests(d)} == before
+    for p in new:
+        assert os.path.isdir(f"{d}/postings/bpart={p}")
+        assert os.path.isdir(f"{d}/docmap/bpart={p}")
+    assert _masked(spark, d, changed)
+
+    out = sync_docs(incoming, d)
+    assert (out["new"], out["modified"], out["deleted"]) == (3, 0, 0)
+    for p in new:
+        assert not os.path.exists(f"{d}/postings/bpart={p}")
+        assert not os.path.exists(f"{d}/docmap/bpart={p}")
+    _converged(spark, d, want)
+
+
 @pytest.mark.parametrize("key_type", ["string", "bigint"])
 def test_sync_equals_delete_append_compact(spark, tmp_path, key_type):
     """One sync step leaves the index that delete_docs → append_docs →

@@ -115,9 +115,9 @@ def test_handle_hybrid_parity(spark, served, ivf_dir):
 def test_warm_hybrid_is_one_spark_job(spark, served, ivf_dir):
     """VERDICT r5 #5 structural pin: a fully-warm folded hybrid query
     launches exactly ONE Spark job — the pruned IVF TakeOrdered. The
-    BM25 side is a small search whose terms' posting rows and winners
-    are in the reader's term and docmap caches, so it is scored on the
-    driver with no Spark job; fusion and result assembly are pure
+    BM25 side is a small search whose terms' posting rows are in the
+    reader's term cache and whose winners are in its open-time docmap
+    map, so it is scored on the driver with no Spark job; fusion and result assembly are pure
     python (zero fusion/collect/createDataFrame jobs; search_rows keeps
     the winners driver-side). Above the driver budget the BM25 side is
     the scatter: the reader caches its postings hash-partitioned by
@@ -131,7 +131,7 @@ def test_warm_hybrid_is_one_spark_job(spark, served, ivf_dir):
     ivf = IvfReader(spark, ivf_dir)
     q = "spark index search"
     vec = embed_text(q, dim=16)
-    # warm: cache materialization, term + docmap caches
+    # warm: cache materialization, term cache
     warm = hybrid_search_folded(reader, ivf, q, vec, k_each=10, limit=5)
     sc = spark.sparkContext
     sc.setJobGroup("warmhybrid_pin", "one-job warm hybrid")
