@@ -4,8 +4,8 @@ Plan shape per batch of queries:
 
 1. driver: tokenize queries (same tokenizer as the build — reference
    tokenizer.py:374-376), look up each query term's df and containing
-   bparts — in a warm ``IndexReader``'s open-time vocabulary map, else
-   by slicing the vocabulary for the union of query terms (parquet scan
+   bparts — in a warm ``IndexReader``'s vocabulary map, else by
+   slicing the vocabulary for the union of query terms (parquet scan
    with an IN-pushed filter → a few rows) — and compute idf per term
    driver-side (tiny).
 2. score: read postings parquet filtered to query terms (row-group
@@ -27,8 +27,8 @@ Plan shape per batch of queries:
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
    rows, boundary score-ties kept — on the driver while the candidate
    count fits the same budget, else a Spark rank window), hydrate
-   original doc keys driver-side (a warm reader's open-time docmap map,
-   else a pruned docmap scan), final top-k cut tie-broken on the
+   original doc keys driver-side (a warm reader's docmap map, else a
+   pruned docmap scan), final top-k cut tie-broken on the
    ORIGINAL doc_id (doc_int order only matches key order within a
    shard, not across appends).
 
@@ -54,7 +54,8 @@ from pyspark.sql import functions as F
 
 from ..functions.text import py_tokenize
 from .postings import (POSTINGS_READ_SCHEMA, VOCABULARY_SCHEMA, _in_ints,
-                       docmap_read_schema, load_meta)
+                       docmap_read_schema, load_meta, load_tombstones,
+                       read_docmap)
 
 RESULT_SCHEMA = "query_id int, doc_int long, score double"
 
@@ -101,18 +102,23 @@ def last_scan_info() -> dict:
 
 
 def _docmap_for_ids(spark: SparkSession, index_dir: str,
-                    ids: Sequence[int], meta: dict) -> DataFrame:
-    """Docmap rows for specific winner doc_ints, read from ONLY their
-    containing bpart directories: doc_int // (shard_size ·
-    shards_per_part) == bpart by construction (staging assigns dense
-    ids in part order, appends continue the sequence, compaction
-    preserves survivor ids). Building the relation from those
-    directories skips root partition discovery too (a root read lists
-    every directory before PartitionFilters apply — at 10⁴ parts, 10⁴−ε
+                    ids: Sequence[int], meta: dict,
+                    rel: DataFrame | None = None) -> DataFrame:
+    """Docmap rows for specific winner doc_ints, from ONLY their
+    containing bparts: doc_int // (shard_size · shards_per_part) ==
+    bpart by construction (staging assigns dense ids in part order,
+    appends continue the sequence, compaction preserves survivor ids).
+    A warm reader passes its cached docmap ``rel``, filtered on bpart;
+    the one-shot path builds the relation from those directories,
+    which skips root partition discovery too (a root read lists every
+    directory before PartitionFilters apply — at 10⁴ parts, 10⁴−ε
     footer reads per hydration); the In(doc_int) filter then
     row-group-prunes inside them."""
     part_docs = int(meta["shard_size"]) * int(meta["shards_per_part"])
     parts = sorted({int(i) // part_docs for i in ids})
+    if rel is not None:
+        return rel.filter(_in_ints("bpart", parts)).filter(
+            _in_ints("doc_int", ids))
     return spark.read.schema(
         docmap_read_schema(meta["doc_id_type"])
     ).option(
@@ -130,18 +136,22 @@ def _vocab_entries(rows) -> dict:
             for th1, th2, df, bp in rows}
 
 
-def _vocab_lookup(spark: SparkSession, index_dir: str, hashes) -> dict:
+def _vocab_lookup(spark: SparkSession, index_dir: str, hashes,
+                  rel: DataFrame | None = None) -> dict:
     """The vocabulary entries (see :func:`_vocab_entries`) of the term
-    hashes ``hashes``; an absent term has none. ONE th1-sorted table
-    scan serves df AND the pruning input (a fan-out over the per-part
-    vocab partials cost ~4.5 s per cold query at 505 parts). The exact
+    hashes ``hashes``, from a warm reader's cached vocabulary ``rel``
+    or the table; an absent term has none. ONE th1-sorted table scan
+    serves df AND the pruning input (a fan-out over the per-part vocab
+    partials cost ~4.5 s per cold query at 505 parts). The exact
     (th1, th2) pair match runs DRIVER-side over the few th1-matched rows
     (r8) — the broadcast-join of a tiny literal frame bought nothing but
     an extra exchange/stage on the cold-query latency path."""
     want = set(hashes)
-    rows = spark.read.schema(VOCABULARY_SCHEMA).parquet(
-        f"{index_dir}/vocabulary"
-    ).filter(_in_ints("th1", sorted({h1 for h1, _ in want}))).collect()
+    if rel is None:
+        rel = spark.read.schema(VOCABULARY_SCHEMA).parquet(
+            f"{index_dir}/vocabulary")
+    rows = rel.filter(
+        _in_ints("th1", sorted({h1 for h1, _ in want}))).collect()
     return {h: e for h, e in _vocab_entries(rows).items() if h in want}
 
 
@@ -384,63 +394,80 @@ def search_index(
                    scorer, mode)
 
 
-class _TermCache(dict):
-    """A warm reader's term cache: (th1, th2) -> the term's postings,
-    {shard: (local ids, wtf)} decoded with the reader's open-time
-    k1/b/avgdl, unmasked (tombstones apply per search). Its size is
-    counted in postings — the rows the reader loaded at open, then df
-    per cached term — and bounded by ``limit``: an entry that does not
-    fit is not stored (the cache stops filling; it never evicts).
-    Concurrent searches on one reader may fill it: ``put`` holds a lock
-    around its check and count."""
+class _DriverMap(dict):
+    """A warm reader's driver structure, key -> value: the term cache,
+    (th1, th2) -> the term's postings {shard: (local ids, wtf)} decoded
+    with the reader's open-time k1/b/avgdl, unmasked (tombstones apply
+    per search); or one index table, the vocabulary or the docmap. A
+    table map is the whole table when it was collected at open
+    (``complete``: a key not in it is absent from the table), else the
+    keys looked up so far, an absent key as None, in the table's
+    relation ``rel`` when the reader holds one. ``size`` counts what
+    the map holds — df per cached term, one per table row — up to
+    ``limit``: an entry that does not fit is not stored (the map stops
+    filling; it never evicts). Concurrent searches on one reader may
+    fill it: ``put`` holds a lock around its check and count."""
 
-    def __init__(self, limit: int) -> None:
-        super().__init__()
+    def __init__(self, limit: int, rows=None,
+                 rel: DataFrame | None = None) -> None:
+        super().__init__(rows or ())
         self.limit = limit
-        self.postings = 0
+        self.rel = rel
+        self.size = len(self)
+        self.complete = rows is not None
         self._lock = threading.Lock()
 
-    def put(self, h: tuple[int, int], df: int, postings: dict) -> None:
+    def put(self, h, cost: int, value) -> None:
         with self._lock:
-            if h not in self and self.postings + df <= self.limit:
-                self[h] = postings
-                self.postings += df
+            if h not in self and self.size + cost <= self.limit:
+                self[h] = value
+                self.size += cost
+
+    def lookup(self, keys, fetch: Callable[[list], dict]) -> dict:
+        """key -> value of the ``keys`` (iterated twice) present in the
+        table. Keys the map cannot answer are read by ``fetch(keys)``
+        (one Spark job) and memoized while the map has room; the
+        one-shot path looks up through an empty map of limit 0, which
+        memoizes nothing."""
+        miss = [] if self.complete else [h for h in keys if h not in self]
+        got = fetch(miss) if miss else {}
+        for h in miss:
+            self.put(h, 1, got.get(h))
+        return {h: r for h in keys
+                if (r := self.get(h, got.get(h))) is not None}
 
 
 class IndexReader:
-    """Warm query handle: the vocabulary and docmap as driver maps
-    collected at open, the postings cached in executor memory, and each
-    query term's decoded postings in a driver term cache.
+    """Warm query handle: the vocabulary, the docmap and each query
+    term's decoded postings in driver maps, the postings cached in
+    executor memory.
 
-    The serving deployment shape — open once, query many times. At open,
-    when the vocabulary and docmap rows fit the one driver bound
-    ``TERM_CACHE_MAX_POSTINGS``, the reader collects them once, as
-    (th1, th2) -> (df, bparts) and doc_int -> doc_id, so a search takes
-    df, part pruning and hydration from the driver with no Spark job;
-    above the bound it runs the one-shot path's vocabulary and docmap
-    lookup jobs. The postings are cached hash-partitioned by shard, so
+    The serving deployment shape — open once, query many times. At open
+    the reader collects the vocabulary as (th1, th2) -> (df, bparts) and
+    the docmap as doc_int -> doc_id, each if its rows fit
+    ``TERM_CACHE_MAX_POSTINGS``; a table above it is cached in executor
+    memory and scanned per search for the keys its map has not memoized
+    yet. The postings are cached hash-partitioned by shard, so
     the scatter's ``groupBy("shard")`` scores each shard in the
     partition that holds it with no shuffle. A small search (Σdf within
-    ``DRIVER_CUT_MAX_ROWS``) skips the scatter and scores on the driver,
-    over decoded postings kept in the term cache: it collects only the
-    terms not cached yet, in one JVM-only Arrow job. A warm query whose
-    terms are all cached or absent from the vocabulary runs NO Spark
-    job; above the budget it is one job, the scatter.
+    ``DRIVER_CUT_MAX_ROWS``) skips the scatter and scores on the
+    driver, over the term cache: it collects only the terms not cached
+    yet, in one JVM-only Arrow job. A warm query whose terms and
+    winners the maps know, and whose terms are cached or absent, runs
+    NO Spark job; above the budget it is one job, the scatter.
 
     Snapshot contract: the reader serves the index AS OF open —
     bparts appended by ``append_docs`` after open (and docs removed by
     ``compact_index``'s rewrite) are not visible until reopen (the
-    driver maps, the cached postings relation and the term cache are
-    all open-time snapshots, tf weights included). Tombstones ARE
-    re-read per search and masked at score time (deletes mask
-    immediately, cached postings included). Same contract as
-    ``similarity.IvfReader``."""
+    driver maps and the cached relations are all open-time snapshots,
+    tf weights included). Tombstones ARE re-read per search and masked
+    at score time (deletes mask immediately, cached postings included).
+    Same contract as ``similarity.IvfReader``."""
 
-    # the reader's one driver bound, in rows: the vocabulary and docmap
-    # rows loaded at open are charged first (≈165 B per vocabulary and
-    # ≈150 B per docmap entry), then df per cached term (a decoded term
-    # holds 12 B per posting plus ≈0.8 KB of entry and array overhead,
-    # so the worst case, all df-1 terms, is ≈0.4 GB)
+    # the bound of each driver map, counted on its own: the term cache
+    # in postings (12 B each plus ≈0.8 KB per decoded term, so ≈0.4 GB
+    # at worst, all df-1 terms), the vocabulary and docmap maps in rows
+    # (≈165 B and ≈150 B each, ≈0.16 GB for both)
     TERM_CACHE_MAX_POSTINGS = 500_000
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -457,21 +484,30 @@ class IndexReader:
             # scatter of searches above the driver budget reads it
             self._postings = self._postings.repartition(
                 spark.sparkContext.defaultParallelism, "shard").persist()
-        self._df_cache = _TermCache(self.TERM_CACHE_MAX_POSTINGS)
-        self._vocab: dict | None = None
-        self._docmap: dict | None = None
-        if (self.meta["n_vocab_terms"] + self.meta["n_docs"]
-                <= self._df_cache.limit):
-            vocab = spark.read.schema(VOCABULARY_SCHEMA).parquet(
-                f"{index_dir}/vocabulary").toArrow()
-            self._vocab = _vocab_entries(zip(*(
-                c.to_pylist() for c in vocab.columns)))
-            dm = spark.read.schema(
-                docmap_read_schema(self.meta["doc_id_type"])
-            ).parquet(f"{index_dir}/docmap").select(
-                "doc_int", "doc_id").toArrow()
-            self._docmap = dict(zip(*(c.to_pylist() for c in dm.columns)))
-            self._df_cache.postings = len(self._vocab) + len(self._docmap)
+        self._df_cache = _DriverMap(self.TERM_CACHE_MAX_POSTINGS)
+        self._vocab = self._table_map(
+            spark.read.schema(VOCABULARY_SCHEMA).parquet(
+                f"{index_dir}/vocabulary"),
+            self.meta["n_vocab_terms"], _vocab_entries, cache)
+        # the docmap keeps tombstoned rows until compaction
+        self._docmap = self._table_map(
+            read_docmap(spark, index_dir).select("doc_int", "doc_id",
+                                                 "bpart"),
+            self.meta["n_docs"] + len(load_tombstones(index_dir)),
+            lambda rows: {di: d for di, d, _ in rows}, cache)
+
+    def _table_map(self, rel: DataFrame, n_rows: int, entries,
+                   cache: bool) -> _DriverMap:
+        """The driver map of one table: the whole table, collected now
+        through Arrow (a JVM-only job), when its ``n_rows`` fit the
+        bound; else an empty map over the table's relation, cached in
+        executor memory like the postings, which each lookup of unseen
+        keys scans."""
+        limit = self.TERM_CACHE_MAX_POSTINGS
+        if n_rows <= limit:
+            return _DriverMap(limit, entries(zip(*(
+                c.to_pylist() for c in rel.toArrow().columns))))
+        return _DriverMap(limit, rel=rel.persist() if cache else rel)
 
     def search(self, queries: str | Sequence[str], k: int = 10,
                scorer: str = "taat", mode: str = "or") -> DataFrame:
@@ -493,7 +529,9 @@ class IndexReader:
                        scorer, mode, reader=self, return_rows=True)
 
     def close(self) -> None:
-        self._postings.unpersist()
+        for rel in (self._postings, self._vocab.rel, self._docmap.rel):
+            if rel is not None:
+                rel.unpersist()
 
 
 def _driver_rank_cut(rows, k: int):
@@ -556,7 +594,8 @@ def _search(
     footer-inference job)."""
     if isinstance(queries, str):
         queries = [queries]
-    postings = vocab = docmap = term_cache = None
+    postings = term_cache = None
+    vocab, docmap = _DriverMap(0), _DriverMap(0)  # one-shot: no memo
     if reader is not None:
         postings, vocab, docmap = reader._postings, reader._vocab, \
             reader._docmap
@@ -590,21 +629,18 @@ def _search(
         for t in all_terms
     }
     # df and the containing-bpart list per term: from the reader's
-    # open-time vocabulary map, else from a lookup job (absent terms
-    # have no entry). idf is derived fresh from df + current n_docs, so
+    # vocabulary map, else from a lookup job (absent terms have no
+    # entry). idf is derived fresh from df + current n_docs, so
     # collection stats are never cached. The merged vocabulary carries
     # each term's global df AND its (capped) containing-bpart list,
     # written at finalize — the part-level pruning input (VERDICT r5
     # #3: postings are doc-range-sharded, so without it every search
     # opens every bpart's footers; at 10^4+ parts that fan-out is the
     # latency floor for selective queries).
-    if vocab is None:
-        vocab = _vocab_lookup(spark, index_dir, term_to_hash.values())
-    df_by_hash: dict[tuple[int, int], int] = {}
-    parts_by_hash: dict[tuple[int, int], tuple | None] = {}
-    for h in term_to_hash.values():
-        if h in vocab:
-            df_by_hash[h], parts_by_hash[h] = vocab[h]
+    found = vocab.lookup(term_to_hash.values(), lambda hs: _vocab_lookup(
+        spark, index_dir, hs, vocab.rel))
+    df_by_hash = {h: df for h, (df, _) in found.items()}
+    parts_by_hash = {h: parts for h, (_, parts) in found.items()}
     for h, df in df_by_hash.items():
         if n_docs - df + 0.5 <= 0:
             raise ValueError(
@@ -664,8 +700,6 @@ def _search(
         if parts is not None:
             rel = rel.filter(_in_ints("bpart", parts))
         return rel
-
-    from .postings import load_tombstones
 
     tomb_set = load_tombstones(index_dir)
     tomb = (
@@ -781,17 +815,18 @@ def _search(
     if not top_rows:
         return ret_empty()
     # winners are driver-known ids → hydrate driver-side: from the
-    # reader's open-time docmap map (no Spark job), else one pruned
-    # docmap scan (no join job). The docmap is sorted by doc_int, so the
-    # IN filter prunes to the few row groups holding the winners.
-    if docmap is None:
-        ids = sorted({int(r["doc_int"]) for r in top_rows})
-        docmap = dict(_docmap_for_ids(spark, index_dir, ids, meta)
-                      .select("doc_int", "doc_id").collect())
+    # reader's docmap map, else one pruned docmap scan (no join job).
+    # The docmap is sorted by doc_int, so the IN filter prunes to the
+    # few row groups holding the winners.
+    doc_ids = docmap.lookup(
+        sorted({int(r["doc_int"]) for r in top_rows}),
+        lambda ids: dict(_docmap_for_ids(spark, index_dir, ids, meta,
+                                         docmap.rel)
+                         .select("doc_int", "doc_id").collect()))
     by_q: dict[int, list[tuple[float, str]]] = {}
     for r in top_rows:
         di = int(r["doc_int"])
-        did = docmap.get(di)
+        did = doc_ids.get(di)
         if did is None:  # docmap gap — mirror inner-join semantics
             continue
         by_q.setdefault(int(r["query_id"]), []).append(

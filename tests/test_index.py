@@ -714,8 +714,8 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
     scatter with the driver cut (budget = the candidate count: Σdf is
     above it) and to the scatter with the Spark rank window (budget 0).
     A term whose df exceeds the budget never has its rows cached (its
-    df and bparts come from the open-time vocabulary map), and every
-    search that uses it scatters."""
+    df and bparts come from the vocabulary map), and every search that
+    uses it scatters."""
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
     from pyspark.sql.pandas.group_ops import PandasGroupedOpsMixin
 
@@ -809,9 +809,11 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
         monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS",
                             cache_max)
         try:
-            assert uncached._vocab is None and uncached._docmap is None
+            assert not uncached._vocab.complete
+            assert not uncached._docmap.complete
             nocache, _, collects = run(uncached, oneshot=False)
             assert collects == 4 and len(uncached._df_cache) == 0
+            assert not uncached._vocab and not uncached._docmap
         finally:
             uncached.close()
 
@@ -955,41 +957,64 @@ def test_dense_kernel_matches_oracle(spark, tmp_path):
         reader.close()
 
 
-def test_term_cache_bound(spark, index_dir, monkeypatch):
-    """The reader's one driver bound, TERM_CACHE_MAX_POSTINGS, charges
-    the vocabulary and docmap rows it loads at open first, then df per
-    row-cached term. A stream whose terms need three times what the
-    bound leaves after the maps stops filling the term cache — the
-    count never exceeds the bound and always equals the loaded rows
-    plus the entries' df — and every answer equals an unbounded
-    reader's."""
+def test_term_cache_bound(spark, index_dir, corpus, tmp_path, monkeypatch):
+    """TERM_CACHE_MAX_POSTINGS bounds each of the reader's driver
+    structures on its own. The term cache counts df per cached term: a
+    stream whose terms need three times the bound stops filling it —
+    the count never exceeds the bound and always equals the entries'
+    df — and every answer equals an unbounded reader's. The docmap map
+    counts the docmap's rows, tombstoned ones included: on an index
+    whose finalize counted outstanding deletes (meta's n_docs is the
+    live count) and the bound at that count, the
+    reader does not collect the docmap, its memo stays within the
+    bound, and its answers equal the one-shot path's."""
     from oboyu_spark.operators import searchidx as SI
+    from oboyu_spark.operators.postings import append_docs, delete_docs
     from oboyu_spark.sources.transcripts import WORDS
 
     stream = QUERIES + list(WORDS[:24]) + QUERIES
     full = SI.IndexReader(spark, index_dir)
     try:
         expected = [full.search_rows(q, k=5) for q in stream]
-        loaded = len(full._vocab) + len(full._docmap)
-        need = full._df_cache.postings - loaded
+        need = full._df_cache.size
     finally:
         full.close()
-    limit = loaded + need // 3
+    limit = need // 3
     monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS", limit)
     reader = SI.IndexReader(spark, index_dir)
     try:
-        assert reader._df_cache.postings == loaded
+        assert reader._df_cache.size == 0
         got = []
         for q in stream:
             got.append(reader.search_rows(q, k=5))
             cache = reader._df_cache
-            assert cache.postings <= limit
-            assert cache.postings == loaded + sum(
-                reader._vocab[h][0] for h in cache)
+            assert cache.size <= limit
+            assert cache.size == sum(full._vocab[h][0] for h in cache)
     finally:
         reader.close()
     assert got == expected
     assert len(cache) < len(full._df_cache)
+
+    d = str(tmp_path / "tomb_idx")
+    build_index(corpus, d, shard_size=100, salt_chunk=50,
+                id_assign_partitions=4)
+    victims = [r["doc_id"] for r in search_index(
+        spark, d, ["spark index", "分散 shuffle"], k=8).collect()]
+    delete_docs(spark, d, victims)
+    append_docs(spark.createDataFrame(  # its finalize counts the deletes
+        [("zzadd#0", "spark index")], "doc_id string, text string"), d)
+    live = load_meta(d)["n_docs"]
+    assert live == corpus.count() - len(set(victims)) + 1
+    monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS", live)
+    reader = SI.IndexReader(spark, d)
+    try:
+        assert not reader._docmap.complete
+        for q in stream:
+            assert reader.search_rows(q, k=5) == [
+                tuple(r) for r in search_index(spark, d, q, k=5).collect()]
+            assert len(reader._docmap) <= live
+    finally:
+        reader.close()
 
 
 def test_term_cache_put_is_atomic():
@@ -1001,9 +1026,9 @@ def test_term_cache_put_is_atomic():
     import sys
     import threading
 
-    from oboyu_spark.operators.searchidx import _TermCache
+    from oboyu_spark.operators.searchidx import _DriverMap
 
-    cache = _TermCache(5_000)
+    cache = _DriverMap(5_000)
     rows = object()  # stands in for a term's decoded postings
 
     def df(h):
@@ -1027,8 +1052,8 @@ def test_term_cache_put_is_atomic():
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert len(cache) < 600
-    assert cache.postings <= cache.limit
-    assert cache.postings == sum(df(h) for h in cache)
+    assert cache.size <= cache.limit
+    assert cache.size == sum(df(h) for h in cache)
 
 
 def _index_rows(spark, d):

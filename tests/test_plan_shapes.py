@@ -351,9 +351,13 @@ def test_reader_maps_take_lookups_off_spark(spark, index_dir, monkeypatch):
     its df, part pruning and the hydration of its never-seen winners
     run none and read no vocabulary or docmap. A search whose terms are
     all absent from the vocabulary runs none. With the bound
-    monkeypatched below the table sizes the reader loads no maps, runs
-    the vocabulary lookup, the postings collect and the docmap
-    hydration per search (three jobs), and returns identical rows."""
+    monkeypatched below the table sizes the reader collects neither
+    table but caches both in executor memory: a first search runs the
+    vocabulary lookup, the postings collect and
+    the docmap hydration (three jobs) and returns identical rows, and
+    its maps memoize what it looked up, so repeating it runs no lookup
+    (only the postings collect of terms the term cache could not hold);
+    each map stays within the bound."""
     import gc
 
     from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
@@ -384,6 +388,7 @@ def test_reader_maps_take_lookups_off_spark(spark, index_dir, monkeypatch):
     queries = ["spark index search", "分散 shuffle partition engine"]
     reader = SI.IndexReader(spark, index_dir)
     try:
+        assert reader._vocab.complete and reader._docmap.complete
         assert reader._vocab and reader._docmap and not reader._df_cache
         reader.search_rows(warmup, k=5)
         arrows = []
@@ -406,18 +411,29 @@ def test_reader_maps_take_lookups_off_spark(spark, index_dir, monkeypatch):
         reader.close()
 
     meta = load_meta(index_dir)
-    monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS",
-                        meta["n_vocab_terms"] + meta["n_docs"] - 1)
+    limit = min(meta["n_vocab_terms"], meta["n_docs"]) - 1
+    monkeypatch.setattr(SI.IndexReader, "TERM_CACHE_MAX_POSTINGS", limit)
     bounded = SI.IndexReader(spark, index_dir)
     try:
-        assert bounded._vocab is None and bounded._docmap is None
+        assert not bounded._vocab.complete and not bounded._vocab
+        assert not bounded._docmap.complete and not bounded._docmap
+        assert bounded._vocab.rel.is_cached and bounded._docmap.rel.is_cached
         bounded.search_rows(warmup, k=5)
         del lookups[:]
         got, jobs = pinned(bounded, "maps_off", queries)
+        assert lookups == ["_vocab_lookup", "_docmap_for_ids"]
+        del lookups[:]
+        del arrows[:]
+        with monkeypatch.context() as m:
+            m.setattr(ClassicDataFrame, "toArrow", to_arrow)
+            again, again_jobs = pinned(bounded, "maps_memo", queries)
+        assert not lookups
+        assert len(again_jobs) == len(arrows) <= 1, again_jobs
+        assert 0 < len(bounded._vocab) <= limit
+        assert 0 < len(bounded._docmap) <= limit
     finally:
         bounded.close()
-    assert got == rows
-    assert lookups == ["_vocab_lookup", "_docmap_for_ids"]
+    assert got == rows == again
     assert len(jobs) == 3, jobs
 
 
