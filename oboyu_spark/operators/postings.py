@@ -170,6 +170,13 @@ def read_docmap(spark: SparkSession, index_dir: str) -> DataFrame:
     return dm.filter(~_in_ints("bpart", orphans)) if orphans else dm
 
 
+# the largest key set _filter_keys writes as an IN list (no extra
+# job); a larger one joins an Arrow key frame (one more job, nearly
+# flat cost). Write of a 2M-row scan, local[4], NOT IN vs anti-join:
+# 0.48 vs 0.50 s at 1k ids, 0.67 vs 0.44 s at 10k, 4.2 vs 0.82 s at 100k
+KEY_IN_LIST_MAX = 1_000
+
+
 def _in_ints(col: str, values: Iterable[int]):
     """``col IN (v1, v2, ...)`` over integer literals, built with ONE
     JVM call: ``Column.isin`` makes a py4j call per literal (0.5–1 ms
@@ -178,6 +185,60 @@ def _in_ints(col: str, values: Iterable[int]):
     32 bits), so the analyzed and physical plans are the same."""
     vals = ",".join(str(int(v)) for v in values)
     return F.expr(f"{col} IN ({vals})") if vals else F.lit(False)
+
+
+def _key_frame(spark: SparkSession, keys: list, key_type: str) -> DataFrame:
+    """One-column frame ``__key`` of driver-side keys of the DDL type
+    ``key_type``, built through Arrow: a LocalRelation, which a join
+    can broadcast (Python rows are an RDD scan)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructType
+
+    typ = StructType.fromDDL(f"k {key_type}")["k"].dataType
+    return spark.createDataFrame(
+        pa.table({"__key": pa.array(keys, to_arrow_type(typ))}))
+
+
+def _filter_keys(df: DataFrame, col: str, keys: Iterable, keep: bool,
+                 key_type: str = "bigint") -> DataFrame:
+    """The rows of ``df`` whose ``col`` (a column or a SQL expression of
+    the DDL type ``key_type``) is in the driver-side key set ``keys``
+    (``keep``), or the rows whose is not. The engine's one way to filter
+    by a key set of unbounded size. Up to ``KEY_IN_LIST_MAX`` keys it is
+    ONE IN filter built with one JVM call (integers as ``_in_ints``
+    writes them, a string as its hex-coded UTF-8 bytes,
+    ``CAST(X'…' AS STRING)``, so no quote, backslash or newline needs
+    escaping), which a scan pushes down and which runs no extra job;
+    above it, or for a key of another type, a left-semi or left-anti
+    join against an Arrow key frame, ``col`` projected to a column
+    first."""
+    keys = list(keys)
+    if not keys:
+        return df.filter(F.lit(False)) if keep else df
+    ints = key_type in ("tinyint", "smallint", "int", "bigint")
+    if len(keys) <= KEY_IN_LIST_MAX and (ints or key_type == "string"):
+        cond = _in_ints(col, keys) if ints else F.expr(
+            f"{col} IN (" + ",".join(f"CAST(X'{k.encode().hex()}' AS STRING)"
+                                     for k in keys) + ")")
+        return df.filter(cond if keep else ~cond)
+    return df.withColumn("__key", F.expr(col)).join(
+        _key_frame(df.sparkSession, keys, key_type), "__key",
+        "left_semi" if keep else "left_anti").drop("__key")
+
+
+def _fingerprint(text_type: str):
+    """fp, the change-detection key of a (doc_id, text) row (reference
+    change_detector.py:64-105 hashes files; here the doc is the unit):
+    md5 of the whitespace-normalized text, or of the space-joined token
+    stream of pretokenized (``array<string>``) text. The part build
+    writes it to the docmap and sync_docs' diff recomputes it without
+    re-reading staged text, so both use this."""
+    from ..functions.text import collapse_whitespace
+
+    if text_type.startswith("array<"):
+        return F.md5(F.concat_ws(" ", F.col("text")))
+    return F.md5(collapse_whitespace(F.col("text")))
 
 
 def term_hash_cols(term_col):
@@ -504,37 +565,24 @@ def _build_one_part(spark: SparkSession, index_dir: str, p: int,
 
     from .termindex import with_tokens
 
-    # fp = whitespace-normalized content hash, the change-detection key
-    # (reference change_detector.py:64-105 uses file hashes; here the
-    # doc IS the unit) — sync_docs diffs against it without ever
-    # re-reading staged text. Computed HERE, in the same projection as
+    # fp (_fingerprint) is computed HERE, in the same projection as
     # tokenization, so the raw text column can be DROPPED before the
-    # persist: the cached frame carries (ids, dl, fp, tokens) instead
-    # of text + tokens (≈2× the text bytes), and the docmap/stats/tf
+    # persist: the cached frame carries (ids, dl, fp, tokens) instead of
+    # text + tokens (≈2× the text bytes), and the docmap/stats/tf
     # consumers below never touch the wide column again.
-    from ..functions.text import collapse_whitespace
-
     if smeta["text_type"].startswith("array<"):
         # PRE-TOKENIZED input (array<string> text column): the caller
-        # already ran the tokenizer — pass the array through. The
-        # change-detection fingerprint hashes the space-joined token
-        # stream (_mutate refuses to mix raw and pretokenized text in
-        # one index). scaling_bench uses it to time the parts phase
-        # without the regex tokenizer.
-        toks = (
-            sub.withColumn("tokens", F.col("text"))
-            .withColumn("dl", F.size("tokens"))
-            .withColumn("fp", F.md5(F.concat_ws(" ", F.col("text"))))
-            .drop("text")
-        )
+        # already ran the tokenizer — pass the array through (_mutate
+        # refuses to mix raw and pretokenized text in one index).
+        # scaling_bench uses it to time the parts phase without the
+        # regex tokenizer.
+        toks = sub.withColumn("tokens", F.col("text"))
     else:
-        toks = (
-            with_tokens(sub, "text", "tokens", cfg["min_token_length"],
-                        cfg["stop_words"])
-            .withColumn("dl", F.size("tokens"))
-            .withColumn("fp", F.md5(collapse_whitespace(F.col("text"))))
-            .drop("text")
-        )
+        toks = with_tokens(sub, "text", "tokens", cfg["min_token_length"],
+                           cfg["stop_words"])
+    toks = (toks.withColumn("dl", F.size("tokens"))
+            .withColumn("fp", _fingerprint(smeta["text_type"]))
+            .drop("text"))
     toks = toks.persist()
     steps: dict[str, float] = {}
 
@@ -799,9 +847,9 @@ def finalize_index(spark: SparkSession, index_dir: str, *,
         if tomb:
             # a tombstoned id a compaction already dropped matches no row
             part_docs = _part_docs(smeta)
-            gone = read_docmap(spark, index_dir).filter(
-                _in_ints("bpart", {d // part_docs for d in tomb})
-                & _in_ints("doc_int", tomb)
+            gone = _filter_keys(read_docmap(spark, index_dir).filter(
+                _in_ints("bpart", {d // part_docs for d in tomb})),
+                "doc_int", tomb, keep=True,
             ).agg(F.count(F.lit(1)).alias("n"),
                   F.coalesce(F.sum("dl"), F.lit(0)).alias("total")).collect()[0]
             n_docs -= int(gone["n"])
@@ -1028,19 +1076,6 @@ def load_tombstones(index_dir: str) -> set[int]:
         return set()
 
 
-def _key_frame(spark: SparkSession, keys: list, doc_id_type: str) -> DataFrame:
-    """(doc_id) frame of driver-side keys in the index's key type, built
-    through Arrow: a LocalRelation for a broadcast semi-join (Python
-    rows are an RDD scan; ``Column.isin`` is one py4j call per key)."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
-    from pyspark.sql.types import StructType
-
-    typ = StructType.fromDDL(f"doc_id {doc_id_type}")["doc_id"].dataType
-    return spark.createDataFrame(
-        pa.table({"doc_id": pa.array(keys, to_arrow_type(typ))}))
-
-
 def _drop_staged(spark: SparkSession, index_dir: str, smeta: dict,
                  tomb: set[int]) -> None:
     """Rewrite the staged slices holding tombstoned ids without them;
@@ -1073,12 +1108,12 @@ def _drop_staged(spark: SparkSession, index_dir: str, smeta: dict,
         if not os.path.isdir(src) and os.path.isdir(tmp):
             os.rename(tmp, src)
     for gen, ks in keys.items():
-        spark.read.schema(staged_read_schema(smeta) + ", pid int") \
-            .parquet(f"{index_dir}/staged/gen={gen}") \
-            .filter(_in_ints("pid", pids[gen])
-                    & ~_in_ints("(shiftleft(CAST(pid AS BIGINT), 33) | rn)",
-                                ks)) \
-            .write.mode("overwrite").partitionBy("pid") \
+        _filter_keys(
+            spark.read.schema(staged_read_schema(smeta) + ", pid int")
+            .parquet(f"{index_dir}/staged/gen={gen}")
+            .filter(_in_ints("pid", pids[gen])),
+            "(shiftleft(CAST(pid AS BIGINT), 33) | rn)", ks, keep=False,
+        ).write.mode("overwrite").partitionBy("pid") \
             .parquet(f"{index_dir}/staged_tmp/gen={gen}")
     for src, tmp in paths:
         shutil.rmtree(src, ignore_errors=True)
@@ -1198,8 +1233,8 @@ def sync_docs(
     - MODIFIED (fp diff)  → old doc_int tombstoned, new text staged
     - DELETED (absent)    → tombstoned (``delete_missing=False`` keeps
       them — the "incoming is a partial feed" mode)
-    The rows to stage come from ``docs`` by a semi-join against an
-    Arrow-built key frame. ``compact=True`` (the default) also rewrites
+    The rows to stage come from ``docs``, filtered by their keys
+    (``_filter_keys``). ``compact=True`` (the default) also rewrites
     the parts holding tombstoned docs, so df/N/avgdl are exact;
     ``compact=False`` defers that per the delete_docs contract (a
     delete-only sync returns the entry meta; on heavy churn a stale df
@@ -1211,16 +1246,11 @@ def sync_docs(
     incoming = docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
     )
-    from ..functions.text import collapse_whitespace
-
-    inc = incoming.select(
-        "doc_id", F.md5(collapse_whitespace(F.col("text"))).alias("fp_new")
-    )
-    docmap = read_docmap(spark, index_dir)
-    tomb = load_tombstones(index_dir)
-    if tomb:
-        docmap = docmap.filter(~_in_ints("doc_int", tomb))
-    existing = docmap.select("doc_id", "doc_int", F.col("fp").alias("fp_old"))
+    inc = incoming.select("doc_id", _fingerprint(
+        _staged_types(incoming)["text_type"]).alias("fp_new"))
+    existing = _filter_keys(read_docmap(spark, index_dir), "doc_int",
+                            load_tombstones(index_dir), keep=False).select(
+        "doc_id", "doc_int", F.col("fp").alias("fp_old"))
     change = (
         F.when(F.col("fp_old").isNull(), "new")
         .when(F.col("fp_new").isNull(), "deleted")
@@ -1237,25 +1267,25 @@ def sync_docs(
     meta = _mutate(
         spark, index_dir, meta,
         tomb={int(r["doc_int"]) for r in rows["modified"] + rows["deleted"]},
-        docs=incoming.join(_key_frame(spark, add, meta["doc_id_type"]),
-                           "doc_id", "left_semi") if add else None,
+        docs=_filter_keys(incoming, "doc_id", add, keep=True,
+                          key_type=meta["doc_id_type"]) if add else None,
         compact=compact,
     )
     return {**{k: len(v) for k, v in rows.items()}, "meta": meta}
 
 
 def delete_docs(spark: SparkSession, index_dir: str, doc_keys: list) -> dict:
-    """Mark docs deleted (by original key, resolved by a semi-join
-    against an Arrow-built key frame): _mutate tombstones them, scorers
+    """Mark docs deleted (by original key, resolved against the docmap
+    by ``_filter_keys``): _mutate tombstones them, scorers
     mask them at decode, and the entry meta is returned — stats stay
     pre-delete until a finalize recomputes N/avgdl and
     ``compact_index`` the df (the reference rewrites posting lists
     eagerly — inverted_index_builder.py:70-92 — which at 10^12 docs is
     exactly what we must NOT do per deletion)."""
     meta = load_meta(index_dir)
-    keys = _key_frame(spark, list(doc_keys), meta["doc_id_type"])
-    ints = {int(r["doc_int"]) for r in read_docmap(spark, index_dir)
-            .join(keys, "doc_id", "left_semi").select("doc_int").collect()}
+    ints = {int(r["doc_int"]) for r in _filter_keys(
+        read_docmap(spark, index_dir), "doc_id", doc_keys, keep=True,
+        key_type=meta["doc_id_type"]).select("doc_int").collect()}
     return _mutate(spark, index_dir, meta, tomb=ints)
 
 

@@ -21,7 +21,8 @@ Plan shape per batch of queries:
    with no pandas, always by TAAT; otherwise a scorer closure (TAAT,
    block-max WAND or an "auto" per-query mix) is the scatter's
    ``groupBy("shard").applyInPandas`` UDF, each decoding its shard
-   through ``_decode_rows`` to per-term (ids, wtf). A warm ``IndexReader``
+   through ``_decode_shard`` to per-term (ids, wtf); both sites decode
+   with the one ``_decode``. A warm ``IndexReader``
    keeps each term's decoded arrays in its driver term cache, so a
    search whose terms are all cached runs no postings job.
 3. gather: global candidates per query (rank-≤-k cut over ≤ shards×k
@@ -184,48 +185,54 @@ def _query_maps(queries: Sequence[str], min_token_length: int):
     return qmap, sorted(all_terms)
 
 
-def _decode_rows(pdf: pd.DataFrame, base: int, k1: float, b: float,
-                 avgdl: float, tomb: np.ndarray | None = None):
-    """The scatter's decoder, shared by its scorer closures: (th1, th2)
-    -> (local ids int64, wtf float64) of one shard's pandas group, the
-    term's salt chunks (disjoint ascending doc ranges) joined in salt
-    order. ``tomb``: sorted global doc ints to mask out (deleted docs)."""
-    chunks: dict[tuple[int, int], list[tuple[np.ndarray, np.ndarray]]] = {}
-    for r in pdf.sort_values(["th1", "th2", "salt"]).itertuples():
-        ids = np.cumsum(r.gaps, dtype=np.int64)  # shard-local already
-        wtf = _wtf(r.tfs, r.dls, k1, b, avgdl)
-        if tomb is not None and tomb.size:
-            keep = ~np.isin(ids + base, tomb)
-            ids, wtf = ids[keep], wtf[keep]
-        chunks.setdefault((int(r.th1), int(r.th2)), []).append((ids, wtf))
-    return {h: tuple(np.concatenate(a) for a in zip(*cs))
-            for h, cs in chunks.items()}
-
-
-def _decode_arrow(tbl: pa.Table, k1: float, b: float, avgdl: float):
-    """(th1, th2) -> {shard: (local ids int32, wtf float64)} of collected
-    posting rows, from the flat Arrow lists: one cumsum restarted at
-    each row, salt rows joined in salt order, no tombstone masking."""
+def _decode(n: np.ndarray, gaps: np.ndarray, tfs: np.ndarray,
+            dls: np.ndarray, keys, k1: float, b: float, avgdl: float):
+    """(th1, th2) -> {shard: (local ids int32, wtf float64)} of posting
+    rows given as their lengths ``n``, their flat ``gaps``/``tfs``/
+    ``dls`` values and their (th1, th2, shard, salt) ``keys`` columns:
+    one cumsum restarted at each row, salt rows joined in salt order,
+    no tombstone masking."""
     decoded: dict[tuple[int, int], dict[int, tuple]] = {}
-    lens = pc.list_value_length(tbl.column("gaps")).to_numpy()
-    c = np.cumsum(pc.list_flatten(tbl.column("gaps")).to_numpy(),
-                  dtype=np.int64)
-    ends = np.cumsum(lens)
-    starts = ends - lens
-    ids = (c - np.repeat(np.concatenate(([0], c))[starts], lens)).astype(
+    n = np.asarray(n, dtype=np.int64)
+    c = np.cumsum(gaps, dtype=np.int64)
+    ends = np.cumsum(n)
+    starts = ends - n
+    ids = (c - np.repeat(np.concatenate(([0], c))[starts], n)).astype(
         np.int32)
-    wtf = _wtf(pc.list_flatten(tbl.column("tfs")).to_numpy(),
-               pc.list_flatten(tbl.column("dls")).to_numpy(), k1, b, avgdl)
-    key = [tbl.column(n).to_numpy() for n in ("salt", "shard", "th2", "th1")]
+    wtf = _wtf(tfs, dls, k1, b, avgdl)
+    th1, th2, shard, salt = keys
     rows: dict[tuple[int, int, int], list[int]] = {}
-    for i in np.lexsort(key).tolist():
-        rows.setdefault((int(key[3][i]), int(key[2][i]), int(key[1][i])),
+    for i in np.lexsort((salt, shard, th2, th1)).tolist():
+        rows.setdefault((int(th1[i]), int(th2[i]), int(shard[i])),
                         []).append(i)
-    for (th1, th2, shard), rs in rows.items():
-        decoded.setdefault((th1, th2), {})[shard] = tuple(
+    for (h1, h2, sh), rs in rows.items():
+        decoded.setdefault((h1, h2), {})[sh] = tuple(
             np.concatenate([a[starts[r]:ends[r]] for r in rs])
             for a in (ids, wtf))
     return decoded
+
+
+def _decode_arrow(tbl: pa.Table, k1: float, b: float, avgdl: float):
+    """:func:`_decode` of posting rows collected to the driver as Arrow,
+    from the list columns' flat values."""
+    return _decode(
+        tbl.column("n").to_numpy(),
+        *(pc.list_flatten(tbl.column(c)).to_numpy()
+          for c in ("gaps", "tfs", "dls")),
+        [tbl.column(c).to_numpy() for c in ("th1", "th2", "shard", "salt")],
+        k1, b, avgdl)
+
+
+def _decode_shard(pdf: pd.DataFrame, k1: float, b: float, avgdl: float):
+    """The scatter's decoder, shared by its scorer closures: (th1, th2)
+    -> (local ids int32, wtf float64) of one shard's pandas group,
+    :func:`_decode` of its list cells."""
+    shard = int(pdf["shard"].iloc[0])
+    return {h: p[shard] for h, p in _decode(
+        pdf["n"].to_numpy(),
+        *(np.concatenate(pdf[c].to_numpy()) for c in ("gaps", "tfs", "dls")),
+        [pdf[c].to_numpy() for c in ("th1", "th2", "shard", "salt")],
+        k1, b, avgdl).items()}
 
 
 def _score_dense(qmap, idf_map, terms: dict, k: int, base: int,
@@ -311,7 +318,7 @@ def make_taat_scorer(
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         base = int(pdf["shard"].iloc[0]) * shard_size
-        terms = _decode_rows(pdf, base, k1, b, avgdl)
+        terms = _decode_shard(pdf, k1, b, avgdl)
         return _shard_frame(*_score_dense(qmap, idf_map, terms, k, base,
                                           tomb, mode, qreq))
 
@@ -470,34 +477,31 @@ class IndexReader:
     # (≈165 B and ≈150 B each, ≈0.16 GB for both)
     TERM_CACHE_MAX_POSTINGS = 500_000
 
-    def __init__(self, spark: SparkSession, index_dir: str,
-                 cache: bool = True) -> None:
+    def __init__(self, spark: SparkSession, index_dir: str) -> None:
         self.spark = spark
         self.index_dir = index_dir
         self.meta = load_meta(index_dir)
+        # the postings cache is hash-partitioned by shard, so the
+        # per-query groupBy("shard") plans no Exchange (uncached, it
+        # would shuffle the whole table on every query); the scatter of
+        # searches above the driver budget reads it
         self._postings = spark.read.schema(POSTINGS_READ_SCHEMA).parquet(
-            f"{index_dir}/postings")
-        if cache:
-            # the postings cache is hash-partitioned by shard, so the
-            # per-query groupBy("shard") plans no Exchange (uncached,
-            # it would shuffle the whole table on every query); the
-            # scatter of searches above the driver budget reads it
-            self._postings = self._postings.repartition(
-                spark.sparkContext.defaultParallelism, "shard").persist()
+            f"{index_dir}/postings").repartition(
+            spark.sparkContext.defaultParallelism, "shard").persist()
         self._df_cache = _DriverMap(self.TERM_CACHE_MAX_POSTINGS)
         self._vocab = self._table_map(
             spark.read.schema(VOCABULARY_SCHEMA).parquet(
                 f"{index_dir}/vocabulary"),
-            self.meta["n_vocab_terms"], _vocab_entries, cache)
+            self.meta["n_vocab_terms"], _vocab_entries)
         # the docmap keeps tombstoned rows until compaction
         self._docmap = self._table_map(
             read_docmap(spark, index_dir).select("doc_int", "doc_id",
                                                  "bpart"),
             self.meta["n_docs"] + len(load_tombstones(index_dir)),
-            lambda rows: {di: d for di, d, _ in rows}, cache)
+            lambda rows: {di: d for di, d, _ in rows})
 
-    def _table_map(self, rel: DataFrame, n_rows: int, entries,
-                   cache: bool) -> _DriverMap:
+    def _table_map(self, rel: DataFrame, n_rows: int,
+                   entries) -> _DriverMap:
         """The driver map of one table: the whole table, collected now
         through Arrow (a JVM-only job), when its ``n_rows`` fit the
         bound; else an empty map over the table's relation, cached in
@@ -507,7 +511,7 @@ class IndexReader:
         if n_rows <= limit:
             return _DriverMap(limit, entries(zip(*(
                 c.to_pylist() for c in rel.toArrow().columns))))
-        return _DriverMap(limit, rel=rel.persist() if cache else rel)
+        return _DriverMap(limit, rel=rel.persist())
 
     def search(self, queries: str | Sequence[str], k: int = 10,
                scorer: str = "taat", mode: str = "or") -> DataFrame:

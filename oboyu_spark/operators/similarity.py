@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .postings import _filter_keys, _in_ints
+
 
 def _dot_expr(col, qvec: Sequence[float]):
     q = F.array(*[F.lit(float(x)) for x in qvec])
@@ -332,7 +334,7 @@ def ivf_topk(
     probes = _probe_lists(centroids, query_vec, nprobe, quantize=quantize)
     assigned = ivf_assign(embeddings, centroids, id_col, vec_col,
                           quantize=quantize)
-    cand = assigned.filter(F.col("list_id").isin(probes)).select(
+    cand = assigned.filter(_in_ints("list_id", probes)).select(
         "vec_id", "embedding"
     )
     return cosine_topk(cand, query_vec, k, "vec_id", "embedding",
@@ -448,9 +450,6 @@ def ivf_append(
     )
 
 
-IVF_TOMBSTONE_ISIN_MAX = 10_000
-
-
 def ivf_load_tombstones(index_dir: str) -> list:
     """Deleted vec_ids (raw key values), or [] — the IVF mirror of the
     postings index's ``load_tombstones``."""
@@ -483,19 +482,14 @@ def ivf_delete(index_dir: str, vec_ids) -> None:
 
 
 def _mask_tombstones(cand: DataFrame, index_dir: str) -> DataFrame:
-    """Filter tombstoned vec_ids out of a candidate frame: a driver
-    ``isin`` literal while the set is small, a broadcast-able anti-join
-    frame above the cutoff (one giant In-expression is the wrong plan
-    for a large pre-compaction set — same rule as streaming/ingest)."""
+    """Filter tombstoned vec_ids out of a candidate frame through
+    ``postings._filter_keys`` (an IN list up to its cutover, an
+    anti-join above it), keyed by the frame's vec_id type."""
     tomb = ivf_load_tombstones(index_dir)
     if not tomb:
         return cand
-    if len(tomb) <= IVF_TOMBSTONE_ISIN_MAX:
-        return cand.filter(~F.col("vec_id").isin(tomb))
-    tomb_df = cand.sparkSession.createDataFrame(
-        [(x,) for x in tomb], ["vec_id"]
-    )
-    return cand.join(tomb_df, "vec_id", "left_anti")
+    return _filter_keys(cand, "vec_id", tomb, keep=False,
+                        key_type=cand.schema["vec_id"].dataType.simpleString())
 
 
 def ivf_compact(spark, index_dir: str) -> None:
@@ -560,7 +554,7 @@ def ivf_search(
     quantizer MODE recorded at build time, so a quantized build is
     probed with the same exact-integer arithmetic that assigned it —
     and the scan reads ONLY the probed ``list_id=N`` partitions — the
-    ``isin`` filter lands in the scan's PartitionFilters (list_id is a
+    ``list_id IN`` filter lands in the scan's PartitionFilters (list_id is a
     partition column, not a computed one), so the files of the other
     n_lists − nprobe lists are never opened. Scanned fraction ≈
     nprobe / n_lists by construction, verified by a plan-shape test."""
@@ -577,7 +571,7 @@ def ivf_search(
     # read lists every partition directory before PartitionFilters
     # apply (at 10⁴ lists that is 10⁴ prefix listings per query on an
     # object store). Empty lists write no directory; missing probes
-    # just drop out. The isin filter stays (it carries the
+    # just drop out. The IN filter stays (it carries the
     # PartitionFilters plan pin and guards basePath edge cases); a
     # warm IvfReader keeps its persisted root relation instead.
     base = f"{index_dir}/lists"
@@ -588,7 +582,7 @@ def ivf_search(
     else:
         lists = spark.read.parquet(base)
     cand = _mask_tombstones(
-        lists.filter(F.col("list_id").isin(probes)).select(
+        lists.filter(_in_ints("list_id", probes)).select(
             "vec_id", "embedding"
         ),
         index_dir,
@@ -609,16 +603,14 @@ class IvfReader:
     ``ivf_append`` AFTER open are not visible until reopen — the same
     snapshot contract as IndexReader."""
 
-    def __init__(self, spark, index_dir: str, cache: bool = True) -> None:
+    def __init__(self, spark, index_dir: str) -> None:
         from .dedup import _recover_swap
 
         _recover_swap(index_dir, "lists")
         self.spark = spark
         self.index_dir = index_dir
         self.meta = ivf_load_sidecar(index_dir)
-        self.lists = spark.read.parquet(f"{index_dir}/lists")
-        if cache:
-            self.lists.persist()
+        self.lists = spark.read.parquet(f"{index_dir}/lists").persist()
 
     def search(self, query_vec: Sequence[float], k: int = 10,
                nprobe: int = 4,
@@ -626,7 +618,7 @@ class IvfReader:
         probes = _probe_lists(self.meta["centroids"], query_vec, nprobe,
                               quantize=self.meta["quantize"])
         cand = _mask_tombstones(
-            self.lists.filter(F.col("list_id").isin(probes)).select(
+            self.lists.filter(_in_ints("list_id", probes)).select(
                 "vec_id", "embedding"
             ),
             self.index_dir,

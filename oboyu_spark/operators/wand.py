@@ -38,7 +38,7 @@ and the python oracle (test_wand).
 
 Nothing is stored for the bounds: Block-max WAND stores per-block
 maxima so that a scorer can skip decoding blocks, but the scatter
-decodes every posting of every query term (searchidx._decode_rows)
+decodes every posting of every query term (searchidx._decode_shard)
 before any pruning decision. One pass over the decoded weights then
 gives each cell's exact maximum, tighter than any stored block maximum
 and valid under the current k1/b/avgdl by construction.
@@ -224,22 +224,24 @@ def make_bmw_scorer(
     shard_size: int,
     tomb: np.ndarray | None = None,
 ) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    from .searchidx import _decode_rows, _shard_frame
+    from .searchidx import _decode_shard, _shard_frame
 
     width = max(MIN_CELL_WIDTH, -(-shard_size // MAX_CELLS))
     n_cells = -(-shard_size // width)
 
     def score_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         base = int(pdf["shard"].iloc[0]) * shard_size
+        decoded = _decode_shard(pdf, k1, b, avgdl)
+        if tomb is not None and tomb.size:
+            # mask the shard's tombstones per term; an emptied term drops
+            local = tomb[(tomb >= base) & (tomb < base + shard_size)] - base
+            for term, (ids, wtf) in decoded.items():
+                keep = ~np.isin(ids, local)
+                decoded[term] = (ids[keep], wtf[keep])
         # query-independent per-term structures, built ONCE per shard
-        # and shared across the whole query batch; tombstones are
-        # masked at decode, so a fully deleted term drops out here
-        structs = {
-            term: _TermStruct(ids, wtf, n_cells, width)
-            for term, (ids, wtf) in _decode_rows(
-                pdf, base, k1, b, avgdl, tomb).items()
-            if ids.size
-        }
+        # and shared across the whole query batch
+        structs = {term: _TermStruct(ids, wtf, n_cells, width)
+                   for term, (ids, wtf) in decoded.items() if ids.size}
 
         rows_q: list[int] = []
         rows_d: list[np.ndarray] = []
@@ -257,7 +259,7 @@ def make_bmw_scorer(
                 continue
             sel = np.lexsort((docs, -scores))[:k]
             rows_q.append(qid)
-            rows_d.append(docs[sel] + base)
+            rows_d.append(docs[sel] + np.int64(base))
             rows_s.append(scores[sel])
         return _shard_frame(rows_q, rows_d, rows_s)
 

@@ -83,9 +83,6 @@ def dedup_stream(
     return writer.start()
 
 
-NEAR_DROP_ISIN_MAX = 10_000
-
-
 def _curation_gates(stream: DataFrame, min_quality: float | None,
                     max_dup_line_frac: float | None,
                     max_top_bigram_frac: float | None,
@@ -150,7 +147,8 @@ def _near_dedup_handler(base, index_dir: str, minhash_dir: str,
     from ..operators.dedup import (
         minhash_index_append_pairs, minhash_index_build,
     )
-    from ..operators.postings import delete_docs, load_tombstones, read_docmap
+    from ..operators.postings import (_filter_keys, delete_docs,
+                                      load_tombstones, read_docmap)
     from .ingest import _done_batches
 
     def handler(batch_df, batch_id: int) -> None:
@@ -169,40 +167,22 @@ def _near_dedup_handler(base, index_dir: str, minhash_dir: str,
                                            threshold=threshold)
         # keep the drop set a DATAFRAME (ADVICE r6): a boilerplate
         # batch can produce 10^6+ near-dup pairs, and collecting the
-        # whole id set to the driver just to decide the filter shape
-        # would materialize it all in driver memory. count() picks the
-        # isin/anti-join cutover; the only collects are the bounded
-        # isin literal list (<= NEAR_DROP_ISIN_MAX) and the
-        # delete_docs id list AFTER the docmap semi-join has reduced
-        # it to already-indexed ids.
+        # whole id set to the driver would materialize it all in driver
+        # memory. The batch anti-joins it and the docmap semi-joins it;
+        # the only collect is the delete_docs id list AFTER the docmap
+        # semi-join has reduced it to already-indexed ids.
         drops = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
         drops.persist()
         try:
-            n_drop = drops.count()
-            if n_drop:
-                small = n_drop <= NEAR_DROP_ISIN_MAX
-                if small:
-                    drop_ids = sorted(r["doc_id"] for r in drops.collect())
-                    batch_df = batch_df.filter(
-                        ~F.col("doc_id").isin(drop_ids)
-                    )
-                else:
-                    batch_df = batch_df.join(drops, "doc_id", "left_anti")
+            if drops.count():
+                batch_df = batch_df.join(drops, "doc_id", "left_anti")
                 # retroactive branch: ids already in the live index
-                # (same isin/join cutover as the batch filter — a
-                # 10^5-literal In over the docmap scan is the same
-                # driver-plan bloat either way)
                 if os.path.isdir(f"{index_dir}/docmap"):
-                    tomb = {int(t) for t in load_tombstones(index_dir)}
-                    dm = read_docmap(spark, index_dir)
-                    dm = (dm.filter(F.col("doc_id").isin(drop_ids))
-                          if small
-                          else dm.join(drops, "doc_id", "left_semi"))
-                    hit = dm.select("doc_id", "doc_int").collect()
-                    indexed = sorted(
-                        {r["doc_id"] for r in hit
-                         if int(r["doc_int"]) not in tomb}
-                    )
+                    indexed = sorted({r["doc_id"] for r in _filter_keys(
+                        read_docmap(spark, index_dir), "doc_int",
+                        load_tombstones(index_dir), keep=False)
+                        .join(drops, "doc_id", "left_semi")
+                        .select("doc_id").collect()})
                     if indexed:
                         delete_docs(spark, index_dir, indexed)
             base(batch_df, batch_id)

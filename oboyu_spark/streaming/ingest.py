@@ -38,12 +38,6 @@ from ..operators.postings import _write_json
 from ..sources.transcripts import turns_as_docs
 
 
-#: tombstone sets up to this size are inlined as an IN literal list (one
-#: broadcast-free pushed filter); larger sets anti-join instead so the
-#: driver never builds a million-term In-expression
-TOMBSTONE_ISIN_MAX = 10_000
-
-
 def _done_batches(index_dir: str) -> set[int]:
     try:
         with open(f"{index_dir}/stream_batches.json") as fh:
@@ -71,13 +65,13 @@ def handle_batch_factory(index_dir: str):
     keys, not content — a re-emitted doc_id with changed text is
     dropped (updates must go through ``sync_docs``, which diffs the
     content fingerprint). Tombstoned doc_ints are filtered out of the
-    docmap before the anti-join, so a key deleted via ``delete_docs``
-    and later re-emitted on the stream IS re-added — same behavior
-    whether or not ``compact_index`` has run in between."""
-    from pyspark.sql import functions as F
-
-    from ..operators.postings import (_in_ints, append_docs, build_index,
-                                      load_tombstones, read_docmap)
+    docmap (``postings._filter_keys``) before the anti-join, so a key
+    deleted via ``delete_docs`` and later re-emitted on the stream IS
+    re-added — same behavior whether or not ``compact_index`` has run
+    in between."""
+    from ..operators.postings import (_filter_keys, append_docs,
+                                      build_index, load_tombstones,
+                                      read_docmap)
 
     def handle_batch(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -101,19 +95,9 @@ def handle_batch_factory(index_dir: str):
             _mark_batch_done(index_dir, batch_id)
             return
         if os.path.isdir(f"{index_dir}/docmap"):
-            docmap = read_docmap(batch_df.sparkSession, index_dir)
-            tomb = load_tombstones(index_dir)
-            if tomb and len(tomb) <= TOMBSTONE_ISIN_MAX:
-                docmap = docmap.filter(~_in_ints("doc_int", tomb))
-            elif tomb:
-                # ADVICE r3: a large pre-compaction tombstone set as an
-                # isin literal is one giant driver-built In-expression;
-                # above the cutoff ship it as a frame and anti-join
-                tomb_df = batch_df.sparkSession.createDataFrame(
-                    [(int(x),) for x in tomb], "doc_int long"
-                )
-                docmap = docmap.join(tomb_df, "doc_int", "left_anti")
-            existing = docmap.select("doc_id")
+            existing = _filter_keys(
+                read_docmap(batch_df.sparkSession, index_dir), "doc_int",
+                load_tombstones(index_dir), keep=False).select("doc_id")
             batch_df = batch_df.join(existing, "doc_id", "left_anti")
             if batch_df.isEmpty():
                 _mark_batch_done(index_dir, batch_id)

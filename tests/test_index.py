@@ -290,7 +290,10 @@ def test_sync_job_count(spark, corpus, index_dir, tmp_path):
     """A sync with new, modified and deleted docs and compaction is ONE
     mutation step: the diff collect, the staging of the new rows, one
     part loop over the rebuilt and the new part, and one finalize —
-    34 Spark jobs on this corpus. It was 39 while the staged rewrite ran
+    33 Spark jobs on this corpus. It was 34 while the staged rows were
+    picked by a semi-join against a key frame (a broadcast job; a key
+    set this small is now one IN filter). It was 39 while the staged
+    rewrite ran
     one job per touched slice (4 here, now one per generation) and the
     compacting finalize scanned the docmap for tombstoned rows the
     rebuild had already dropped (2 jobs). It was 52 before the staged
@@ -327,7 +330,7 @@ def test_sync_job_count(spark, corpus, index_dir, tmp_path):
     assert (out["new"], out["modified"], out["deleted"]) == (5, n_mod, n_del)
     assert out["meta"]["n_docs"] == len(feed)
     jobs = sc.statusTracker().getJobIdsForGroup("sync_pin")
-    assert len(jobs) == 34, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
+    assert len(jobs) == 33, f"sync ran {len(jobs)} jobs: {sorted(jobs)}"
 
 
 def test_build_job_count(spark, corpus, tmp_path):
@@ -601,7 +604,7 @@ def test_gather_paths_identical(spark, corpus, index_dir, monkeypatch):
     from oboyu_spark.operators import searchidx as SI
 
     fast = search_index(spark, index_dir, QUERIES, k=7).collect()
-    reader = SI.IndexReader(spark, index_dir, cache=False)
+    reader = SI.IndexReader(spark, index_dir)
     fast_rows = reader.search_rows(QUERIES, k=7)
     monkeypatch.setattr(SI, "DRIVER_CUT_MAX_ROWS", 0)  # scatter + window
     slow = search_index(spark, index_dir, QUERIES, k=7).collect()
@@ -698,6 +701,36 @@ def test_pretokenized_build_matches_text_build(spark, corpus, index_dir,
         b = [(r["doc_id"], round(r["score"], 9)) for r in
              search_index(spark, d, q, k=10).collect()]
         assert a == b, q
+
+
+def test_sync_pretokenized_index(spark, corpus, tmp_path):
+    """sync_docs diffs a pretokenized (array<string>) index by the
+    fingerprint its build wrote: a sync of the build's corpus with one
+    doc's tokens edited reports that one doc as modified, and the
+    synced index searches like a fresh pretokenized build of the edited
+    corpus."""
+    from oboyu_spark.operators.postings import sync_docs
+    from oboyu_spark.operators.termindex import with_tokens
+
+    pre = with_tokens(corpus).select("doc_id",
+                                     F.col("tokens").alias("text"))
+    victim = sorted(r["doc_id"] for r in pre.select("doc_id").collect())[3]
+    edited = pre.withColumn("text", F.when(
+        F.col("doc_id") == victim,
+        F.concat("text", F.array(F.lit("spark"), F.lit("zzedit"))),
+    ).otherwise(F.col("text")))
+    d, fresh = str(tmp_path / "pretok"), str(tmp_path / "fresh")
+    geo = dict(shard_size=100, salt_chunk=50, id_assign_partitions=4)
+    build_index(pre, d, **geo)
+    out = sync_docs(edited, d)
+    assert {k: out[k] for k in ("new", "modified", "deleted")} == \
+        {"new": 0, "modified": 1, "deleted": 0}
+    build_index(edited, fresh, **geo)
+    for q in ["spark query join", "zzedit"]:
+        a, b = ([(r["doc_id"], round(r["score"], 9)) for r in
+                 search_index(spark, x, q, k=10).collect()]
+                for x in (d, fresh))
+        assert a == b and a, q
 
 
 def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
@@ -855,17 +888,36 @@ def test_driver_and_scatter_sites_identical(spark, corpus, tmp_path,
     assert window == window_cold == driver
 
 
+def _decode_rows(pdf, base, k1, b, avgdl, tomb=None):
+    """Reference decoder, one posting row at a time: (th1, th2) ->
+    (local ids, wtf) of one shard's rows, the term's salt chunks joined
+    in salt order, tombstoned global doc ints masked."""
+    from oboyu_spark.operators.searchidx import _wtf
+
+    chunks = {}
+    for r in pdf.sort_values(["th1", "th2", "salt"]).itertuples():
+        ids = np.cumsum(r.gaps, dtype=np.int64)
+        wtf = _wtf(r.tfs, r.dls, k1, b, avgdl)
+        if tomb is not None:
+            keep = ~np.isin(ids + base, tomb)
+            ids, wtf = ids[keep], wtf[keep]
+        chunks.setdefault((int(r.th1), int(r.th2)), []).append((ids, wtf))
+    return {h: tuple(np.concatenate(a) for a in zip(*cs))
+            for h, cs in chunks.items()}
+
+
 def test_arrow_decoder_equals_decode_rows(spark, index_dir):
-    """The driver's Arrow decoder gives, per term and shard, the ids and
-    tf weights of the scatter's pandas decoder (_decode_rows, which
-    joins the salt chunks), bit for bit: over every posting row of a
-    multi-shard index with multi-salt terms, a multi-chunk table, rows
-    with empty lists, and tombstones (masked after the Arrow decode,
-    during the pandas one)."""
+    """Both feeds of the one postings decoder, the driver's Arrow table
+    (_decode_arrow) and the scatter's pandas shard group (_decode_shard),
+    give, per term and shard, the ids and tf weights of a row-at-a-time
+    reference decoder that joins the salt chunks, bit for bit: over
+    every posting row of a multi-shard index with multi-salt terms, a
+    multi-chunk table, rows with empty lists, and tombstones (masked
+    after the decode, during the reference one)."""
     import pyarrow as pa
 
     from oboyu_spark.operators.postings import POSTINGS_READ_SCHEMA
-    from oboyu_spark.operators.searchidx import _decode_arrow, _decode_rows
+    from oboyu_spark.operators.searchidx import _decode_arrow, _decode_shard
 
     meta = load_meta(index_dir)
     k1, b, avgdl, size = meta["k1"], meta["b"], meta["avgdl"], \
@@ -890,14 +942,16 @@ def test_arrow_decoder_equals_decode_rows(spark, index_dir):
         for shard, grp in pdf.groupby("shard"):
             base = int(shard) * size
             want = _decode_rows(grp, base, k1, b, avgdl, tomb)
+            scattered = _decode_shard(grp, k1, b, avgdl)
+            assert scattered.keys() == want.keys()
             for term, (want_ids, want_wtf) in want.items():
-                ids, wtf = got[term][int(shard)]
-                assert ids.dtype == np.int32 and wtf.dtype == np.float64
-                if tomb is not None:
-                    keep = ~np.isin(ids.astype(np.int64) + base, tomb)
-                    ids, wtf = ids[keep], wtf[keep]
-                assert np.array_equal(ids, want_ids), (term, shard)
-                assert np.array_equal(wtf, want_wtf), (term, shard)
+                for ids, wtf in (got[term][int(shard)], scattered[term]):
+                    assert ids.dtype == np.int32 and wtf.dtype == np.float64
+                    if tomb is not None:
+                        keep = ~np.isin(ids.astype(np.int64) + base, tomb)
+                        ids, wtf = ids[keep], wtf[keep]
+                    assert np.array_equal(ids, want_ids), (term, shard)
+                    assert np.array_equal(wtf, want_wtf), (term, shard)
                 pairs += 1
         assert pairs == sum(len(v) for v in got.values())
 

@@ -1,8 +1,10 @@
-"""Driver↔JVM boundary of the index paths: integer IN filters are built
-without ``Column.isin`` (one py4j call per literal), the postings,
-vocabulary and docmap reads declare schemas equal to the inferred ones,
-and result frames keep (query_id int, doc_id string, score double) on
-every gather path and key type."""
+"""Driver↔JVM boundary of the index paths: key-set filters are built
+without ``Column.isin`` (one py4j call per literal), on both sides of
+``postings.KEY_IN_LIST_MAX`` (an IN list below it, a join against an
+Arrow key frame above it), the postings, vocabulary and docmap reads
+declare schemas equal to the inferred ones, and result frames keep
+(query_id int, doc_id string, score double) on every gather path and
+key type."""
 
 from __future__ import annotations
 
@@ -12,6 +14,7 @@ import pytest
 from pyspark.sql.classic.column import Column
 from pyspark.sql.types import StructType
 
+from oboyu_spark.operators import postings
 from oboyu_spark.operators import searchidx as SI
 from oboyu_spark.operators.postings import (
     POSTINGS_READ_SCHEMA,
@@ -76,6 +79,23 @@ def _refuse_isin(monkeypatch):
     monkeypatch.setattr(Column, "isin", isin)
 
 
+def _key_sides(monkeypatch, join: bool) -> list:
+    """Put the key-set filters on one side of the cutover: every set
+    joins a key frame (``join``) or none does. Returns the list of key
+    frames built, to show which side ran."""
+    frames = []
+    build = postings._key_frame
+
+    def key_frame(*args):
+        frames.append(args[1])
+        return build(*args)
+
+    monkeypatch.setattr(postings, "_key_frame", key_frame)
+    if join:
+        monkeypatch.setattr(postings, "KEY_IN_LIST_MAX", 0)
+    return frames
+
+
 def _stats(meta: dict) -> tuple:
     return tuple(meta[k] for k in ("n_docs", "total_terms", "avgdl",
                                    "n_postings", "n_vocab_terms"))
@@ -86,14 +106,15 @@ def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
     """With Column.isin raising, the one-shot batch search, the warm
     reader, finalize_index, compact_index, delete_docs and sync_docs
     (with and without compaction) all run and return exactly what they
-    return with it."""
+    return with it, with their key sets written as IN lists and, with
+    the cutover at 0, joined as key frames."""
     from oboyu_spark.operators.postings import sync_docs
 
     # route the selective queries of the batch to BMW: a mixed batch
     monkeypatch.setattr(SI, "AUTO_BMW_MIN_SHARD", 0)
-    a, b = str(tmp_path / "a"), str(tmp_path / "b")
-    shutil.copytree(tomb_index, a)
-    shutil.copytree(tomb_index, b)
+    a, b, c = (str(tmp_path / n) for n in "abc")
+    for d in (a, b, c):
+        shutil.copytree(tomb_index, d)
     some = sorted(tuple(r) for r in _tomb_corpus(spark).collect())[1::17]
     feed = [(k, t + " revised" if i % 5 == 0 else t)
             for i, (k, t) in enumerate(some) if i % 7 != 3]
@@ -131,7 +152,152 @@ def test_index_paths_never_call_isin(spark, tomb_index, tmp_path,
     assert want[1] == "mixed" and want[0]
     assert all(want[6][0][:3]), "the first sync adds, modifies and deletes"
     _refuse_isin(monkeypatch)
+    frames = _key_sides(monkeypatch, join=False)
     assert run(b) == want
+    assert frames == []
+    frames = _key_sides(monkeypatch, join=True)
+    assert run(c) == want
+    assert frames, "no key set was joined"
+
+
+@pytest.mark.parametrize("join", [False, True], ids=["in_list", "join"])
+def test_string_key_sets_with_escapes(spark, tmp_path, monkeypatch, join):
+    """Keys holding a quote, a backslash, a newline and non-ASCII text
+    filter exactly, as IN-list literals and as key-frame rows, with
+    Column.isin raising: delete_docs tombstones exactly the named docs,
+    and a sync re-adds a deleted key, restages an edited one and
+    deletes a missing one, whose search rows name the original keys."""
+    _refuse_isin(monkeypatch)
+    frames = _key_sides(monkeypatch, join)
+    odd = ["it's", "back\\slash", "new\nline", "検索キー", "plain"]
+    rows = [(k, f"alpha {w}") for k, w in zip(odd, WORDS)]
+    rows += [(f"k{i}", "beta gamma") for i in range(20)]
+    d = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(rows, "doc_id string, text string"),
+                d, shard_size=8, shards_per_part=2)
+
+    def alpha() -> list:
+        return sorted(r["doc_id"] for r in
+                      SI.search_index(spark, d, "alpha", k=10).collect())
+
+    delete_docs(spark, d, ["it's", "new\nline"])
+    assert alpha() == sorted(["back\\slash", "検索キー", "plain"])
+    feed = [(k, t + " delta" if k == "検索キー" else t) for k, t in rows
+            if k not in ("back\\slash", "new\nline")]
+    from oboyu_spark.operators.postings import sync_docs
+
+    out = sync_docs(spark.createDataFrame(feed, "doc_id string, text string"),
+                    d)
+    assert (out["new"], out["modified"], out["deleted"]) == (1, 1, 1)
+    assert alpha() == sorted(["it's", "検索キー", "plain"])
+    assert [r["doc_id"] for r in
+            SI.search_index(spark, d, "delta", k=10).collect()] == ["検索キー"]
+    assert bool(frames) == join
+
+
+def test_date_keys_join_a_key_frame(spark, tmp_path, monkeypatch):
+    """A key type that is neither integer nor string (date) has no IN
+    literal form: below the cutover too, delete_docs and sync_docs
+    filter it by a key-frame join, with Column.isin raising."""
+    import datetime as dt
+
+    from oboyu_spark.operators.postings import sync_docs
+
+    _refuse_isin(monkeypatch)
+    frames = _key_sides(monkeypatch, join=False)
+    day = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(12)]
+    rows = [(k, f"alpha w{i % 3}") for i, k in enumerate(day)]
+    d = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(rows, "doc_id date, text string"), d,
+                shard_size=8, shards_per_part=2)
+
+    def hits(q: str) -> list:
+        return sorted(r["doc_id"] for r in
+                      SI.search_index(spark, d, q, k=20).collect())
+
+    delete_docs(spark, d, [day[0], day[5]])
+    assert hits("alpha") == [str(k) for i, k in enumerate(day)
+                             if i not in (0, 5)]
+    feed = [(k, t + " zz" if i == 3 else t) for i, (k, t) in enumerate(rows)
+            if i != 7]
+    out = sync_docs(spark.createDataFrame(feed, "doc_id date, text string"),
+                    d)
+    assert (out["new"], out["modified"], out["deleted"]) == (2, 1, 1)
+    assert hits("zz") == [str(day[3])]
+    assert frames
+
+
+@pytest.mark.parametrize("join", [False, True], ids=["in_list", "join"])
+def test_streaming_and_ivf_paths_never_call_isin(spark, tmp_path,
+                                                 monkeypatch, join):
+    """With Column.isin raising, on both sides of the cutover: the
+    streaming replay guard re-adds a tombstoned key and skips an
+    indexed one; the near-dedup handler drops an in-batch near-dup and
+    tombstones an indexed doc when its lower-id twin arrives; and
+    ivf_search, IvfReader.search and ivf_compact mask deleted
+    vectors."""
+    import numpy as np
+
+    from oboyu_spark.operators import similarity as S
+    from oboyu_spark.operators.postings import load_tombstones
+    from oboyu_spark.streaming.dedupstream import _near_dedup_handler
+    from oboyu_spark.streaming.ingest import handle_batch_factory
+
+    _refuse_isin(monkeypatch)
+    frames = _key_sides(monkeypatch, join)
+
+    idx = str(tmp_path / "idx")
+    build_index(_docs(spark, "string", n=30), idx, shard_size=8,
+                shards_per_part=2)
+    n0 = load_meta(idx)["n_docs"]
+    delete_docs(spark, idx, ["3"])
+    handle_batch_factory(idx)(_docs(spark, "string", n=2, start=3), 7)
+    assert load_meta(idx)["n_docs"] == n0
+    keys = [r["doc_id"] for r in spark.read.parquet(f"{idx}/docmap")
+            .select("doc_id").collect()]
+    assert (keys.count("3"), keys.count("4")) == (2, 1)
+
+    near, mh = str(tmp_path / "near"), str(tmp_path / "mh")
+    handler = _near_dedup_handler(handle_batch_factory(near), near, mh,
+                                  threshold=0.4, num_perm=16, bands=8)
+    fox = ("the quick brown fox jumps over the lazy dog and then runs "
+           "far away into the deep dark forest tonight ")
+    other = ("completely different content discussing parquet row groups "
+             "and shuffle partitions at length here today ")
+    for i, batch in enumerate([
+            [("b10", fox + "alpha"), ("b11", fox + "alpha beta"),
+             ("b20", other)],
+            [("b05", fox + "alpha gamma"),
+             ("b30", "streaming watermark eviction keeps bounded state")]]):
+        handler(spark.createDataFrame(batch, "doc_id string, text string"),
+                i)
+    tomb = load_tombstones(near)
+    assert {r["doc_id"] for r in spark.read.parquet(f"{near}/docmap")
+            .collect() if r["doc_int"] not in tomb} == {"b05", "b20", "b30"}
+
+    rng = np.random.default_rng(7)
+    vec = rng.standard_normal((120, 8))
+    vec[11] = vec[10] + 0.01 * rng.standard_normal(8)
+    ivf = str(tmp_path / "ivf")
+    S.ivf_build(spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vec)],
+        "vec_id long, embedding array<float>"), ivf, n_lists=4, sample=120,
+        iters=8, seed=5)
+    q = [float(x) for x in vec[10]]
+    S.ivf_delete(ivf, [10, 21])
+    got = [tuple(r) for r in S.ivf_search(spark, ivf, q, k=5,
+                                          nprobe=4).collect()]
+    reader = S.IvfReader(spark, ivf)
+    try:
+        served = [tuple(r) for r in reader.search(q, k=5, nprobe=4).collect()]
+    finally:
+        reader.close()
+    assert served == got and got[0][0] == 11
+    assert not {10, 21} & {r[0] for r in got}
+    S.ivf_compact(spark, ivf)
+    assert [tuple(r) for r in S.ivf_search(spark, ivf, q, k=5,
+                                           nprobe=4).collect()] == got
+    assert bool(frames) == join
 
 
 def test_declared_read_schemas_match_inferred(spark, tmp_path):

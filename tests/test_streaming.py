@@ -164,13 +164,14 @@ def test_replay_guard_readds_tombstoned_keys(spark, tmp_path):
 
 
 def test_replay_guard_tombstone_antijoin_path(spark, tmp_path, monkeypatch):
-    """ADVICE r3: above TOMBSTONE_ISIN_MAX the tombstone filter runs as
-    an anti-join instead of a giant In-literal — force the cutoff to 0
-    and pin identical re-add behavior through that branch."""
+    """ADVICE r3: above postings.KEY_IN_LIST_MAX the tombstone filter
+    runs as an anti-join instead of a giant In-literal — force the
+    cutoff to 0 and pin identical re-add behavior through that branch."""
+    from oboyu_spark.operators import postings
     from oboyu_spark.operators.postings import delete_docs, load_tombstones
     from oboyu_spark.streaming import ingest
 
-    monkeypatch.setattr(ingest, "TOMBSTONE_ISIN_MAX", 0)
+    monkeypatch.setattr(postings, "KEY_IN_LIST_MAX", 0)
     idx = str(tmp_path / "idx")
     base = synthesize_transcripts(spark, n_convs=10, max_turns=4, seed=3)
     base_docs = turns_as_docs(base).select("doc_id", "text")

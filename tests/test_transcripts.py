@@ -1,5 +1,5 @@
-"""Transcripts source: determinism, per-turn invariants, dense ids,
-and BM25 rank identity over the synthesized corpus."""
+"""Transcripts source: determinism, per-turn invariants and BM25 rank
+identity over the synthesized corpus."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from oboyu_spark.operators import bm25 as B
-from oboyu_spark.operators.ids import assign_dense_ids
 from oboyu_spark.oracle.pybm25 import PyBM25
 from oboyu_spark.sources.transcripts import (
     synthesize_transcripts,
@@ -75,23 +74,6 @@ def test_per_turn_text_equality_invariant(transcripts):
     seq1 = [r["text"] for r in transcripts.orderBy("conv_id", "turn_idx").collect()]
     seq2 = [r["text"] for r in transcripts.orderBy("conv_id", "turn_idx").collect()]
     assert seq1 == seq2
-
-
-def test_dense_ids(spark, transcripts):
-    docs = turns_as_docs(transcripts).select("doc_id", "text")
-    with_ids = assign_dense_ids(docs, ["doc_id"], "doc_int", num_partitions=5)
-    rows = with_ids.select("doc_id", "doc_int").collect()
-    n = len(rows)
-    ids = sorted(r["doc_int"] for r in rows)
-    assert ids == list(range(n)), "dense 0..n-1"
-    # order matches key order
-    by_key = sorted(rows, key=lambda r: r["doc_id"])
-    assert [r["doc_int"] for r in by_key] == list(range(n))
-    # deterministic across re-runs
-    rows2 = assign_dense_ids(docs, ["doc_id"], "doc_int", num_partitions=5).collect()
-    assert {r["doc_id"]: r["doc_int"] for r in rows2} == {
-        r["doc_id"]: r["doc_int"] for r in rows
-    }
 
 
 def test_bm25_over_transcripts_matches_oracle(spark, transcripts):
